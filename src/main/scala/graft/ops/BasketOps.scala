@@ -451,7 +451,8 @@ object BasketOps {
     */
   def brandCommunities(s: SparkSession, d: String): DataFrame =
     withBrandGraph(s, d) { (edges, verts) =>
-      GraphOps.labelPropagationInto(edges, verts, BrandLpaIters) { labels =>
+      GraphOps.drain(
+          GraphOps.labelPropagation(edges, verts, BrandLpaIters)) { labels =>
         val sizes = labels.groupBy("label")
           .agg(count(lit(1)).as("community_size"))
         labels.join(sizes, Seq("label"))
@@ -470,7 +471,8 @@ object BasketOps {
     */
   def brandModularity(s: SparkSession, d: String): DataFrame =
     withBrandGraph(s, d) { (edges, verts) =>
-      GraphOps.labelPropagationInto(edges, verts, BrandLpaIters) { labels =>
+      GraphOps.drain(
+          GraphOps.labelPropagation(edges, verts, BrandLpaIters)) { labels =>
         GraphOps.modularityOver(edges, labels)
       }
     }.orderBy("community")

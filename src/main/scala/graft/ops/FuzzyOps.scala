@@ -128,7 +128,7 @@ object FuzzyOps {
       .join(ids.select(col("name").as("word_a"), col("id").as("src")), Seq("word_a"))
       .join(ids.select(col("name").as("word_b"), col("id").as("dst")), Seq("word_b"))
       .select("src", "dst")
-    GraphOps.connectedComponentsInto(edges, ids.select("id")) { labels =>
+    GraphOps.drain(GraphOps.connectedComponents(edges, ids.select("id"))) { labels =>
       val named = labels
         .join(ids, Seq("id"))
         .select(col("name"), col("cluster_id"))

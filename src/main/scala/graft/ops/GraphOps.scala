@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
@@ -12,6 +13,189 @@ import graft.Tables.t
   */
 object GraphOps {
 
+  /** The round driver every iterative loop below runs on, one instance per
+    * call. It owns what the loops share:
+    *
+    *  - CHECKPOINT MODE. Each round's frame is checkpointed, not merely
+    *    persisted: a persist caches the data but the LOGICAL plan still
+    *    references every prior round (CC's labels feed three branches per
+    *    round, so its plan quadruples each iteration and plan rendering
+    *    alone OOMs past ~10 rounds); a checkpoint flattens the plan to the
+    *    materialized rows. When the session has a checkpoint dir
+    *    (`sc.setCheckpointDir` — the cluster deployment) rounds use
+    *    RELIABLE `checkpoint()`, whose files survive executor loss (tested
+    *    under total block eviction); without one (ephemeral local runs)
+    *    they degrade to `localCheckpoint` — same shape, executor-local
+    *    blocks.
+    *  - EAGER OR LAZY ROUNDS. [[round]] materializes at once;
+    *    [[lazyRound]] leaves it to the caller's next action, so a round
+    *    that must also compute a driver scalar (CC's changed-label count,
+    *    the seed round's row count) pays ONE job instead of two: the
+    *    scalar's action computes the rows, the checkpoint's persist caches
+    *    them, and the post-job hook truncates the lineage. The caller MUST
+    *    run an action that consumes a lazy round before reading it as
+    *    materialized. Reliable rounds are always eager: their files are
+    *    written by a job of their own that would recompute an unpersisted
+    *    lazy round, and a lazy round no job reaches before its inputs'
+    *    files are deleted (a [[kcorePeel]] degree round) could not be read
+    *    back at all.
+    *  - FILE RECLAMATION. The ContextCleaner reclaims localCheckpoint
+    *    blocks once unreferenced, but reliable checkpoint files are only
+    *    auto-deleted under `spark.cleaner.referenceTracking
+    *    .cleanCheckpoints` (default false) — a scheduled loop would grow
+    *    checkpoint storage by rounds × frame size per run, unbounded.
+    *    [[loop]] deletes every superseded round's files and, at the end,
+    *    every file the returned frame does not read; [[drain]] deletes the
+    *    rest once the caller has consumed the result.
+    *  - BROADCAST GATE. Round frames are checkpointed LogicalRDDs with no
+    *    stats, so the planner falls back to sort-merge and AQE must
+    *    materialize both exchanges per join before it can convert them —
+    *    several shuffle-file-writing stages per round. [[bc]] plans the
+    *    broadcast statically when the round frame's row count (`rows`: V
+    *    for vertex frames, V² for the all-pairs frames) is within
+    *    [[broadcastVertexBound]]; above it frames take the shuffle-join
+    *    path and AQE keeps its runtime adaptivity. Decided once per call
+    *    from a count the loop takes anyway ([[Rounds.seeded]]: the seed
+    *    round's own materializing job).
+    */
+  private final class Rounds(rows: Long) {
+    val bc: DataFrame => DataFrame =
+      if (rows <= broadcastVertexBound) broadcast else identity
+
+    def round(df: DataFrame): DataFrame = Rounds.checkpointed(df, eager = true)
+    def lazyRound(df: DataFrame): DataFrame =
+      Rounds.checkpointed(df, eager = false)
+
+    /** Runs `n` rounds of `step` over a state of checkpointed frames. After
+      * each round the files only the superseded state read are deleted;
+      * after `result` every state file it does not read.
+      */
+    def loop(seed: Seq[DataFrame], n: Int)
+            (step: (Seq[DataFrame], Int) => Seq[DataFrame])
+            (result: Seq[DataFrame] => DataFrame): DataFrame = {
+      var state = seed
+      for (i <- 1 to n) {
+        val next = step(state, i)
+        release(state, keep = next)
+        state = next
+      }
+      val out = result(state)
+      release(state, keep = Seq(out))
+      out
+    }
+
+    /** [[loop]] over one frame: each round is `step`'s frame, eagerly
+      * materialized.
+      */
+    def iterate(seed: DataFrame, n: Int)
+               (step: (DataFrame, Int) => DataFrame): DataFrame =
+      loop(Seq(seed), n)((s, i) => Seq(round(step(s.head, i))))(_.head)
+
+    /** Rounds of `step` until a fixpoint, at most `maxIter`: `step` emits
+      * each row's `label` next to its input value `prev`, and the round's
+      * changed-row count is its own materializing job. Returns the
+      * fixpoint without `prev`; throws (leaking no files) when `maxIter`
+      * rounds do not converge.
+      */
+    def converge(seed: DataFrame, maxIter: Int, what: String)
+                (step: DataFrame => DataFrame): DataFrame = {
+      var cur = seed
+      var changed = 1L
+      var iter = 0
+      while (changed > 0 && iter < maxIter) {
+        val next = lazyRound(step(cur))
+        changed = next.filter(col("label") =!= col("prev")).count()
+        release(Seq(cur), keep = Seq(next))
+        cur = next.drop("prev")
+        iter += 1
+      }
+      if (changed != 0) {
+        release(Seq(cur))
+        throw new IllegalStateException(
+          s"$what did not converge within $maxIter rounds")
+      }
+      cur
+    }
+  }
+
+  private object Rounds {
+    /** Checkpoints the seed round lazily and counts it in that one job;
+      * the broadcast gate reads `rows` of the count.
+      */
+    def seeded(seed: DataFrame, rows: Long => Long = identity)
+        : (Rounds, DataFrame) = {
+      val s = checkpointed(seed, eager = false)
+      (new Rounds(rows(s.count())), s)
+    }
+
+    def checkpointed(df: DataFrame, eager: Boolean): DataFrame =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(eager = true)
+      else df.localCheckpoint(eager)
+  }
+
+  /** Row-count bound of the round driver's broadcast gate (4M rows of a
+    * 16-byte vertex frame ≈ 64 MB built relation — the comfortable
+    * broadcast range). It gates on a MEASURED row count, not on local core
+    * count, and is env-overridable for deployments with small executors.
+    */
+  private def broadcastVertexBound: Long =
+    sys.env.getOrElse("SPARK_GRAFT_WALK_BCAST_VERTS", "4000000").toLong
+
+  /** V² for the all-pairs gate, saturated where it would overflow. */
+  private def squared(n: Long): Long =
+    if (n > Int.MaxValue) Long.MaxValue else n * n
+
+  /** ALL reliable-checkpoint files under a frame (none in local mode) —
+    * [[hits]] returns a JOIN of two checkpointed rounds and [[kcorePeel]]
+    * a union over every round.
+    */
+  private def checkpointFilesOf(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.flatMap(r => Option(r.getCheckpointFile.orNull))
+
+  /** Deletes the reliable-checkpoint files of `frames` that no frame in
+    * `keep` reads. Best-effort: a failed delete leaves the file behind.
+    */
+  private def release(frames: Seq[DataFrame],
+                      keep: Seq[DataFrame] = Nil): Unit = {
+    val kept = keep.flatMap(checkpointFilesOf).toSet
+    for (df <- frames; path <- checkpointFilesOf(df) if !kept(path))
+      try {
+        val p = new org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(p, true)
+      } catch { case NonFatal(_) => () }
+  }
+
+  /** Loan for SCHEDULED/materializing callers of the iterative operators:
+    * runs `consume` (write the result to a sink, collect a summary, …) and
+    * then deletes every reliable checkpoint file under `df` — the files a
+    * loop must leave alive because they back its returned frame. A
+    * scheduled job calling a loop without draining grows checkpoint
+    * storage by one round per run, unbounded across runs; draining keeps
+    * it at zero. (The alternative for deployments that can't restructure
+    * callers: `spark.cleaner.referenceTracking.cleanCheckpoints=true`,
+    * which lets the ContextCleaner reclaim the files when the frame is
+    * GC'd.) `consume` must fully materialize what it needs — the frame is
+    * not recomputable after the files are gone.
+    */
+  def drain[A](df: DataFrame)(consume: DataFrame => A): A =
+    try consume(df) finally release(Seq(df))
+
+  /** The simple undirected graph of a directed edge set: self-loops
+    * dropped, each edge in both directions, parallel and reversed
+    * duplicates collapsed.
+    */
+  private def simpleSymmetric(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(explode(array(
+        struct(col("src").as("src"), col("dst").as("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .distinct()
+
   /** Connected components over an undirected edge set — every vertex maps
     * to its component's minimum vertex id (the canonical "keep" id of a
     * duplicate cluster).
@@ -22,81 +206,14 @@ object GraphOps {
     * label's own label — one self-join), so convergence is O(log diameter)
     * rounds instead of O(diameter) for plain propagation over long chains.
     * Per round the driver sees ONE scalar (the changed-label count for the
-    * fixpoint test).
-    *
-    * Iteration discipline: each round's labels are CHECKPOINTED (eager),
-    * not merely persisted — a persist caches the data but the LOGICAL
-    * plan still references every prior round (the labels frame feeds
-    * three branches per round, so the plan quadruples each iteration:
-    * plan rendering alone OOMs past ~10 rounds). Checkpointing flattens
-    * the plan to the materialized rows. CHECKPOINT MODE follows the
-    * session: when a checkpoint dir is configured
-    * (`sc.setCheckpointDir` — the cluster deployment), rounds use
-    * RELIABLE `checkpoint()` whose blocks survive executor loss (a
-    * lost-executor recovery recomputes from the durable files, tested
-    * under total block eviction); without one (ephemeral local runs) they
-    * degrade to `localCheckpoint` — same shape, executor-local blocks.
-    * Old rounds' blocks are reclaimed by the ContextCleaner once
-    * unreferenced. Deterministic: min is order-independent.
+    * fixpoint test), computed by the round's own materializing job.
+    * Deterministic: min is order-independent.
     *
     * `edges`: (src, dst) — symmetrized internally, self-loops harmless.
     * `vertices`: (id) — vertices with no edges become singleton clusters.
     */
-  /** Eager round checkpoint: reliable when the session has a checkpoint
-    * dir (durable files — survives executor loss), local otherwise.
-    */
-  private def roundCheckpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
-  /** LAZY round checkpoint — same mode selection as [[roundCheckpoint]]
-    * but materialization is left to the caller's next action, so a round
-    * that must also compute a driver scalar (the CC fixpoint count) pays
-    * ONE job per round instead of two: the scalar's action computes the
-    * round's rows, the persist caches them as a side effect, and the
-    * post-job checkpoint hook truncates the lineage (r15, guide §1.2/§7 —
-    * the per-round driver floor is jobs × scheduling, not data). The
-    * caller MUST run an action that consumes the returned frame before
-    * reading it as materialized.
-    */
-  private def lazyRoundCheckpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = false)
-    else df.localCheckpoint(eager = false)
-
-  /** Reliable-checkpoint FILES of a checkpointed frame (None in local
-    * mode). Needed for superseded-round cleanup: the ContextCleaner
-    * reclaims localCheckpoint BLOCKS, but reliable checkpoint files are
-    * only auto-deleted under `spark.cleaner.referenceTracking
-    * .cleanCheckpoints` (default false) — without explicit deletion a
-    * scheduled CC job would grow checkpoint storage by rounds × labels
-    * per run, unbounded.
-    */
-  private def checkpointFileOf(df: DataFrame): Option[String] =
-    df.queryExecution.analyzed.collectLeaves().collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.flatMap(r => Option(r.getCheckpointFile.orNull))
-
-  /** ALL reliable-checkpoint files under a frame — [[hits]] returns a JOIN
-    * of two checkpointed rounds (hub + authority), so the single-leaf
-    * helper above would leak one of them.
-    */
-  private def checkpointFilesOf(df: DataFrame): Seq[String] =
-    df.queryExecution.analyzed.collectLeaves().collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.flatMap(r => Option(r.getCheckpointFile.orNull))
-
-  private def deleteCheckpointFile(df: DataFrame, path: String): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    } catch { case _: Throwable => () } // cleanup is best-effort
-
   def connectedComponents(edges: DataFrame, vertices: DataFrame,
-                          maxIter: Int = 50,
-                          batch: Int = roundBatch): DataFrame = {
+                          maxIter: Int = 50): DataFrame = {
     // symmetrize in ONE pass over the edge frame: the union form computes
     // the (possibly expensive, e.g. banded-minhash) edges subtree twice —
     // once per branch — while explode duplicates each row after a single
@@ -109,21 +226,11 @@ object GraphOps {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist()
     try {
-      var labels = roundCheckpoint(vertices.select(
+      val (drv, seed) = Rounds.seeded(vertices.select(
         col("id").cast("long").as("id"),
         col("id").cast("long").as("label")))
-      // vertex-sized round frames broadcast below the measured bound (r15,
-      // extending the r14 walk gating to CC): the checkpointed label frames
-      // are stats-blind LogicalRDDs, so the planner otherwise falls back to
-      // sort-merge and AQE materializes both exchanges per join before it
-      // can convert them — several shuffle-file-writing stages per round.
-      // The count reads the just-materialized checkpoint (cheap, once per
-      // call, amortized over every round); above the bound nothing changes.
-      val bc: DataFrame => DataFrame =
-        if (labels.count() <= broadcastVertexBound) broadcast else identity
-      // one min-label + pointer-jump round as a PLAN transform (no
-      // materialization — batching below decides where rounds materialize)
-      def ccRound(in: DataFrame): DataFrame = {
+      val bc = drv.bc
+      drv.converge(seed, maxIter, "connectedComponents") { in =>
         val nbrMin = sym.join(bc(in), sym("src") === in("id"))
           .select(col("dst").as("id"), col("label"))
           .groupBy("id").agg(min("label").as("nbr_label"))
@@ -138,81 +245,8 @@ object GraphOps {
           .select(col("id"), col("prev"),
             least(col("label"), coalesce(col("hop"), col("label")))
               .as("label"))
-      }
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIter) {
-        // ROUND BATCHING (r15, guide §1.2/§7): [[roundBatch]] rounds per
-        // materialization instead of one — at sf0.1 the loop's cost is
-        // jobs × (scheduling + Catalyst planning), and at cluster scale
-        // each materialization is a synchronous driver barrier; batching
-        // halves both. Intermediate rounds are LAZILY persisted — the
-        // next sub-round consumes its input three times (nbrMin build,
-        // prop join, pointer-jump lookup), and the persist dedupes those
-        // consumers at the block level once the batch's single job runs.
-        // The batch's LAST round is lazy-checkpointed with the fixpoint
-        // count as the materializing action — one job per batch. The
-        // exit test stays exact: `changed` compares the last sub-round
-        // against ITS OWN input, and a no-op round means its input was
-        // already a fixpoint (min-label propagation is monotone), so
-        // changed==0 ⟺ converged regardless of what earlier sub-rounds
-        // in the batch did. `steps` never exceeds maxIter − iter, so the
-        // convergence guard sees exactly the same round budget.
-        val steps = math.min(math.max(1, batch), maxIter - iter)
-        var interm = List.empty[DataFrame]
-        var cur = labels
-        var last: DataFrame = null
-        for (s <- 1 to steps) {
-          val r = ccRound(cur)
-          if (s < steps) {
-            val p = r.select("id", "label").persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            interm ::= p
-            cur = p
-          } else last = lazyRoundCheckpoint(r)
-        }
-        changed = last.filter(col("label") =!= col("prev")).count()
-        // `last` is fully materialized by the count, so the PREVIOUS
-        // batch's reliable checkpoint files and this batch's intermediate
-        // persist blocks are no longer referenced by anything downstream —
-        // release them now; only the FINAL round's files outlive the call
-        // (they back the returned frame), so reliable mode holds one round
-        // of files, not `iter` rounds
-        interm.foreach(_.unpersist(false))
-        checkpointFileOf(labels).foreach(deleteCheckpointFile(labels, _))
-        labels = last.select("id", "label")
-        iter += steps
-      }
-      if (changed != 0) {
-        // the abort path must not leak the last round's reliable files —
-        // nothing downstream will ever reference them
-        checkpointFileOf(labels).foreach(deleteCheckpointFile(labels, _))
-        throw new IllegalStateException(
-          s"connectedComponents did not converge within $maxIter rounds")
-      }
-      labels.select(col("id"), col("label").as("cluster_id"))
+      }.select(col("id"), col("label").as("cluster_id"))
     } finally sym.unpersist()
-  }
-
-  /** Loan-pattern variant for SCHEDULED/materializing callers: runs
-    * `consume` (write the labels to a sink, collect a summary, …) and then
-    * deletes the FINAL round's reliable checkpoint files — the one set of
-    * files [[connectedComponents]] must leave alive because they back its
-    * returned frame. A scheduled CC job calling the plain method grows
-    * checkpoint storage by one round of labels per run, unbounded across
-    * runs; draining through here keeps it at zero. (The alternative for
-    * deployments that can't restructure callers:
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, which lets
-    * the ContextCleaner reclaim the files when the frame is GC'd.)
-    * `consume` must fully materialize what it needs — the frame is not
-    * recomputable after the files are gone.
-    */
-  def connectedComponentsInto[A](edges: DataFrame, vertices: DataFrame,
-                                 maxIter: Int = 50)
-                                (consume: DataFrame => A): A = {
-    val labels = connectedComponents(edges, vertices, maxIter)
-    try consume(labels)
-    finally checkpointFileOf(labels).foreach(deleteCheckpointFile(labels, _))
   }
 
   /** The canonical survivor shape shared by the text and embedding
@@ -249,55 +283,13 @@ object GraphOps {
     *
     * Shape: the edge set (the big table at web scale) is joined ONCE with
     * out-degrees and persisted; each round is one src-keyed join + one
-    * map-side-combinable sum by dst, and the driver sees ONE scalar (the
-    * dangling mass) — the [[connectedComponents]] posture. Rounds are
-    * eagerly checkpointed (reliable when the session has a checkpoint dir)
-    * and superseded round files deleted, for the same plan-growth and
-    * storage reasons documented there.
+    * map-side-combinable sum by dst, and the dangling mass rides the round
+    * plan as a broadcast 1-row aggregate column.
     *
     * `edges`: (src, dst) directed, pre-deduplicated by the caller if
     * multiplicity must not weight the walk. `vertices`: (id) — must cover
     * every edge endpoint; isolated vertices hold base + teleport share.
     */
-  /** Vertex-count bound under which walk ROUND frames (ranks/scores —
-    * one 16-byte row per vertex) carry an explicit broadcast hint. The
-    * round frames are checkpointed LogicalRDDs with no stats, so the
-    * planner falls back to sort-merge and AQE must materialize both
-    * exchanges before it can convert the join — several extra stages per
-    * round. Below the bound (4M vertices ≈ 64 MB built relation — the
-    * guide's comfortable-broadcast range) the hint plans the broadcast
-    * statically; above it the frames flow through the normal
-    * shuffle-join path and AQE keeps the runtime adaptivity. The bound
-    * gates on the MEASURED vertex count, not on local core count, and is
-    * env-overridable for deployments with small executors.
-    */
-  private[graft] def broadcastVertexBound: Long =
-    sys.env.getOrElse("SPARK_GRAFT_WALK_BCAST_VERTS", "4000000").toLong
-
-  /** Rounds per materialization in the iterative loops (CC and the
-    * fixed-iteration walks) — r15, guide §1.2/§7. Each materialization
-    * is one Spark job preceded by a full Catalyst pass AND, on a
-    * cluster, a synchronous driver barrier the whole fleet idles
-    * behind; at sf0.1 the measured floor of the heavy gates is exactly
-    * jobs × (scheduling + planning), none over 0.5 s. Batching K rounds
-    * per materialization divides that floor by K at the cost of a K×
-    * deeper plan per job (K=2 keeps plans well under the depth where
-    * plan rendering/codegen blows up — the reason per-round checkpoints
-    * exist at all). MEASURED at sf0.1 (q_authority_survivors job/wall
-    * matrix, r15): K=2 is job- and wall-NEUTRAL — the gate's job floor
-    * is broadcast-exchange builds (3 per sub-round, unchanged by
-    * batching), not the materializing counts — and K=4 REGRESSES 2.8×
-    * (154 jobs / 26.7 s vs 129 / 9.5 s): past K=2 the unmaterialized
-    * sub-round subtrees multiply recompute through the broadcast-build
-    * chains faster than the persist dedupes them. Default is therefore
-    * 1 (the measured optimum); the mechanism stays because the barrier
-    * count per walk — not sf0.1 wall — is what a 100 TB deployment
-    * tunes, and K is structural (independent of core count), but any
-    * K>1 deployment must re-measure on its own shape first.
-    */
-  private[graft] def roundBatch: Int =
-    math.max(1, sys.env.getOrElse("SPARK_GRAFT_ROUND_BATCH", "1").toInt)
-
   def pagerank(edges: DataFrame, vertices: DataFrame, iters: Int = 10,
                scale: Long = 1000000000000L, damp: Int = 85): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100)
@@ -311,12 +303,10 @@ object GraphOps {
       val n = verts.count()
       require(n > 0, "pagerank over an empty vertex set")
       val base = (100L - damp) * scale / 100 / n
-      // vertex-sized round frames broadcast below the measured bound —
-      // see [[broadcastVertexBound]]
-      val bc: DataFrame => DataFrame =
-        if (n <= broadcastVertexBound) broadcast else identity
-      var r = roundCheckpoint(verts.select(col("id"), lit(scale / n).as("r")))
-      for (_ <- 1 to iters) {
+      val drv = new Rounds(n)
+      val bc = drv.bc
+      val seed = drv.round(verts.select(col("id"), lit(scale / n).as("r")))
+      drv.iterate(seed, iters) { (r, _) =>
         // The dangling mass rides the round plan as a broadcast 1-row
         // aggregate COLUMN instead of a per-round driver `.head()` literal
         // (r14 optimization, guide §1.2/§7.3): the synchronous driver
@@ -330,29 +320,13 @@ object GraphOps {
         val contrib = ewd.join(bc(r), ewd("src") === r("id"))
           .select(col("dst").as("id"), expr("r div outdeg").as("share"))
           .groupBy("id").agg(sum("share").as("contrib"))
-        val next = roundCheckpoint(verts.join(bc(contrib), Seq("id"), "left")
+        verts.join(bc(contrib), Seq("id"), "left")
           .crossJoin(broadcast(dang))
           .select(col("id"),
             (lit(base) + expr(s"($damp * (coalesce(contrib, 0L) + " +
-              s"dang_sum div ${n}L)) div 100")).as("r")))
-        checkpointFileOf(r).foreach(deleteCheckpointFile(r, _))
-        r = next
-      }
-      r.select(col("id"), col("r").as("rank_fp"))
+              s"dang_sum div ${n}L)) div 100")).as("r"))
+      }.select(col("id"), col("r").as("rank_fp"))
     } finally { verts.unpersist(); ewd.unpersist(); dangVerts.unpersist() }
-  }
-
-  /** Loan variant of [[pagerank]] — like [[connectedComponentsInto]]:
-    * `consume` must fully materialize what it needs; the final round's
-    * reliable checkpoint files are deleted afterwards, so a scheduled
-    * walk doesn't grow checkpoint storage by one round of ranks per run.
-    */
-  def pagerankInto[A](edges: DataFrame, vertices: DataFrame, iters: Int = 10,
-                      scale: Long = 1000000000000L, damp: Int = 85)
-                     (consume: DataFrame => A): A = {
-    val r = pagerank(edges, vertices, iters, scale, damp)
-    try consume(r)
-    finally checkpointFilesOf(r).foreach(deleteCheckpointFile(r, _))
   }
 
   /** Personalized PageRank (Page et al.'s topic-sensitive variant): the
@@ -389,13 +363,11 @@ object GraphOps {
       val nS = seedIds.count()
       require(nS > 0, "pagerankSeeded needs at least one seed in the graph")
       val base = (100L - damp) * scale / 100 / nS
-      // vertex-sized round frames broadcast below the measured bound —
-      // gate on the VERTEX count (the round-frame size), not the seeds
-      val bc: DataFrame => DataFrame =
-        if (verts.count() <= broadcastVertexBound) broadcast else identity
-      var r = roundCheckpoint(flagged.select(col("id"),
+      // the seed round is vertex-sized: the gate counts VERTICES, not seeds
+      val (drv, seed) = Rounds.seeded(flagged.select(col("id"),
         (col("is_seed") * lit(scale / nS)).as("r")))
-      for (_ <- 1 to iters) {
+      val bc = drv.bc
+      drv.iterate(seed, iters) { (r, _) =>
         // dangling mass as a broadcast column, not a per-round collected
         // literal — see [[pagerank]]'s round body for the rationale
         val dang = r.join(bc(dangVerts), Seq("id"), "left_semi")
@@ -403,30 +375,17 @@ object GraphOps {
         val contrib = ewd.join(bc(r), ewd("src") === r("id"))
           .select(col("dst").as("id"), expr("r div outdeg").as("share"))
           .groupBy("id").agg(sum("share").as("contrib"))
-        val next = roundCheckpoint(flagged.join(bc(contrib), Seq("id"), "left")
+        flagged.join(bc(contrib), Seq("id"), "left")
           .crossJoin(broadcast(dang))
           .select(col("id"),
             (col("is_seed") * lit(base) +
               expr(s"($damp * (coalesce(contrib, 0L) + " +
-                s"is_seed * (dang_sum div ${nS}L))) div 100")).as("r")))
-        checkpointFileOf(r).foreach(deleteCheckpointFile(r, _))
-        r = next
-      }
-      r.select(col("id"), col("r").as("rank_fp"))
+                s"is_seed * (dang_sum div ${nS}L))) div 100")).as("r"))
+      }.select(col("id"), col("r").as("rank_fp"))
     } finally {
       verts.unpersist(); seedIds.unpersist(); flagged.unpersist()
       ewd.unpersist(); dangVerts.unpersist()
     }
-  }
-
-  /** Loan variant of [[pagerankSeeded]] ([[pagerankInto]] contract). */
-  def pagerankSeededInto[A](edges: DataFrame, vertices: DataFrame,
-                            seeds: DataFrame, iters: Int = 10,
-                            scale: Long = 1000000000000L, damp: Int = 85)
-                           (consume: DataFrame => A): A = {
-    val r = pagerankSeeded(edges, vertices, seeds, iters, scale, damp)
-    try consume(r)
-    finally checkpointFilesOf(r).foreach(deleteCheckpointFile(r, _))
   }
 
   /** HITS (Kleinberg) hubs/authorities in EXACT integer fixed point — the
@@ -450,10 +409,10 @@ object GraphOps {
     * since the session does not run ANSI mode and a wrap would otherwise
     * be silent.)
     *
-    * Shape: per round two keyed join+sum passes over the edge set and two
-    * driver scalars (the normalization sums); rounds eagerly checkpointed
-    * with superseded-file deletion — the [[connectedComponents]] posture.
-    * A graph with NO edges has no hub/authority structure: refused.
+    * Shape: per round two keyed join+sum passes over the edge set, each
+    * half-step its own checkpointed round. The returned frame joins the
+    * last hub and authority rounds. A graph with NO edges has no
+    * hub/authority structure: refused.
     */
   def hits(edges: DataFrame, vertices: DataFrame, iters: Int = 5,
            scale: Long = 1000000L): DataFrame = {
@@ -472,10 +431,8 @@ object GraphOps {
       require(eCnt <= Long.MaxValue / scale,
         s"hits: $eCnt edges overflow the $scale fixed point's " +
           "normalization sum; use a smaller scale")
-      // vertex-sized score frames broadcast below the measured bound —
-      // see [[broadcastVertexBound]]
-      val bc: DataFrame => DataFrame =
-        if (n <= broadcastVertexBound) broadcast else identity
+      val drv = new Rounds(n)
+      val bc = drv.bc
       def half(src: DataFrame, scoreCol: String, from: String, to: String,
                outName: String): DataFrame = {
         val raw = e.join(bc(src.withColumnRenamed("id", from)), from)
@@ -488,36 +445,21 @@ object GraphOps {
         // `div`; a zero/absent total divides to NULL exactly as the
         // collected-literal form would have.
         val tot = raw.agg(sum("raw").as("tot"))
-        roundCheckpoint(verts.join(bc(raw), Seq("id"), "left")
+        drv.round(verts.join(bc(raw), Seq("id"), "left")
           .crossJoin(broadcast(tot))
           .select(col("id"), expr(
             s"(coalesce(raw, 0L) * $scale) div tot").as(outName)))
       }
-      var h = roundCheckpoint(verts.select(col("id"), lit(scale).as("h")))
-      var a: DataFrame = null
-      for (_ <- 1 to iters) {
-        val aNext = half(h, "h", "src", "dst", "a")
-        if (a != null) checkpointFileOf(a).foreach(deleteCheckpointFile(a, _))
-        a = aNext
-        val hNext = half(a, "a", "dst", "src", "h")
-        checkpointFileOf(h).foreach(deleteCheckpointFile(h, _))
-        h = hNext
+      val seed = drv.round(verts.select(col("id"), lit(scale).as("h")))
+      // state: (hubs, authorities) — the seed round has hubs only
+      drv.loop(Seq(seed), iters) { (s, _) =>
+        val a = half(s.head, "h", "src", "dst", "a")
+        Seq(half(a, "a", "dst", "src", "h"), a)
+      } { case Seq(h, a) =>
+        h.select(col("id"), col("h").as("hub_fp"))
+          .join(a.select(col("id"), col("a").as("auth_fp")), "id")
       }
-      h.select(col("id"), col("h").as("hub_fp"))
-        .join(a.select(col("id"), col("a").as("auth_fp")), "id")
     } finally { verts.unpersist(); e.unpersist() }
-  }
-
-  /** Loan variant of [[hits]] — the returned frame holds TWO rounds'
-    * checkpoint files (hub and authority), both deleted after `consume`
-    * materializes.
-    */
-  def hitsInto[A](edges: DataFrame, vertices: DataFrame, iters: Int = 5,
-                  scale: Long = 1000000L)
-                 (consume: DataFrame => A): A = {
-    val hv = hits(edges, vertices, iters, scale)
-    try consume(hv)
-    finally checkpointFilesOf(hv).foreach(deleteCheckpointFile(hv, _))
   }
 
   /** Multi-source BFS hop distance over a directed edge set — the
@@ -537,8 +479,6 @@ object GraphOps {
     * Shape: per round one src-keyed join (reached ⋈ edges) + one
     * map-side-combinable min by id — the reached set only ever GROWS
     * toward vertex-sized, never corpus-sized fan-out; zero driver scalars.
-    * Rounds eagerly checkpointed with superseded-file deletion — the
-    * [[connectedComponents]] posture.
     *
     * `edges`: (src, dst) directed. `vertices`: (id) covering every
     * endpoint. `seeds`: (id) — distance-0 set; seeds outside `vertices`
@@ -550,34 +490,19 @@ object GraphOps {
     val verts = vertices.select(col("id")).distinct().persist()
     val e = edges.select("src", "dst").persist()
     try {
-      // reached grows toward vertex-sized: broadcast the round frame below
-      // the measured VERTEX bound (r15 — the r14 walk gating extended)
-      val bc: DataFrame => DataFrame =
-        if (verts.count() <= broadcastVertexBound) broadcast else identity
-      var reached = roundCheckpoint(
+      // reached grows toward vertex-sized: the gate counts VERTICES
+      val drv = new Rounds(verts.count())
+      val bc = drv.bc
+      val reached = drv.iterate(drv.round(
         verts.join(seeds.select(col("id")).distinct(), Seq("id"), "left_semi")
-          .select(col("id"), lit(0L).as("dist")))
-      for (_ <- 1 to iters) {
+          .select(col("id"), lit(0L).as("dist"))), iters) { (reached, _) =>
         val fringe = e.join(bc(reached.withColumnRenamed("id", "src")), "src")
           .select(col("dst").as("id"), (col("dist") + lit(1L)).as("dist"))
-        val next = roundCheckpoint(reached.unionByName(fringe)
-          .groupBy("id").agg(min("dist").as("dist")))
-        checkpointFileOf(reached).foreach(deleteCheckpointFile(reached, _))
-        reached = next
+        reached.unionByName(fringe).groupBy("id").agg(min("dist").as("dist"))
       }
       verts.join(reached, Seq("id"), "left")
         .select(col("id"), coalesce(col("dist"), lit(-1L)).as("dist"))
     } finally { verts.unpersist(); e.unpersist() }
-  }
-
-  /** Loan variant of [[bfsHops]] — `consume` materializes, then the final
-    * round's reliable checkpoint files are reclaimed ([[pagerankInto]]).
-    */
-  def bfsHopsInto[A](edges: DataFrame, vertices: DataFrame, seeds: DataFrame,
-                     iters: Int = 6)(consume: DataFrame => A): A = {
-    val h = bfsHops(edges, vertices, seeds, iters)
-    try consume(h)
-    finally checkpointFilesOf(h).foreach(deleteCheckpointFile(h, _))
   }
 
   /** ALL-PAIRS bounded BFS — [[bfsHops]] with the walk keyed by its
@@ -596,25 +521,17 @@ object GraphOps {
     val verts = vertices.select(col("id")).distinct().persist()
     val e = edges.select("src", "dst").persist()
     try {
-      // the all-pairs state is V²-bounded, not vertex-sized: broadcast the
-      // round frame only when V² fits the bound (the K-bounded
-      // registered-domain contract this operator carries anyway)
-      val nV = verts.count()
-      val bc: DataFrame => DataFrame =
-        if (nV <= math.sqrt(broadcastVertexBound.toDouble).toLong) broadcast
-        else identity
-      var reached = roundCheckpoint(
-        verts.select(col("id").as("s"), col("id"), lit(0L).as("dist")))
-      for (_ <- 1 to iters) {
+      val (drv, seed) = Rounds.seeded(
+        verts.select(col("id").as("s"), col("id"), lit(0L).as("dist")),
+        squared)
+      val bc = drv.bc
+      drv.iterate(seed, iters) { (reached, _) =>
         val fringe = e.join(bc(reached.withColumnRenamed("id", "src")), "src")
           .select(col("s"), col("dst").as("id"),
             (col("dist") + lit(1L)).as("dist"))
-        val next = roundCheckpoint(reached.unionByName(fringe)
-          .groupBy("s", "id").agg(min("dist").as("dist")))
-        checkpointFileOf(reached).foreach(deleteCheckpointFile(reached, _))
-        reached = next
+        reached.unionByName(fringe)
+          .groupBy("s", "id").agg(min("dist").as("dist"))
       }
-      reached
     } finally { verts.unpersist(); e.unpersist() }
   }
 
@@ -637,17 +554,14 @@ object GraphOps {
     val verts = vertices.select(col("id")).distinct().persist()
     val e = edges.select("src", "dst").persist()
     try {
-      // V²-bounded state — the [[allPairsHops]] broadcast gate
-      val nV = verts.count()
-      val bc: DataFrame => DataFrame =
-        if (nV <= math.sqrt(broadcastVertexBound.toDouble).toLong) broadcast
-        else identity
-      var state = roundCheckpoint(verts.select(col("id").as("s"),
-        col("id"), lit(0L).as("dist"), lit(1L).as("sigma")))
-      var walks = roundCheckpoint(state.select(col("s"), col("id"),
+      val (drv, seed) = Rounds.seeded(verts.select(col("id").as("s"),
+        col("id"), lit(0L).as("dist"), lit(1L).as("sigma")), squared)
+      val bc = drv.bc
+      val walks0 = drv.round(seed.select(col("s"), col("id"),
         col("sigma").as("w")))
-      for (i <- 1 to iters) {
-        val stepped = roundCheckpoint(
+      // state: (frozen geodesics, walk matrix); only the first is returned
+      drv.loop(Seq(seed, walks0), iters) { case (Seq(state, walks), i) =>
+        val stepped = drv.round(
           bc(walks.withColumnRenamed("id", "src")).join(e, "src")
             .groupBy(col("s"), col("dst").as("id"))
             .agg(sum("w").as("w")))
@@ -655,31 +569,9 @@ object GraphOps {
             Seq("s", "id"), "left_anti")
           .select(col("s"), col("id"), lit(i.toLong).as("dist"),
             col("w").as("sigma"))
-        val nextState = roundCheckpoint(state.unionByName(fresh))
-        checkpointFileOf(state).foreach(deleteCheckpointFile(state, _))
-        checkpointFileOf(walks).foreach(deleteCheckpointFile(walks, _))
-        state = nextState
-        walks = stepped
-      }
-      checkpointFileOf(walks).foreach(deleteCheckpointFile(walks, _))
-      state
+        Seq(drv.round(state.unionByName(fresh)), stepped)
+      }(_.head)
     } finally { verts.unpersist(); e.unpersist() }
-  }
-
-  /** Loan variant of [[allPairsGeodesics]] ([[bfsHopsInto]]'s contract). */
-  def allPairsGeodesicsInto[A](edges: DataFrame, vertices: DataFrame,
-                               iters: Int = 6)(consume: DataFrame => A): A = {
-    val g = allPairsGeodesics(edges, vertices, iters)
-    try consume(g)
-    finally checkpointFilesOf(g).foreach(deleteCheckpointFile(g, _))
-  }
-
-  /** Loan variant of [[allPairsHops]] ([[bfsHopsInto]]'s contract). */
-  def allPairsHopsInto[A](edges: DataFrame, vertices: DataFrame,
-                          iters: Int = 6)(consume: DataFrame => A): A = {
-    val h = allPairsHops(edges, vertices, iters)
-    try consume(h)
-    finally checkpointFilesOf(h).foreach(deleteCheckpointFile(h, _))
   }
 
   /** Weighted shortest paths by bounded Bellman-Ford rounds — the
@@ -706,33 +598,19 @@ object GraphOps {
       val negs = e.filter(col("w") < 0).limit(1).count()
       require(negs == 0, "weightedHops: negative edge weights are refused " +
         "(bounded rounds cannot certify distances under negative cycles)")
-      // vertex-sized round frames broadcast below the measured bound —
-      // the [[bfsHops]] gate with a cost column
-      val bc: DataFrame => DataFrame =
-        if (verts.count() <= broadcastVertexBound) broadcast else identity
-      var reached = roundCheckpoint(
+      // the [[bfsHops]] gate: reached grows toward vertex-sized
+      val drv = new Rounds(verts.count())
+      val bc = drv.bc
+      val reached = drv.iterate(drv.round(
         verts.join(seeds.select(col("id")).distinct(), Seq("id"), "left_semi")
-          .select(col("id"), lit(0L).as("dist")))
-      for (_ <- 1 to iters) {
+          .select(col("id"), lit(0L).as("dist"))), iters) { (reached, _) =>
         val fringe = e.join(bc(reached.withColumnRenamed("id", "src")), "src")
           .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-        val next = roundCheckpoint(reached.unionByName(fringe)
-          .groupBy("id").agg(min("dist").as("dist")))
-        checkpointFileOf(reached).foreach(deleteCheckpointFile(reached, _))
-        reached = next
+        reached.unionByName(fringe).groupBy("id").agg(min("dist").as("dist"))
       }
       verts.join(reached, Seq("id"), "left")
         .select(col("id"), coalesce(col("dist"), lit(-1L)).as("dist"))
     } finally { verts.unpersist(); e.unpersist() }
-  }
-
-  /** Loan variant of [[weightedHops]] ([[pagerankInto]] contract). */
-  def weightedHopsInto[A](edges: DataFrame, vertices: DataFrame,
-                          seeds: DataFrame, iters: Int = 6)
-                         (consume: DataFrame => A): A = {
-    val h = weightedHops(edges, vertices, seeds, iters)
-    try consume(h)
-    finally checkpointFilesOf(h).foreach(deleteCheckpointFile(h, _))
   }
 
   /** SYNCHRONOUS label propagation (Raghavan, Albert & Kumara 2007) —
@@ -748,11 +626,10 @@ object GraphOps {
     * oscillates on bipartite structures, and a fixed-round contract is
     * what an oracle can replay.
     *
-    * Works on the UNWEIGHTED simple graph: self-loops dropped, parallel
-    * and reversed duplicates collapse (a doubled edge must not double a
-    * vote). Per round: one src-keyed edge join + one (id, label) count
-    * agg + a per-id WindowGroupLimit pick — the CC shuffle class; rounds
-    * eagerly checkpointed with superseded-file deletion.
+    * Works on the UNWEIGHTED simple graph ([[simpleSymmetric]] — a
+    * doubled edge must not double a vote). Per round: one src-keyed edge
+    * join + one (id, label) count agg + a per-id WindowGroupLimit pick —
+    * the CC shuffle class.
     *
     * `vertices`: (id). Returns (id, label) — label = the community's
     * lexicographically-least member seen through the propagation.
@@ -760,22 +637,12 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, vertices: DataFrame,
                        iters: Int = 4): DataFrame = {
     require(iters >= 1, "labelPropagation needs at least one round")
-    val sym = edges.filter(col("src") =!= col("dst"))
-      .select(explode(array(
-        struct(col("src").as("src"), col("dst").as("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().persist()
+    val sym = simpleSymmetric(edges).persist()
     try {
-      var labels = roundCheckpoint(vertices.select(col("id"))
+      val (drv, seed) = Rounds.seeded(vertices.select(col("id"))
         .distinct().withColumn("label", col("id")))
-      // vertex-sized round frames broadcast below the measured bound (r15
-      // — the r14 pagerank/hits gating extended here): the checkpointed
-      // label frame and the per-round pick are both vertex-sized; the
-      // count reads the just-materialized checkpoint, once per call
-      val bc: DataFrame => DataFrame =
-        if (labels.count() <= broadcastVertexBound) broadcast else identity
-      for (_ <- 1 to iters) {
+      val bc = drv.bc
+      drv.iterate(seed, iters) { (labels, _) =>
         val votes = sym.join(bc(labels.withColumnRenamed("id", "src")), "src")
           .groupBy(col("dst").as("id"), col("label"))
           .agg(count(lit(1)).as("c"))
@@ -784,22 +651,11 @@ object GraphOps {
               .orderBy(col("c").desc, col("label").asc)))
           .filter(col("rk") === 1)
           .select(col("id"), col("label").as("new_label"))
-        val next = roundCheckpoint(labels.join(bc(pick), Seq("id"), "left")
+        labels.join(bc(pick), Seq("id"), "left")
           .select(col("id"),
-            coalesce(col("new_label"), col("label")).as("label")))
-        checkpointFileOf(labels).foreach(deleteCheckpointFile(labels, _))
-        labels = next
+            coalesce(col("new_label"), col("label")).as("label"))
       }
-      labels
     } finally sym.unpersist()
-  }
-
-  /** Loan variant of [[labelPropagation]] ([[pagerankInto]] contract). */
-  def labelPropagationInto[A](edges: DataFrame, vertices: DataFrame,
-                              iters: Int = 4)(consume: DataFrame => A): A = {
-    val l = labelPropagation(edges, vertices, iters)
-    try consume(l)
-    finally checkpointFilesOf(l).foreach(deleteCheckpointFile(l, _))
   }
 
   /** Bounded-round k-core peel (Seidman 1983's coreness; the
@@ -819,78 +675,47 @@ object GraphOps {
     *
     * Scale shape: per round, ONE degree aggregation + two semi-joins
     * keyed on vertex ids over the shrinking edge frame — no all-pairs
-    * anything; rounds checkpoint eagerly (reliable when a checkpoint
-    * dir exists) and superseded round files are deleted, the CC/LPA
-    * discipline.
+    * anything.
     */
   def kcorePeel(edges: DataFrame, vertices: DataFrame,
                 k: Int, rounds: Int): DataFrame = {
     require(rounds >= 1, "kcorePeel needs at least one round")
-    var cur = roundCheckpoint(edges.filter(col("src") =!= col("dst"))
-      .select(explode(array(
-        struct(col("src").as("src"), col("dst").as("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct())
-    var alive = roundCheckpoint(vertices.select(col("id")).distinct())
-    // vertex-sized survivor frames broadcast below the measured bound
-    // (r15 — the walk gating); the count reads the materialized checkpoint
-    val bc: DataFrame => DataFrame =
-      if (alive.count() <= broadcastVertexBound) broadcast else identity
-    var removed = List.empty[DataFrame]
-    for (r <- 1 to rounds) {
-      val deg = cur.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      // ONE materialized frame per round (r15, guide §1.2/§7): the degree
-      // aggregate is LAZY-checkpointed and everything else derives from it
-      // — previously rm and aliveNext each re-ran the degree aggregation
-      // (two jobs), and curNext was a third. Now curNext's eager
-      // materialization computes degd once (cached + lineage-truncated by
-      // the post-job hook) and aliveNext through it; rm stays a plain
-      // filter over the cached degd — no job of its own, and the final
-      // union reads it from the round's cached blocks.
-      val degd = lazyRoundCheckpoint(alive.join(deg, Seq("id"), "left")
-        .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")))
-      val rm = degd.where(col("deg") < k)
-        .select(col("id"), lit(r.toLong).as("removed_round"),
-          col("deg").as("final_deg"))
-      removed ::= rm
-      val aliveNext = lazyRoundCheckpoint(degd.where(col("deg") >= k)
-        .select("id"))
-      val curNext = roundCheckpoint(cur
-        .join(bc(aliveNext.select(col("id").as("src"))), Seq("src"), "left_semi")
-        .join(bc(aliveNext.select(col("id").as("dst"))), Seq("dst"), "left_semi"))
-      // curNext's materialization computed degd and aliveNext — the
-      // superseded round files are safe to drop. degd's own reliable
-      // files must SURVIVE the loop (the rm filters in the final union
-      // read it); kcorePeelInto's checkpointFilesOf sweep reclaims them.
-      checkpointFileOf(alive).foreach(deleteCheckpointFile(alive, _))
-      checkpointFileOf(cur).foreach(deleteCheckpointFile(cur, _))
-      alive = aliveNext
-      cur = curNext
+    val (drv, verts) = Rounds.seeded(vertices.select(col("id")).distinct())
+    val bc = drv.bc
+    val sym = drv.round(simpleSymmetric(edges))
+    // state: (alive vertices, remaining edges, removed rows of each round)
+    drv.loop(Seq(verts, sym), rounds) {
+      case (alive +: cur +: removed, r) =>
+        val deg = cur.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+        // ONE materialized frame per round (r15, guide §1.2/§7): the degree
+        // aggregate is LAZY-checkpointed and everything else derives from
+        // it — curNext's eager materialization computes degd once (cached
+        // + lineage-truncated by the post-job hook) and aliveNext through
+        // it; rm stays a plain filter over the cached degd — no job of its
+        // own, and the final union reads it from the round's cached blocks
+        // (so degd's files outlive the loop and are reclaimed by [[drain]]).
+        val degd = drv.lazyRound(alive.join(deg, Seq("id"), "left")
+          .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg")))
+        val rm = degd.where(col("deg") < k)
+          .select(col("id"), lit(r.toLong).as("removed_round"),
+            col("deg").as("final_deg"))
+        val aliveNext = drv.lazyRound(degd.where(col("deg") >= k)
+          .select("id"))
+        val curNext = drv.round(cur
+          .join(bc(aliveNext.select(col("id").as("src"))), Seq("src"),
+            "left_semi")
+          .join(bc(aliveNext.select(col("id").as("dst"))), Seq("dst"),
+            "left_semi"))
+        aliveNext +: curNext +: rm +: removed
+    } { case alive +: cur +: removed =>
+      val degF = cur.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+      val survivors = alive.join(degF, Seq("id"), "left")
+        .select(col("id"), lit(-1L).as("removed_round"),
+          coalesce(col("deg"), lit(0L)).as("final_deg"))
+      (survivors +: removed).reduce(_ unionByName _)
     }
-    val degF = cur.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val survivors = alive.join(degF, Seq("id"), "left")
-      .select(col("id"), lit(-1L).as("removed_round"),
-        coalesce(col("deg"), lit(0L)).as("final_deg"))
-    (survivors :: removed).reduce(_ unionByName _)
   }
 
-  /** Loan variant of [[kcorePeel]] ([[pagerankInto]] contract). */
-  def kcorePeelInto[A](edges: DataFrame, vertices: DataFrame,
-                       k: Int, rounds: Int)(consume: DataFrame => A): A = {
-    val r = kcorePeel(edges, vertices, k, rounds)
-    try consume(r)
-    finally checkpointFilesOf(r).foreach(deleteCheckpointFile(r, _))
-  }
-
-  /** Oracle-gated cluster query: deterministic block-chain edges over the
-    * documents table (doc_id → doc_id+1 within each 10-id block, plus a
-    * +2 skip edge in the block's lower half), so components are exactly
-    * the 10-id blocks and DuckDB's recursive-CTE closure reproduces the
-    * same (doc_id, cluster_id = block minimum) assignment — a rare chance
-    * to hash-check an iterative distributed algorithm against a
-    * declarative oracle.
-    */
   /** Cluster-size distribution over [[dedupClusters]] — the dedup
     * observability panel: how many singletons, how many mega-clusters
     * (a sudden mega-cluster means boilerplate or a broken shingle rule
@@ -904,6 +729,14 @@ object GraphOps {
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
       .orderBy("cluster_size")
 
+  /** Oracle-gated cluster query: deterministic block-chain edges over the
+    * documents table (doc_id → doc_id+1 within each 10-id block, plus a
+    * +2 skip edge in the block's lower half), so components are exactly
+    * the 10-id blocks and DuckDB's recursive-CTE closure reproduces the
+    * same (doc_id, cluster_id = block minimum) assignment — a rare chance
+    * to hash-check an iterative distributed algorithm against a
+    * declarative oracle.
+    */
   def dedupClusters(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").select(col("doc_id"))
     val bounds = docs.agg(max("doc_id")).head()

@@ -182,8 +182,8 @@ object IncrementalClusters {
     // runs once per gate instead of twice (r14)
     val pairs = pairsOfBands(PlanCache.swap("cluster_corpus_bands",
       TextOps.bandsOfDocs(corpus)))
-    GraphOps.connectedComponentsInto(pairs,
-      corpus.select(col("doc_id").as("id"))) { labels =>
+    GraphOps.drain(GraphOps.connectedComponents(pairs,
+      corpus.select(col("doc_id").as("id")))) { labels =>
       graft.store.Warehouse.saveModel(
         clusterForWrite(labels.select(col("id").as("doc_id"),
           col("cluster_id").as("canonical_id"),
@@ -260,7 +260,8 @@ object IncrementalClusters {
     val vertices = batch.select(col("doc_id").as("id"))
       .union(contractedEdges.select(col("dst").as("id")))
       .distinct()
-    GraphOps.connectedComponentsInto(contractedEdges, vertices) { cc =>
+    GraphOps.drain(
+        GraphOps.connectedComponents(contractedEdges, vertices)) { cc =>
       val resolved = cc.localCheckpoint()
       val batchRows = resolved
         .join(batch.select(col("doc_id").as("id")), Seq("id"), "left_semi")

@@ -253,12 +253,12 @@ object LinkOps {
     * (id) vertex set — shared by the corpus query path and the
     * stored-fact rebuild ([[graft.pipeline.LinkIngest]]). Returns an
     * eagerly-materialized frame; the walk's round checkpoint files are
-    * reclaimed through the loan ([[GraphOps.pagerankInto]]), so repeated
+    * reclaimed through the loan ([[GraphOps.drain]]), so repeated
     * rebuilds can't grow reliable-checkpoint storage.
     */
   private[graft] def ranksOver(edges: DataFrame,
                                verts: DataFrame): DataFrame =
-    GraphOps.pagerankInto(edges, verts) { ranks =>
+    GraphOps.drain(GraphOps.pagerank(edges, verts)) { ranks =>
       val outd = edges.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("n_out"))
       val ind = edges.groupBy(col("dst").as("id"))
@@ -279,7 +279,7 @@ object LinkOps {
     */
   def hitsDomains(s: SparkSession, d: String): DataFrame =
     withDomainGraph(s, d) { (_, edges, verts) =>
-      GraphOps.hitsInto(edges, verts) { hv =>
+      GraphOps.drain(GraphOps.hits(edges, verts)) { hv =>
         hv.select(col("id").as("domain"), col("hub_fp"), col("auth_fp"))
           .localCheckpoint(eager = true)
       }
@@ -301,7 +301,8 @@ object LinkOps {
     */
   def communitiesLpa(s: SparkSession, d: String): DataFrame =
     withDomainGraph(s, d) { (_, edges, verts) =>
-      GraphOps.labelPropagationInto(edges, verts, LpaIters) { labels =>
+      GraphOps.drain(
+          GraphOps.labelPropagation(edges, verts, LpaIters)) { labels =>
         val sizes = labels.groupBy("label")
           .agg(count(lit(1)).as("community_size"))
         labels.join(sizes, Seq("label"))
@@ -327,7 +328,8 @@ object LinkOps {
     */
   def kcoreDomains(s: SparkSession, d: String): DataFrame =
     withDomainGraph(s, d) { (_, edges, verts) =>
-      GraphOps.kcorePeelInto(edges, verts, KCoreK, KCoreRounds) { r =>
+      GraphOps.drain(
+          GraphOps.kcorePeel(edges, verts, KCoreK, KCoreRounds)) { r =>
         r.select(col("id").as("domain"), col("removed_round"),
           col("final_deg")).localCheckpoint(eager = true)
       }
@@ -348,7 +350,7 @@ object LinkOps {
     withDomainGraph(s, d) { (links, edges, verts) =>
       val seeds = links.filter(col("page_domain").endsWith(".co.uk"))
         .select(col("page_domain").as("id")).distinct()
-      GraphOps.pagerankSeededInto(edges, verts, seeds) { r =>
+      GraphOps.drain(GraphOps.pagerankSeeded(edges, verts, seeds)) { r =>
         r.select(col("id").as("domain"), col("rank_fp"))
           .localCheckpoint(eager = true)
       }
@@ -372,7 +374,8 @@ object LinkOps {
         .select(col("src"), col("dst"), expr("1000000L div cnt").as("w"))
       val seeds = links.filter(col("page_domain").endsWith(".co.uk"))
         .select(col("page_domain").as("id")).distinct()
-      GraphOps.weightedHopsInto(wedges, verts, seeds, WPathIters) { h =>
+      GraphOps.drain(
+          GraphOps.weightedHops(wedges, verts, seeds, WPathIters)) { h =>
         h.select(col("id").as("domain"), col("dist").as("cost"))
           .localCheckpoint(eager = true)
       }
@@ -395,7 +398,7 @@ object LinkOps {
     withDomainGraph(s, d) { (links, edges, verts) =>
       val seeds = links.filter(col("page_domain").endsWith(".co.uk"))
         .select(col("page_domain").as("id")).distinct()
-      GraphOps.bfsHopsInto(edges, verts, seeds) { hops =>
+      GraphOps.drain(GraphOps.bfsHops(edges, verts, seeds)) { hops =>
         hops.select(col("id").as("domain"), col("dist"))
           .localCheckpoint(eager = true)
       }
@@ -424,7 +427,7 @@ object LinkOps {
     */
   def harmonicCentrality(s: SparkSession, d: String): DataFrame =
     withDomainGraph(s, d) { (_, edges, verts) =>
-      GraphOps.allPairsHopsInto(edges, verts) { hops =>
+      GraphOps.drain(GraphOps.allPairsHops(edges, verts)) { hops =>
         val h = hops.where(col("s") =!= col("id"))
           .groupBy("id")
           .agg(count(lit(1)).as("n_reachers"),
@@ -529,7 +532,7 @@ object LinkOps {
     */
   def eccentricityDomains(s: SparkSession, d: String): DataFrame =
     withDomainGraph(s, d) { (_, edges, verts) =>
-      GraphOps.allPairsHopsInto(edges, verts) { hops =>
+      GraphOps.drain(GraphOps.allPairsHops(edges, verts)) { hops =>
         val e = hops.where(col("s") =!= col("id")).groupBy("s")
           .agg(count(lit(1)).as("n_reached"), sum("dist").as("dist_sum"),
             max("dist").as("ecc"))
@@ -566,7 +569,7 @@ object LinkOps {
     */
   def stressCentrality(s: SparkSession, d: String): DataFrame =
     withDomainGraph(s, d) { (_, edges, verts) =>
-      GraphOps.allPairsGeodesicsInto(edges, verts) { geo =>
+      GraphOps.drain(GraphOps.allPairsGeodesics(edges, verts)) { geo =>
         val bounds = geo.agg(max("sigma"), count(lit(1))).head
         val (sigMax, nPairs) = (bounds.getLong(0), bounds.getLong(1))
         require(sigMax <= Long.MaxValue / math.max(sigMax, 1L) /
@@ -744,7 +747,8 @@ object LinkOps {
     */
   def modularityCommunities(s: SparkSession, d: String): DataFrame =
     withDomainGraph(s, d) { (_, edges, verts) =>
-      GraphOps.labelPropagationInto(edges, verts, LpaIters) { labels =>
+      GraphOps.drain(
+          GraphOps.labelPropagation(edges, verts, LpaIters)) { labels =>
         GraphOps.modularityOver(edges, labels)
       }
     }.orderBy("community")

@@ -392,7 +392,7 @@ class LinkOpsSpec extends SparkSpec {
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"))
       .toDF("src", "dst")
     val verts = Seq("a", "b", "c", "d", "e").toDF("id")
-    val hops = graft.ops.GraphOps.allPairsHopsInto(edges, verts, 4) { h =>
+    val hops = GraphOps.drain(GraphOps.allPairsHops(edges, verts, 4)) { h =>
       h.collect().map(r =>
         (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     }
@@ -402,7 +402,7 @@ class LinkOpsSpec extends SparkSpec {
     assert(!hops.contains(("b", "a")), "directed: no back edge")
     assert(!hops.contains(("a", "e")), "isolated vertex unreachable")
 
-    val geo = graft.ops.GraphOps.allPairsGeodesicsInto(edges, verts, 4) { g =>
+    val geo = GraphOps.drain(GraphOps.allPairsGeodesics(edges, verts, 4)) { g =>
       g.collect().map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3)))).toMap
     }
@@ -414,7 +414,7 @@ class LinkOpsSpec extends SparkSpec {
     // direct edge froze (dist, sigma) at round 1
     val tri = Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("src", "dst")
     val vs = Seq("a", "b", "c").toDF("id")
-    val g2 = graft.ops.GraphOps.allPairsGeodesicsInto(tri, vs, 4) { g =>
+    val g2 = GraphOps.drain(GraphOps.allPairsGeodesics(tri, vs, 4)) { g =>
       g.collect().map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3)))).toMap
     }

@@ -1355,26 +1355,6 @@ class OpsPropertySpec extends SparkSpec {
     assert(cc2 == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 4L))
   }
 
-  test("connected components: round batching is label-invariant (K=1/2/3)") {
-    import graft.ops.GraphOps
-    // r15 round-batching law: K rounds per materialization must be a pure
-    // scheduling choice — labels identical for every K, including a batch
-    // whose FIRST sub-round converges (the exit test reads only the last
-    // sub-round) and a K that doesn't divide the round count. Mixed
-    // shapes: a 100-chain (many pointer-jump rounds), a triangle, two
-    // isolated vertices, duplicate + self-loop edges.
-    val edges = ((0L until 100L).map(i => (i, i + 1)) ++
-      Seq((200L, 201L), (201L, 202L), (202L, 200L), (200L, 201L),
-        (300L, 300L))).toDF("src", "dst")
-    val verts = ((0L to 100L) ++ Seq(200L, 201L, 202L, 300L, 400L)).toDF("id")
-    def run(k: Int) = GraphOps.connectedComponents(edges, verts, batch = k)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val k1 = run(1)
-    assert(k1(100L) == 0L && k1(202L) == 200L && k1(400L) == 400L)
-    assert(run(2) == k1, "batch=2 diverged from batch=1")
-    assert(run(3) == k1, "batch=3 diverged from batch=1")
-  }
-
   test("near-dup pairs compose with connected components into keep/drop sets") {
     import graft.ops.GraphOps
     // three chained near-identical vectors (1~2 and 2~3 pair, 1~3 may or
@@ -2763,6 +2743,62 @@ class OpsPropertySpec extends SparkSpec {
       // restore local-checkpoint mode for the rest of the shared session
       // (setCheckpointDir(null) resets to None — Option(null))
       spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("graph loops: reliable checkpoint files live only as long as the " +
+      "result, and drain reclaims them") {
+    import graft.ops.GraphOps
+    // every iterative loop over one small graph: a chain into a triangle,
+    // a seed at the chain's head, an isolated vertex
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (5L, 3L)).toDF("src", "dst")
+    val weighted = edges.withColumn("w", lit(2L))
+    val verts = (0L to 6L).toDF("id")
+    val seeds = Seq(0L).toDF("id")
+    val loops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (() => GraphOps.connectedComponents(edges, verts)),
+      "pagerank" -> (() => GraphOps.pagerank(edges, verts, iters = 3)),
+      "pagerankSeeded" ->
+        (() => GraphOps.pagerankSeeded(edges, verts, seeds, iters = 3)),
+      "hits" -> (() => GraphOps.hits(edges, verts, iters = 2)),
+      "bfsHops" -> (() => GraphOps.bfsHops(edges, verts, seeds, iters = 3)),
+      "allPairsHops" -> (() => GraphOps.allPairsHops(edges, verts, iters = 3)),
+      "allPairsGeodesics" ->
+        (() => GraphOps.allPairsGeodesics(edges, verts, iters = 3)),
+      "weightedHops" ->
+        (() => GraphOps.weightedHops(weighted, verts, seeds, iters = 3)),
+      "labelPropagation" ->
+        (() => GraphOps.labelPropagation(edges, verts, iters = 3)),
+      "kcorePeel" -> (() => GraphOps.kcorePeel(edges, verts, k = 2, rounds = 3)))
+    def rddDirs(d: java.io.File): Set[String] =
+      Option(d.listFiles()).getOrElse(Array.empty).filter(_.isDirectory)
+        .flatMap(f => if (f.getName.startsWith("rdd-")) Set(f.getName)
+          else rddDirs(f)).toSet
+    // the checkpoint dirs a frame reads (its LogicalRDD leaves)
+    def readBy(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.flatMap(_.getCheckpointFile)
+        .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    for ((name, loop) <- loops) {
+      val want = rows(loop()) // local-checkpoint mode
+      val ckptDir = TempDirs.create("graft-loop-ckpt")
+      spark.sparkContext.setCheckpointDir(ckptDir)
+      try withClue(s"$name: ") {
+        val out = loop()
+        val live = rddDirs(new java.io.File(ckptDir))
+        assert(live.nonEmpty, s"$name wrote no reliable checkpoint files")
+        // only the final round's files remain: the ones the result reads
+        assert(live == readBy(out),
+          s"$name left superseded rounds' files: ${live -- readBy(out)}")
+        assert(GraphOps.drain(out)(rows) == want,
+          s"$name diverged between local and reliable checkpoints")
+        val left = rddDirs(new java.io.File(ckptDir))
+        assert(left.isEmpty, s"$name: drain left checkpoint files $left")
+      } finally spark.sparkContext.setCheckpointDir(null)
+    }
   }
 
   test("band-index bucket law: adaptive count, appends preserve the spec, " +

@@ -9,6 +9,7 @@ over the <sf_dir> parquet tables: row count, column names, dtypes, values.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -22,6 +23,11 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
     return df.reset_index(drop=True)
+
+
+def sql_str(v: str) -> str:
+    """A SQL string literal of v: single quotes doubled."""
+    return "'" + v.replace("'", "''") + "'"
 
 
 def _is_float(v) -> bool:
@@ -65,18 +71,16 @@ def main():
     # instead. Opt-in via env so the driver-scale default path is
     # byte-identical: CHECK_TEMP_DIR enables disk spill, CHECK_THREADS
     # bounds concurrency (fewer threads = less transient memory).
-    import os
     if os.environ.get("CHECK_TEMP_DIR"):
-        con.sql(f"SET temp_directory='{os.environ['CHECK_TEMP_DIR']}'")
+        con.sql(f"SET temp_directory={sql_str(os.environ['CHECK_TEMP_DIR'])}")
     if os.environ.get("CHECK_THREADS"):
         con.sql(f"SET threads={int(os.environ['CHECK_THREADS'])}")
     if os.environ.get("CHECK_MEM_LIMIT"):
-        con.sql(f"SET memory_limit='{os.environ['CHECK_MEM_LIMIT']}'")
+        con.sql(f"SET memory_limit={sql_str(os.environ['CHECK_MEM_LIMIT'])}")
     for t in TABLES:
         # driver corpora are flat files; PerfProbe-buildScaled corpora are
         # Spark part-file directories — glob those
         p = f"{sf_dir}/{t}.parquet"
-        import os
         if os.path.isdir(p):
             p = f"{p}/*.parquet"
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
