@@ -2,6 +2,9 @@ package graft.pipeline
 
 import java.time.temporal.ChronoUnit
 import java.time.{LocalDate, LocalDateTime}
+import java.util.Locale
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 import graft.config.TenantConfig
 
@@ -124,15 +127,6 @@ final class ScheduleRunner(entries: Seq[ScheduleRunner.Entry],
   private val last = scala.collection.mutable.Map(
     entries.map(e => e.id -> startAt): _*)
 
-  /** Run every entry with a fire time in `(lastTick, now]`; returns the ids
-    * that ran successfully. Monotonic: a `now` at or before an entry's last
-    * tick is a no-op for it.
-    *
-    * Fault isolation: one entry's failure must neither starve the other
-    * tenants this tick nor lose its own fire — on failure the entry's
-    * window is NOT advanced, so the next tick retries it (and `onError`
-    * observes the failure).
-    */
   /** All fires of `e` in `(prev, now]`, as (first, last). The scan from
     * `first` is shortcut to the most recent day when the window is long
     * (a minutely cron a year behind must not walk 525k steps per tick);
@@ -157,27 +151,67 @@ final class ScheduleRunner(entries: Seq[ScheduleRunner.Entry],
     Some((first, f))
   }
 
-  def tick(spark: SparkSession, now: LocalDateTime): Seq[String] =
-    entries.flatMap { e =>
-      val prev = last(e.id)
-      if (!now.isAfter(prev)) None
-      else {
-        val fires =
-          try firesIn(e, prev, now)
-          catch { case ex: IllegalArgumentException => // unsatisfiable cron
-            onError(e.id, ex); last(e.id) = now; None }
-        fires match {
-          case None => last(e.id) = now; None
-          case Some((first, lastFire)) =>
-            try {
-              e.run(spark, ScheduleRunner.FireWindow(first, lastFire))
-              last(e.id) = now
-              Some(e.id)
-            } catch { case scala.util.control.NonFatal(ex) =>
-              onError(e.id, ex); None }
-        }
+  /** Run every entry with a fire time in `(lastTick, now]`; returns the ids
+    * that ran successfully, in declared order. Monotonic: a `now` at or
+    * before an entry's last tick is a no-op for it.
+    *
+    * Lanes: due entries whose [[ScheduleRunner.Entry.writes]] overlap share
+    * a lane, and an entry that declares no writes shares one with every
+    * entry. A lane runs its entries one after another in declared order;
+    * lanes run at the same time, on a pool of at most
+    * `min(lanes, defaultParallelism)` threads that lives for this tick. So
+    * entries that declare nothing run exactly as a sequential loop would.
+    * Window advancement, `onError` and the returned ids are applied on the
+    * calling thread after every lane has finished, in declared order.
+    *
+    * Fault isolation: one entry's failure must neither starve the other
+    * tenants this tick nor lose its own fire — on failure the entry's
+    * window is NOT advanced, so the next tick retries it (and `onError`
+    * observes the failure).
+    */
+  def tick(spark: SparkSession, now: LocalDateTime): Seq[String] = {
+    val planned = entries.filter(e => now.isAfter(last(e.id))).map { e =>
+      e -> (try Right(firesIn(e, last(e.id), now))
+            catch { case ex: IllegalArgumentException => Left(ex) }) // unsatisfiable cron
+    }
+    val ran = runInLanes(spark, planned.collect {
+      case (e, Right(Some((first, lastFire)))) => (e, ScheduleRunner.FireWindow(first, lastFire))
+    })
+    planned.flatMap {
+      case (e, Left(ex)) => onError(e.id, ex); last(e.id) = now; None
+      case (e, Right(None)) => last(e.id) = now; None
+      case (e, Right(Some(_))) => ran(e.id) match {
+        case Success(_) => last(e.id) = now; Some(e.id)
+        case Failure(ex) => onError(e.id, ex); None
       }
     }
+  }
+
+  /** Run the due entries lane by lane ([[tick]]); every entry's outcome by id. */
+  private def runInLanes(spark: SparkSession,
+                         due: Seq[(ScheduleRunner.Entry, ScheduleRunner.FireWindow)])
+      : Map[String, Try[Unit]] = {
+    def fire(lane: Seq[(ScheduleRunner.Entry, ScheduleRunner.FireWindow)]) =
+      lane.map { case (e, w) => e.id -> Try(e.run(spark, w)) }
+    val lanes = ScheduleRunner.lanes(due)(_._1.writes)
+    if (lanes.size <= 1) fire(due).toMap
+    else {
+      val pool = Executors.newFixedThreadPool(
+        math.min(lanes.size, math.max(spark.sparkContext.defaultParallelism, 1)))
+      try {
+        val futures = lanes.map(lane => pool.submit(
+          new Callable[Seq[(String, Try[Unit])]] { def call() = fire(lane) }))
+        // await EVERY lane before reporting (the TenantRegistry.runAll
+        // contract); a lane only fails on a fatal error, which is rethrown
+        val outcomes = futures.map(f => Try(f.get()))
+        outcomes.flatMap {
+          case Success(rs) => rs
+          case Failure(ex: ExecutionException) => throw ex.getCause
+          case Failure(ex) => throw ex
+        }.toMap
+      } finally pool.shutdown()
+    }
+  }
 
   /** Earliest upcoming fire time across entries (sleep target for a
     * real-time loop); None when no entry can ever fire again.
@@ -228,26 +262,49 @@ object ScheduleRunner {
   /** One scheduled unit of work. The runner keys entries by `id`;
     * `name`/`target`/`tags` are the reference ScheduleComponent's
     * descriptive metadata (lib/schedule.py:8-11) — inert to execution,
-    * surfaced for operators and UI.
+    * surfaced for operators and UI. `writes` names the databases a run
+    * writes; it decides which due entries may run at the same time
+    * ([[ScheduleRunner.tick]]). Empty means "may write anything", so the
+    * entry never runs beside another.
     */
   final case class Entry(id: String, cron: CronSchedule,
                          run: (SparkSession, FireWindow) => Unit,
                          name: String = "", target: String = "",
-                         tags: Map[String, String] = Map.empty)
+                         tags: Map[String, String] = Map.empty,
+                         writes: Set[String] = Set.empty)
+
+  /** Group `items` into lanes: items whose write sets overlap, directly or
+    * through other items, share a lane, and an item that declares no
+    * writes shares one with every item. Each lane keeps declared order;
+    * lanes are ordered by their first item. Database names compare
+    * case-insensitively, as the catalog does.
+    */
+  private[pipeline] def lanes[A](items: Seq[A])(writes: A => Set[String]): Seq[Seq[A]] = {
+    val ws = items.map(i => writes(i).map(_.toLowerCase(Locale.ROOT)))
+    if (ws.exists(_.isEmpty)) Seq(items).filter(_.nonEmpty)
+    else items.indices.foldLeft(Vector.empty[(Set[String], Vector[Int])]) { (acc, i) =>
+      val (hit, miss) = acc.partition(_._1.exists(ws(i)))
+      miss :+ ((hit.flatMap(_._1).toSet ++ ws(i), (hit.flatMap(_._2) :+ i).sorted))
+    }.sortBy(_._2.head).map(_._2.map(items))
+  }
 
   /** Standard wiring: a tenant's declared `schedule` drives its full
     * pipeline run (extract + model DAG, snapshot-replace semantics —
     * catch-up collapses to one run by ignoring the window). Metadata
     * mirrors the reference's generated definitions
     * (_tenant_factory.py:163-174): `{tid}_schedule` targeting the
-    * `{tid}_pipeline` job tagged with its tenant.
+    * `{tid}_pipeline` job tagged with its tenant. The entry writes the
+    * pipeline's databases, so tenants with disjoint databases fire at the
+    * same time, the way the reference's per-tenant code locations run as
+    * separate processes (workspace.yaml:2-9).
     */
   def forTenant(tenant: TenantConfig, pipeline: TenantPipeline): Entry =
     Entry(tenant.id, CronSchedule.parse(tenant.schedule),
       (s, _) => { pipeline.run(s); () },
       name = s"${tenant.id}_schedule",
       target = s"${tenant.id}_pipeline",
-      tags = Map("tenant" -> tenant.id, "pipeline" -> "tenant"))
+      tags = Map("tenant" -> tenant.id, "pipeline" -> "tenant"),
+      writes = pipeline.writes)
 
   /** Threshold-gated small-file compaction on a cron cadence — the
     * maintenance loop that keeps streaming appends and per-batch merges
@@ -270,7 +327,7 @@ object ScheduleRunner {
           graft.store.Warehouse.fileCount(s, db, table) > maxFiles)
         graft.store.Warehouse.compact(s, db, table, targetFiles)
     }, name = s"${table}_compaction", target = s"$db.$table",
-      tags = Map("pipeline" -> "maintenance"))
+      tags = Map("pipeline" -> "maintenance"), writes = Set(db))
   }
 
   /** Scheduled incremental materialization: each run backfills every
@@ -299,5 +356,5 @@ object ScheduleRunner {
       PartitionedMaterializer.backfill(s, source(s), dateCol, grain,
         db, table, from, until)
       ()
-    })
+    }, writes = Set(db))
 }

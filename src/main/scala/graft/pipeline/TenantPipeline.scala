@@ -23,6 +23,9 @@ final class TenantPipeline(
     extraVars: Map[String, String] = Map.empty,
     env: Environment = Environment.Prod) {
 
+  require(TenantPipeline.appendWithoutWatermark(tenant).isEmpty,
+    TenantPipeline.appendWithoutWatermark(tenant).mkString("; "))
+
   /** Environment-scoped database names (environment_helpers.py:12-16):
     * Local runs land in `dev_{tid}` / `dev_{tid}_raw`, so the same tenant
     * can run in dev and prod against one warehouse without colliding.
@@ -63,33 +66,45 @@ final class TenantPipeline(
     env.schemaFor(base)
   }
 
+  /** Databases a run writes: the environment-scoped raw and mart
+    * databases and every model schema. Runs whose sets are disjoint can
+    * run at the same time ([[ScheduleRunner.forTenant]]).
+    */
+  def writes: Set[String] = Set(rawDb, martDb) ++ models.map(modelSchema)
+
   /** Stage 1 — extraction into `{tid}_raw` (reference asset body,
-    * _tenant_factory.py:212-326). Returns per-table row counts.
+    * _tenant_factory.py:212-326). Returns each table's row count after the
+    * load, taken from the load's own job rather than a re-read.
     */
   def runExtract(spark: SparkSession, landingDir: Option[String] = None,
                  rowLimit: Option[Int] = None): Map[String, Long] = {
     Warehouse.ensureDatabase(spark, rawDb)
     tenant.tables.map { spec =>
       val mode = LoadMode.parse(spec.mode)
-      val last = mode match {
+      // an append reports prior rows + rows written; the prior count comes
+      // from the job that reads the watermark (the constructor guarantees
+      // an append table its incremental column)
+      val prior = mode match {
         case LoadMode.WatermarkAppend => spec.incrementalColumn.flatMap(c =>
-          Warehouse.currentWatermark(spark, rawDb, spec.name, c))
+          Warehouse.appendState(spark, rawDb, spec.name, c))
         case _ => None // reference never passes last_value (§2.A note)
       }
-      val df = Extractor.extract(source.scan(spark, spec), spec, tenant, last, rowLimit)
+      val df = Extractor.extract(source.scan(spark, spec), spec, tenant,
+        prior.flatMap(_.watermark), rowLimit)
       landingDir.foreach { dir =>
         Warehouse.writeLanding(df, s"$dir/${tenant.storagePrefix}/${spec.name}")
       }
-      Warehouse.load(spark, df, rawDb, spec.name, mode)
+      val written = Warehouse.countWritten(df)(
+        Warehouse.load(spark, _, rawDb, spec.name, mode))
       // qualified key: raw tables and model aliases may share a bare name,
       // and run() merges both maps — bare keys would clobber each other
-      s"$rawDb.${spec.name}" ->
-        spark.table(s"`${rawDb}`.`${spec.name}`").count()
+      s"$rawDb.${spec.name}" -> (prior.map(_.rows).getOrElse(0L) + written)
     }.toMap
   }
 
   /** Stage 2 — SQL-model DAG (reference: dbt build,
-    * _tenant_factory.py:361-392). Each model: render → spark.sql → CTAS.
+    * _tenant_factory.py:361-392). Each model: render → spark.sql → CTAS;
+    * its row count is read from the CTAS job.
     * Models within a DAG level share no ref edges and run concurrently
     * (`threads` ≈ dbt's profile threads, reference profiles.yml:14,26) —
     * Spark's scheduler interleaves the independent jobs on one session.
@@ -105,10 +120,9 @@ final class TenantPipeline(
       ModelDag.levels(models).flatMap { level =>
         val futures = level.map { m =>
           m.name -> Future {
-            val df = spark.sql(r.render(m))
-            Warehouse.saveModel(df, modelSchema(m), m.alias)
-            s"${modelSchema(m)}.${m.alias}" ->
-              spark.table(s"`${modelSchema(m)}`.`${m.alias}`").count()
+            val rows = Warehouse.countWritten(spark.sql(r.render(m)))(
+              Warehouse.saveModel(_, modelSchema(m), m.alias))
+            s"${modelSchema(m)}.${m.alias}" -> rows
           }
         }
         // Await EVERY model in the level before reporting (the
@@ -226,6 +240,16 @@ final class TenantPipeline(
 }
 
 object TenantPipeline {
+
+  /** One finding per `mode: append` table that declares no
+    * `incremental_column`. Such a table has no watermark, and
+    * [[graft.extract.Extractor.watermark]] is then a no-op, so every fire
+    * would append the tenant's whole slice again.
+    */
+  def appendWithoutWatermark(tenant: TenantConfig): Seq[String] =
+    tenant.tables.filter(t => t.mode == "append" && t.incrementalColumn.isEmpty)
+      .map(t => s"tenant '${tenant.id}' table '${t.name}': mode 'append' " +
+        "needs an incremental_column")
 
   /** One materialization's UI metadata — the reference MaterializeResult
     * payload (_tenant_factory.py:317-326): row count, qualified table,

@@ -36,10 +36,6 @@ object TenantRegistry {
   final case class Discovered(dir: String, tenant: TenantConfig,
                               models: Seq[SqlModel])
 
-  /** Scan `root` for tenant directories, sorted by directory name
-    * (sync_tenants.py:33-40). Models load from `<dir>/models/&#42;.sql`,
-    * model name = file basename (dbt file-name contract).
-    */
   /** Files.list leaks its DirectoryStream unless closed — a re-scan loop
     * (schedule tick per workspace) would exhaust fds without this.
     */
@@ -48,6 +44,10 @@ object TenantRegistry {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
+  /** Scan `root` for tenant directories, sorted by directory name
+    * (sync_tenants.py:33-40). Models load from `<dir>/models/&#42;.sql`,
+    * model name = file basename (dbt file-name contract).
+    */
   def discover(root: String, env: Map[String, String] = sys.env): Seq[Discovered] = {
     val rootPath = Paths.get(root)
     require(Files.isDirectory(rootPath), s"tenant root not a directory: $root")
@@ -85,7 +85,8 @@ object TenantRegistry {
     *    (including the `{id}` vs `{id}_raw` cross-collision a tenant named
     *    `x_raw` would cause);
     *  - a declared schedule parses as five-field cron;
-    *  - every model ref() resolves within the tenant's own model set.
+    *  - every model ref() resolves within the tenant's own model set;
+    *  - every `mode: append` table declares its `incremental_column`.
     */
   def check(discovered: Seq[Discovered]): Seq[String] = {
     val idDrift = discovered.filter(d => d.tenant.id != d.dir)
@@ -113,7 +114,8 @@ object TenantRegistry {
       d.models.flatMap(m => m.refs.filterNot(names)
         .map(r => s"tenant '${d.tenant.id}' model '${m.name}': unresolved ref('$r')"))
     }
-    (idDrift ++ dupIds ++ dbDrift ++ schedDrift ++ refDrift).toSeq.sorted
+    val appendDrift = discovered.flatMap(d => TenantPipeline.appendWithoutWatermark(d.tenant))
+    (idDrift ++ dupIds ++ dbDrift ++ schedDrift ++ refDrift ++ appendDrift).toSeq.sorted
   }
 
   /** Build one pipeline per discovered tenant over a shared source factory.

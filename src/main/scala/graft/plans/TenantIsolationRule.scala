@@ -48,7 +48,8 @@ case class TenantIsolationRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val column = spark.conf.get(ColumnKey, "")
     val value = spark.conf.get(ValueKey, "")
-    if (column.isEmpty || spark.conf.get(BypassKey, "false") == "true") return plan
+    if (column.isEmpty ||
+        spark.sparkContext.getLocalProperty(BypassKey) == "true") return plan
 
     def isRawRelation(p: LogicalPlan): Boolean = p match {
       case rel: LogicalRelation =>
@@ -138,10 +139,17 @@ object TenantIsolationRule {
     */
   val ExemptKey = "graft.tenant.exemptTables"
 
-  /** Run `body` with tenant-filter injection suspended (maintenance ops). */
+  /** Run `body` with tenant-filter injection suspended (maintenance ops).
+    * The flag is a SparkContext local property, not a session conf: it
+    * holds for the calling thread and the threads it creates inside
+    * `body`, so a maintenance read on one thread never switches isolation
+    * off for another thread's queries on the same session, and
+    * overlapping blocks on two threads cannot leave the flag set.
+    */
   def withMaintenanceBypass[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get(BypassKey, "false")
-    spark.conf.set(BypassKey, "true")
-    try body finally spark.conf.set(BypassKey, prev)
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(BypassKey)
+    sc.setLocalProperty(BypassKey, "true")
+    try body finally sc.setLocalProperty(BypassKey, prev) // null removes it
   }
 }

@@ -38,9 +38,26 @@ object LoadMode {
   */
 object Warehouse {
 
-  /** A11 — namespace DDL (`CREATE SCHEMA IF NOT EXISTS`, _tenant_factory.py:276,288). */
+  /** A11 — namespace DDL (`CREATE SCHEMA IF NOT EXISTS`, _tenant_factory.py:276,288).
+    * A catalog lookup first: every load and model save calls this, and the
+    * database almost always exists already. The session catalog's own
+    * check takes the name as given, with no identifier parsing.
+    */
   def ensureDatabase(spark: SparkSession, db: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
+    if (!spark.sessionState.catalog.databaseExists(db))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
+
+  /** Rows a write produced, read from the write's own job: `write` gets
+    * `df` with a row-count observation attached, so no second scan of the
+    * written table is needed. The observation is read only after the
+    * write returned, because reading it blocks until the job has reported.
+    */
+  def countWritten(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = org.apache.spark.sql.Observation()
+    write(df.observe(rows, org.apache.spark.sql.functions.count(
+      org.apache.spark.sql.functions.lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
 
   /** A6 — columnar landing write (s3.write_parquet call site,
     * _tenant_factory.py:249-253).
@@ -120,11 +137,29 @@ object Warehouse {
     */
   def currentWatermark(spark: SparkSession, db: String, table: String,
                        column: String): Option[Any] =
+    appendState(spark, db, table, column).flatMap(_.watermark)
+
+  /** Stored watermark and row count of an append target, read by one
+    * aggregate job; None when the table does not exist yet. The row count
+    * lets an append report the table's size as prior rows plus rows
+    * written, without re-reading the table afterwards. Maintenance read,
+    * like [[currentWatermark]]: table-wide, not tenant-scoped.
+    */
+  def appendState(spark: SparkSession, db: String, table: String,
+                  column: String): Option[AppendState] =
     graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
+      import org.apache.spark.sql.functions.{count, lit, max}
       if (!spark.catalog.tableExists(s"$db.$table")) None
-      else Option(spark.table(s"`$db`.`$table`")
-        .agg(org.apache.spark.sql.functions.max(column)).head.get(0))
+      else {
+        val r = spark.table(s"`$db`.`$table`").agg(max(column), count(lit(1))).head
+        Some(AppendState(Option(r.get(0)), r.getLong(1)))
+      }
     }
+
+  /** An append target's highest watermark (None when it holds no value)
+    * and its row count.
+    */
+  final case class AppendState(watermark: Option[Any], rows: Long)
 
   /** Re-list every table of a model/index database in THIS session.
     * Spark's per-session relation cache freezes an UNPARTITIONED table's

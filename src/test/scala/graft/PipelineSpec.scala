@@ -127,6 +127,71 @@ class PipelineSpec extends SparkSpec {
     assert(Environment.Branch.dbtTarget(Map.empty) == "dev")
   }
 
+  test("run() reports each table's stored row count for full, incremental and append loads") {
+    import spark.implicits._
+    val src = java.nio.file.Files.createTempDirectory("graft-counts-src").toString
+    def land(rows: Seq[(Long, Long, String)]): Unit =
+      rows.toDF("id", "ts", "owner").write.mode("append")
+        .parquet(s"$src/events.parquet")
+    def table(name: String, mode: String) =
+      s"""  - name: $name
+         |    source_table: events
+         |    primary_key: [id]
+         |    columns: [id, ts, owner]
+         |    tenant_filter: owner
+         |    incremental_column: ts
+         |    mode: $mode
+         |""".stripMargin
+    val tenant = TenantConfig.parse(
+      s"""tenant:
+         |  id: graft_counts
+         |  name: "Row-count tenant"
+         |  source:
+         |    type: parquet
+         |  params:
+         |    owner: "A"
+         |tables:
+         |${table("ev_full", "full")}${table("ev_incr", "incremental")}${table("ev_append", "append")}""".stripMargin,
+      Map.empty)
+    val even = graft.model.SqlModel("graft_counts__even_events",
+      """{{ config(materialized='table', schema=var('tenant_id', 'graft_counts')) }}
+        |SELECT id, ts FROM {{ source('graft_counts_raw', 'ev_append') }} WHERE id % 2 = 0
+        |""".stripMargin)
+    val p = new TenantPipeline(tenant, new ParquetSource(src), Seq(even))
+    def runAndCompare(): Map[String, Long] = {
+      val counts = p.run(spark)
+      assert(counts.keySet == Set("graft_counts_raw.ev_full", "graft_counts_raw.ev_incr",
+        "graft_counts_raw.ev_append", "graft_counts.graft_counts__even_events"))
+      counts.foreach { case (k, n) => assert(n == spark.table(k).count(), k) }
+      counts
+    }
+
+    // first load: every table is created; rows of owner B are filtered out
+    land((1L to 6L).map(i => (i, i * 10, if (i % 3 == 0) "B" else "A")))
+    assert(runAndCompare()("graft_counts_raw.ev_append") == 4)
+    // a non-empty batch: full and incremental replace, append grows
+    land((7L to 10L).map(i => (i, i * 10, "A")))
+    val grown = runAndCompare()
+    assert(grown("graft_counts_raw.ev_append") == 8)
+    assert(grown("graft_counts_raw.ev_full") == 8)
+    // an empty batch: nothing newer than the watermark, the counts hold
+    assert(runAndCompare() == grown)
+  }
+
+  test("mode: append without incremental_column is refused when the pipeline is built") {
+    val yaml = PipelineOps.tenantYaml.replace("mode: full", "mode: append")
+    val tenant = TenantConfig.parse(yaml, Map.empty)
+    val ex = intercept[IllegalArgumentException] {
+      new TenantPipeline(tenant, new ParquetSource(sf), Seq.empty)
+    }
+    assert(ex.getMessage.contains(
+      "table 'item_master': mode 'append' needs an incremental_column"), ex.getMessage)
+    // with the watermark column declared the same tenant builds
+    val withColumn = tenant.copy(tables = tenant.tables.map(
+      _.copy(incrementalColumn = Some("p_partkey"))))
+    new TenantPipeline(withColumn, new ParquetSource(sf), Seq.empty)
+  }
+
   test("asset lineage exposes tid/layer/name keys with upstream edges") {
     val tenant = TenantConfig.parse(PipelineOps.tenantYaml, Map.empty)
     val p = new TenantPipeline(tenant, new ParquetSource(sf),

@@ -1,6 +1,7 @@
 package graft
 
 import java.time.LocalDateTime
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.config.TenantConfig
@@ -173,6 +174,90 @@ class ScheduleRunnerSpec extends SparkSpec {
       sleeper = ms => { slept :+= ms; simNow = simNow.plusNanos(ms * 1000000L) })
     assert(fired == 3)
     assert(slept.forall(_ <= 30L * 60 * 1000)) // never oversleeps an interval
+  }
+
+  test("tenant entries with disjoint writes fire at the same time; ids stay in declared order") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val tenant = TenantConfig.parse(PipelineOps.tenantYaml, Map.empty)
+    val pipeline = new TenantPipeline(tenant, new ParquetSource(sf),
+      Seq(PipelineOps.stagingModel, PipelineOps.martModel))
+    assert(ScheduleRunner.forTenant(tenant, pipeline).writes ==
+      Set("graft_demo", "graft_demo_raw"))
+    // each entry releases its latch and then waits for the other's: a
+    // runner that fires them one after another times out instead of hanging
+    val (zStarted, aStarted, aDone) =
+      (new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1))
+    def await(l: CountDownLatch): Unit =
+      if (!l.await(20, TimeUnit.SECONDS)) sys.error("the other entry never started")
+    val z = ScheduleRunner.Entry("z_tenant", CronSchedule.parse("0 * * * *"),
+      (_, _) => { zStarted.countDown(); await(aStarted); await(aDone) },
+      writes = Set("z_tenant", "z_tenant_raw"))
+    val a = ScheduleRunner.Entry("a_tenant", CronSchedule.parse("0 * * * *"),
+      (_, _) => { aStarted.countDown(); await(zStarted); aDone.countDown() },
+      writes = Set("a_tenant", "a_tenant_raw"))
+    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
+    val runner = new ScheduleRunner(Seq(z, a), startAt = t0,
+      onError = (id, e) => errors += s"$id: ${e.getMessage}")
+    // a_tenant finishes first; the ids still come back in declared order
+    assert(runner.tick(spark, t0.plusHours(1)) == Seq("z_tenant", "a_tenant"))
+    assert(errors.isEmpty, errors)
+  }
+
+  test("entries that share a database or declare none never overlap and run in declared order") {
+    val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
+    val ticking = Thread.currentThread
+    final case class Run(id: String, start: Long, end: Long, onTicker: Boolean)
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[Run]()
+    def entry(id: String, writes: Set[String]) =
+      ScheduleRunner.Entry(id, CronSchedule.parse("0 * * * *"), (_, _) => {
+        val start = System.nanoTime()
+        Thread.sleep(100)
+        runs.add(Run(id, start, System.nanoTime(), Thread.currentThread eq ticking))
+      }, writes = writes)
+    def tickAll(entries: Seq[ScheduleRunner.Entry]): Map[String, Run] = {
+      runs.clear()
+      val ids = new ScheduleRunner(entries, startAt = t0).tick(spark, t0.plusHours(1))
+      assert(ids == entries.map(_.id))
+      runs.asScala.map(r => r.id -> r).toMap
+    }
+    def inOrder(r: Map[String, Run], ids: String*): Unit =
+      ids.sliding(2).foreach { case Seq(x, y) =>
+        assert(r(x).end <= r(y).start, s"$x and $y overlapped or ran out of order") }
+
+    // a and c share the database `shared` (names compare as the catalog
+    // does, case-insensitively), so they run in one lane, one after the
+    // other; b has a lane of its own
+    val lanes = tickAll(Seq(entry("a", Set("shared", "a_raw")),
+      entry("b", Set("b", "b_raw")), entry("c", Set("SHARED"))))
+    inOrder(lanes, "a", "c")
+    // an entry that declares nothing conflicts with every entry, so the
+    // whole tick runs sequentially, on the ticking thread, as before
+    val serial = tickAll(Seq(entry("p", Set("p")), entry("q", Set.empty),
+      entry("r", Set("r"))))
+    inOrder(serial, "p", "q", "r")
+    assert(serial.values.forall(_.onTicker))
+    val undeclared = tickAll(Seq(entry("u", Set.empty), entry("v", Set.empty)))
+    inOrder(undeclared, "u", "v")
+    assert(undeclared.values.forall(_.onTicker))
+  }
+
+  test("failures in concurrent lanes reach onError on the ticking thread, in declared order") {
+    val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
+    val ticking = Thread.currentThread
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
+    def failing(id: String) = ScheduleRunner.Entry(id, CronSchedule.parse("0 * * * *"),
+      (_, _) => sys.error(s"$id broke"), writes = Set(id))
+    val ok = ScheduleRunner.Entry("ok", CronSchedule.parse("0 * * * *"),
+      (_, _) => (), writes = Set("ok"))
+    val runner = new ScheduleRunner(Seq(failing("m"), ok, failing("f")), startAt = t0,
+      onError = (id, _) => seen += (id -> (Thread.currentThread eq ticking)))
+    assert(runner.tick(spark, t0.plusHours(1)) == Seq("ok"))
+    assert(seen.toSeq == Seq("m" -> true, "f" -> true))
+    // the failed entries' windows stayed open: the same instant retries them
+    seen.clear()
+    assert(runner.tick(spark, t0.plusHours(1)).isEmpty)
+    assert(seen.map(_._1).toSeq == Seq("m", "f"))
   }
 
   test("scheduled compaction bounds file count across micro-batch append cycles") {

@@ -121,6 +121,54 @@ class TenantIsolationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.table("isom_raw.items").count() == 3)
   }
 
+  test("maintenance bypass is scoped to its thread: other threads stay filtered, overlaps unwind") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import graft.plans.TenantIsolationRule.withMaintenanceBypass
+    val s2 = spark
+    import s2.implicits._
+    Warehouse.load(spark, Seq(("T1", 1L), ("T2", 2L), ("T3", 3L)).toDF("project_id", "id"),
+      "isot_raw", "items", LoadMode.FullRefresh)
+    def visible(): Long = spark.table("isot_raw.items").count()
+    def await(l: CountDownLatch): Unit =
+      assert(l.await(30, TimeUnit.SECONDS), "the other thread stalled")
+    // run `body` on a new thread; the returned function joins it
+    def fork[T](body: => T): () => T = {
+      val out = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[T]]()
+      val t = new Thread(() => out.set(scala.util.Try(body)))
+      t.start()
+      () => { t.join(60000); out.get.get }
+    }
+    spark.conf.set("graft.tenant.filterColumn", "project_id")
+    spark.conf.set("graft.tenant.filterValue", "T1")
+    try {
+      // thread A sits inside a bypass block while this thread analyzes a read
+      val (inside, release) = (new CountDownLatch(1), new CountDownLatch(1))
+      val a = fork(withMaintenanceBypass(spark) { inside.countDown(); await(release); visible() })
+      await(inside)
+      val read = spark.table("isot_raw.items").queryExecution.analyzed
+      release.countDown()
+      assert(a() == 3) // the bypassing thread itself reads every tenant
+      assert(read.find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter])
+        .isDefined, s"a bypass on another thread switched isolation off here:\n$read")
+
+      // overlapping blocks: A enters, B enters, A leaves, B leaves
+      val (aIn, bIn, aOut) =
+        (new CountDownLatch(1), new CountDownLatch(1), new CountDownLatch(1))
+      val a2 = fork {
+        withMaintenanceBypass(spark) { aIn.countDown(); await(bIn) }
+        aOut.countDown()
+        visible()
+      }
+      val b2 = fork {
+        await(aIn)
+        withMaintenanceBypass(spark) { bIn.countDown(); await(aOut) }
+        visible()
+      }
+      assert(a2() == 1 && b2() == 1, "a thread was left bypassed")
+      assert(visible() == 1)
+    } finally spark.conf.set("graft.tenant.filterColumn", "")
+  }
+
   test("numeric tenant columns work: injected literal is cast to the column type") {
     val s2 = spark
     import s2.implicits._

@@ -93,6 +93,18 @@ class TenantRegistrySpec extends SparkSpec {
     assert(TenantRegistry.check(badRef).exists(_.contains("unresolved ref('ghost_model')")))
   }
 
+  test("drift gate flags an append table without an incremental_column") {
+    val root = freshRoot()
+    writeTenant(root, "reg_alpha", "Brand#4")
+    val found = TenantRegistry.discover(root.toString, Map.empty)
+    def withTables(f: graft.config.TableSpec => graft.config.TableSpec) =
+      found.map(d => d.copy(tenant = d.tenant.copy(tables = d.tenant.tables.map(f))))
+    assert(TenantRegistry.check(withTables(_.copy(mode = "append"))) == Seq(
+      "tenant 'reg_alpha' table 'item_master': mode 'append' needs an incremental_column"))
+    assert(TenantRegistry.check(withTables(
+      _.copy(mode = "append", incrementalColumn = Some("p_partkey")))).isEmpty)
+  }
+
   test("runAll stands up N tenants from disk concurrently with db isolation") {
     val root = freshRoot()
     writeTenant(root, "reg_alpha", "Brand#4")
