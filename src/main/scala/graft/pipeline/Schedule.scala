@@ -3,7 +3,6 @@ package graft.pipeline
 import java.time.temporal.ChronoUnit
 import java.time.{LocalDate, LocalDateTime}
 import java.util.Locale
-import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 import graft.config.TenantConfig
@@ -162,7 +161,9 @@ final class ScheduleRunner(entries: Seq[ScheduleRunner.Entry],
     * `min(lanes, defaultParallelism)` threads that lives for this tick. So
     * entries that declare nothing run exactly as a sequential loop would.
     * Window advancement, `onError` and the returned ids are applied on the
-    * calling thread after every lane has finished, in declared order.
+    * calling thread after every lane has finished, in declared order. No
+    * lane outlives its tick: a fatal error in a lane, or an interrupt of
+    * the calling thread, is rethrown only after every lane has finished.
     *
     * Fault isolation: one entry's failure must neither starve the other
     * tenants this tick nor lose its own fire — on failure the entry's
@@ -195,22 +196,10 @@ final class ScheduleRunner(entries: Seq[ScheduleRunner.Entry],
       lane.map { case (e, w) => e.id -> Try(e.run(spark, w)) }
     val lanes = ScheduleRunner.lanes(due)(_._1.writes)
     if (lanes.size <= 1) fire(due).toMap
-    else {
-      val pool = Executors.newFixedThreadPool(
-        math.min(lanes.size, math.max(spark.sparkContext.defaultParallelism, 1)))
-      try {
-        val futures = lanes.map(lane => pool.submit(
-          new Callable[Seq[(String, Try[Unit])]] { def call() = fire(lane) }))
-        // await EVERY lane before reporting (the TenantRegistry.runAll
-        // contract); a lane only fails on a fatal error, which is rethrown
-        val outcomes = futures.map(f => Try(f.get()))
-        outcomes.flatMap {
-          case Success(rs) => rs
-          case Failure(ex: ExecutionException) => throw ex.getCause
-          case Failure(ex) => throw ex
-        }.toMap
-      } finally pool.shutdown()
-    }
+    else
+      // a lane fails only on a fatal error, rethrown once all lanes are done
+      Parallel.runAll(spark.sparkContext.defaultParallelism,
+        lanes.map(lane => () => fire(lane))).flatMap(_.get).toMap
   }
 
   /** Earliest upcoming fire time across entries (sleep target for a
@@ -262,10 +251,13 @@ object ScheduleRunner {
   /** One scheduled unit of work. The runner keys entries by `id`;
     * `name`/`target`/`tags` are the reference ScheduleComponent's
     * descriptive metadata (lib/schedule.py:8-11) — inert to execution,
-    * surfaced for operators and UI. `writes` names the databases a run
-    * writes; it decides which due entries may run at the same time
-    * ([[ScheduleRunner.tick]]). Empty means "may write anything", so the
-    * entry never runs beside another.
+    * surfaced for operators and UI. `writes` names every database a run
+    * touches, the ones it reads as well as the ones it writes: it decides
+    * which due entries may run at the same time ([[ScheduleRunner.tick]]),
+    * and an entry reading a table that another lane overwrites could see it
+    * missing or partial. Empty means "may touch anything", so the entry
+    * never runs beside another; an entry whose reads cannot be known must
+    * leave it empty.
     */
   final case class Entry(id: String, cron: CronSchedule,
                          run: (SparkSession, FireWindow) => Unit,
@@ -293,10 +285,11 @@ object ScheduleRunner {
     * catch-up collapses to one run by ignoring the window). Metadata
     * mirrors the reference's generated definitions
     * (_tenant_factory.py:163-174): `{tid}_schedule` targeting the
-    * `{tid}_pipeline` job tagged with its tenant. The entry writes the
-    * pipeline's databases, so tenants with disjoint databases fire at the
-    * same time, the way the reference's per-tenant code locations run as
-    * separate processes (workspace.yaml:2-9).
+    * `{tid}_pipeline` job tagged with its tenant. The entry declares the
+    * databases the pipeline reads and writes ([[TenantPipeline.databases]]),
+    * so tenants with disjoint databases fire at the same time, the way the
+    * reference's per-tenant code locations run as separate processes
+    * (workspace.yaml:2-9).
     */
   def forTenant(tenant: TenantConfig, pipeline: TenantPipeline): Entry =
     Entry(tenant.id, CronSchedule.parse(tenant.schedule),
@@ -304,7 +297,7 @@ object ScheduleRunner {
       name = s"${tenant.id}_schedule",
       target = s"${tenant.id}_pipeline",
       tags = Map("tenant" -> tenant.id, "pipeline" -> "tenant"),
-      writes = pipeline.writes)
+      writes = pipeline.databases)
 
   /** Threshold-gated small-file compaction on a cron cadence — the
     * maintenance loop that keeps streaming appends and per-batch merges
@@ -315,7 +308,8 @@ object ScheduleRunner {
     * next fires are no-ops until appends re-accrete. A missing table is a
     * no-op too (the maintenance entry may be scheduled before first land).
     * Bounded-file-count law under repeated append+tick cycles is tested
-    * in ScheduleSpec.
+    * in ScheduleSpec. The entry declares `db`, so it shares a lane with
+    * every tenant that reads or writes that database.
     */
   def compactionEntry(id: String, cronExpr: String, db: String,
                       table: String, maxFiles: Int,
@@ -337,6 +331,12 @@ object ScheduleRunner {
     * definitions composed (schedule.py:14-22 +
     * executable_component.py:19-41). Missed fires are NOT dropped: a
     * catch-up run's range spans all of them in one ranged backfill.
+    *
+    * The entry declares no databases, so it never runs beside another
+    * entry: `source` is an opaque function whose reads cannot be known (a
+    * mart built from another table, say a tenant's), and a backfill that
+    * read a table while another lane overwrote it would drop and rebuild
+    * its partitions from a missing or partial source.
     */
   def partitionedEntry(id: String, cronExpr: String,
                        source: SparkSession => org.apache.spark.sql.DataFrame,
@@ -356,5 +356,5 @@ object ScheduleRunner {
       PartitionedMaterializer.backfill(s, source(s), dateCol, grain,
         db, table, from, until)
       ()
-    }, writes = Set(db))
+    })
 }

@@ -66,15 +66,23 @@ final class TenantPipeline(
     env.schemaFor(base)
   }
 
-  /** Databases a run writes: the environment-scoped raw and mart
-    * databases and every model schema. Runs whose sets are disjoint can
-    * run at the same time ([[ScheduleRunner.forTenant]]).
+  /** Databases a run reads or writes: the environment-scoped raw and mart
+    * databases, every model schema, and every schema a model reads through
+    * `source()`. Runs whose sets are disjoint can run at the same time
+    * ([[ScheduleRunner.forTenant]]). Reads count as much as writes: an
+    * overwrite deletes the target's files before it commits, so a run
+    * reading that table meanwhile can see it missing or partial. Models
+    * read through `source()` and `ref()` only; a table named directly in a
+    * model's SQL is not seen here.
     */
-  def writes: Set[String] = Set(rawDb, martDb) ++ models.map(modelSchema)
+  def databases: Set[String] = Set(rawDb, martDb) ++ models.map(modelSchema) ++
+    models.flatMap(_.sources).map { case (schema, _) => env.schemaFor(schema) }
 
   /** Stage 1 — extraction into `{tid}_raw` (reference asset body,
     * _tenant_factory.py:212-326). Returns each table's row count after the
-    * load, taken from the load's own job rather than a re-read.
+    * load, taken from the load's own job rather than a re-read (the table
+    * is re-read only when that count does not arrive,
+    * [[Warehouse.countWritten]]).
     */
   def runExtract(spark: SparkSession, landingDir: Option[String] = None,
                  rowLimit: Option[Int] = None): Map[String, Long] = {
@@ -94,17 +102,20 @@ final class TenantPipeline(
       landingDir.foreach { dir =>
         Warehouse.writeLanding(df, s"$dir/${tenant.storagePrefix}/${spec.name}")
       }
-      val written = Warehouse.countWritten(df)(
+      val rows = Warehouse.countWritten(df)(
         Warehouse.load(spark, _, rawDb, spec.name, mode))
+        .map(prior.map(_.rows).getOrElse(0L) + _)
+        .getOrElse(spark.table(s"`$rawDb`.`${spec.name}`").count())
       // qualified key: raw tables and model aliases may share a bare name,
       // and run() merges both maps — bare keys would clobber each other
-      s"$rawDb.${spec.name}" -> (prior.map(_.rows).getOrElse(0L) + written)
+      s"$rawDb.${spec.name}" -> rows
     }.toMap
   }
 
   /** Stage 2 — SQL-model DAG (reference: dbt build,
     * _tenant_factory.py:361-392). Each model: render → spark.sql → CTAS;
-    * its row count is read from the CTAS job.
+    * its row count is read from the CTAS job (or re-read, as in
+    * [[runExtract]], when that count does not arrive).
     * Models within a DAG level share no ref edges and run concurrently
     * (`threads` ≈ dbt's profile threads, reference profiles.yml:14,26) —
     * Spark's scheduler interleaves the independent jobs on one session.
@@ -112,40 +123,19 @@ final class TenantPipeline(
   def runModels(spark: SparkSession, threads: Int = 4): Map[String, Long] = {
     Warehouse.ensureDatabase(spark, martDb)
     val r = renderer
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(threads, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      ModelDag.levels(models).flatMap { level =>
-        val futures = level.map { m =>
-          m.name -> Future {
-            val rows = Warehouse.countWritten(spark.sql(r.render(m)))(
-              Warehouse.saveModel(_, modelSchema(m), m.alias))
-            s"${modelSchema(m)}.${m.alias}" -> rows
-          }
-        }
-        // Await EVERY model in the level before reporting (the
-        // TenantRegistry.runAll contract): awaiting in submission order
-        // and throwing on the first failure would leave siblings still
-        // writing on the pool — a retry then races their DROP+CTAS on
-        // the same database — with their own failures silently discarded.
-        val outcomes = futures.map { case (name, f) =>
-          name -> scala.util.Try(Await.result(f, Duration.Inf))
-        }
-        val failures = outcomes.collect {
-          case (name, scala.util.Failure(e)) => (name, e)
-        }
-        if (failures.nonEmpty) {
-          val ex = new RuntimeException("model failures: " + failures
-            .map { case (name, e) => s"$name: ${e.getMessage}" }
-            .mkString("; "))
-          failures.foreach { case (_, e) => ex.addSuppressed(e) }
-          throw ex
-        }
-        outcomes.collect { case (_, scala.util.Success(kv)) => kv }
-      }.toMap
-    } finally pool.shutdown()
+    // every model of a level finishes before the level reports
+    // (Parallel.runAll): a sibling still writing when a failure is thrown
+    // would race a retry's DROP+CTAS on the same database
+    ModelDag.levels(models).flatMap { level =>
+      Parallel.runAllOrFail(threads, "model", level.map { m =>
+        m.name -> (() => {
+          val key = s"${modelSchema(m)}.${m.alias}"
+          key -> Warehouse.countWritten(spark.sql(r.render(m)))(
+            Warehouse.saveModel(_, modelSchema(m), m.alias))
+            .getOrElse(spark.table(s"`${modelSchema(m)}`.`${m.alias}`").count())
+        })
+      })
+    }.toMap
   }
 
   private def materializedTables: Seq[(String, String, Seq[String])] =

@@ -151,30 +151,11 @@ object TenantRegistry {
     val discovered = discover(root, env)
     val drift = check(discovered)
     require(drift.isEmpty, s"tenant workspace drift:\n  ${drift.mkString("\n  ")}")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(parallelism, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = pipelines(discovered, source, e).map { case (tenant, p) =>
-        tenant.id -> Future(p.run(spark))
-      }
-      // Await EVERY tenant before reporting: awaiting in submission order
-      // and throwing on the first failure would leave later tenants running
-      // on the pool with their results and failures silently discarded.
-      val outcomes = futures.map { case (id, f) =>
-        id -> scala.util.Try(Await.result(f, Duration.Inf))
-      }
-      val failures = outcomes.collect { case (id, scala.util.Failure(e)) => (id, e) }
-      if (failures.nonEmpty) {
-        val ex = new RuntimeException("tenant run failures: " + failures
-          .map { case (id, e) => s"$id: ${e.getMessage}" }.mkString("; "))
-        failures.foreach { case (_, e) => ex.addSuppressed(e) }
-        throw ex
-      }
-      outcomes.collect { case (id, scala.util.Success(counts)) => id -> counts }.toMap
-    } finally pool.shutdown()
+    // every tenant finishes before anything is reported (Parallel.runAll)
+    val runs = pipelines(discovered, source, e).map { case (tenant, p) =>
+      tenant.id -> (() => tenant.id -> p.run(spark))
+    }
+    Parallel.runAllOrFail(parallelism, "tenant run", runs).toMap
   }
 
   /** Schedule entries for every discovered tenant — composes with

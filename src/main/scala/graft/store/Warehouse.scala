@@ -1,5 +1,8 @@
 package graft.store
 
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Load-mode contract (SURVEY.md §2.A semantics note).
@@ -50,14 +53,27 @@ object Warehouse {
   /** Rows a write produced, read from the write's own job: `write` gets
     * `df` with a row-count observation attached, so no second scan of the
     * written table is needed. The observation is read only after the
-    * write returned, because reading it blocks until the job has reported.
+    * write returned. Its value arrives through the session's listener bus,
+    * which may drop an event when its queue overflows, and a `write` that
+    * never runs the observed plan never reports at all; so the wait is
+    * bounded by `wait`, and None means the count did not arrive and the
+    * caller must count the table itself.
     */
-  def countWritten(df: DataFrame)(write: DataFrame => Unit): Long = {
+  def countWritten(df: DataFrame, wait: FiniteDuration = CountWait)
+                  (write: DataFrame => Unit): Option[Long] = {
     val rows = org.apache.spark.sql.Observation()
     write(df.observe(rows, org.apache.spark.sql.functions.count(
       org.apache.spark.sql.functions.lit(1)).as("rows")))
-    rows.get("rows").asInstanceOf[Long]
+    try {
+      Await.ready(rows.future, wait)
+      rows.future.value.flatMap(_.toOption).map(_.getLong(0))
+    } catch { case _: TimeoutException => None }
   }
+
+  /** How long [[countWritten]] waits for a finished write's count. The
+    * event normally lands within milliseconds of the job's end.
+    */
+  val CountWait: FiniteDuration = 30.seconds
 
   /** A6 — columnar landing write (s3.write_parquet call site,
     * _tenant_factory.py:249-253).
@@ -151,7 +167,7 @@ object Warehouse {
       import org.apache.spark.sql.functions.{count, lit, max}
       if (!spark.catalog.tableExists(s"$db.$table")) None
       else {
-        val r = spark.table(s"`$db`.`$table`").agg(max(column), count(lit(1))).head
+        val r = spark.table(s"`$db`.`$table`").agg(max(column), count(lit(1))).head()
         Some(AppendState(Option(r.get(0)), r.getLong(1)))
       }
     }

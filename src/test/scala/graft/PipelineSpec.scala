@@ -178,6 +178,20 @@ class PipelineSpec extends SparkSpec {
     assert(runAndCompare() == grown)
   }
 
+  test("a write's row count comes from its own job, or None when it never reports") {
+    import scala.concurrent.duration.DurationInt
+    import graft.store.Warehouse
+    val df = spark.range(0, 37).toDF("id")
+    val dir = java.nio.file.Files.createTempDirectory("graft-count-written").toString
+    assert(Warehouse.countWritten(df)(
+      _.write.mode("overwrite").parquet(s"$dir/out")).contains(37L))
+    // a write that never runs the observed plan: the bounded wait gives up
+    // instead of blocking the fire forever, and the caller counts itself
+    val t0 = System.nanoTime()
+    assert(Warehouse.countWritten(df, 200.millis)(_ => ()).isEmpty)
+    assert((System.nanoTime() - t0) / 1e9 < 10)
+  }
+
   test("mode: append without incremental_column is refused when the pipeline is built") {
     val yaml = PipelineOps.tenantYaml.replace("mode: full", "mode: append")
     val tenant = TenantConfig.parse(yaml, Map.empty)

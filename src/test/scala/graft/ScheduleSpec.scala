@@ -260,6 +260,96 @@ class ScheduleRunnerSpec extends SparkSpec {
     assert(seen.map(_._1).toSeq == Seq("m", "f"))
   }
 
+  test("a tenant's lane covers the schemas its models read through source()") {
+    import graft.pipeline.Environment
+    val tenant = TenantConfig.parse(PipelineOps.tenantYaml, Map.empty)
+    val rates = graft.model.SqlModel("graft_demo__priced",
+      """{{ config(materialized='table', schema=var('tenant_id', 'graft_demo')) }}
+        |SELECT * FROM {{ source('shared_ref', 'rates') }}
+        |""".stripMargin)
+    val models = Seq(PipelineOps.stagingModel, rates)
+    assert(ScheduleRunner.forTenant(tenant,
+      new TenantPipeline(tenant, new ParquetSource(sf), models)).writes ==
+      Set("graft_demo", "graft_demo_raw", "shared_ref"))
+    assert(ScheduleRunner.forTenant(tenant, new TenantPipeline(tenant,
+      new ParquetSource(sf), models, env = Environment.Local)).writes ==
+      Set("dev_graft_demo", "dev_graft_demo_raw", "dev_shared_ref"))
+    // compaction of the read schema therefore shares the tenant's lane
+    assert(ScheduleRunner.compactionEntry("cmp", "0 * * * *", "shared_ref", "rates",
+      maxFiles = 4, targetFiles = 1).writes == Set("shared_ref"))
+  }
+
+  test("a partitioned entry never overlaps a tenant fire that writes its source") {
+    import graft.pipeline.PartitionGrain
+    val (martDb, mart) = ("graft_sched_src_mart", "orders_src")
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$martDb`")
+    Tables.t(spark, sf, "orders").select("o_orderkey", "o_orderdate")
+      .write.mode("overwrite").saveAsTable(s"`$martDb`.`$mart`")
+    var tenantSpan = (0L, 0L)
+    var sourceRead = 0L
+    // the tenant rebuilds the table the partitioned entry reads; it holds
+    // its fire long enough for an overlapping backfill to start meanwhile
+    val tenant = ScheduleRunner.Entry("src_tenant", CronSchedule.parse("0 1 1 * *"),
+      (_, _) => {
+        val start = System.nanoTime()
+        Thread.sleep(300)
+        tenantSpan = (start, System.nanoTime())
+      }, writes = Set(martDb, s"${martDb}_raw"))
+    val backfill = ScheduleRunner.partitionedEntry("monthly_from_mart", "0 1 1 * *",
+      s => { sourceRead = System.nanoTime(); s.table(s"`$martDb`.`$mart`") },
+      "o_orderdate", PartitionGrain.Monthly, "graft_sched_bf_lane", "orders_monthly")
+    // its source is an opaque function: it declares nothing, so it shares
+    // a lane with everything
+    assert(backfill.writes.isEmpty)
+    val runner = new ScheduleRunner(Seq(tenant, backfill),
+      startAt = LocalDateTime.parse("1996-03-31T00:00:00"))
+    assert(runner.tick(spark, LocalDateTime.parse("1996-04-01T01:00:00")) ==
+      Seq("src_tenant", "monthly_from_mart"))
+    assert(sourceRead >= tenantSpan._2,
+      "the backfill read its source while the tenant was still writing it")
+  }
+
+  test("no lane outlives its tick: a fatal error or an interrupt waits for the other lanes") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
+    val slowDone = new AtomicBoolean(false)
+    def slow(id: String, release: CountDownLatch) =
+      ScheduleRunner.Entry(id, CronSchedule.parse("0 * * * *"), (_, _) => {
+        release.await(20, TimeUnit.SECONDS)
+        Thread.sleep(100)
+        slowDone.set(true)
+      }, writes = Set(id))
+
+    // a lane that dies of a fatal error: tick rethrows it, but only after
+    // the other lane has finished
+    val go = new CountDownLatch(1)
+    val fatal = ScheduleRunner.Entry("fatal", CronSchedule.parse("0 * * * *"),
+      (_, _) => { go.countDown(); throw new LinkageError("lane died") }, writes = Set("f"))
+    val runner = new ScheduleRunner(Seq(fatal, slow("slow", go)), startAt = t0)
+    intercept[LinkageError](runner.tick(spark, t0.plusHours(1)))
+    assert(slowDone.get, "tick returned while a lane was still running")
+
+    // the ticking thread is interrupted while both lanes run: it keeps
+    // waiting for them and rethrows the interrupt once they have finished
+    slowDone.set(false)
+    val release = new CountDownLatch(1)
+    val lanes = new ScheduleRunner(Seq(slow("x", release), slow("y", release)), startAt = t0)
+    @volatile var outcome: Option[Throwable] = None
+    val ticker = new Thread(() =>
+      try { lanes.tick(spark, t0.plusHours(1)); outcome = Some(new AssertionError("no interrupt")) }
+      catch { case e: Throwable => outcome = Some(e) })
+    ticker.start()
+    Thread.sleep(200)
+    ticker.interrupt()
+    ticker.join(300)
+    assert(ticker.isAlive, "tick returned on interrupt while its lanes were running")
+    release.countDown()
+    ticker.join(20000)
+    assert(outcome.exists(_.isInstanceOf[InterruptedException]), outcome)
+    assert(slowDone.get)
+  }
+
   test("scheduled compaction bounds file count across micro-batch append cycles") {
     import graft.store.{LoadMode, Warehouse}
     import spark.implicits._
