@@ -164,9 +164,8 @@ object IncrementalClusters {
     // which takes this same db lease) must serialize — the loser refuses
     // with LeaseHeldException, never interleaves into a mixed labeling.
     graft.store.Warehouse.ensureDatabase(s, db) // lease props live on the db
-    val lease = graft.pipeline.CorpusPipeline.acquireLease(s, db)
-    try { buildClusterStateBody(s, corpus, db) }
-    finally graft.pipeline.CorpusPipeline.releaseLease(s, db, lease)
+    graft.pipeline.FencedAppend.withLease(s, db)(_ =>
+      buildClusterStateBody(s, corpus, db))
   }
 
   private def buildClusterStateBody(s: SparkSession, corpus: DataFrame,
@@ -208,11 +207,10 @@ object IncrementalClusters {
     // write), double-appending rows; under the db lease exactly one
     // writer proceeds. `midHook` runs while the lease is held — the test
     // seam for driving a second live session inside the window.
-    val lease = graft.pipeline.CorpusPipeline.acquireLease(s, db)
-    try {
+    graft.pipeline.FencedAppend.withLease(s, db) { _ =>
       midHook()
       appendBatchClustersBody(s, batch, corpusBands, db)
-    } finally graft.pipeline.CorpusPipeline.releaseLease(s, db, lease)
+    }
   }
 
   private def appendBatchClustersBody(s: SparkSession, batch: DataFrame,

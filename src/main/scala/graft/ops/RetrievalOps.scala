@@ -99,9 +99,8 @@ object RetrievalOps {
     // loser refuses loudly with LeaseHeldException instead of
     // interleaving table overwrites into a silently mixed index.
     graft.store.Warehouse.ensureDatabase(s, db) // lease props live on the db
-    val lease = graft.pipeline.CorpusPipeline.acquireLease(s, db)
-    try { buildBm25IndexBody(docs, db) }
-    finally graft.pipeline.CorpusPipeline.releaseLease(s, db, lease)
+    graft.pipeline.FencedAppend.withLease(s, db)(_ =>
+      buildBm25IndexBody(docs, db))
   }
 
   private def buildBm25IndexBody(docs: DataFrame, db: String): Unit = {
@@ -297,11 +296,10 @@ object RetrievalOps {
     // LeaseHeldException, a later one with the fence refusal. `midHook`
     // is the test seam: it runs while the lease is held, so a spec can
     // drive a second live session's append INSIDE the window.
-    val lease = graft.pipeline.CorpusPipeline.acquireLease(s, db)
-    try {
+    graft.pipeline.FencedAppend.withLease(s, db) { _ =>
       midHook()
       appendToBm25IndexBody(s, db, docs)
-    } finally graft.pipeline.CorpusPipeline.releaseLease(s, db, lease)
+    }
   }
 
   private def appendToBm25IndexBody(s: SparkSession, db: String,

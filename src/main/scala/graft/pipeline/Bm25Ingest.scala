@@ -4,38 +4,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.RetrievalOps
 
-/** Streaming growth for the stored BM25 index — [[VectorIngest]]'s
-  * exactly-once machinery applied to the retrieval family, with one
-  * structural difference: the index carries DERIVED statistics (df,
-  * totals) alongside per-doc facts (postings, doclen), and a crash
-  * between a fact append and an additive stat rewrite would leave the
-  * two permanently out of step under redelivery (the additive batch
-  * delta is not idempotent). So the streaming path appends facts
-  * ROW-IDEMPOTENTLY (anti-join against the ids the target already holds
-  * in the batch's doc_id range — a stats-pruned scan, the
-  * [[graft.ops.VectorOps]] freshOnly contract) and then REBUILDS df and
-  * totals from the stored fact tables: self-healing by construction —
-  * whatever partial state a crash left, the rebuild lands the stats the
-  * facts imply. Cost: one aggregation over the postings table per
-  * micro-batch (map-side combined per bucket partition, vocab-sized
-  * output). At 100 TB ingest cadence that scan dominates; the
-  * documented alternative is to let df drift within an epoch window and
-  * re-anchor on the [[RetrievalOps.bm25RefreshEntry]] cron — serving
-  * freshness degrades only in term WEIGHTS, never in which documents
-  * are retrievable (postings are exact from the moment they land).
+/** Streaming growth for the stored BM25 index on the [[FencedAppend]]
+  * protocol. The index carries DERIVED statistics (df, totals) beside
+  * per-doc facts (postings, doclen), and an additive stat rewrite is not
+  * idempotent under redelivery. So the facts append ROW-IDEMPOTENTLY
+  * (anti-join against the ids the target already holds in the batch's
+  * doc_id range — a stats-pruned scan, the [[graft.ops.VectorOps]]
+  * freshOnly contract) and df/totals are then REBUILT from the stored
+  * facts: whatever partial state a crash left, the rebuild lands the
+  * stats the facts imply. Cost: one aggregation over the postings table
+  * per micro-batch (vocab-sized output); the alternative is to let df
+  * drift and re-anchor on [[RetrievalOps.bm25RefreshEntry]]'s cron —
+  * freshness then degrades only in term WEIGHTS, never in which
+  * documents are retrievable.
   *
-  * Exactly-once: per-source committed-epoch ledger set LAST (replays
-  * no-op), append-only doc_id fence advanced AFTER the stats commit (a
-  * crashed batch's redelivery passes the fence and the row-idempotent
-  * appends land exactly the missing rows), lease renewed at every stage
-  * boundary (the [[VectorIngest]] fencing structure).
+  * Fence: the postings table's max doc_id property, cleared by the batch
+  * max (overlap admitted). A row the anti-joins drop must be a
+  * redelivery of identical content: the per-doc token count is compared
+  * with the stored doclen and a mismatch is refused ("DIFFERENT
+  * content") — doclen equality is necessary for content equality and
+  * costs one range-pruned join.
   */
 object Bm25Ingest {
 
   private[graft] val LastEpochProp = "graft.bm25.last_epoch"
-
-  private[graft] def epochProp(srcTag: String): String =
-    IngestLedger.epochProp(LastEpochProp, srcTag)
 
   private def fqn(db: String, tbl: String) = s"`$db`.`$tbl`"
 
@@ -43,92 +35,53 @@ object Bm25Ingest {
     * within the batch's id range (parquet min/max stats prune the probe
     * to the files a previous partial append produced).
     */
-  private def freshDocs(s: SparkSession, target: String,
-                        batch: DataFrame, lo: Long, hi: Long): DataFrame = {
-    val existing = s.table(target)
-      .filter(col("doc_id").between(lo, hi))
+  private def freshDocs(b: FencedAppend.Batch, table: String): DataFrame = {
+    val existing = b.s.table(fqn(b.db, table))
+      .filter(col("doc_id").between(b.lo, b.hi))
       .select("doc_id").distinct()
-    batch.join(existing, Seq("doc_id"), "left_anti")
+    b.frame.join(existing, Seq("doc_id"), "left_anti")
   }
 
+  private def requireSameContent(b: FencedAppend.Batch): Unit = {
+    val mismatched = RetrievalOps.doclenOf(b.frame)
+      .join(b.s.table(fqn(b.db, RetrievalOps.DocLenTable))
+        .filter(col("doc_id").between(b.lo, b.hi))
+        .withColumnRenamed("dl", "dl_stored"), Seq("doc_id"))
+      .filter(col("dl") =!= col("dl_stored")).count()
+    require(mismatched == 0L,
+      s"bm25IngestBatch: $mismatched overlapping doc_ids carry DIFFERENT " +
+        "content than the rows already ingested — not a redelivery; " +
+        "refusing loudly instead of silently keeping the old text")
+  }
+
+  private[graft] val IngestFamily = FencedAppend.Family(
+    name = "bm25IngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(FencedAppend.Hi,
+      (s, db) => Some(RetrievalOps.readIndexProp(s, db, RetrievalOps.MaxDocProp)),
+      (s, db, hi) => s.sql(s"ALTER TABLE ${fqn(db, RetrievalOps.PostingsTable)} " +
+        s"SET TBLPROPERTIES ('${RetrievalOps.MaxDocProp}' = '$hi')")),
+    prepare = (s, db) =>
+      require(s.catalog.tableExists(s"$db.${RetrievalOps.PostingsTable}"),
+        s"bm25IngestBatch: no BM25 index in `$db` — buildBm25Index first"),
+    stages = b => Seq(
+      RetrievalOps.PostingsTable -> { () =>
+        requireSameContent(b)
+        RetrievalOps.appendPostingsRows(b.s, b.db,
+          freshDocs(b, RetrievalOps.PostingsTable))
+      },
+      RetrievalOps.DocLenTable -> (() => RetrievalOps.appendDocLenRows(
+        b.s, b.db, freshDocs(b, RetrievalOps.DocLenTable))),
+      // derived stats: rebuilt from the stored facts, never patched
+      "derived_stats" -> (() => RetrievalOps.rebuildDerivedStats(b.s, b.db))))
+
   /** Fold one micro-batch of (doc_id, text) rows into the stored index.
-    * `failAfter` is a TEST-ONLY failpoint naming the table whose append
-    * should be followed by a crash.
+    * `failAfter` is a TEST-ONLY failpoint naming the stage (postings,
+    * doclen, derived_stats) after which to crash.
     */
   def bm25IngestBatch(s: SparkSession, srcTag: String, batch: DataFrame,
                       db: String, epochId: Long = -1L,
-                      failAfter: Option[String] = None): Unit = {
-    if (batch.isEmpty) return
-    require(s.catalog.tableExists(s"$db.${RetrievalOps.PostingsTable}"),
-      s"bm25IngestBatch: no BM25 index in `$db` — buildBm25Index first")
-    // cross-session freshness (the LinkIngest posture): the stream's
-    // cloned session may hold a frozen file listing for the unpartitioned
-    // index tables; after a scheduled rebuild in ANOTHER session the
-    // cached listing points at deleted files and every redelivered batch
-    // dies on FAILED_READ_FILE until the JVM restarts
-    graft.store.Warehouse.refreshDb(s, db)
-    val lease = CorpusPipeline.acquireLease(s, db)
-    val b = batch.persist()
-    try {
-      if (epochId >= 0 &&
-          CorpusPipeline.dbProps(s, db).get(epochProp(srcTag))
-            .filter(_.nonEmpty).map(_.toLong).exists(_ >= epochId))
-        return // committed-epoch replay: every write already landed
-      val bounds = b.agg(min("doc_id"), max("doc_id")).head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      // the fence is the batch-append's table property; it advances only
-      // after the stats commit, so an uncommitted crash redelivers THROUGH
-      // the fence and the row-idempotent appends absorb the overlap
-      val storedMax = RetrievalOps.readIndexProp(s, db, RetrievalOps.MaxDocProp)
-      require(hi > storedMax,
-        s"bm25IngestBatch: batch max doc_id $hi <= ingested max $storedMax " +
-          "— out-of-order ingest refused (the append-only contract)")
-      val postingsT = fqn(db, RetrievalOps.PostingsTable)
-      val doclenT = fqn(db, RetrievalOps.DocLenTable)
-
-      // content proof for absorbed overlaps: rows the anti-joins drop are
-      // only legitimate as REDELIVERIES of identical content. An
-      // overlapping-but-different batch (misconfigured source) would
-      // otherwise silently lose its text to the first writer — compare
-      // the cheap per-doc token count against the stored doclen and
-      // refuse loudly on any mismatch (the cluster-sink content-proof
-      // posture; doclen equality is necessary for content equality and
-      // costs one range-pruned join).
-      CorpusPipeline.renewLease(s, db, lease)
-      val mismatched = RetrievalOps.doclenOf(b)
-        .join(s.table(fqn(db, RetrievalOps.DocLenTable))
-          .filter(col("doc_id").between(lo, hi))
-          .withColumnRenamed("dl", "dl_stored"), Seq("doc_id"))
-        .filter(col("dl") =!= col("dl_stored")).count()
-      require(mismatched == 0L,
-        s"bm25IngestBatch: $mismatched overlapping doc_ids carry DIFFERENT " +
-          "content than the rows already ingested — not a redelivery; " +
-          "refusing loudly instead of silently keeping the old text")
-      RetrievalOps.appendPostingsRows(s, db,
-        freshDocs(s, postingsT, b, lo, hi))
-      if (failAfter.contains(RetrievalOps.PostingsTable))
-        throw new RuntimeException("test failpoint after postings append")
-
-      CorpusPipeline.renewLease(s, db, lease)
-      RetrievalOps.appendDocLenRows(s, db, freshDocs(s, doclenT, b, lo, hi))
-      if (failAfter.contains(RetrievalOps.DocLenTable))
-        throw new RuntimeException("test failpoint after doclen append")
-
-      // derived stats: REBUILT from the stored facts (self-healing — see
-      // scaladoc), never additively patched in the streaming path
-      CorpusPipeline.renewLease(s, db, lease)
-      RetrievalOps.rebuildDerivedStats(s, db)
-
-      if (epochId >= 0)
-        CorpusPipeline.setDbProp(s, db, epochProp(srcTag), epochId.toString)
-      s.sql(s"ALTER TABLE $postingsT SET TBLPROPERTIES " +
-        s"('${RetrievalOps.MaxDocProp}' = '$hi')")
-    } finally {
-      try b.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-      CorpusPipeline.releaseLease(s, db, lease)
-    }
-  }
+                      failAfter: Option[String] = None): Unit =
+    FencedAppend.append(s, IngestFamily, db, srcTag, batch, epochId, failAfter)
 
   /** foreachBatch adapter — wires the streaming engine's epochId into the
     * replay ledger.

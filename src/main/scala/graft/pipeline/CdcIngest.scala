@@ -4,27 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.ChunkOps
 
-/** Streaming CDC dedup-rewrite — the end-to-end streaming form of the
-  * chunk family: each micro-batch is rewritten against the CURRENT
-  * persisted chunk index (its duplicated chunks excised), the cleaned
-  * rows land in an output corpus table, and only THEN do the batch's own
-  * chunks fold into the index.
+/** Streaming CDC dedup-rewrite on the [[FencedAppend]] protocol — the
+  * end-to-end streaming form of the chunk family: each micro-batch is
+  * rewritten against the CURRENT persisted chunk index (its duplicated
+  * chunks excised), the cleaned rows land in an output corpus table, and
+  * only THEN do the batch's own chunks fold into the index.
   *
   * That ordering is load-bearing: a redelivered batch re-runs the rewrite
   * against an index that may already hold its own chunks (everything
   * would excise) — but the output append is row-idempotent (anti-join on
   * the batch's doc_id range), so the poisoned recomputation is DISCARDED
-  * in favor of the rows the first attempt landed. Writing output first
-  * makes every crash window exact: output-then-crash redelivers into an
-  * absorbed output append plus the pending index fold; index-then-crash
-  * (impossible before output by construction) can't occur.
+  * in favor of the rows the first attempt landed. The index appends are
+  * existence-semantics anti-joins, replay-absorbing by construction.
   *
-  * Exactly-once: per-source committed-epoch ledger set LAST (replays
-  * no-op), append-only doc_id fence on the index advanced after the
-  * ledger (a crashed batch redelivers through the stale fence and the
-  * idempotent writes absorb), index appends are existence-semantics
-  * anti-joins (replay-absorbing by construction), lease renewed at stage
-  * boundaries — the [[Bm25Ingest]] structure.
+  * Fence: the chunk index's max doc_id property, cleared by the batch max
+  * (overlap admitted). Content proof on the absorbed overlap: the
+  * index-independent raw chunk count must equal the stored one.
   */
 object CdcIngest {
 
@@ -32,73 +27,53 @@ object CdcIngest {
 
   private[graft] val LastEpochProp = "graft.cdc.last_epoch"
 
-  private[graft] def epochProp(srcTag: String): String =
-    IngestLedger.epochProp(LastEpochProp, srcTag)
+  /** Rewrite against the current index and append the rows the output
+    * does not already hold.
+    */
+  private def appendOutput(b: FencedAppend.Batch): Unit = {
+    val s = b.s
+    val cleaned = ChunkOps.cdcRewriteAgainst(b.frame, s, b.db)
+    val outFq = s"`${b.db}`.`$OutputTable`"
+    if (!s.catalog.tableExists(s"${b.db}.$OutputTable"))
+      graft.store.Warehouse.saveModel(cleaned, b.db, OutputTable)
+    else {
+      // the rewritten text itself is poisoned on redelivery (the index
+      // then holds the batch's own chunks), so the proof compares the
+      // index-INDEPENDENT raw chunk count
+      val stored = s.table(outFq)
+        .filter(col("doc_id").between(b.lo, b.hi))
+        .select(col("doc_id"), col("n_chunks").as("n_stored"))
+      val mismatched = cleaned.join(stored, Seq("doc_id"))
+        .filter(col("n_chunks") =!= col("n_stored")).count()
+      require(mismatched == 0L,
+        s"cdcIngestBatch: $mismatched overlapping doc_ids carry " +
+          "DIFFERENT content than the rows already ingested — not a " +
+          "redelivery; refusing loudly")
+      cleaned.join(stored.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select(s.table(outFq).columns.map(col).toIndexedSeq: _*)
+        .write.mode("append").insertInto(outFq)
+    }
+  }
+
+  private[graft] val IngestFamily = FencedAppend.Family(
+    name = "cdcIngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(FencedAppend.Hi,
+      (s, db) => Some(ChunkOps.readIndexProp(s, db, ChunkOps.MaxDocProp)),
+      (s, db, hi) => ChunkOps.setIndexProp(s, db, ChunkOps.MaxDocProp,
+        hi.toString)),
+    prepare = (s, db) =>
+      require(s.catalog.tableExists(s"$db.${ChunkOps.ChunkIndexTable}"),
+        s"cdcIngestBatch: no chunk index in `$db` — buildChunkIndex first"),
+    stages = b => Seq(
+      OutputTable -> (() => appendOutput(b)),
+      // only now does the batch join the index (see ordering scaladoc)
+      ChunkOps.ChunkIndexTable ->
+        (() => ChunkOps.appendToChunkIndex(b.s, b.db, b.frame))))
 
   def cdcIngestBatch(s: SparkSession, srcTag: String, batch: DataFrame,
                      db: String, epochId: Long = -1L,
-                     failAfter: Option[String] = None): Unit = {
-    if (batch.isEmpty) return
-    require(s.catalog.tableExists(s"$db.${ChunkOps.ChunkIndexTable}"),
-      s"cdcIngestBatch: no chunk index in `$db` — buildChunkIndex first")
-    val lease = CorpusPipeline.acquireLease(s, db)
-    val b = batch.persist()
-    try {
-      if (epochId >= 0 &&
-          CorpusPipeline.dbProps(s, db).get(epochProp(srcTag))
-            .filter(_.nonEmpty).map(_.toLong).exists(_ >= epochId))
-        return // committed-epoch replay: every write already landed
-      val bounds = b.agg(min("doc_id"), max("doc_id")).head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val storedMax = ChunkOps.readIndexProp(s, db, ChunkOps.MaxDocProp)
-      require(hi > storedMax,
-        s"cdcIngestBatch: batch max doc_id $hi <= ingested max $storedMax " +
-          "— out-of-order ingest refused (the append-only contract)")
-
-      // 1. rewrite against the CURRENT index, output append row-idempotent
-      CorpusPipeline.renewLease(s, db, lease)
-      val cleaned = ChunkOps.cdcRewriteAgainst(b, s, db)
-      val outFq = s"`$db`.`$OutputTable`"
-      if (!s.catalog.tableExists(s"$db.$OutputTable"))
-        graft.store.Warehouse.saveModel(cleaned, db, OutputTable)
-      else {
-        // content proof for absorbed overlaps: a row the anti-join drops
-        // must be a REDELIVERY. The rewritten text itself is poisoned on
-        // redelivery (the index then holds the batch's own chunks), so
-        // compare the index-INDEPENDENT raw chunk count instead — equal
-        // for identical text, a loud refusal for an overlapping-but-
-        // different batch that would otherwise silently keep old rows.
-        val stored = s.table(outFq)
-          .filter(col("doc_id").between(lo, hi))
-          .select(col("doc_id"), col("n_chunks").as("n_stored"))
-        val mismatched = cleaned.join(stored, Seq("doc_id"))
-          .filter(col("n_chunks") =!= col("n_stored")).count()
-        require(mismatched == 0L,
-          s"cdcIngestBatch: $mismatched overlapping doc_ids carry " +
-            "DIFFERENT content than the rows already ingested — not a " +
-            "redelivery; refusing loudly")
-        cleaned.join(stored.select("doc_id"), Seq("doc_id"), "left_anti")
-          .select(s.table(outFq).columns.map(col).toIndexedSeq: _*)
-          .write.mode("append").insertInto(outFq)
-      }
-      if (failAfter.contains(OutputTable))
-        throw new RuntimeException("test failpoint after output append")
-
-      // 2. only now does the batch join the index (see ordering scaladoc)
-      CorpusPipeline.renewLease(s, db, lease)
-      ChunkOps.appendToChunkIndex(s, db, b)
-      if (failAfter.contains(ChunkOps.ChunkIndexTable))
-        throw new RuntimeException("test failpoint after index append")
-
-      if (epochId >= 0)
-        CorpusPipeline.setDbProp(s, db, epochProp(srcTag), epochId.toString)
-      ChunkOps.setIndexProp(s, db, ChunkOps.MaxDocProp, hi.toString)
-    } finally {
-      try b.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-      CorpusPipeline.releaseLease(s, db, lease)
-    }
-  }
+                     failAfter: Option[String] = None): Unit =
+    FencedAppend.append(s, IngestFamily, db, srcTag, batch, epochId, failAfter)
 
   /** foreachBatch adapter — wires the streaming engine's epochId into the
     * replay ledger.

@@ -102,7 +102,7 @@ object CorpusPipeline {
 
   final case class StageResult(stage: String, skipped: Boolean, key: String)
 
-  private def digest(x: String): String = IngestLedger.digest(x)
+  private def digest(x: String): String = FencedAppend.digest(x)
 
   /** Structural lineage keys per stage for source descriptor `d` — each
     * key digests the stage recipe + its params + the upstream key, so a
@@ -313,10 +313,9 @@ object CorpusPipeline {
           db: String = Db,
           refreshAux: Boolean = true): Seq[StageResult] = {
     Warehouse.ensureDatabase(s, db)
-    val lease = acquireLease(s, db)
-    try runHoldingLease(s, graft.Tables.t(s, d, "documents"), d, resume,
-      failAfter, lease, db, refreshAux)
-    finally releaseLease(s, db, lease)
+    FencedAppend.withLease(s, db)(runHoldingLease(s,
+      graft.Tables.t(s, d, "documents"), d, resume, failAfter, _, db,
+      refreshAux))
   }
 
   /** `refreshAux = false` is the REMIX contract ([[remixEntry]]): the
@@ -515,9 +514,7 @@ object CorpusPipeline {
   private[graft] def runIncrementFrom(s: SparkSession, docs: DataFrame,
                                       tag: String, db: String): Seq[StageResult] = {
     Warehouse.ensureDatabase(s, db)
-    val lease = acquireLease(s, db)
-    try incrementHoldingLease(s, docs, tag, db, lease)
-    finally releaseLease(s, db, lease)
+    FencedAppend.withLease(s, db)(incrementHoldingLease(s, docs, tag, db, _))
   }
 
   /** A fresh run over an explicit documents frame under `tag` — the
@@ -528,10 +525,8 @@ object CorpusPipeline {
   private[graft] def runFresh(s: SparkSession, docs: DataFrame, tag: String,
                               db: String): Seq[StageResult] = {
     Warehouse.ensureDatabase(s, db)
-    val lease = acquireLease(s, db)
-    try runHoldingLease(s, docs, tag, resume = false, failAfter = None,
-      lease, db)
-    finally releaseLease(s, db, lease)
+    FencedAppend.withLease(s, db)(runHoldingLease(s, docs, tag,
+      resume = false, failAfter = None, _, db))
   }
 
   private def incrementHoldingLease(s: SparkSession, docs: DataFrame,
@@ -575,6 +570,7 @@ object CorpusPipeline {
         s"'$LineageKeyProp'='${incKeys(st)}', '$LineageProp'='$recipe', " +
         s"'$LineageStampProp'='${System.currentTimeMillis()}')")
 
+    renewLease(s, db, lease)
     val (keptBatch, newEvalGrams) = appendS12(s, db, batch, lease, pin)
     restamp("s1_clean", s"inc(batch>$threshold) append")
     restamp("s2_dedup", s"inc(batch>$threshold) band-append + keep-lowest")
@@ -693,13 +689,13 @@ object CorpusPipeline {
     * keep-lowest probe over base ∪ batch, s2 append, and the raw batch's
     * eval grams folded into the blocklist. Returns (keptBatch,
     * newEvalGrams), both local-checkpointed and pinned; the CALLER owns
-    * stage stamping. Append-only id contract assumed (callers enforce).
+    * stage stamping and renews the lease before s1. Append-only id
+    * contract assumed (callers enforce).
     */
   private def appendS12(s: SparkSession, db: String, batch: DataFrame,
                         lease: String, pin: DataFrame => DataFrame)
       : (DataFrame, DataFrame) = {
     // ---- s1: delta-clean against the persisted hash set ----
-    renewLease(s, db, lease)
     val known = s.table(fq(db, HashIndexTable))
     // localCheckpoint: the frame feeds bands, verdicts and appends AFTER
     // the tables it reads are themselves appended — sever the lineage now
@@ -755,7 +751,7 @@ object CorpusPipeline {
     */
   private[graft] val LastEpochProp = "graft.corpus.last_epoch"
   private[graft] def epochProp(srcTag: String): String =
-    IngestLedger.epochProp(LastEpochProp, srcTag)
+    FencedAppend.epochProp(LastEpochProp, srcTag)
 
   /** Fold ONE micro-batch of documents through the clean+dedup prefix —
     * the foreachBatch body of a streaming corpus ingest: s1/s2 and the
@@ -767,111 +763,97 @@ object CorpusPipeline {
     * immutable), so the remix resume skips them and recomputes exactly
     * the suffix.
     *
-    * Replay semantics: an epoch ≤ the committed ledger is SKIPPED
-    * (exactly-once for whole-batch replays). The remaining exposure is a
-    * crash INSIDE a batch's append sequence (some tables appended, epoch
-    * not committed): the retry re-runs the appends, and rows whose
-    * hashes already landed are filtered as "known" — which deduplicates
-    * the hash/s1 path but can lose a doc whose hash landed without its
-    * s1 row (crash between the two writes). Same at-least-once caveat
+    * Exactly-once through [[FencedAppend]] ([[IngestFamily]]). The
+    * remaining exposure is a crash INSIDE the `s1_s2` stage: the retry
+    * re-runs the appends, and rows whose hashes already landed are
+    * filtered as "known" — which deduplicates the hash/s1 path but can
+    * lose a doc whose hash landed without its s1 row (crash between the
+    * two writes). Same at-least-once caveat
     * [[IncrementalDedup.appendBatch]] documents; the scheduled FRESH run
     * (snapshot-replace) re-anchors the state on its cadence.
     */
   def corpusIngestBatch(s: SparkSession, srcTag: String, batch: DataFrame,
-                        db: String = Db, epochId: Long = -1L): Unit = {
-    if (batch.isEmpty) return
-    Warehouse.ensureDatabase(s, db)
-    val lease = acquireLease(s, db)
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { pinned += df; df }
-    // pin the incoming batch itself (the VectorIngest/Bm25Ingest pin):
-    // it is consumed by the bounds agg, the legacy content proof, and
-    // every appendS12 stage — unpinned, each consumer recomputes the
-    // stream's upstream frame
-    val b = pin(batch.persist())
-    try {
-      val props = dbProps(s, db)
-      if (epochId >= 0 &&
-          props.get(epochProp(srcTag)).filter(_.nonEmpty)
-            .map(_.toLong).exists(_ >= epochId))
-        return // committed-epoch replay: everything already landed
-      val bounds = b.agg(min("doc_id"), max("doc_id")).head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      // Migration from the pre-r10 SCALAR ledger (single-stream by its
-      // own documented contract): a restarted legacy stream redelivering
-      // its committed epoch must be skipped, or the append-only guard
-      // would wedge it — but the scalar carries no source attribution,
-      // so it may only ever suppress a batch that is PROVABLY a
-      // redelivery: ids entirely inside the already-ingested range. A
-      // fresh batch (a NEW source, or new data) falls through and
-      // ingests normally — the scalar must never swallow first-contact
-      // data. On a hit, the scalar MIGRATES to this source's key and
-      // retires, so it can mask nothing else afterwards.
-      if (epochId >= 0 &&
-          props.get(epochProp(srcTag)).forall(_.isEmpty) && {
-        val legacy = props.get(LastEpochProp).filter(_.nonEmpty).map(_.toLong)
-        val ingested = props.get(MaxDocIdProp).filter(_.nonEmpty).map(_.toLong)
-        legacy.exists(_ >= epochId) && ingested.exists(hi <= _) && {
-          // A new stream starts at epoch 0, so `legacyEpoch >= epochId`
-          // alone proves little — demand CONTENT proof too: every text
-          // hash of the batch must already sit in the persisted hash
-          // index. A misconfigured NEW source whose ids merely overlap
-          // the ingested range fails this and falls through to the
-          // loud append-only guard instead of being silently swallowed.
-          val known = s.table(fq(db, HashIndexTable))
-          val allKnown = b
-            .select(sha2(lower(trim(col("text"))), 256).as("h")).distinct()
-            .join(known, Seq("h"), "left_anti").isEmpty
-          allKnown && {
-            System.err.println(
-              s"[corpus-pipeline] WARNING: legacy scalar ledger " +
-                s"(epoch ${legacy.get}) migrated to source key " +
-                s"'$srcTag' on a proven redelivery (ids [$lo,$hi] " +
-                s"inside ingested range, all text hashes known); " +
-                s"batch epoch $epochId skipped")
-            setDbProp(s, db, epochProp(srcTag), legacy.get.toString)
-            setDbProp(s, db, LastEpochProp, "")
-            true
-          }
+                        db: String = Db, epochId: Long = -1L): Unit =
+    FencedAppend.append(s, IngestFamily, db, srcTag, batch, epochId)
+
+  /** Migration from the pre-r10 SCALAR ledger (single-stream by its own
+    * documented contract): a restarted legacy stream redelivering its
+    * committed epoch must be skipped, or the append-only guard would
+    * wedge it — but the scalar carries no source attribution, so it may
+    * only ever suppress a batch that is PROVABLY a redelivery: ids
+    * entirely inside the already-ingested range. A fresh batch (a NEW
+    * source, or new data) falls through and ingests normally — the scalar
+    * must never swallow first-contact data. On a hit, the scalar MIGRATES
+    * to this source's key and retires, so it can mask nothing else
+    * afterwards.
+    */
+  private def legacyReplay(b: FencedAppend.Batch): Boolean = {
+    val (s, db) = (b.s, b.db)
+    val props = dbProps(s, db)
+    props.get(epochProp(b.srcTag)).forall(_.isEmpty) && {
+      val legacy = props.get(LastEpochProp).filter(_.nonEmpty).map(_.toLong)
+      val ingested = props.get(MaxDocIdProp).filter(_.nonEmpty).map(_.toLong)
+      legacy.exists(_ >= b.epochId) && ingested.exists(b.hi <= _) && {
+        // A new stream starts at epoch 0, so `legacyEpoch >= epochId`
+        // alone proves little — demand CONTENT proof too: every text
+        // hash of the batch must already sit in the persisted hash
+        // index. A misconfigured NEW source whose ids merely overlap
+        // the ingested range fails this and falls through to the
+        // loud append-only guard instead of being silently swallowed.
+        val known = s.table(fq(db, HashIndexTable))
+        val allKnown = b.frame
+          .select(sha2(lower(trim(col("text"))), 256).as("h")).distinct()
+          .join(known, Seq("h"), "left_anti").isEmpty
+        allKnown && {
+          System.err.println(
+            s"[corpus-pipeline] WARNING: legacy scalar ledger " +
+              s"(epoch ${legacy.get}) migrated to source key " +
+              s"'${b.srcTag}' on a proven redelivery (ids [${b.lo},${b.hi}] " +
+              s"inside ingested range, all text hashes known); " +
+              s"batch epoch ${b.epochId} skipped")
+          setDbProp(s, db, epochProp(b.srcTag), legacy.get.toString)
+          setDbProp(s, db, LastEpochProp, "")
+          true
         }
-      }) return // legacy-committed replay: landed pre-upgrade
-      dbProps(s, db).get(MaxDocIdProp).filter(_.nonEmpty).map(_.toLong)
-        .foreach(storedMax => require(lo > storedMax,
-          s"corpusIngestBatch: batch min id $lo <= ingested max " +
-            s"$storedMax — the append-only contract (keep-lowest " +
-            "immutability) forbids out-of-order ingest"))
-      appendS12(s, db, b, lease, pin)
-      val keys = lineageKeys(srcTag)
-      Seq("s1_clean", "s2_dedup").foreach { st =>
-        s.sql(s"ALTER TABLE ${fq(db, st)} SET TBLPROPERTIES (" +
-          s"'$LineageKeyProp'='${keys(st)}', " +
-          s"'$LineageProp'='streaming ingest append', " +
-          s"'$LineageStampProp'='${System.currentTimeMillis()}')")
       }
-      // the suffix no longer derives from its inputs — invalidate it so
-      // the next remix (or any resume) recomputes s3..s5
-      Seq("s3_decontam", "s4_mix", "s5_pack")
-        .filter(st => s.catalog.tableExists(s"$db.$st")).foreach { st =>
-          s.sql(s"ALTER TABLE ${fq(db, st)} UNSET TBLPROPERTIES IF EXISTS " +
-            s"('$LineageKeyProp', '$LineageStampProp')")
-        }
-      // commit the epoch BEFORE advancing the append-only guard (the
-      // VectorIngest ordering, same reasoning): guard-first would wedge
-      // the stream on a crash between the two writes — the replayed
-      // epoch, absent from the ledger, trips the guard's require on every
-      // redelivery. Epoch-first leaves only a benign window (guard one
-      // batch stale; replay is a ledger no-op; the guard catches up on
-      // the next batch). Every append and stamp above still precedes the
-      // commit.
-      if (epochId >= 0)
-        setDbProp(s, db, epochProp(srcTag), epochId.toString)
-      setDbProp(s, db, MaxDocIdProp, hi.toString)
-    } finally {
-      pinned.foreach(df =>
-        try df.unpersist() catch { case scala.util.control.NonFatal(_) => () })
-      releaseLease(s, db, lease)
     }
   }
+
+  /** Restamp s1/s2 with `srcTag`'s chain keys and invalidate the suffix,
+    * which no longer derives from its inputs — the next remix (or any
+    * resume) recomputes s3..s5.
+    */
+  private def stampIngested(s: SparkSession, db: String,
+                            srcTag: String): Unit = {
+    val keys = lineageKeys(srcTag)
+    Seq("s1_clean", "s2_dedup").foreach { st =>
+      s.sql(s"ALTER TABLE ${fq(db, st)} SET TBLPROPERTIES (" +
+        s"'$LineageKeyProp'='${keys(st)}', " +
+        s"'$LineageProp'='streaming ingest append', " +
+        s"'$LineageStampProp'='${System.currentTimeMillis()}')")
+    }
+    Seq("s3_decontam", "s4_mix", "s5_pack")
+      .filter(st => s.catalog.tableExists(s"$db.$st")).foreach { st =>
+        s.sql(s"ALTER TABLE ${fq(db, st)} UNSET TBLPROPERTIES IF EXISTS " +
+          s"('$LineageKeyProp', '$LineageStampProp')")
+      }
+  }
+
+  /** The streaming corpus ingest on the [[FencedAppend]] protocol. The
+    * fence is the optional [[MaxDocIdProp]], cleared by the batch MIN
+    * (keep-lowest immutability admits no overlap); the legacy scalar
+    * ledger is the content proof.
+    */
+  private[graft] val IngestFamily = FencedAppend.Family(
+    name = "corpusIngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(FencedAppend.Lo,
+      (s, db) => FencedAppend.storedLong(s, db, MaxDocIdProp),
+      (s, db, hi) => setDbProp(s, db, MaxDocIdProp, hi.toString)),
+    prepare = Warehouse.ensureDatabase,
+    stages = b => Seq(
+      "s1_s2" -> (() => appendS12(b.s, b.db, b.frame, b.lease, b.pin)),
+      "stamps" -> (() => stampIngested(b.s, b.db, b.srcTag))),
+    proof = legacyReplay)
 
   /** foreachBatch adapter for [[corpusIngestBatch]] — wires the streaming
     * engine's epochId into the replay ledger.

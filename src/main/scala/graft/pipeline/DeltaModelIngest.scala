@@ -51,9 +51,10 @@ object DeltaModelIngest {
       .agg(sum(fam.sumCols.head).as(fam.sumCols.head),
         fam.sumCols.tail.map(c => sum(c).as(c)): _*)
 
-  private def digest(x: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+  /** The ledger digest cut to 12 chars: it also names PHYSICAL delta
+    * tables, so widening it would orphan every stored delta.
+    */
+  private def digest(x: String): String = FencedAppend.digest(x).take(12)
 
   private[graft] val GenProp = "graft.delta.generation"
   private[graft] val CoversProp = "graft.delta.covers"
@@ -138,8 +139,8 @@ object DeltaModelIngest {
              counts: DataFrame, failBeforeLedger: Boolean = false,
              midAppendHook: () => Unit = () => ()): Unit = {
     require(epochId >= 0, "deltaAppend needs a non-negative epoch id")
-    if (CorpusPipeline.dbProps(s, fam.db).get(ledgerPropOf(fam, srcTag))
-        .filter(_.nonEmpty).map(_.toLong).exists(_ >= epochId))
+    val ledger = ledgerPropOf(fam, srcTag)
+    if (FencedAppend.replayed(s, fam.db, ledger, epochId))
       return // committed-epoch replay: the delta already landed
     val gen = generation(s, fam)
     val name = s"${prefix(fam, gen)}p_${digest(srcTag)}_e$epochId"
@@ -165,8 +166,7 @@ object DeltaModelIngest {
     }
     if (failBeforeLedger)
       throw new RuntimeException("test failpoint before ledger commit")
-    CorpusPipeline.setDbProp(s, fam.db, ledgerPropOf(fam, srcTag),
-      epochId.toString)
+    FencedAppend.commitEpoch(s, fam.db, ledger, epochId)
   }
 
   /** Capture the pre-rebuild generation (call BEFORE overwriting the
@@ -210,34 +210,33 @@ object DeltaModelIngest {
     * yet moved.
     */
   def compact(s: SparkSession, fam: Family,
-              failBeforeSwitch: Boolean = false): Unit = {
-    val lease = CorpusPipeline.acquireLease(s, fam.db)
-    try {
+              failBeforeSwitch: Boolean = false): Unit =
+    FencedAppend.withLease(s, fam.db) { lease =>
       graft.store.Warehouse.refreshDb(s, fam.db)
       val gen = generation(s, fam)
       val (done, plains) = serveState(s, fam)
       val constituents = done.toSeq ++ plains
-      if (constituents.size <= 1) return // nothing to fold
-      val existing = listDelta(s, fam, gen)
-        .filter(_.startsWith(prefix(fam, gen) + "c"))
-      val n = existing
-        .map(_.stripPrefix(prefix(fam, gen) + "c").toLong)
-        .foldLeft(0L)(math.max) + 1
-      val name = s"${prefix(fam, gen)}c$n"
-      val merged = mergeParts(constituents
-        .map(t => s.table(s"`${fam.db}`.`$t`")
-          .select((fam.keyCols ++ fam.sumCols).map(col): _*)), fam)
-      graft.store.Warehouse.saveModel(merged, fam.db, name)
-      s.sql(s"ALTER TABLE `${fam.db}`.`$name` SET TBLPROPERTIES " +
-        s"('$CoversProp' = '${constituents.mkString(",")}')")
-      if (failBeforeSwitch)
-        throw new RuntimeException("test failpoint before done switch")
-      CorpusPipeline.renewLease(s, fam.db, lease)
-      CorpusPipeline.setDbProp(s, fam.db, donePropOf(fam, gen), name)
-      // retry-safe cleanup: covered constituents + orphan combineds from
-      // earlier crashes (any combined that is not the new pointer)
-      for (t <- constituents ++ existing.filterNot(_ == name))
-        s.sql(s"DROP TABLE IF EXISTS `${fam.db}`.`$t`")
-    } finally CorpusPipeline.releaseLease(s, fam.db, lease)
-  }
+      if (constituents.size > 1) { // else nothing to fold
+        val existing = listDelta(s, fam, gen)
+          .filter(_.startsWith(prefix(fam, gen) + "c"))
+        val n = existing
+          .map(_.stripPrefix(prefix(fam, gen) + "c").toLong)
+          .foldLeft(0L)(math.max) + 1
+        val name = s"${prefix(fam, gen)}c$n"
+        val merged = mergeParts(constituents
+          .map(t => s.table(s"`${fam.db}`.`$t`")
+            .select((fam.keyCols ++ fam.sumCols).map(col): _*)), fam)
+        graft.store.Warehouse.saveModel(merged, fam.db, name)
+        s.sql(s"ALTER TABLE `${fam.db}`.`$name` SET TBLPROPERTIES " +
+          s"('$CoversProp' = '${constituents.mkString(",")}')")
+        if (failBeforeSwitch)
+          throw new RuntimeException("test failpoint before done switch")
+        CorpusPipeline.renewLease(s, fam.db, lease)
+        CorpusPipeline.setDbProp(s, fam.db, donePropOf(fam, gen), name)
+        // retry-safe cleanup: covered constituents + orphan combineds from
+        // earlier crashes (any combined that is not the new pointer)
+        for (t <- constituents ++ existing.filterNot(_ == name))
+          s.sql(s"DROP TABLE IF EXISTS `${fam.db}`.`$t`")
+      }
+    }
 }

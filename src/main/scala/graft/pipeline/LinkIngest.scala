@@ -22,21 +22,16 @@ import graft.ops.LinkOps
   * [[LinkOps.authorityRebuildEntry]]'s cron instead — retrievability of
   * the facts themselves is exact from the moment they land.
   *
-  * Exactly-once: committed-epoch ledger per source set LAST (replays
-  * no-op), fence advanced AFTER the rebuild commits (a crashed batch's
-  * redelivery passes the fence and the row-idempotent fact append lands
-  * exactly the missing rows), content proof on absorbed overlaps (an
-  * overlapping doc whose LINK ROWS differ from the stored ones is not a
-  * redelivery — refused loudly), lease renewed at stage boundaries.
+  * Exactly-once through [[FencedAppend]]: the batch's FACTS are pinned,
+  * the fence is the required db property [[MaxDocProp]] cleared by the
+  * batch max (overlap admitted), and the stages are the fact append
+  * (behind its content proof) and the authority rebuild.
   */
 object LinkIngest {
 
   val LinkFactsTable = "link_facts"
   private[graft] val MaxDocProp = "graft.links.max_doc"
   private[graft] val LastEpochProp = "graft.links.last_epoch"
-
-  private[graft] def epochProp(srcTag: String): String =
-    IngestLedger.epochProp(LastEpochProp, srcTag)
 
   private def fqn(db: String, tbl: String) = s"`$db`.`$tbl`"
 
@@ -79,79 +74,64 @@ object LinkIngest {
     rebuildAuthorityFromFacts(s, db)
   }
 
+  /** Content proof plus the row-idempotent fact append. A redelivered
+    * doc must carry EXACTLY the link rows it did the first time. A row
+    * COUNT (the Bm25Ingest doclen shortcut) is too weak here — the crafted
+    * link count depends only on doc_id arithmetic, so a rogue overlap
+    * with a different source would pass it. The fact rows are compared as
+    * per-doc MULTISETS (full outer on the grouped rows, restricted to the
+    * overlapping ids — a handful of rows per doc, range-pruned).
+    */
+  private def appendFacts(b: FencedAppend.Batch): Unit = {
+    val factsT = fqn(b.db, LinkFactsTable)
+    val storedRange = b.pin(b.s.table(factsT)
+      .filter(col("doc_id").between(b.lo, b.hi)).persist())
+    val factCols = Seq("doc_id", "page_domain", "target_domain",
+      "is_external")
+    val overlapIds = storedRange.select("doc_id").distinct()
+      .join(b.frame.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
+    val stG = storedRange.groupBy(factCols.map(col): _*)
+      .agg(count(lit(1)).as("n_st"))
+    val btG = b.frame.groupBy(factCols.map(col): _*)
+      .agg(count(lit(1)).as("n_b"))
+    val mismatched = stG.join(btG, factCols, "full_outer")
+      .join(overlapIds, Seq("doc_id"), "left_semi")
+      .filter(coalesce(col("n_st"), lit(-1L)) =!=
+        coalesce(col("n_b"), lit(-1L)))
+      .select("doc_id").distinct().count()
+    require(mismatched == 0L,
+      s"linkIngestBatch: $mismatched overlapping doc_ids carry " +
+        "DIFFERENT link rows than the ingested ones — not a " +
+        "redelivery; refusing loudly")
+    b.frame.join(storedRange.select("doc_id").distinct(),
+      Seq("doc_id"), "left_anti")
+      .write.mode("append").insertInto(factsT)
+  }
+
+  private[graft] val IngestFamily = FencedAppend.Family(
+    name = "linkIngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(FencedAppend.Hi,
+      (s, db) => Some(FencedAppend.storedLong(s, db, MaxDocProp).getOrElse(
+        sys.error(s"linkIngestBatch: `$db` carries no $MaxDocProp fence"))),
+      (s, db, hi) => CorpusPipeline.setDbProp(s, db, MaxDocProp, hi.toString)),
+    prepare = (s, db) =>
+      require(s.catalog.tableExists(s"$db.$LinkFactsTable"),
+        s"linkIngestBatch: no link facts in `$db` — buildLinkFacts first"),
+    pinned = factsOf,
+    stages = b => Seq(
+      LinkFactsTable -> (() => appendFacts(b)),
+      LinkOps.AuthorityTable ->
+        (() => rebuildAuthorityFromFacts(b.s, b.db))))
+
   /** Fold one micro-batch of (doc_id, source) rows into the stored graph.
     * `failAfter` is a TEST-ONLY failpoint: crash after the fact append,
     * before the rebuild/fence.
     */
   def linkIngestBatch(s: SparkSession, srcTag: String, batch: DataFrame,
                       db: String, epochId: Long = -1L,
-                      failAfter: Boolean = false): Unit = {
-    if (batch.isEmpty) return
-    require(s.catalog.tableExists(s"$db.$LinkFactsTable"),
-      s"linkIngestBatch: no link facts in `$db` — buildLinkFacts first")
-    val lease = CorpusPipeline.acquireLease(s, db)
-    val bf = factsOf(batch).persist()
-    try {
-      if (epochId >= 0 &&
-          CorpusPipeline.dbProps(s, db).get(epochProp(srcTag))
-            .filter(_.nonEmpty).map(_.toLong).exists(_ >= epochId))
-        return // committed-epoch replay: every write already landed
-      val bounds = bf.agg(min("doc_id"), max("doc_id")).head()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val storedMax = CorpusPipeline.dbProps(s, db)
-        .getOrElse(MaxDocProp, sys.error(
-          s"linkIngestBatch: `$db` carries no $MaxDocProp fence")).toLong
-      require(hi > storedMax,
-        s"linkIngestBatch: batch max doc_id $hi <= ingested max $storedMax " +
-          "— out-of-order ingest refused (the append-only contract)")
-      graft.store.Warehouse.refreshDb(s, db)
-      val factsT = fqn(db, LinkFactsTable)
-      val storedRange = s.table(factsT)
-        .filter(col("doc_id").between(lo, hi)).persist()
-      try {
-        // content proof for absorbed overlaps: a redelivered doc must carry
-        // EXACTLY the link rows it did the first time. A row COUNT (the
-        // Bm25Ingest doclen shortcut) is too weak here — the crafted link
-        // count depends only on doc_id arithmetic, so a rogue overlap
-        // with a different source would pass it. Compare the fact rows as
-        // per-doc MULTISETS (full outer on the grouped rows, restricted
-        // to the overlapping ids — ≤ a handful of rows per doc,
-        // range-pruned).
-        CorpusPipeline.renewLease(s, db, lease)
-        val factCols = Seq("doc_id", "page_domain", "target_domain",
-          "is_external")
-        val overlapIds = storedRange.select("doc_id").distinct()
-          .join(bf.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
-        val stG = storedRange.groupBy(factCols.map(col): _*)
-          .agg(count(lit(1)).as("n_st"))
-        val btG = bf.groupBy(factCols.map(col): _*)
-          .agg(count(lit(1)).as("n_b"))
-        val mismatched = stG.join(btG, factCols, "full_outer")
-          .join(overlapIds, Seq("doc_id"), "left_semi")
-          .filter(coalesce(col("n_st"), lit(-1L)) =!=
-            coalesce(col("n_b"), lit(-1L)))
-          .select("doc_id").distinct().count()
-        require(mismatched == 0L,
-          s"linkIngestBatch: $mismatched overlapping doc_ids carry " +
-            "DIFFERENT link rows than the ingested ones — not a " +
-            "redelivery; refusing loudly")
-        val fresh = bf.join(storedRange.select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")
-        fresh.write.mode("append").insertInto(factsT)
-        if (failAfter)
-          throw new RuntimeException("test failpoint after facts append")
-      } finally storedRange.unpersist()
-      CorpusPipeline.renewLease(s, db, lease)
-      rebuildAuthorityFromFacts(s, db)
-      if (epochId >= 0)
-        CorpusPipeline.setDbProp(s, db, epochProp(srcTag), epochId.toString)
-      CorpusPipeline.setDbProp(s, db, MaxDocProp, hi.toString)
-    } finally {
-      try bf.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-      CorpusPipeline.releaseLease(s, db, lease)
-    }
-  }
+                      failAfter: Boolean = false): Unit =
+    FencedAppend.append(s, IngestFamily, db, srcTag, batch, epochId,
+      if (failAfter) Some(LinkFactsTable) else None)
 
   /** foreachBatch adapter — wires the streaming engine's epochId into the
     * replay ledger.

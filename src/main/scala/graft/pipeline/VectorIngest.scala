@@ -1,143 +1,92 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{max, min}
 import graft.ops.VectorOps
 
-/** Streaming growth for the stored ANN indexes — the corpus-ingest
-  * machinery ([[CorpusPipeline.corpusIngestBatch]]) transplanted to the
-  * vector side: each foreachBatch micro-batch appends to EVERY index
-  * family present in the database through the frozen-parameter appends
+/** Streaming growth for the stored ANN indexes on the [[FencedAppend]]
+  * protocol: each foreachBatch micro-batch appends to EVERY index family
+  * present in the database through the frozen-parameter appends
   * ([[VectorOps.appendToIvfIndex]]/[[VectorOps.appendToPqIndex]]/
   * [[VectorOps.appendToIvfPqIndex]]/[[VectorOps.appendToSqIndex]] —
-  * stored centroids/codebooks/ranges, zero
-  * training jobs), so searches serve the grown corpus immediately and
-  * the scheduled rebuild ([[VectorOps.ivfRefreshEntry]] family) bounds
-  * parameter drift on its cadence.
+  * stored centroids/codebooks/ranges, zero training jobs), so searches
+  * serve the grown corpus immediately and the scheduled rebuild
+  * ([[VectorOps.ivfRefreshEntry]] family) bounds parameter drift on its
+  * cadence. One stage per present family.
   *
-  * Exactly-once contract, stronger than the corpus ingest's: a
-  * PER-SOURCE committed-epoch ledger (set strictly LAST) makes
-  * whole-batch replays no-ops and keeps concurrent streams' epoch
-  * numbering independent; the append-only vec_id guard refuses
-  * out-of-order batches; and the family appends themselves are
-  * row-level IDEMPOTENT (each anti-joins the batch against the ids the
-  * target already holds within the batch's id range — a stats-pruned
-  * range scan, see [[VectorOps.appendToIvfIndex]]'s scaladoc), so a
-  * crash INSIDE the append sequence replays to exactly the missing
-  * rows: no family ever carries a batch twice (failpoint-tested). A
-  * duplicated code row would be a duplicated CANDIDATE the exact
-  * re-rank does not collapse, which is why this is a correctness
-  * guard and not an optimization.
+  * Fence: the optional db property [[MaxVecIdProp]], cleared by the batch
+  * MIN — no overlap is admitted. The family appends are still row-level
+  * IDEMPOTENT (each anti-joins the batch against the ids the target
+  * already holds within the batch's id range, see
+  * [[VectorOps.appendToIvfIndex]]), so a crash INSIDE the stage sequence
+  * replays to exactly the missing rows. A duplicated code row would be a
+  * duplicated CANDIDATE the exact re-rank does not collapse, which is
+  * why this is a correctness guard and not an optimization.
   */
 object VectorIngest {
 
   private[graft] val MaxVecIdProp = "graft.ann.max_vec_id"
   private[graft] val LastEpochProp = "graft.ann.last_epoch"
 
-  private[graft] def epochProp(srcTag: String): String =
-    IngestLedger.epochProp(LastEpochProp, srcTag)
+  /** One append stage per index family present in `b.db`. */
+  private def familyStages(b: FencedAppend.Batch): Seq[(String, () => Unit)] = {
+    val (s, db, frame) = (b.s, b.db, b.frame)
+    val families: Seq[(String, () => Unit)] = Seq(
+      VectorOps.IvfAssignmentsTable ->
+        (() => VectorOps.appendToIvfIndex(s, db, frame)),
+      VectorOps.PqCodesTable ->
+        (() => VectorOps.appendToPqIndex(s, db, frame)),
+      VectorOps.IvfPqCodesTable ->
+        (() => VectorOps.appendToIvfPqIndex(s, db, frame)),
+      VectorOps.SqCodesTable ->
+        (() => VectorOps.appendToSqIndex(s, db, frame)),
+      VectorOps.IvfSqCodesTable ->
+        (() => VectorOps.appendToIvfSqIndex(s, db, frame)))
+    // sharded families: `<prefix>_0.._S-1` tables (the sharded builders'
+    // layout) grow through the hash-slice routed appends — S is the
+    // contiguous run of suffixed tables, so a partially-built grid is
+    // appended only up to its first gap (the builders always write the
+    // full run). Keyed by the `_0` table for the failpoint contract.
+    val catalogTables = s.catalog.listTables(db).collect().map(_.name).toSet
+    def shardRun(prefix: String): Int =
+      Iterator.from(0).takeWhile(i => catalogTables(s"${prefix}_$i")).size
+    val sharded: Seq[(String, () => Unit)] = Seq[(String, Int => Unit)](
+      VectorOps.IvfAssignmentsTable ->
+        ((n: Int) => VectorOps.appendToShardedIvfIndex(s, db, n, frame)),
+      VectorOps.PqCodesTable ->
+        ((n: Int) => VectorOps.appendToShardedPqIndex(s, db, n, frame)),
+      VectorOps.IvfPqCodesTable ->
+        ((n: Int) => VectorOps.appendToShardedIvfPqIndex(s, db, n, frame)),
+      VectorOps.IvfSqCodesTable ->
+        ((n: Int) => VectorOps.appendToShardedIvfSqIndex(s, db, n, frame)))
+      .flatMap { case (prefix, f) =>
+        val n = shardRun(prefix)
+        if (n > 0) Some(s"${prefix}_0" -> (() => f(n))) else None
+      }
+    val present =
+      families.filter(f => s.catalog.tableExists(s"$db.${f._1}")) ++ sharded
+    require(present.nonEmpty,
+      s"vectorIngestBatch: no ANN index tables in `$db` — build one " +
+        "(buildIvfIndex/buildPqIndex/buildIvfPqIndex) before streaming " +
+        "into it")
+    present
+  }
+
+  private[graft] val IngestFamily = FencedAppend.Family(
+    name = "vectorIngestBatch", idCol = "vec_id", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(FencedAppend.Lo,
+      (s, db) => FencedAppend.storedLong(s, db, MaxVecIdProp),
+      (s, db, hi) => CorpusPipeline.setDbProp(s, db, MaxVecIdProp, hi.toString)),
+    prepare = graft.store.Warehouse.ensureDatabase,
+    stages = familyStages)
 
   /** Fold one micro-batch of (vec_id, embedding, ...) rows into every
     * stored index family present in `db`. `failAfter` is a TEST-ONLY
-    * failpoint (the [[CorpusPipeline]] pattern): throw right after the
-    * named family's append lands — simulates a mid-batch crash with
-    * some families appended and the epoch uncommitted.
+    * failpoint: throw right after the named family's append lands.
     */
   def vectorIngestBatch(s: SparkSession, srcTag: String, batch: DataFrame,
                         db: String, epochId: Long = -1L,
-                        failAfter: Option[String] = None): Unit = {
-    if (batch.isEmpty) return
-    graft.store.Warehouse.ensureDatabase(s, db)
-    val lease = CorpusPipeline.acquireLease(s, db)
-    // pin the batch once, INSIDE the lease scope: the bounds agg plus
-    // every family's freshOnly probe + encode/assign scan re-reads it
-    // (~2 + 2 consumers per family) — with a non-trivial upstream, an
-    // unpersisted frame would recompute that upstream for each (the
-    // corpusIngestBatch pin). Persisting before acquisition would leak
-    // the cache entry on every lost-lease exception (the unpersist lives
-    // in this try's finally).
-    val b = batch.persist()
-    try {
-      if (epochId >= 0 &&
-          CorpusPipeline.dbProps(s, db).get(epochProp(srcTag))
-            .filter(_.nonEmpty).map(_.toLong).exists(_ >= epochId))
-        return // committed-epoch replay: every append already landed
-      val bounds = b.agg(min("vec_id"), max("vec_id")).head
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      CorpusPipeline.dbProps(s, db).get(MaxVecIdProp).filter(_.nonEmpty)
-        .map(_.toLong).foreach(storedMax => require(lo > storedMax,
-          s"vectorIngestBatch: batch min vec_id $lo <= ingested max " +
-            s"$storedMax — the append-only contract forbids out-of-order " +
-            "ingest (a re-appended id duplicates index rows)"))
-      val families: Seq[(String, () => Unit)] = Seq(
-        VectorOps.IvfAssignmentsTable ->
-          (() => VectorOps.appendToIvfIndex(s, db, b)),
-        VectorOps.PqCodesTable ->
-          (() => VectorOps.appendToPqIndex(s, db, b)),
-        VectorOps.IvfPqCodesTable ->
-          (() => VectorOps.appendToIvfPqIndex(s, db, b)),
-        VectorOps.SqCodesTable ->
-          (() => VectorOps.appendToSqIndex(s, db, b)),
-        VectorOps.IvfSqCodesTable ->
-          (() => VectorOps.appendToIvfSqIndex(s, db, b)))
-      // sharded families: `<prefix>_0.._S-1` tables (the sharded builders'
-      // layout) grow through the hash-slice routed appends — S is the
-      // contiguous run of suffixed tables, so a partially-built grid is
-      // appended only up to its first gap (the builders always write the
-      // full run). Keyed by the `_0` table for the failpoint contract.
-      val catalogTables = s.catalog.listTables(db).collect().map(_.name).toSet
-      def shardRun(prefix: String): Int =
-        Iterator.from(0).takeWhile(i => catalogTables(s"${prefix}_$i")).size
-      val sharded: Seq[(String, () => Unit)] = Seq[(String, Int => Unit)](
-        VectorOps.IvfAssignmentsTable ->
-          ((n: Int) => VectorOps.appendToShardedIvfIndex(s, db, n, b)),
-        VectorOps.PqCodesTable ->
-          ((n: Int) => VectorOps.appendToShardedPqIndex(s, db, n, b)),
-        VectorOps.IvfPqCodesTable ->
-          ((n: Int) => VectorOps.appendToShardedIvfPqIndex(s, db, n, b)),
-        VectorOps.IvfSqCodesTable ->
-          ((n: Int) => VectorOps.appendToShardedIvfSqIndex(s, db, n, b)))
-        .flatMap { case (prefix, f) =>
-          val n = shardRun(prefix)
-          if (n > 0) Some(s"${prefix}_0" -> (() => f(n))) else None
-        }
-      val present =
-        families.filter(f => s.catalog.tableExists(s"$db.${f._1}")) ++ sharded
-      require(present.nonEmpty,
-        s"vectorIngestBatch: no ANN index tables in `$db` — build one " +
-          "(buildIvfIndex/buildPqIndex/buildIvfPqIndex) before streaming " +
-          "into it")
-      present.foreach { case (table, append) =>
-        // re-assert lease ownership at every family boundary — the same
-        // fencing structure the corpus pipeline has at stage boundaries.
-        // Without this, vectorIngestBatch had NO abort point between
-        // acquisition and release, so a racer admitted by the residual
-        // acquisition window could run every append concurrently; with
-        // it, a fenced-out runner stops before its next family write.
-        CorpusPipeline.renewLease(s, db, lease)
-        append()
-        if (failAfter.contains(table))
-          throw new RuntimeException(s"test failpoint after $table append")
-      }
-      // commit the epoch BEFORE advancing the append-only guard: with the
-      // guard first, a crash between the two writes would leave a state
-      // where the replayed epoch is not in the ledger but its ids are
-      // already "ingested" — the guard's require would then refuse every
-      // redelivery and wedge the stream. This order leaves only a
-      // benign window (epoch committed, guard one batch stale): the
-      // replay is a ledger no-op, the guard catches up on the next batch,
-      // and the row-level idempotent appends cover any interim overlap.
-      // Every family append still precedes the commit — the ledger never
-      // covers a batch that has not fully landed.
-      if (epochId >= 0)
-        CorpusPipeline.setDbProp(s, db, epochProp(srcTag), epochId.toString)
-      CorpusPipeline.setDbProp(s, db, MaxVecIdProp, hi.toString)
-    } finally {
-      try b.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-      CorpusPipeline.releaseLease(s, db, lease)
-    }
-  }
+                        failAfter: Option[String] = None): Unit =
+    FencedAppend.append(s, IngestFamily, db, srcTag, batch, epochId, failAfter)
 
   /** foreachBatch adapter — wires the streaming engine's epochId into
     * the replay ledger (mirror of [[CorpusPipeline.corpusIngestSink]]).

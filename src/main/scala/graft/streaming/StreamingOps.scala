@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.pipeline.FencedAppend
 
 /** Structured Streaming surface (SURVEY.md §2.D streaming row).
   *
@@ -231,7 +232,9 @@ object StreamingOps {
     * aggregation); a scheduled compaction can materialize that view over
     * the log when it grows (the append-log + compact pattern).
     */
-  /** Per-log committed-epoch ledger base ([[IngestLedger]] key). */
+  /** Per-log committed-epoch ledger base
+    * ([[graft.pipeline.FencedAppend.epochProp]] key).
+    */
   private[graft] val DedupLogEpochProp = "graft.deduplog.last_epoch"
 
   def sinkDedupedLog(docs: DataFrame, db: String, table: String)
@@ -259,26 +262,17 @@ object StreamingOps {
         requireEpochColumn(s, db, table)
         // the db lease serializes this append against compactDedupLog's
         // temp-swap — mutual exclusion needs BOTH writers to take it
-        val lease = graft.pipeline.CorpusPipeline.acquireLease(s, db)
-        try {
-          val prop = graft.pipeline.IngestLedger.epochProp(
-            DedupLogEpochProp, s"$db.$table")
-          val committed = graft.pipeline.CorpusPipeline.dbProps(s, db)
-            .get(prop).filter(_.nonEmpty).map(_.toLong)
-          require(committed.forall(c => epochId >= c),
-            s"sinkDedupedLog: batch epoch $epochId behind committed " +
-              s"${committed.get} — a RESET checkpoint against the durable " +
-              "log would silently discard new data; restore the checkpoint " +
-              "or start a fresh log table")
-          if (!committed.exists(_ >= epochId)) {
+        FencedAppend.withLease(s, db) { _ =>
+          val prop = FencedAppend.epochProp(DedupLogEpochProp, s"$db.$table")
+          if (!committedReplay(FencedAppend.storedLong(s, db, prop), epochId,
+              "sinkDedupedLog")) {
             graft.store.Warehouse.load(s,
               graft.ops.TextOps.dedupGroups(batch.toDF())
                 .withColumn("epoch", lit(epochId)), db, table,
               graft.store.LoadMode.WatermarkAppend)
-            graft.pipeline.CorpusPipeline.setDbProp(s, db, prop,
-              epochId.toString)
+            FencedAppend.commitEpoch(s, db, prop, epochId)
           }
-        } finally graft.pipeline.CorpusPipeline.releaseLease(s, db, lease)
+        }
       }, docs, s"$db.$table")
       .start()
 
@@ -343,13 +337,12 @@ object StreamingOps {
   def migrateDedupLog(spark: org.apache.spark.sql.SparkSession,
                       db: String, table: String): Unit =
     if (!spark.table(s"`$db`.`$table`").columns.contains("epoch")) {
-      val lease = graft.pipeline.CorpusPipeline.acquireLease(spark, db)
-      try graft.store.Warehouse.rewriteVia(spark, db, table)(log =>
-        log.groupBy("text_hash")
-          .agg(min("doc_id").as("doc_id"), sum("dup_cnt").as("dup_cnt"))
-          .withColumn("epoch", lit(LegacyEpoch))
-          .select("text_hash", "doc_id", "dup_cnt", "epoch"))
-      finally graft.pipeline.CorpusPipeline.releaseLease(spark, db, lease)
+      FencedAppend.withLease(spark, db)(_ =>
+        graft.store.Warehouse.rewriteVia(spark, db, table)(log =>
+          log.groupBy("text_hash")
+            .agg(min("doc_id").as("doc_id"), sum("dup_cnt").as("dup_cnt"))
+            .withColumn("epoch", lit(LegacyEpoch))
+            .select("text_hash", "doc_id", "dup_cnt", "epoch")))
     }
 
   /** Compaction for the [[sinkDedupedLog]] survivor log: rewrite the log
@@ -369,15 +362,14 @@ object StreamingOps {
   def compactDedupLog(spark: org.apache.spark.sql.SparkSession,
                       db: String, table: String): Unit = {
     requireEpochColumn(spark, db, table)
-    val lease = graft.pipeline.CorpusPipeline.acquireLease(spark, db)
-    try graft.store.Warehouse.rewriteVia(spark, db, table)(log =>
-      log.groupBy("epoch", "text_hash")
-        .agg(max("dup_cnt").as("dup_cnt"), min("doc_id").as("doc_id"))
-        .groupBy("text_hash")
-        .agg(min("doc_id").as("doc_id"), sum("dup_cnt").as("dup_cnt"),
-          max("epoch").as("epoch"))
-        .select("text_hash", "doc_id", "dup_cnt", "epoch"))
-    finally graft.pipeline.CorpusPipeline.releaseLease(spark, db, lease)
+    FencedAppend.withLease(spark, db)(_ =>
+      graft.store.Warehouse.rewriteVia(spark, db, table)(log =>
+        log.groupBy("epoch", "text_hash")
+          .agg(max("dup_cnt").as("dup_cnt"), min("doc_id").as("doc_id"))
+          .groupBy("text_hash")
+          .agg(min("doc_id").as("doc_id"), sum("dup_cnt").as("dup_cnt"),
+            max("epoch").as("epoch"))
+          .select("text_hash", "doc_id", "dup_cnt", "epoch")))
   }
 
   /** Watermark-bounded streaming exact dedup via Spark's
@@ -626,6 +618,23 @@ object StreamingOps {
       case _ => false
     }
 
+  /** Run `fold` once per epoch under the table-property ledger `prop` on
+    * `db`.`table` (the [[committedReplay]] verdict), then commit the
+    * epoch — LAST, so a crash inside the fold redelivers it.
+    */
+  private def foldOnce(b: DataFrame, db: String, table: String, prop: String,
+                       epochId: Long, what: String)(fold: => Unit): Unit = {
+    val s = b.sparkSession
+    val stored = s.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
+      .properties.get(prop).filter(_.nonEmpty).map(_.toLong)
+    if (!committedReplay(stored, epochId, what)) {
+      fold
+      s.sql(s"ALTER TABLE `$db`.`$table` SET TBLPROPERTIES " +
+        s"('$prop'='$epochId')")
+    }
+  }
+
   private val HistEpochProp = "graft.tshist.last_epoch"
 
   private[graft] def processHistogramBatch(b: DataFrame, db: String,
@@ -636,14 +645,8 @@ object StreamingOps {
     require(s.catalog.tableExists(s"$db.${TimeSeriesOps.HistTable}"),
       s"sinkValueHistogram: no histogram in `$db` — run " +
         "TimeSeriesOps.buildValueHistogram first")
-    if (committedReplay(s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          TimeSeriesOps.HistTable, Some(db))).properties
-        .get(HistEpochProp).filter(_.nonEmpty).map(_.toLong),
-        epochId, "sinkValueHistogram")) return
-    TimeSeriesOps.appendValueHistogram(s, b, db)
-    s.sql(s"ALTER TABLE `$db`.`${TimeSeriesOps.HistTable}` SET TBLPROPERTIES " +
-      s"('$HistEpochProp'='$epochId')")
+    foldOnce(b, db, TimeSeriesOps.HistTable, HistEpochProp, epochId,
+      "sinkValueHistogram")(TimeSeriesOps.appendValueHistogram(s, b, db))
   }
 
   /** Stream-stream interval join: purchases ⨝ clicks of the same user
@@ -699,14 +702,8 @@ object StreamingOps {
     require(s.catalog.tableExists(s"$db.${ReservoirOps.SampleTable}"),
       s"sinkDaySamples: no day samples in `$db` — run " +
         "ReservoirOps.buildDaySamples first")
-    if (committedReplay(s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          ReservoirOps.SampleTable, Some(db))).properties
-        .get(ReservoirEpochProp).filter(_.nonEmpty).map(_.toLong),
-        epochId, "sinkDaySamples")) return
-    ReservoirOps.appendDaySamples(s, b, db)
-    s.sql(s"ALTER TABLE `$db`.`${ReservoirOps.SampleTable}` " +
-      s"SET TBLPROPERTIES ('$ReservoirEpochProp'='$epochId')")
+    foldOnce(b, db, ReservoirOps.SampleTable, ReservoirEpochProp, epochId,
+      "sinkDaySamples")(ReservoirOps.appendDaySamples(s, b, db))
   }
 
   private val Scd2EpochProp = "graft.scd2.last_epoch"
@@ -718,14 +715,8 @@ object StreamingOps {
     val s = b.sparkSession
     require(s.catalog.tableExists(s"$db.${ScdOps.HistTable}"),
       s"sinkScd2: no history table in `$db` — run ScdOps.buildScd2 first")
-    if (committedReplay(s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          ScdOps.HistTable, Some(db))).properties
-        .get(Scd2EpochProp).filter(_.nonEmpty).map(_.toLong),
-        epochId, "sinkScd2")) return
-    ScdOps.applyScd2Batch(s, b, db)
-    s.sql(s"ALTER TABLE `$db`.`${ScdOps.HistTable}` SET TBLPROPERTIES " +
-      s"('$Scd2EpochProp'='$epochId')")
+    foldOnce(b, db, ScdOps.HistTable, Scd2EpochProp, epochId,
+      "sinkScd2")(ScdOps.applyScd2Batch(s, b, db))
   }
 
   private val ClusterEpochProp = "graft.clusters.last_epoch"
@@ -736,9 +727,6 @@ object StreamingOps {
     if (b.isEmpty) return
     val s = b.sparkSession
     val labelsFqn = s"`$db`.`${IncrementalClusters.LabelsTable}`"
-    def tableProps = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(
-        IncrementalClusters.LabelsTable, Some(db))).properties
     require(s.catalog.tableExists(labelsFqn.replace("`", "")),
       s"sinkIncrementalClusters: no cluster state at $labelsFqn — " +
         "run IncrementalClusters.buildClusterState first")
@@ -747,26 +735,28 @@ object StreamingOps {
       s"${IncrementalDedup.IndexDb}.${IncrementalDedup.IndexTable}"),
       s"sinkIncrementalClusters: no band index at $idxFqn — " +
         "run IncrementalDedup.buildIndexFrom over the same corpus first")
-    if (committedReplay(tableProps.get(ClusterEpochProp).filter(_.nonEmpty)
-        .map(_.toLong), epochId, "sinkIncrementalClusters")) return
-    val storedMax = tableProps.get(IncrementalClusters.MaxDocIdProp)
-      .map(_.toLong).getOrElse(Long.MinValue)
-    val bMin = b.agg(min("doc_id")).head.getLong(0)
-    val redelivery = bMin <= storedMax && {
-      // content proof, paid only when the loud guard WOULD fire: every
-      // batch id already labeled ⇒ the cluster fold landed pre-crash
-      b.select("doc_id").join(s.table(labelsFqn).select("doc_id"),
-        Seq("doc_id"), "left_anti").isEmpty
+    foldOnce(b, db, IncrementalClusters.LabelsTable, ClusterEpochProp,
+        epochId, "sinkIncrementalClusters") {
+      val storedMax = s.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(
+          IncrementalClusters.LabelsTable, Some(db))).properties
+        .get(IncrementalClusters.MaxDocIdProp)
+        .map(_.toLong).getOrElse(Long.MinValue)
+      val bMin = b.agg(min("doc_id")).head.getLong(0)
+      val redelivery = bMin <= storedMax && {
+        // content proof, paid only when the loud guard WOULD fire: every
+        // batch id already labeled ⇒ the cluster fold landed pre-crash
+        b.select("doc_id").join(s.table(labelsFqn).select("doc_id"),
+          Seq("doc_id"), "left_anti").isEmpty
+      }
+      if (!redelivery) {
+        // bands FIRST: later triggers (and this fold's own probe) must see
+        // this batch's docs in the index
+        IncrementalDedup.appendBandFrame(
+          IncrementalDedup.pruneHot(TextOps.bandsOfDocs(b)))
+        IncrementalClusters.appendBatchClusters(s, b, s.table(idxFqn), db)
+      }
     }
-    if (!redelivery) {
-      // bands FIRST: later triggers (and this fold's own probe) must see
-      // this batch's docs in the index
-      IncrementalDedup.appendBandFrame(
-        IncrementalDedup.pruneHot(TextOps.bandsOfDocs(b)))
-      IncrementalClusters.appendBatchClusters(s, b, s.table(idxFqn), db)
-    }
-    s.sql(s"ALTER TABLE $labelsFqn SET TBLPROPERTIES " +
-      s"('$ClusterEpochProp'='$epochId')")
   }
 
   /** Default output mode pairings for the above (documented contract). */
