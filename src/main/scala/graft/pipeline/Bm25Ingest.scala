@@ -71,12 +71,11 @@ object Bm25Ingest {
       },
       RetrievalOps.DocLenTable -> (() => RetrievalOps.appendDocLenRows(
         b.s, b.db, freshDocs(b, RetrievalOps.DocLenTable))),
-      // derived stats: rebuilt from the stored facts, never patched
       "derived_stats" -> (() => RetrievalOps.rebuildDerivedStats(b.s, b.db))))
 
   /** Fold one micro-batch of (doc_id, text) rows into the stored index.
-    * `failAfter` is a TEST-ONLY failpoint naming the stage (postings,
-    * doclen, derived_stats) after which to crash.
+    * `failAfter` is a TEST-ONLY failpoint naming the stage to crash
+    * after: the postings table, the doclen table or `derived_stats`.
     */
   def bm25IngestBatch(s: SparkSession, srcTag: String, batch: DataFrame,
                       db: String, epochId: Long = -1L,

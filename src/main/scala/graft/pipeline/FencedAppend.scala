@@ -125,6 +125,8 @@ private[graft] object FencedAppend {
                 if (failAfter.contains(stage))
                   throw new RuntimeException(s"test failpoint after $stage")
               }
+              // ledger BEFORE fence: fence-first would refuse a crashed
+              // epoch's every redelivery (DESIGN.md "Exactly-once appends")
               if (epochId >= 0) commitEpoch(s, db, ledger, epochId)
               family.fence.write(s, db, b.hi)
             }
