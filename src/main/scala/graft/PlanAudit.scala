@@ -205,9 +205,9 @@ object PlanAudit {
     // Backfill WRITE-path audit (q_partition_backfill's cost center): the
     // ranged re-run must touch only the DECLARED range. Evidence: the
     // write batch below pushes its date range into the parquet scan
-    // (PushedFilters on the date column); partition replacement is
-    // `ALTER TABLE … DROP PARTITION` — a metadata operation with no table
-    // scan — followed by an append of this batch only. Untouched
+    // (PushedFilters on the date column); partition replacement is a
+    // metadata partition drop (Warehouse.dropPartitions) with no table
+    // scan, followed by an append of this batch only. Untouched
     // partitions are never read or rewritten (no read-filter-rewrite, no
     // dynamic-overwrite pass over the table).
     locally {
@@ -220,9 +220,9 @@ object PlanAudit {
       sb.append("\n## q_partition_backfill — WRITE path (ranged batch scan)\n\n```\n")
       sb.append(batch.queryExecution.explainString(
         org.apache.spark.sql.execution.SimpleMode).take(3000))
-      sb.append("\n```\n\nReplacement mechanics: `ALTER TABLE … DROP PARTITION` (metadata-only,\n")
-      sb.append("no scan) + append of exactly this batch — partitions outside the\n")
-      sb.append("declared range are never read or rewritten\n")
+      sb.append("\n```\n\nReplacement mechanics: a metadata-only partition drop (no scan;\n")
+      sb.append("graft.store.Warehouse.dropPartitions) + append of exactly this batch —\n")
+      sb.append("partitions outside the declared range are never read or rewritten\n")
       sb.append("(graft.pipeline.PartitionedMaterializer.backfill).\n")
     }
     // Partition-scoped merge WRITE-path audit (q_mode_merge_partitioned's
@@ -230,8 +230,8 @@ object PlanAudit {
     // ONLY the partitions it touches. Evidence: the current-slice read
     // below carries the affected partition value as a PartitionFilters
     // entry — untouched partitions are never SCANNED (directory pruning at
-    // plan time), and replacement is `ALTER TABLE … DROP PARTITION`
-    // (metadata-only) + an append of the merged slice. The audit pays one
+    // plan time), and the merged slice replaces them through the staged
+    // swap (metadata-only partition drop + append). The audit pays one
     // small partitioned write — same catalog-metadata class as the
     // bucketed-join tables.
     locally {
@@ -258,11 +258,12 @@ object PlanAudit {
       sb.append("\n```\n\nMerge mechanics: affected partitions = the batch's distinct partition\n")
       sb.append("values; the current slice above prunes to exactly those (PartitionFilters\n")
       sb.append("— untouched partitions never scanned); one latest-wins window over\n")
-      sb.append("union(slice, batch) lands in a temp table, then `ALTER TABLE … DROP\n")
-      sb.append("PARTITION` (metadata-only) + append of the merged slice. Unaffected\n")
-      sb.append("partition files are bit-untouched (file-level asserted in\n")
+      sb.append("union(slice, batch) replaces them through the staged swap: the merged\n")
+      sb.append("slice lands in the swap tmp, a manifest on the tmp commits the swap,\n")
+      sb.append("then a metadata-only partition drop + append. Unaffected partition\n")
+      sb.append("files are bit-untouched (file-level asserted in\n")
       sb.append("ExtractWarehouseSpec); unpartitioned targets fall back to the full\n")
-      sb.append("temp-swap rewrite (graft.store.Warehouse.mergeUpsert).\n")
+      sb.append("table swap (graft.store.Warehouse.mergeUpsert).\n")
     }
     // Grain-evolution WRITE-path audit (round 7): the ranged rebuild's
     // read side must prune to exactly the old-grain partitions of the
@@ -290,9 +291,11 @@ object PlanAudit {
         org.apache.spark.sql.execution.SimpleMode).take(3000))
       sb.append("\n```\n\nEvolve mechanics: the slice above reads ONLY the range's old-grain\n")
       sb.append("partitions (PartitionFilters IN over the literal keys), re-derives the\n")
-      sb.append("key at the new grain, lands in a manifest-carrying evolve tmp, then\n")
-      sb.append("`ALTER TABLE … DROP PARTITION` (metadata-only) + append — crash-\n")
-      sb.append("recoverable from the tmp + manifest at every window\n")
+      sb.append("key at the new grain, and swaps in through the staged swap: the slice\n")
+      sb.append("lands in the swap tmp, whose manifest lists the old-grain keys to drop\n")
+      sb.append("(recovery cannot derive them from the new-grain rows), then a\n")
+      sb.append("metadata-only partition drop + append — Warehouse.recover finishes\n")
+      sb.append("a stamped tmp or discards an unstamped one at every window\n")
       sb.append("(graft.pipeline.PartitionedMaterializer.evolveGrain).\n")
     }
     // Corpus-increment WRITE-path audit (round 10): the three

@@ -78,19 +78,16 @@ object PartitionedMaterializer {
         "partition boundaries")
     val batch = rangedBatch(source, dateCol, grain, from, untilExcl, partCol)
     val fq = s"`$db`.`$table`"
-    // make the table whole from any crashed maintenance op BEFORE the
-    // range drop (same entry contract as merge/delete/evolve): without
-    // this, a surviving partition tmp from a crashed merge would later
-    // auto-recover OVER the partitions this backfill just rewrote,
-    // silently regressing them to pre-crash data. UNCONDITIONAL — a
-    // crashed full-swap can leave the tmp as the ONLY copy with the
-    // target dropped; gating on tableExists would skip exactly that
-    // state, create a batch-only table, and let the surviving tmp later
-    // auto-recover OVER it (the recover calls are cheap no-ops when no
-    // tmp survives and handle a missing target themselves).
-    Warehouse.recoverReplacement(spark, db, table)
-    Warehouse.recoverRewrite(spark, db, table)
-    Warehouse.recoverEvolve(spark, db, table)
+    // make the table whole from any crashed swap BEFORE the range drop
+    // (same entry contract as merge/delete/evolve): without this, a
+    // surviving swap tmp from a crashed merge would later recover OVER the
+    // partitions this backfill just rewrote, silently regressing them to
+    // pre-crash data. UNCONDITIONAL — a crashed full-table swap can leave
+    // the tmp as the ONLY copy with the target dropped; gating on
+    // tableExists would skip exactly that state, create a batch-only
+    // table, and let the surviving tmp later recover OVER it (recover is a
+    // cheap no-op when no tmp survives and handles a missing target).
+    Warehouse.recover(spark, db, table)
     if (!spark.catalog.tableExists(s"$db.$table")) {
       Warehouse.saveModel(batch, db, table, Seq(partCol))
     } else {
@@ -99,16 +96,16 @@ object PartitionedMaterializer {
       // appends. Dynamic partition overwrite would only replace partitions
       // the batch has rows for — a corrective re-run could never CLEAR a
       // partition whose source rows disappeared, leaving stale data. Drop
-      // is a metadata op (chunked multi-partition ALTER); the append is
-      // one job with positional columns aligned to the catalog order
-      // (partition column last after partitionBy-create). Not atomic: a
-      // concurrent reader can see the range empty mid-run — same exposure
-      // window as an overwrite commit, acceptable for a maintenance op.
+      // is a metadata op; the append is one job with positional columns
+      // aligned to the catalog order (partition column last after
+      // partitionBy-create). No staged swap: the batch is recomputed from
+      // the source, so a crash mid-run loses nothing a re-run does not
+      // restore. Not atomic: a concurrent reader can see the range empty
+      // mid-run — same exposure window as an overwrite commit, acceptable
+      // for a maintenance op.
       val cols = spark.table(fq).columns
-      grain.keys(from, untilExcl).grouped(100).foreach { chunk =>
-        val specs = chunk.map(k => s"PARTITION (`$partCol`='$k')").mkString(", ")
-        spark.sql(s"ALTER TABLE $fq DROP IF EXISTS $specs")
-      }
+      Warehouse.dropPartitions(spark, db, table, Seq(partCol),
+        grain.keys(from, untilExcl).map(Seq(_)))
       batch.select(cols.map(col).toIndexedSeq: _*)
         .write.mode(SaveMode.Append).insertInto(fq)
     }
@@ -157,13 +154,11 @@ object PartitionedMaterializer {
         "them upstream")
     val withKey = df.withColumn(partCol, grain.key(col(dateCol)))
     // same crash-recovery entry contract as backfill, and UNCONDITIONAL
-    // for the same reason: a crashed full-swap leaves the tmp as the only
-    // copy with the target dropped — healing must run BEFORE the
+    // for the same reason: a crashed full-table swap leaves the tmp as the
+    // only copy with the target dropped — healing must run BEFORE the
     // tableExists branch or the append creates a batch-only table the
     // surviving tmp later recovers over
-    Warehouse.recoverReplacement(spark, db, table)
-    Warehouse.recoverRewrite(spark, db, table)
-    Warehouse.recoverEvolve(spark, db, table)
+    Warehouse.recover(spark, db, table)
     if (!spark.catalog.tableExists(s"$db.$table"))
       Warehouse.saveModel(withKey, db, table, Seq(partCol))
     else {
@@ -178,11 +173,12 @@ object PartitionedMaterializer {
     * rebuild: the range's old-grain partitions are read through plan-time
     * partition pruning (ONLY they are scanned — the bounded rewrite set),
     * the partition key is re-derived from the event date at the new
-    * grain, and the swap runs through the evolve-tmp mechanics
-    * ([[Warehouse.evolveReplacePartitions]]) whose manifest-carrying temp
-    * table makes the drop+append window crash-recoverable — the same
-    * contract as the partition-scoped merge/delete. Everything outside
-    * the range keeps its grain and its FILES (bit-identical, tested).
+    * grain, and the range swaps in through the staged swap
+    * ([[Warehouse.replacePartitions]], which drops the old-grain keys
+    * too), which makes the drop+append window crash-recoverable — the
+    * same contract as the partition-scoped merge/delete. Everything
+    * outside the range keeps its grain and its FILES (bit-identical,
+    * tested).
     *
     * The range must align to the COARSER grain's boundaries (months, for
     * daily↔monthly): a mid-month cut would leave a month split across two
@@ -203,18 +199,16 @@ object PartitionedMaterializer {
       untilExcl == untilExcl.withDayOfMonth(1),
       s"evolve range [$from, $untilExcl) is not aligned to month " +
         "boundaries (the coarser grain)")
-    // make the table whole from any crashed maintenance op before
-    // planning over it — same entry contract as merge/delete (incl. the
-    // full-swap tmp: planning over a partial target left by a crashed
-    // compact would evolve half a table)
-    Warehouse.recoverEvolve(spark, db, table)
-    Warehouse.recoverReplacement(spark, db, table)
-    Warehouse.recoverRewrite(spark, db, table)
+    // make the table whole from any crashed swap before planning over it
+    // — same entry contract as merge/delete (planning over a partial
+    // target left by a crashed compact would evolve half a table)
+    Warehouse.recover(spark, db, table)
     val oldKeys = fromGrain.keys(from, untilExcl)
     val slice = spark.table(s"`$db`.`$table`")
       .filter(col(partCol).isin(oldKeys: _*))   // plan-time pruning
       .withColumn(partCol, toGrain.key(col(dateCol)))
-    Warehouse.evolveReplacePartitions(spark, db, table, partCol, oldKeys, slice)
+    Warehouse.replacePartitions(spark, db, table, Seq(partCol), slice,
+      oldKeys.map(Seq(_)))
     toGrain.keys(from, untilExcl)
   }
 

@@ -303,10 +303,13 @@ object ScheduleRunner {
     * maintenance loop that keeps streaming appends and per-batch merges
     * from accreting unbounded file counts (every micro-batch append and
     * partition-scoped merge adds files; nothing else removes them). Each
-    * fire reads ONE cheap file-index count and rewrites to `targetFiles`
-    * only past `maxFiles` — built-in hysteresis: after a compaction the
-    * next fires are no-ops until appends re-accrete. A missing table is a
-    * no-op too (the maintenance entry may be scheduled before first land).
+    * fire reads ONE cheap file-index count and compacts only past
+    * `maxFiles` and past the count compaction can reach
+    * ([[graft.store.Warehouse.compactedFileCount]] — one file per
+    * partition directory, or per bucket, which may exceed `maxFiles`) —
+    * built-in hysteresis: after a compaction the next fires
+    * are no-ops until appends re-accrete. A missing table is a no-op too
+    * (the maintenance entry may be scheduled before first land).
     * Bounded-file-count law under repeated append+tick cycles is tested
     * in ScheduleSpec. The entry declares `db`, so it shares a lane with
     * every tenant that reads or writes that database.
@@ -317,9 +320,13 @@ object ScheduleRunner {
     require(targetFiles >= 1 && maxFiles >= targetFiles,
       s"need maxFiles >= targetFiles >= 1, got ($maxFiles, $targetFiles)")
     Entry(id, CronSchedule.parse(cronExpr), (s, _) => {
-      if (s.catalog.tableExists(s"$db.$table") &&
-          graft.store.Warehouse.fileCount(s, db, table) > maxFiles)
-        graft.store.Warehouse.compact(s, db, table, targetFiles)
+      import graft.store.Warehouse
+      if (s.catalog.tableExists(s"$db.$table")) {
+        val files = Warehouse.fileCount(s, db, table)
+        if (files > maxFiles &&
+            files > Warehouse.compactedFileCount(s, db, table, targetFiles))
+          Warehouse.compact(s, db, table, targetFiles)
+      }
     }, name = s"${table}_compaction", target = s"$db.$table",
       tags = Map("pipeline" -> "maintenance"), writes = Set(db))
   }

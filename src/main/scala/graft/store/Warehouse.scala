@@ -247,47 +247,205 @@ object Warehouse {
       .saveAsTable(s"`$db`.`$table`")
   }
 
-  /** Rewrite a managed table through a temp-table checkpoint, preserving
-    * its partition and bucket layout (read from catalog metadata). The
-    * shared core of compaction and delete-rewrite: write transform(read)
-    * to `__rw_tmp` with the original layout, overwrite the target from it,
-    * drop the tmp. Reads run under the tenant-isolation maintenance bypass
-    * — table maintenance is tenant-agnostic by design (a tenant-scoped
-    * session must not silently drop other tenants' rows).
+  /** Rewrite a managed table through the [[stagedSwap]], preserving its
+    * partition and bucket layout (read from catalog metadata): stage
+    * transform(read) with the original layout, then replace the whole
+    * table from it. The shared core of compaction, delete-rewrite and the
+    * stored-model folds; `reshape` applies to both writes (see
+    * [[compact]]). Reads run under the tenant-isolation maintenance
+    * bypass — table maintenance is tenant-agnostic by design (a
+    * tenant-scoped session must not silently drop other tenants' rows).
     */
   def rewriteVia(spark: SparkSession, db: String, table: String)
                 (transform: DataFrame => DataFrame,
                  reshape: DataFrame => DataFrame = identity): Unit =
     graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
-      recoverRewrite(spark, db, table)
-      val fq = s"`$db`.`$table`"
-      val tmp = s"`$db`.`${table}__rw_tmp`"
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-      def write(df: DataFrame, target: String): Unit =
-        writeWithLayout(reshape(df), meta, target)
-      write(transform(spark.table(fq)), tmp)
-      // saveAsTable(Overwrite) recreates tables WITHOUT their
-      // TBLPROPERTIES — silently erasing frozen layout/generation stamps
-      // (the DeltaModelIngest generation, the index bucket moduli), which
-      // downstream readers treat as hard contracts. Stamp the pre-rewrite
-      // user properties onto the TMP FIRST: from here on they ride the
-      // surviving tmp through any crash, so recoverRewrite can restore
-      // them with the data (a tmp-without-props crash window would lose
-      // them permanently — the target overwrite below drops the only
-      // other copy).
-      val userProps = meta.properties.filterNot(_._1.startsWith("spark."))
-      applyUserProps(spark, tmp, userProps)
-      write(spark.table(tmp), fq)
-      applyUserProps(spark, fq, userProps)
-      spark.sql(s"DROP TABLE IF EXISTS $tmp")
+      recover(spark, db, table)
+      val meta = tableMeta(spark, db, table)
+      stagedSwap(spark, db, table, WholeTable, reshape)(tmp =>
+        writeWithLayout(reshape(transform(spark.table(s"`$db`.`$table`"))),
+          meta, tmp))
     }
 
-  /** Re-apply preserved user TBLPROPERTIES after a saveAsTable(Overwrite)
-    * recreated a table bare — shared by [[rewriteVia]] (both the tmp
-    * stamp and the target re-apply) and [[recoverRewrite]].
+  /** Replace the partitions `replacement` has rows for, plus the
+    * `alsoDrop` partitions (values lined up with `pcols`), through the
+    * [[stagedSwap]]. A partition in neither is untouched; one in
+    * `alsoDrop` that `replacement` has no rows for ends dropped — a
+    * delete's emptied partitions, grain evolution's old-grain keys.
     */
-  private def applyUserProps(spark: SparkSession, fqTable: String,
+  private[graft] def replacePartitions(spark: SparkSession, db: String,
+                                       table: String, pcols: Seq[String],
+                                       replacement: DataFrame,
+                                       alsoDrop: Seq[Seq[Any]] = Nil): Unit =
+    stagedSwap(spark, db, table, Partitions) { tmp =>
+      replacement.write.mode(SaveMode.Overwrite)
+        .option("overwriteSchema", "true").format("parquet")
+        .partitionBy(pcols: _*).saveAsTable(tmp)
+      // empty tmp partitions: recovery reads the whole drop set off the
+      // tmp's catalog entry, so the manifest never lists keys
+      partitionSpecs(pcols, alsoDrop).grouped(100).foreach(chunk =>
+        spark.sql(s"ALTER TABLE $tmp ADD IF NOT EXISTS ${chunk.mkString(" ")}"))
+    }
+
+  /** The one tmp table every swap of `table` stages through. */
+  private[graft] def swapTmp(table: String): String = s"${table}__swap_tmp"
+
+  /** The tmp's manifest property: what a stamped swap replaces — the
+    * whole table, or the partitions the tmp's catalog entry lists.
+    */
+  private val ManifestProp = "graft.swap.manifest"
+  private val WholeTable = "table"
+  private val Partitions = "partitions"
+
+  /** The swap's steps in order. A test crashes a swap right after one of
+    * them lands by naming it in [[swapFailAfter]] for its thread.
+    */
+  private[graft] val SwapSteps = Seq("written", "stamped", "dropped", "appended")
+  private[graft] val swapFailAfter =
+    new scala.util.DynamicVariable[Option[String]](None)
+
+  private def landed(step: String): Unit =
+    if (swapFailAfter.value.contains(step))
+      throw new RuntimeException(s"test failpoint after swap step $step")
+
+  /** The staged swap: the one way [[rewriteVia]] and [[replacePartitions]]
+    * (merge, delete, grain evolution) replace a table's rows. Plain parquet
+    * under a Hive-style catalog cannot commit a drop+write atomically —
+    * that is what the paper's Iceberg commits buy — so the swap runs in
+    * steps, each leaving a state [[recover]] can finish or undo:
+    *
+    *  1. written — the replacement lands in [[swapTmp]], plus an empty
+    *     partition for each key to drop that has no rows. saveAsTable
+    *     commits the catalog entry only after the data, so a crash
+    *     mid-write leaves a catalog-unknown directory (cleared by
+    *     [[dropStaleLocation]]), never a table;
+    *  2. stamped — one ALTER sets the manifest and the target's user
+    *     TBLPROPERTIES on the tmp. This is the commit point: before it the
+    *     target is untouched and recovery discards the tmp; from it on the
+    *     tmp is the complete intended state, and once step 3 lands the
+    *     only copy, so recovery finishes the swap;
+    *  3. dropped — the whole target, or every partition the tmp lists
+    *     (metadata DDL via [[dropPartitions]]);
+    *  4. appended — the tmp's rows land in the target and the user
+    *     properties are re-applied (saveAsTable recreates a table without
+    *     them, which would erase generation stamps and bucket moduli that
+    *     readers treat as hard contracts). The tmp is dropped last.
+    *
+    * Steps 3-4 re-run from the tmp alone, so a recovery that itself
+    * crashes just runs again. Every entry point calls [[recover]] before
+    * it plans over the table: a retry that read a half-swapped target
+    * would recompute from partial data and overwrite the only full copy.
+    */
+  private def stagedSwap(spark: SparkSession, db: String, table: String,
+                         scope: String,
+                         reshape: DataFrame => DataFrame = identity)
+                        (writeTmp: String => Unit): Unit =
+    graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
+      val tmp = swapTmp(table)
+      // entry points recover first, so a tmp here means a concurrent swap
+      // of the same table or a caller that skipped recovery — overwriting
+      // it could destroy the only copy of a crashed swap's dropped rows
+      require(!spark.catalog.tableExists(s"$db.$tmp"),
+        s"refusing to overwrite surviving `$db`.`$tmp`: a crashed swap " +
+          "left it holding the only copy of what it dropped (run " +
+          "Warehouse.recover first), or a concurrent rewrite of the same " +
+          "table is in flight")
+      dropStaleLocation(spark, db, tmp)
+      writeTmp(s"`$db`.`$tmp`")
+      landed("written")
+      setProps(spark, s"`$db`.`$tmp`",
+        userProps(tableMeta(spark, db, table)) + (ManifestProp -> scope))
+      landed("stamped")
+      finishSwap(spark, db, table, reshape)
+    }
+
+  /** Steps 3-4 of the [[stagedSwap]], read from the stamped tmp alone —
+    * the target may be partial or missing.
+    */
+  private def finishSwap(spark: SparkSession, db: String, table: String,
+                         reshape: DataFrame => DataFrame = identity): Unit = {
+    import org.apache.spark.sql.functions.col
+    val fq = s"`$db`.`$table`"
+    val tmp = s"`$db`.`${swapTmp(table)}`"
+    val meta = tableMeta(spark, db, swapTmp(table))
+    meta.properties(ManifestProp) match {
+      case WholeTable =>
+        spark.sql(s"DROP TABLE IF EXISTS $fq")
+        dropStaleLocation(spark, db, table)
+        landed("dropped")
+        writeWithLayout(reshape(spark.table(tmp)), meta, fq)
+      case Partitions =>
+        val pcols = meta.partitionColumnNames
+        dropPartitions(spark, db, table, pcols,
+          spark.sessionState.catalog.listPartitions(meta.identifier)
+            .map(p => pcols.map(p.spec)))
+        landed("dropped")
+        spark.table(tmp).select(spark.table(fq).columns.map(col).toIndexedSeq: _*)
+          .write.mode(SaveMode.Append).insertInto(fq)
+      case other => throw new IllegalStateException(
+        s"unreadable swap manifest '$other' on $tmp")
+    }
+    landed("appended")
+    setProps(spark, fq, userProps(meta))
+    spark.sql(s"DROP TABLE IF EXISTS $tmp")
+    // the drop deleted files under the table location; a cached relation
+    // or file index from before would keep serving the deleted paths
+    // (FAILED_READ_FILE on the next scan) — invalidate
+    spark.catalog.refreshTable(fq)
+  }
+
+  /** Finish or discard a crashed [[stagedSwap]] of `db.table`. A stamped
+    * tmp is finished; an unstamped one is dropped, since the target was
+    * never touched and the next run restages from it. Every entry point
+    * that plans over a table calls this first. Idempotent; true when a
+    * surviving tmp was handled.
+    */
+  def recover(spark: SparkSession, db: String, table: String): Boolean =
+    graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
+      // expression-shaped, no early `return`: a non-local return from this
+      // closure would ride NonLocalReturnControl through the bypass wrapper
+      val tmp = swapTmp(table)
+      spark.catalog.tableExists(s"$db.$tmp") && {
+        val stamped = tableMeta(spark, db, tmp).properties.contains(ManifestProp)
+        System.err.println(s"[warehouse] surviving `$db`.`$tmp` " + (
+          if (stamped) "is stamped: finishing the crashed swap"
+          else "is unstamped: the target was never touched, discarding it"))
+        if (stamped) finishSwap(spark, db, table)
+        else spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tmp`")
+        true
+      }
+    }
+
+  /** Drop partitions of `db.table` by metadata DDL, 100 specs per
+    * statement; absent ones are skipped. Each of `values` lines up with
+    * `pcols`. The one place a partition drop is issued: the staged swap
+    * and a backfill's declared range.
+    */
+  private[graft] def dropPartitions(spark: SparkSession, db: String,
+                                    table: String, pcols: Seq[String],
+                                    values: Seq[Seq[Any]]): Unit =
+    partitionSpecs(pcols, values).grouped(100).foreach(chunk =>
+      spark.sql(s"ALTER TABLE `$db`.`$table` DROP IF EXISTS " +
+        chunk.mkString(", ")))
+
+  private def partitionSpecs(pcols: Seq[String],
+                             values: Seq[Seq[Any]]): Seq[String] =
+    values.map(vs => pcols.zip(vs).map { case (c, v) =>
+      s"`$c`='${v.toString.replace("'", "''")}'"
+    }.mkString("PARTITION (", ", ", ")"))
+
+  private def tableMeta(spark: SparkSession, db: String, table: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
+
+  /** A table's user TBLPROPERTIES: what a swap carries across. */
+  private def userProps(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable)
+      : Map[String, String] =
+    meta.properties.filterNot { case (k, _) =>
+      k.startsWith("spark.") || k == ManifestProp }
+
+  /** Set TBLPROPERTIES in one ALTER (none when `props` is empty). */
+  private def setProps(spark: SparkSession, fqTable: String,
                              props: Map[String, String]): Unit =
     if (props.nonEmpty)
       spark.sql(s"ALTER TABLE $fqTable SET TBLPROPERTIES (" +
@@ -312,54 +470,6 @@ object Warehouse {
     w.saveAsTable(target)
   }
 
-  /** Crash recovery for [[rewriteVia]]'s full-table swap: a surviving
-    * `{table}__rw_tmp` IN THE CATALOG means a previous rewrite died after
-    * its tmp was completely written (saveAsTable commits the catalog entry
-    * only after the data lands — a crash mid-tmp-write leaves a
-    * catalog-unknown directory, cleared by [[dropStaleLocation]], never a
-    * table) but before the target swap finished. The tmp then holds the
-    * complete intended state and may be the ONLY copy (the target overwrite
-    * drops the old table first). Recovery completes the swap from the tmp —
-    * layout read from the tmp's own metadata, because the target may be
-    * mid-overwrite or missing — and only then drops it. Without this, a
-    * retry (scheduler re-run, streaming micro-batch replay) would read the
-    * partial target and OVERWRITE the tmp, permanently losing rows.
-    * Idempotent; returns true when a recovery was performed.
-    */
-  def recoverRewrite(spark: SparkSession, db: String, table: String): Boolean =
-    graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
-      // expression-shaped, no early `return`: a non-local return from this
-      // closure would ride NonLocalReturnControl through the bypass wrapper
-      // and silently break if the wrapper ever gained a catch-Throwable
-      val tmpName = s"${table}__rw_tmp"
-      if (!spark.catalog.tableExists(s"$db.$tmpName")) false
-      else {
-        System.err.println(s"[warehouse] surviving `$db`.`$tmpName` found — " +
-          "completing the crashed rewrite's swap before proceeding")
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(tmpName, Some(db)))
-        // user TBLPROPERTIES travel on the tmp (rewriteVia stamps them
-        // right after the tmp write); a tmp from the narrow pre-stamp
-        // window carries none, but the TARGET is then still the intact
-        // pre-rewrite table — read its props as the fallback before the
-        // rebuild drops them. Without the re-apply, crash recovery
-        // permanently erased generation stamps and bucket moduli.
-        val tmpProps = meta.properties.filterNot(_._1.startsWith("spark."))
-        val targetProps =
-          if (spark.catalog.tableExists(s"$db.$table"))
-            spark.sessionState.catalog.getTableMetadata(
-                org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-              .properties.filterNot(_._1.startsWith("spark."))
-          else Map.empty[String, String]
-        if (!spark.catalog.tableExists(s"$db.$table"))
-          dropStaleLocation(spark, db, table)
-        writeWithLayout(spark.table(s"`$db`.`$tmpName`"), meta, s"`$db`.`$table`")
-        applyUserProps(spark, s"`$db`.`$table`", targetProps ++ tmpProps)
-        spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tmpName`")
-        true
-      }
-    }
-
   /** Keyed latest-wins upsert (MERGE semantics without update-in-place):
     * batch rows replace existing rows on key when newer by `versionCol`
     * (batch wins version ties — the replay/idempotency contract), unseen
@@ -378,26 +488,19 @@ object Warehouse {
     * intra-batch (key, version) ties pick a content-hash winner, not an
     * arbitrary partition-order one), then ONE window over
     * union(current, batch) picks the survivor. No per-row point updates,
-    * no live-file rewrite hazard (both paths checkpoint through a temp
-    * table).
+    * no live-file rewrite hazard (both paths stage through the swap tmp).
     */
   def mergeUpsert(spark: SparkSession, batch: DataFrame, db: String,
                   table: String, keys: Seq[String],
                   versionCol: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit, row_number}
     require(keys.nonEmpty, "mergeUpsert needs at least one key column")
-    // Retry-after-crash guard (at-least-once safety): a surviving rewrite
-    // tmp means the target is partial and the tmp holds the only complete
-    // copy — recover BEFORE any plan (or schema check) reads the target,
-    // or this retry would recompute from partial data and overwrite the tmp.
-    recoverReplacement(spark, db, table)
-    recoverRewrite(spark, db, table)
-    recoverEvolve(spark, db, table)
+    // at-least-once retry guard: recover BEFORE any plan (or schema
+    // check) reads the target ([[stagedSwap]])
+    recover(spark, db, table)
     requireSameColumns(spark, batch, db, table)
     val resolved = resolveBatch(batch, keys, versionCol)
-    val pcols = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-      .partitionColumnNames
+    val pcols = tableMeta(spark, db, table).partitionColumnNames
     if (pcols.nonEmpty)
       mergePartitionScoped(spark, resolved, db, table, keys, versionCol, pcols)
     else {
@@ -453,11 +556,11 @@ object Warehouse {
     *     predicate (literal IN over the affected values — the scan's
     *     PartitionFilters; untouched partitions are never READ, let alone
     *     rewritten).
-    *  3. One latest-wins window over union(current slice, batch), written
-    *     to a temp table (checkpoint — never scan-and-overwrite the same
-    *     files), then `ALTER TABLE … DROP PARTITION` (metadata-only,
-    *     chunked) + append — the same declared-set replacement mechanics
-    *     as [[graft.pipeline.PartitionedMaterializer.backfill]].
+    *  3. One latest-wins window over union(current slice, batch) replaces
+    *     the affected partitions through the [[stagedSwap]] (never
+    *     scan-and-overwrite the same files); the merged slice has rows in
+    *     every affected partition, so the tmp's own partitions are exactly
+    *     the set to drop.
     *
     * CONTRACT — partition assignment must be key-stable: a key whose
     * partition value CHANGES between batches would leave its old row
@@ -489,217 +592,7 @@ object Warehouse {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
           .drop("__is_batch", "__rn")
-        replacePartitions(spark, db, table, pcols, affected, merged)
-      }
-    }
-
-  /** Declared-set partition replacement (the Backfill mechanics shared by
-    * the partition-scoped merge and delete): write `replacement` to a temp
-    * table (checkpoint — never scan-and-overwrite the same files), drop
-    * exactly the `affected` partitions by metadata DDL (chunked), append
-    * the replacement, drop the temp. A partition the replacement has no
-    * rows for stays DROPPED — which is why this beats dynamic partition
-    * overwrite for delete (an emptied partition must actually disappear).
-    *
-    * CRASH WINDOW: plain parquet + a Hive-style catalog cannot make
-    * drop+append atomic (that is what table formats with snapshot commits
-    * buy). The exposure is bounded and RECOVERABLE by construction: the
-    * temp table holds the complete replacement slice and is dropped LAST,
-    * so a crash anywhere inside the window leaves either the old state +
-    * tmp (before the drop) or a partial target + tmp (between drop and
-    * append-complete) — [[recoverReplacement]] finishes the swap from the
-    * surviving tmp in both cases. Only a successful append drops the tmp.
-    * Every partition-rewriting entry point ([[mergeUpsert]], [[deleteWhere]])
-    * auto-recovers at entry, so an at-least-once retry is safe; this method
-    * itself refuses to run while a tmp survives (see the require below).
-    */
-  private def replacePartitions(spark: SparkSession, db: String,
-                                table: String, pcols: Seq[String],
-                                affected: Array[org.apache.spark.sql.Row],
-                                replacement: DataFrame): Unit = {
-    val tmpName = s"${table}__rw_part_tmp"
-    // Defense-in-depth: every entry point recovers a surviving tmp BEFORE
-    // building its replacement plan, so reaching here with one still in the
-    // catalog means either a concurrent rewrite of the same table (two runs
-    // would clobber each other's tmp) or a caller that skipped recovery.
-    // Overwriting would destroy the only copy of a crashed run's dropped
-    // partitions — fail loudly instead.
-    require(!spark.catalog.tableExists(s"$db.$tmpName"),
-      s"refusing to overwrite surviving `$db`.`$tmpName`: a crashed " +
-        "partition swap left it holding the only copy of its dropped " +
-        "partitions (run Warehouse.recoverReplacement first), or a " +
-        "concurrent rewrite of the same table is in flight")
-    dropStaleLocation(spark, db, tmpName)
-    replacement.write.mode(SaveMode.Overwrite).option("overwriteSchema", "true")
-      .format("parquet").partitionBy(pcols: _*)
-      .saveAsTable(s"`$db`.`$tmpName`")
-    finishReplacement(spark, db, table, pcols, affected)
-  }
-
-  /** The drop+append tail of [[replacePartitions]] — also the whole of a
-    * crash [[recoverReplacement]], which re-enters here with the
-    * surviving tmp as its input. `tmpName` defaults to the merge/delete
-    * tmp; the grain-evolution path passes its own ([[evolveTmpName]]).
-    */
-  private def finishReplacement(spark: SparkSession, db: String,
-                                table: String, pcols: Seq[String],
-                                affected: Array[org.apache.spark.sql.Row],
-                                tmpName: String = null): Unit = {
-    import org.apache.spark.sql.functions.col
-    val fq = s"`$db`.`$table`"
-    val tmp = s"`$db`.`${Option(tmpName).getOrElse(s"${table}__rw_part_tmp")}`"
-    affected.grouped(100).foreach { chunk =>
-      val specs = chunk.map { r =>
-        pcols.zipWithIndex.map { case (c, i) =>
-          s"`$c`='${r.get(i).toString.replace("'", "''")}'"
-        }.mkString("PARTITION (", ", ", ")")
-      }.mkString(", ")
-      spark.sql(s"ALTER TABLE $fq DROP IF EXISTS $specs")
-    }
-    val cols = spark.table(fq).columns
-    spark.table(tmp).select(cols.map(col).toIndexedSeq: _*)
-      .write.mode(SaveMode.Append).insertInto(fq)
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    // DROP PARTITION deleted files under the table location; a cached
-    // relation/file index from before the replacement would keep serving
-    // the deleted paths (FAILED_READ_FILE on the next scan) — invalidate.
-    spark.catalog.refreshTable(s"`$db`.`$table`")
-  }
-
-  /** Crash recovery for [[replacePartitions]]: when a merge/delete died
-    * inside its drop+append window, `{table}__rw_part_tmp` survives with
-    * the COMPLETE replacement slice. Recovery re-drops the affected
-    * partitions (derived from the tmp's own distinct partition values —
-    * the same set the crashed run computed), re-appends from the tmp, and
-    * only then drops it. Idempotent: after a successful run (or a second
-    * recovery) the tmp is gone and this is a no-op; a recovery that
-    * itself crashes can simply re-run. Returns true when a recovery was
-    * performed. Note the one case recovery cannot see: a delete whose
-    * replacement slice is EMPTY for some affected partition drops that
-    * partition and appends nothing — recovery re-drops only partitions
-    * present in the tmp, so a fully-emptied partition that was already
-    * dropped stays dropped (correct), and one not yet dropped is left
-    * intact (the delete re-runs; deletes are idempotent by definition).
-    */
-  def recoverReplacement(spark: SparkSession, db: String,
-                         table: String): Boolean =
-    graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
-      import org.apache.spark.sql.functions.col
-      val tmpName = s"${table}__rw_part_tmp"
-      if (!spark.catalog.tableExists(s"$db.$tmpName")) false
-      else {
-        val pcols = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-          .partitionColumnNames
-        val affected = spark.table(s"`$db`.`$tmpName`")
-          .select(pcols.map(col).toIndexedSeq: _*).distinct().collect()
-        if (affected.nonEmpty)
-          finishReplacement(spark, db, table, pcols, affected)
-        else spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tmpName`")
-        true
-      }
-    }
-
-  /** Tmp-table name and manifest property of a partition-grain evolution
-    * in flight ([[evolveReplacePartitions]]). A DISTINCT name from the
-    * merge/delete tmp: an evolve replaces partitions whose keys are NOT
-    * derivable from the replacement slice (the dropped old-grain keys
-    * differ from the appended new-grain keys), so its recovery needs the
-    * manifest and must never be confused with a plain partition swap.
-    */
-  private[graft] def evolveTmpName(table: String): String = s"${table}__evolve_tmp"
-  private[graft] val EvolveManifestProp = "graft.evolve.drop_keys"
-
-  /** Partition replacement where the DROPPED keys differ from the
-    * appended ones — the grain-evolution write path. Sequence:
-    *
-    *  1. the replacement slice lands as `{table}__evolve_tmp`
-    *     (saveAsTable commits the catalog entry only after the data —
-    *     same completeness invariant as the merge tmp);
-    *  2. the old-grain keys to drop are recorded ON the tmp itself as a
-    *     table property (the recovery manifest — recovery must know what
-    *     to drop even though the tmp's own partition values are the NEW
-    *     keys);
-    *  3. drop manifest keys + the tmp's own keys (re-runs/partial appends),
-    *     append, drop the tmp.
-    *
-    * Crash windows: before step 1 commits — no catalog tmp, table
-    * untouched (stale dir cleared next run). Between 1 and 2 — tmp exists
-    * WITHOUT a manifest: nothing was dropped yet, so [[recoverEvolve]]
-    * discards the tmp and the evolve simply re-runs. After 2 —
-    * [[recoverEvolve]] replays step 3 idempotently from the manifest +
-    * tmp. Single partition column only (grain keys are scalar strings).
-    */
-  private[graft] def evolveReplacePartitions(spark: SparkSession, db: String,
-                                             table: String, partCol: String,
-                                             dropKeys: Seq[String],
-                                             replacement: DataFrame): Unit = {
-    val tmpName = evolveTmpName(table)
-    require(!spark.catalog.tableExists(s"$db.$tmpName"),
-      s"refusing to overwrite surviving `$db`.`$tmpName`: a crashed grain " +
-        "evolution may have dropped partitions recoverable only from it " +
-        "(run Warehouse.recoverEvolve first), or a concurrent evolve of " +
-        "the same table is in flight")
-    // the manifest rides a catalog property — bound its size loudly
-    // instead of silently exceeding metastore limits (evolve decade-long
-    // ranges in chunks)
-    require(dropKeys.nonEmpty && dropKeys.mkString(",").length <= 60000,
-      s"evolve drop-key manifest too large (${dropKeys.size} keys) — " +
-        "evolve the range in smaller chunks")
-    dropStaleLocation(spark, db, tmpName)
-    replacement.write.mode(SaveMode.Overwrite).option("overwriteSchema", "true")
-      .format("parquet").partitionBy(partCol)
-      .saveAsTable(s"`$db`.`$tmpName`")
-    spark.sql(s"ALTER TABLE `$db`.`$tmpName` SET TBLPROPERTIES(" +
-      s"'$EvolveManifestProp'='${dropKeys.mkString(",").replace("'", "''")}')")
-    finishEvolve(spark, db, table, partCol, dropKeys)
-  }
-
-  /** The drop+append tail of [[evolveReplacePartitions]]: affected =
-    * manifest keys ∪ the tmp's own keys (a partial append's new-grain
-    * partitions must re-drop before the re-append, or recovery would
-    * double them).
-    */
-  private def finishEvolve(spark: SparkSession, db: String, table: String,
-                           partCol: String, dropKeys: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.col
-    val tmpName = evolveTmpName(table)
-    val tmpKeys = spark.table(s"`$db`.`$tmpName`")
-      .select(col(partCol)).distinct().collect().map(_.get(0).toString)
-    val affected = (dropKeys ++ tmpKeys).distinct
-      .map(k => org.apache.spark.sql.Row(k)).toArray
-    finishReplacement(spark, db, table, Seq(partCol), affected, tmpName)
-  }
-
-  /** Crash recovery for a partition-grain evolution. A surviving
-    * `{table}__evolve_tmp` WITH its manifest property means drops may have
-    * begun and the tmp holds the complete new-grain slice — replay the
-    * drop+append from the manifest (idempotent). WITHOUT the manifest the
-    * crash hit before any drop: the table is intact and the tmp is
-    * incomplete state — discard it and let the evolve re-run. Returns true
-    * when anything was done.
-    */
-  def recoverEvolve(spark: SparkSession, db: String, table: String): Boolean =
-    graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
-      val tmpName = evolveTmpName(table)
-      if (!spark.catalog.tableExists(s"$db.$tmpName")) false
-      else {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(tmpName, Some(db)))
-        meta.properties.get(EvolveManifestProp) match {
-          case Some(manifest) =>
-            System.err.println(s"[warehouse] surviving `$db`.`$tmpName` with " +
-              "manifest — completing the crashed grain evolution")
-            val pcols = meta.partitionColumnNames
-            finishEvolve(spark, db, table, pcols.head,
-              manifest.split(',').toSeq.filter(_.nonEmpty))
-          case None =>
-            System.err.println(s"[warehouse] surviving `$db`.`$tmpName` has " +
-              "no manifest — the evolve crashed before any partition drop; " +
-              "discarding the incomplete tmp (re-run the evolve)")
-            spark.sql(s"DROP TABLE IF EXISTS `$db`.`$tmpName`")
-        }
-        true
+        replacePartitions(spark, db, table, pcols, merged)
       }
     }
 
@@ -713,18 +606,21 @@ object Warehouse {
     }.reduce(_ || _)
   }
 
-  /** Small-file compaction: rewrite a managed table into `numFiles` output
-    * files per partition. The repartition applies on BOTH writes —
-    * rereading the tmp would otherwise re-split by maxPartitionBytes and
-    * undo the compaction. Streaming appends and per-batch snapshot loads
-    * accrete small files; periodic compaction keeps scan task counts and
-    * footer overhead sane at warehouse scale.
+  /** Small-file compaction: rewrite a flat managed table into at most
+    * `numFiles` files, and a partitioned one into one file per partition
+    * directory (rows hash on the partition columns, so each directory's
+    * rows meet in one of the `numFiles` tasks); a bucketed table keeps one
+    * file per bucket on top of that. The repartition applies on
+    * BOTH writes — rereading the tmp would otherwise re-split by
+    * maxPartitionBytes and undo the compaction. Streaming appends and
+    * per-batch snapshot loads accrete small files; periodic compaction
+    * keeps scan task counts and footer overhead sane at warehouse scale.
     */
   def compact(spark: SparkSession, db: String, table: String,
               numFiles: Int): Unit = {
-    val pcols = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-      .partitionColumnNames
+    // before the layout read: a crashed swap may have dropped the target
+    recover(spark, db, table)
+    val pcols = tableMeta(spark, db, table).partitionColumnNames
     def shrink(df: DataFrame): DataFrame =
       if (pcols.nonEmpty)
         df.repartition(numFiles, pcols.map(org.apache.spark.sql.functions.col): _*)
@@ -741,6 +637,24 @@ object Warehouse {
     graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
       spark.table(s"`$db`.`$table`").inputFiles.length
     }
+
+  /** The data-file count [[compact]]`(numFiles)` can leave — the floor
+    * the compaction trigger compares against, since a partitioned table
+    * never drops below one file per partition directory, nor a bucketed
+    * one below one file per bucket per task. One file-index listing for a
+    * partitioned table; none for a flat one.
+    */
+  private[graft] def compactedFileCount(spark: SparkSession, db: String,
+                                        table: String, numFiles: Int): Int = {
+    val meta = tableMeta(spark, db, table)
+    meta.bucketSpec.fold(1)(_.numBuckets) * (
+      if (meta.partitionColumnNames.isEmpty) numFiles
+      else graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
+        spark.table(s"`$db`.`$table`").inputFiles
+          .map(f => new org.apache.hadoop.fs.Path(f).getParent.toString)
+          .distinct.length
+      })
+  }
 
   /** Table + column statistics for the cost-based optimizer — accurate
     * broadcast decisions and join reordering need them (AQE covers runtime
@@ -761,26 +675,21 @@ object Warehouse {
     *
     * Write amplification is PARTITION-SCOPED like [[mergeUpsert]]: on a
     * partitioned target, one column-pruned scan finds the partitions that
-    * actually CONTAIN matching rows, and only those are rewritten (drop +
-    * append of the filtered slice — a fully-emptied partition stays
-    * dropped, which dynamic overwrite could not do). A delete whose
-    * predicate touches nothing rewrites nothing. Unpartitioned tables
-    * keep the full temp-swap rewrite.
+    * actually CONTAIN matching rows, and only those swap in their
+    * filtered slice through the [[stagedSwap]]. A partition the delete
+    * empties ends dropped, which dynamic overwrite could not do. A delete
+    * whose predicate touches nothing rewrites nothing. Unpartitioned
+    * tables keep the full-table swap.
     */
   def deleteWhere(spark: SparkSession, db: String, table: String,
                   predicate: Column): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    // Retry-after-crash guard — same contract as mergeUpsert: make the
-    // target whole from any surviving rewrite tmp before planning over it.
-    recoverReplacement(spark, db, table)
-    recoverRewrite(spark, db, table)
-    recoverEvolve(spark, db, table)
+    // retry guard — same contract as mergeUpsert
+    recover(spark, db, table)
     // SQL DELETE keeps rows whose predicate is NULL — !pred alone would
     // drop them (NULL is not true), inverting that contract.
     val matches = coalesce(predicate, lit(false))
-    val pcols = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-      .partitionColumnNames
+    val pcols = tableMeta(spark, db, table).partitionColumnNames
     if (pcols.isEmpty)
       rewriteVia(spark, db, table)(_.filter(!matches))
     else graft.plans.TenantIsolationRule.withMaintenanceBypass(spark) {
@@ -796,8 +705,8 @@ object Warehouse {
             s"partition values in (${pcols.mkString(", ")}) — the Hive " +
             "default partition cannot be replaced by partition spec")
         val slice = spark.table(fq).filter(pruneTo(pcols, affected))
-        replacePartitions(spark, db, table, pcols, affected,
-          slice.filter(!matches))
+        replacePartitions(spark, db, table, pcols, slice.filter(!matches),
+          alsoDrop = affected.toSeq.map(r => pcols.indices.map(r.get)))
       }
     }
   }

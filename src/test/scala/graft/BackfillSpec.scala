@@ -3,6 +3,7 @@ package graft
 import java.time.LocalDate
 import org.apache.spark.sql.functions._
 import graft.pipeline.{PartitionGrain, PartitionedMaterializer}
+import graft.store.Warehouse
 
 /** Partitioned materialization + ranged backfill (reference partition
   * definitions and single_run policy, executable_component.py:19-41):
@@ -66,7 +67,6 @@ class BackfillSpec extends SparkSpec {
   }
 
   test("grain evolution daily->monthly: bounded rewrite, untouched files, no-op re-run") {
-    import graft.store.Warehouse
     val src = Tables.t(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
     PartitionedMaterializer.backfill(spark, src, "o_orderdate",
@@ -117,7 +117,7 @@ class BackfillSpec extends SparkSpec {
     assert(filesOf("1996-02") == febFiles, "no-op re-run rewrote the range")
     // the evolve tmp never survives a successful run
     assert(!spark.catalog.tableExists(
-      s"$db.${Warehouse.evolveTmpName("ev")}"))
+      s"$db.${Warehouse.swapTmp("ev")}"))
     // a mid-month range is refused loudly
     val ex = intercept[IllegalArgumentException] {
       PartitionedMaterializer.evolveGrain(spark, db, "ev", "o_orderdate",
@@ -128,53 +128,51 @@ class BackfillSpec extends SparkSpec {
   }
 
   test("evolve crash recovery: manifest replay completes, no-manifest discards") {
-    import graft.store.Warehouse
     val src = Tables.t(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
     PartitionedMaterializer.backfill(spark, src, "o_orderdate",
       PartitionGrain.Daily, db, "ev2",
       LocalDate.of(1996, 1, 1), LocalDate.of(1996, 2, 1))
     val tbl = s"`$db`.`ev2`"
-    val tmp = s"`$db`.`${Warehouse.evolveTmpName("ev2")}`"
     def rows() = spark.table(tbl)
       .select("o_orderkey", "part_key").collect()
       .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
     val before = rows()
     val dailyKeys = PartitionGrain.Daily.keys(
       LocalDate.of(1996, 1, 1), LocalDate.of(1996, 2, 1))
-    def writeTmp(): Unit = spark.table(tbl)
-      .withColumn("part_key",
-        PartitionGrain.Monthly.key(col("o_orderdate")))
-      .write.format("parquet").partitionBy("part_key").saveAsTable(tmp)
+    def crashedEvolve(step: String): Unit = StagedSwapSpec.crashAfter(step) {
+      PartitionedMaterializer.evolveGrain(spark, db, "ev2", "o_orderdate",
+        PartitionGrain.Daily, PartitionGrain.Monthly,
+        LocalDate.of(1996, 1, 1), LocalDate.of(1996, 2, 1))
+      ()
+    }
 
     // crash window A: tmp committed but NO manifest yet — nothing was
     // dropped; recovery must discard the tmp and leave the table intact
-    writeTmp()
-    assert(Warehouse.recoverEvolve(spark, db, "ev2"))
-    assert(!spark.catalog.tableExists(s"$db.${Warehouse.evolveTmpName("ev2")}"))
+    crashedEvolve("written")
+    assert(Warehouse.recover(spark, db, "ev2"))
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp("ev2")}"))
     assert(rows() == before, "no-manifest recovery touched the table")
 
     // crash window B: manifest set, drops partially applied, append never
     // ran — recovery must complete the evolution from the manifest + tmp
-    writeTmp()
-    spark.sql(s"ALTER TABLE $tmp SET TBLPROPERTIES(" +
-      s"'${Warehouse.EvolveManifestProp}'='${dailyKeys.mkString(",")}')")
+    crashedEvolve("stamped")
     dailyKeys.take(10).foreach { k =>
       spark.sql(s"ALTER TABLE $tbl DROP IF EXISTS PARTITION (`part_key`='$k')")
     }
-    assert(Warehouse.recoverEvolve(spark, db, "ev2"))
-    assert(!spark.catalog.tableExists(s"$db.${Warehouse.evolveTmpName("ev2")}"))
+    assert(Warehouse.recover(spark, db, "ev2"))
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp("ev2")}"))
     val parts = spark.table(tbl).select("part_key").distinct()
       .collect().map(_.getString(0)).toSet
     assert(parts == Set("1996-01"), s"recovery left mixed grains: $parts")
     assert(rows().map(_._1) == before.map(_._1), "recovery lost/duplicated rows")
     // recovery is idempotent: nothing left to do
-    assert(!Warehouse.recoverEvolve(spark, db, "ev2"))
+    assert(!Warehouse.recover(spark, db, "ev2"))
   }
 
   test("backfill heals a tmp-only crashed swap instead of creating beside it") {
     // The round-14 ADVICE state: a crashed full-table swap dropped the
-    // target and left `__rw_tmp` as the ONLY copy. A tableExists-gated
+    // target and left the swap tmp as the ONLY copy. A tableExists-gated
     // recovery prologue skips exactly this, takes the create branch, and
     // the surviving tmp later auto-recovers OVER the fresh table from any
     // other entry point — silent regression. The prologue must run
@@ -189,15 +187,14 @@ class BackfillSpec extends SparkSpec {
       PartitionGrain.Monthly, cdb, tbl,
       LocalDate.of(1996, 1, 1), LocalDate.of(1996, 4, 1))
     val wholeTable = spark.table(s"`$cdb`.`$tbl`").count()
-    // simulate the crash window: tmp fully written, target dropped
-    spark.table(s"`$cdb`.`$tbl`").write.format("parquet")
-      .partitionBy("part_key").saveAsTable(s"`$cdb`.`${tbl}__rw_tmp`")
-    spark.sql(s"DROP TABLE `$cdb`.`$tbl`")
+    // the crash window: tmp fully written and stamped, target dropped
+    StagedSwapSpec.crashAfter("dropped")(Warehouse.compact(spark, cdb, tbl, 2))
+    assert(!spark.catalog.tableExists(s"$cdb.$tbl"))
     // a corrective re-run over ONE month must first recover all three
     PartitionedMaterializer.backfill(spark, src, "o_orderdate",
       PartitionGrain.Monthly, cdb, tbl,
       LocalDate.of(1996, 2, 1), LocalDate.of(1996, 3, 1))
-    assert(!spark.catalog.tableExists(s"$cdb.${tbl}__rw_tmp"),
+    assert(!spark.catalog.tableExists(s"$cdb.${Warehouse.swapTmp(tbl)}"),
       "recovery must consume the surviving tmp")
     assert(spark.table(s"`$cdb`.`$tbl`").count() == wholeTable,
       "all three months must survive — a create-branch backfill would " +

@@ -6,6 +6,7 @@ import graft.extract.Extractor
 import graft.source.JdbcSource
 import graft.std.ProductSchema
 import graft.store.{LoadMode, Warehouse}
+import graft.StagedSwapSpec.crashAfter
 
 class ExtractWarehouseSpec extends SparkSpec {
   import spark.implicits._
@@ -96,7 +97,7 @@ class ExtractWarehouseSpec extends SparkSpec {
     Warehouse.load(spark, df, db, "t4", LoadMode.FullRefresh)
     Warehouse.deleteWhere(spark, db, "t4", col("plan_ver") === "V1.0")
     assert(spark.table(s"$db.t4").as[(Long, String)].collect().toSeq == Seq((2L, "V2.0")))
-    assert(!spark.catalog.tableExists(s"$db.t4__rw_tmp"))
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp("t4")}"))
   }
 
   test("compaction reduces file count without changing content; analyze records stats") {
@@ -111,7 +112,7 @@ class ExtractWarehouseSpec extends SparkSpec {
     assert(files("t_frag") <= 2 && files("t_frag") < before)
     assert(spark.table(s"$db.t_frag").orderBy("o_orderkey").collect()
       .toSeq == content.toSeq)
-    assert(!spark.catalog.tableExists(s"$db.t_frag__rw_tmp"))
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp("t_frag")}"))
 
     // compaction and delete-rewrite preserve partition layout
     val mart = Tables.t(spark, sf, "orders")
@@ -319,37 +320,34 @@ class ExtractWarehouseSpec extends SparkSpec {
       .filter($"pk" === "p3").count() == 0)
   }
 
-  test("recoverReplacement completes a crashed partition swap from the surviving tmp") {
+  test("recover completes a crashed partition swap from the surviving tmp") {
     val (db, table) = ("graft_rec", "kv_part")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${table}__rw_part_tmp`")
+    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${Warehouse.swapTmp(table)}`")
     Warehouse.saveModel(Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2"))
       .toDF("k", "val", "pk"), db, table, Seq("pk"))
     def state() = spark.table(s"`$db`.`$table`").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-    def writeTmp(rows: Seq[(Long, String, String)]): Unit =
-      rows.toDF("k", "val", "pk").write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("overwriteSchema", "true").format("parquet")
-        .partitionBy("pk").saveAsTable(s"`$db`.`${table}__rw_part_tmp`")
+    def swap(rows: Seq[(Long, String, String)]): Unit =
+      Warehouse.replacePartitions(spark, db, table, Seq("pk"),
+        rows.toDF("k", "val", "pk"))
     // crash BETWEEN drop and append: tmp holds the replacement, p2 already
     // dropped — the worst point in the window
-    writeTmp(Seq((3L, "c2", "p2"), (4L, "d", "p2")))
-    spark.sql(s"ALTER TABLE `$db`.`$table` DROP IF EXISTS PARTITION (pk='p2')")
-    assert(Warehouse.recoverReplacement(spark, db, table))
+    crashAfter("dropped")(swap(Seq((3L, "c2", "p2"), (4L, "d", "p2"))))
+    assert(Warehouse.recover(spark, db, table))
     assert(state() == Seq((1L, "a", "p1"), (2L, "b", "p1"),
       (3L, "c2", "p2"), (4L, "d", "p2")))
     // after a completed recovery (tmp gone) it is a no-op
-    assert(!Warehouse.recoverReplacement(spark, db, table))
+    assert(!Warehouse.recover(spark, db, table))
     assert(state() == Seq((1L, "a", "p1"), (2L, "b", "p1"),
       (3L, "c2", "p2"), (4L, "d", "p2")))
-    // crash BEFORE the drop: tmp written, target still intact — recovery
-    // performs the whole swap (old p2 rows replaced, not duplicated)
-    writeTmp(Seq((3L, "c3", "p2")))
-    assert(Warehouse.recoverReplacement(spark, db, table))
+    // crash BEFORE the drop: tmp written and stamped, target still intact —
+    // recovery performs the whole swap (old p2 rows replaced, not duplicated)
+    crashAfter("stamped")(swap(Seq((3L, "c3", "p2"))))
+    assert(Warehouse.recover(spark, db, table))
     assert(state() == Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c3", "p2")))
-    assert(!Warehouse.recoverReplacement(spark, db, table))
+    assert(!Warehouse.recover(spark, db, table))
   }
 
   test("merge retry after a crashed partition swap auto-recovers — no row loss") {
@@ -359,26 +357,24 @@ class ExtractWarehouseSpec extends SparkSpec {
     val (db, table) = ("graft_retry", "kv_part")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${table}__rw_part_tmp`")
+    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${Warehouse.swapTmp(table)}`")
     Warehouse.saveModel(Seq(
       (1L, "a", 1L, "p1"), (2L, "b", 1L, "p1"),
       (3L, "c", 1L, "p2"), (4L, "d", 1L, "p2")).toDF("k", "val", "v", "pk"),
       db, table, Seq("pk"))
     val batch = Seq((3L, "c2", 2L, "p2")).toDF("k", "val", "v", "pk")
-    // simulate the first attempt crashing at the worst point: tmp holds the
+    // the first attempt crashes at the worst point: tmp holds the
     // complete merged p2 slice, p2 already dropped from the target
-    Seq((3L, "c2", 2L, "p2"), (4L, "d", 1L, "p2")).toDF("k", "val", "v", "pk")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("overwriteSchema", "true").format("parquet")
-      .partitionBy("pk").saveAsTable(s"`$db`.`${table}__rw_part_tmp`")
-    spark.sql(s"ALTER TABLE `$db`.`$table` DROP IF EXISTS PARTITION (pk='p2')")
+    crashAfter("dropped")(
+      Warehouse.mergeUpsert(spark, batch, db, table, Seq("k"), "v"))
+    assert(spark.table(s"`$db`.`$table`").filter($"pk" === "p2").isEmpty)
     // the scheduler re-runs the merge (same batch — at-least-once replay)
     Warehouse.mergeUpsert(spark, batch, db, table, Seq("k"), "v")
     val got = spark.table(s"`$db`.`$table`").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3))).toSeq
     assert(got == Seq((1L, "a", 1L, "p1"), (2L, "b", 1L, "p1"),
       (3L, "c2", 2L, "p2"), (4L, "d", 1L, "p2")))
-    assert(!spark.catalog.tableExists(s"$db.${table}__rw_part_tmp"))
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp(table)}"))
   }
 
   test("delete retry after a crashed full-table swap auto-recovers the target") {
@@ -388,20 +384,19 @@ class ExtractWarehouseSpec extends SparkSpec {
     val (db, table) = ("graft_retry", "kv_flat")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${table}__rw_tmp`")
+    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${Warehouse.swapTmp(table)}`")
     Warehouse.saveModel(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
       .toDF("k", "val"), db, table)
     // crashed delete of k=3: tmp holds the complete post-delete state
-    Seq((1L, "a"), (2L, "b"), (4L, "d")).toDF("k", "val")
-      .write.format("parquet").saveAsTable(s"`$db`.`${table}__rw_tmp`")
-    spark.sql(s"DROP TABLE `$db`.`$table`")
+    crashAfter("dropped")(Warehouse.deleteWhere(spark, db, table, $"k" === 3L))
+    assert(!spark.catalog.tableExists(s"$db.$table"))
     Warehouse.deleteWhere(spark, db, table, $"k" === 3L)
     val got = spark.table(s"`$db`.`$table`").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got == Seq((1L, "a"), (2L, "b"), (4L, "d")))
-    assert(!spark.catalog.tableExists(s"$db.${table}__rw_tmp"))
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp(table)}"))
     // and a recovery with no surviving tmp is a no-op
-    assert(!Warehouse.recoverRewrite(spark, db, table))
+    assert(!Warehouse.recover(spark, db, table))
   }
 
   test("partition-scoped merge equals the full-rewrite merge on the same data") {
@@ -477,7 +472,7 @@ class ExtractWarehouseSpec extends SparkSpec {
     val (db, table) = ("graft_props", "kv_props")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${table}__rw_tmp`")
+    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${Warehouse.swapTmp(table)}`")
     Warehouse.saveModel(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), db, table)
     spark.sql(s"ALTER TABLE `$db`.`$table` SET TBLPROPERTIES (" +
       "'graft.test.generation'='7', 'graft.test.modulus'='64')")
@@ -490,26 +485,23 @@ class ExtractWarehouseSpec extends SparkSpec {
     assert(propsOf == Map("graft.test.generation" -> "7",
       "graft.test.modulus" -> "64"))
     // WORST crash point: target dropped, the props-stamped tmp is the
-    // ONLY copy (the rewrite protocol stamps props on the tmp right
-    // after writing it) — recovery must restore data AND properties
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-      .write.format("parquet").saveAsTable(s"`$db`.`${table}__rw_tmp`")
-    spark.sql(s"ALTER TABLE `$db`.`${table}__rw_tmp` SET TBLPROPERTIES (" +
-      "'graft.test.generation'='7', 'graft.test.modulus'='64')")
-    spark.sql(s"DROP TABLE `$db`.`$table`")
-    assert(Warehouse.recoverRewrite(spark, db, table))
+    // ONLY copy (the swap stamps props on the tmp with its manifest) —
+    // recovery must restore data AND properties
+    crashAfter("dropped")(Warehouse.rewriteVia(spark, db, table)(identity))
+    assert(!spark.catalog.tableExists(s"$db.$table"))
+    assert(Warehouse.recover(spark, db, table))
     assert(propsOf == Map("graft.test.generation" -> "7",
       "graft.test.modulus" -> "64"),
       "recovery from the tmp-only state must restore the stamps")
-    // PRE-STAMP window: tmp exists WITHOUT props, target still intact —
-    // recovery falls back to the (still committed) target's props
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-      .write.format("parquet").saveAsTable(s"`$db`.`${table}__rw_tmp`")
-    assert(Warehouse.recoverRewrite(spark, db, table))
+    // PRE-STAMP window: tmp exists WITHOUT props or manifest, target still
+    // intact — recovery discards the tmp and the target keeps its props
+    crashAfter("written")(Warehouse.rewriteVia(spark, db, table)(identity))
+    assert(spark.catalog.tableExists(s"$db.${Warehouse.swapTmp(table)}"))
+    assert(Warehouse.recover(spark, db, table))
     assert(propsOf == Map("graft.test.generation" -> "7",
       "graft.test.modulus" -> "64"),
       "recovery in the pre-stamp window must keep the target's stamps")
-    assert(!spark.catalog.tableExists(s"$db.${table}__rw_tmp"))
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp(table)}"))
   }
 
   test("backfill heals a crashed partition swap at entry — a later " +
@@ -519,7 +511,7 @@ class ExtractWarehouseSpec extends SparkSpec {
     val (db, table) = ("graft_bf_heal", "orders_m")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
     spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${table}__rw_part_tmp`")
+    spark.sql(s"DROP TABLE IF EXISTS `$db`.`${Warehouse.swapTmp(table)}`")
     def src(feb: String) = Seq(
       (1L, "jan", java.sql.Timestamp.valueOf("1996-01-10 00:00:00")),
       (2L, feb, java.sql.Timestamp.valueOf("1996-02-15 00:00:00")),
@@ -528,20 +520,20 @@ class ExtractWarehouseSpec extends SparkSpec {
     PartitionedMaterializer.backfill(spark, src("feb_v1"), "ts",
       PartitionGrain.Monthly, db, table,
       LocalDate.of(1996, 1, 1), LocalDate.of(1996, 4, 1))
-    // simulate a merge that crashed inside its drop+append window: the
-    // surviving tmp holds a STALE copy of the Feb partition
-    spark.table(s"`$db`.`$table`").filter($"part_key" === "1996-02")
-      .write.format("parquet").partitionBy("part_key")
-      .saveAsTable(s"`$db`.`${table}__rw_part_tmp`")
+    // a swap crashed inside its drop+append window: the surviving tmp
+    // holds a STALE copy of the Feb partition
+    crashAfter("dropped")(Warehouse.replacePartitions(spark, db, table,
+      Seq("part_key"),
+      spark.table(s"`$db`.`$table`").filter($"part_key" === "1996-02")))
     // a corrective backfill of Feb with FRESH data must heal the tmp
     // FIRST — otherwise the stale slice survives and a later entry
     // point's auto-recovery would re-apply it OVER the fresh rewrite
     PartitionedMaterializer.backfill(spark, src("feb_v2"), "ts",
       PartitionGrain.Monthly, db, table,
       LocalDate.of(1996, 2, 1), LocalDate.of(1996, 3, 1))
-    assert(!spark.catalog.tableExists(s"$db.${table}__rw_part_tmp"),
+    assert(!spark.catalog.tableExists(s"$db.${Warehouse.swapTmp(table)}"),
       "backfill must consume the surviving tmp before rewriting")
-    assert(!Warehouse.recoverReplacement(spark, db, table),
+    assert(!Warehouse.recover(spark, db, table),
       "no tmp may remain for a later entry point to re-apply")
     val feb = spark.table(s"`$db`.`$table`")
       .filter($"part_key" === "1996-02").select("v").collect().map(_.getString(0))

@@ -380,4 +380,40 @@ class ScheduleRunnerSpec extends SparkSpec {
     // compaction preserved every appended row
     assert(spark.table(s"`$db`.`$table`").count() == expected)
   }
+
+  test("scheduled compaction of partitioned and bucketed tables settles: a " +
+      "fire with no appends rewrites nothing") {
+    import graft.store.{LoadMode, Warehouse}
+    import spark.implicits._
+    val db = "graft_sched_cmp"
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
+    // three one-task batches of 8 keys; compaction to 2 files can reach
+    // 8 files either way — above maxFiles
+    def batch(b: Int) = Seq.tabulate(8)(d => (b * 10L + d, s"d$d"))
+      .toDF("k", "day").coalesce(1)
+    def settles(table: String, create: () => Unit, compacted: Int): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS `$db`.`$table`")
+      create()
+      Warehouse.load(spark, batch(1), db, table, LoadMode.WatermarkAppend)
+      Warehouse.load(spark, batch(2), db, table, LoadMode.WatermarkAppend)
+      def files() = spark.table(s"`$db`.`$table`").inputFiles.toSeq.sorted
+      assert(files().size > 6)
+      val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
+      val runner = new ScheduleRunner(Seq(ScheduleRunner.compactionEntry(
+        "cmp", "0 * * * *", db, table, maxFiles = 6, targetFiles = 2)),
+        startAt = t0)
+      runner.tick(spark, t0.plusHours(1))
+      val once = files()
+      assert(once.size <= compacted, table)
+      runner.tick(spark, t0.plusHours(2))
+      assert(files() == once, s"a fire with no appends rewrote $table")
+      assert(spark.table(s"`$db`.`$table`").count() == 24)
+    }
+    // 8 directories of 3 files: compaction leaves one per directory
+    settles("ingest_by_day", () =>
+      Warehouse.saveModel(batch(0), db, "ingest_by_day", Seq("day")), 8)
+    // 4 buckets: each of the 2 compaction tasks writes one file per bucket
+    settles("ingest_bucketed", () => Warehouse.saveBucketed(batch(0), db,
+      "ingest_bucketed", Seq("k"), 4), 8)
+  }
 }
