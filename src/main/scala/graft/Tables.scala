@@ -16,6 +16,9 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    // every registry query reads through here, so its session carries the
+    // engine's optimizer rules (graft.plans.rules)
+    graft.plans.install(spark)
     // events.ts: the engine-wide contract is a ns-epoch Long — exact
     // ordering/arithmetic bit-identical to the DuckDB oracle's
     // epoch_ns(ts). The fixture has shipped as both TIMESTAMP(NANOS)
@@ -41,9 +44,8 @@ object Tables {
         s"events.ts ns normalization requires a UTC session " +
           s"(spark.sql.session.timeZone=$tz) — set it to UTC before " +
           "reading events, or land events as int64 ns at write time")
-      // ts becomes a COMPUTED column — install the transpose rule so
-      // watermark predicates still reach the parquet scan's PushedFilters
-      graft.plans.EpochNsTranspose.install(spark)
+      // ts becomes a COMPUTED column — the installed EpochNsTranspose
+      // keeps watermark predicates reaching the parquet scan's PushedFilters
       df.withColumn("ts",
         org.apache.spark.sql.functions.unix_micros(
           org.apache.spark.sql.functions.col("ts").cast("timestamp")) *

@@ -199,8 +199,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
         CdcChunks(GraftFunctions.unary("cdc_chunks", exprs))))
     // resolution-stage so the filter is in the analyzed plan (cache-safe)
     ext.injectPostHocResolutionRule(spark => graft.plans.TenantIsolationRule(spark))
-    // restore parquet pushdown for ns-epoch watermark predicates over the
-    // Tables.t timestamp normalization (see EpochNsTranspose scaladoc)
-    ext.injectOptimizerRule(_ => graft.plans.EpochNsTranspose)
+    // the engine's optimizer rules: ns-epoch watermark pushdown and the
+    // sort-below-projection rewrite (see graft.plans.rules)
+    graft.plans.rules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

@@ -96,13 +96,4 @@ object EpochNsTranspose extends Rule[LogicalPlan] {
     // the rewrite away from projected output values by construction
     case f: Filter => f.transformExpressionsUp(transpose)
   }
-
-  /** Idempotent per-session installation — rides along with the
-    * normalization that creates the need for it (graft.Tables.t).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(EpochNsTranspose))
-      exp.extraOptimizations = exp.extraOptimizations :+ EpochNsTranspose
-  }
 }

@@ -58,6 +58,18 @@ class TenantIsolationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getDouble(9) == 2.0) // 1 · (0 + 255·2/255)
   }
 
+  test("extensions inject the engine's optimizer rules") {
+    // read without Tables.t, which would install the rules itself
+    val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), upper(col("text")).as("u")).orderBy("doc_id")
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.collectFirst {
+      case org.apache.spark.sql.catalyst.plans.logical.Project(_,
+        _: org.apache.spark.sql.catalyst.plans.logical.Sort) => ()
+    }.isDefined, s"the sort was not moved below the projection:\n$plan")
+    assert(spark.experimental.extraOptimizations.isEmpty)
+  }
+
   test("raw-table scans are auto-filtered to the session tenant; other tables untouched") {
     val s2 = spark
     import s2.implicits._
