@@ -116,19 +116,15 @@ object Bench {
     // (name, seconds, error). A failing query must surface its error, not a
     // fast wall-time — a swallowed exception here once masqueraded as the
     // round's cheapest pipeline run.
-    def timed(body: => Unit): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err = try { body; None } catch {
-        case e: Throwable =>
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
-      }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
     def oneRun(): Seq[(String, Double, Option[String])] =
       SparkEntry.queries.toSeq.zipWithIndex.map { case ((name, fn), i) =>
         if (i % CalibEvery == 0) calibrate()
-        val (sec, err) = timed(fn(spark, sfDir).count())
-        (name, sec, err)
+        val t0 = System.nanoTime()
+        val err = try { fn(spark, sfDir).count(); None } catch {
+          case e: Throwable =>
+            Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
+        }
+        (name, (System.nanoTime() - t0) / 1e9, err)
       }
     // Per-query MIN over `runs` passes: one loaded-machine spike must not
     // read as a regression (sf0.1 wall times vary up to ~3× with host
@@ -190,10 +186,15 @@ object Bench {
     val ExtraPassCutoffSec = 1.5
     val stabilized = results.map {
       case (n, v, None, f) if v < ExtraPassCutoffSec && extraPasses > 0 =>
-        val extra = (1 to extraPasses).map(_ =>
-          timed(SparkEntry.queries(n)(spark, sfDir).count()))
-        (n, math.min(v, extra.map(x => if (x._2.isEmpty) x._1 else Double.MaxValue).min),
-          None, f + extra.count(_._2.nonEmpty))
+        val extra = (1 to extraPasses).map { _ =>
+          val t0 = System.nanoTime()
+          val err = try { SparkEntry.queries(n)(spark, sfDir).count(); None }
+          catch { case e: Throwable => Some(e) }
+          (if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else Double.MaxValue,
+            err)
+        }
+        (n, math.min(v, extra.map(_._1).min), None,
+          f + extra.count(_._2.nonEmpty))
       case other => other
     }
     // 4 decimals (0.1 ms): keeps the single JSON line well inside the
@@ -208,31 +209,11 @@ object Bench {
     val qs = stabilized.sortBy(_._2)
       .map { case (k, v, _, _) => "\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
+    val errs = stabilized.collect { case (k, _, Some(e), _) =>
+      "\"" + k + "\":\"" + esc(e) + "\"" }.mkString("{", ",", "}")
     val flaky = stabilized.collect { case (k, _, None, f) if f > 0 =>
       "\"" + k + "\":" + f }.mkString("{", ",", "}")
     val total = r4(stabilized.map(_._2).sum)
-    // `value` times count(), which Catalyst may prune down to a scan. The
-    // materialized passes deliver every row to the noop sink, so per-row
-    // operators run; they come after the count passes, each from reset
-    // cached state, so `value` is measured as before.
-    val matRuns = (1 to runs).flatMap { _ =>
-      graft.ops.PlanCache.release(spark)
-      spark.catalog.clearCache()
-      SparkEntry.queries.toSeq.map { case (n, fn) =>
-        n -> timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-      }
-    }
-    val matMin = matRuns.collect { case (n, (t, None)) => n -> t }
-      .groupMapReduce(_._1)(_._2)(math.min).toSeq.sortBy(_._2)
-    val matJson = matMin.map { case (k, v) => "\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
-    val matTotal = r4(matMin.map(_._2).sum)
-    val matErrs = matRuns.collect { case (n, (_, Some(e))) => n -> e }.toMap --
-      matMin.map(_._1)
-    val errs = (stabilized.collect { case (k, _, Some(e), _) => (k, e) } ++
-      matErrs.map { case (k, e) => (s"$k (materialized)", e) })
-      .map { case (k, e) => "\"" + k + "\":\"" + esc(e) + "\"" }
-      .mkString("{", ",", "}")
     val ckptSec = r4(ckptSecPerPass.min)
     // host_load_index: max over passes of (pass min / global min).
     // ~1.0-1.3 = quiet host (every pass found a clean probe window); >2 =
@@ -318,7 +299,7 @@ object Bench {
     def breachJson(b: Seq[String]): String =
       b.map("\"" + _ + "\"").mkString("[", ",", "]")
     val serveBreachJson = breachJson(serveBreach)
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"materialized":$matJson,"materialized_total":$matTotal,"errors":$errs,"flaky":$flaky,"gate_ckpt":"local","ckpt_sec":$ckptSec,"host_load_index":$hostLoadIndex,"calib":$calibJson,"calib_io":$calibIoJson,"models":$modelsJson,"quiet":$quietJson,"serve_breach":$serveBreachJson,"build_breach":${breachJson(buildBreach)},"append_breach":${breachJson(appendBreach)},"sf":"$sfDir","runs":$runs}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"flaky":$flaky,"gate_ckpt":"local","ckpt_sec":$ckptSec,"host_load_index":$hostLoadIndex,"calib":$calibJson,"calib_io":$calibIoJson,"models":$modelsJson,"quiet":$quietJson,"serve_breach":$serveBreachJson,"build_breach":${breachJson(buildBreach)},"append_breach":${breachJson(appendBreach)},"sf":"$sfDir","runs":$runs}"""
     // Full line to a file too — the lossless record when the stdout window
     // still clips (best-effort: a read-only checkout must not fail the run).
     val fullPath = "target/bench_full.json"
@@ -330,7 +311,7 @@ object Bench {
     // Compact summary as the FINAL stdout line (stop() noise goes to
     // stderr): ~150 bytes, so the tail window always contains the totals
     // even when the full per-query line overflows it.
-    println(s"""{"metric":"total_compact","value":$total,"materialized_total":$matTotal,"unit":"sec","n":${stabilized.size},"n_err":${stabilized.count(_._3.nonEmpty)},"n_flaky":${stabilized.count(r => r._3.isEmpty && r._4 > 0)},"host_load_index":$hostLoadIndex,"quiet_verdict":"$quietVerdict","n_regressed":${regressed.size},"n_serve_breach":${serveBreach.size},"n_build_breach":${buildBreach.size},"n_append_breach":${appendBreach.size},"sf":"$sfDir","runs":$runs,"full":"$fullPath"}""")
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n":${stabilized.size},"n_err":${stabilized.count(_._3.nonEmpty)},"n_flaky":${stabilized.count(r => r._3.isEmpty && r._4 > 0)},"host_load_index":$hostLoadIndex,"quiet_verdict":"$quietVerdict","n_regressed":${regressed.size},"n_serve_breach":${serveBreach.size},"n_build_breach":${buildBreach.size},"n_append_breach":${appendBreach.size},"sf":"$sfDir","runs":$runs,"full":"$fullPath"}""")
     } // end withDurability(false)
     spark.stop()
   }

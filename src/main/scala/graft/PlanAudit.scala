@@ -102,7 +102,7 @@ object PlanAudit {
       list.split(',').map(_.trim).filter(_.nonEmpty).foreach { n =>
         val df = overrideFrame(n).getOrElse(SparkEntry.queries(n)(spark, d))
         val full = PlanPolicy.planText(df)
-        val v = PlanPolicy.violations(n, full)
+        val v = PlanPolicy.violations(n, full) ++ PlanPolicy.sortAboveProjection(n, df)
         println(s"== $n: ${if (v.isEmpty) "CLEAN" else v.mkString("; ")}")
         println(full)
       }
@@ -161,14 +161,16 @@ object PlanAudit {
     names.foreach { n =>
       val df = overrideFrame(n).getOrElse(SparkEntry.queries(n)(spark, d))
       val full = PlanPolicy.planText(df)
-      policyViolations ++= PlanPolicy.violations(n, full)
+      policyViolations ++= PlanPolicy.violations(n, full) ++
+        PlanPolicy.sortAboveProjection(n, df)
       sb.append(s"\n## $n\n\n```\n")
       sb.append(full.take(6000))
       sb.append("\n```\n")
     }
     servedOverrides.toSeq.sortBy(_._1).foreach { case (n, df) =>
       val full = PlanPolicy.planText(df)
-      policyViolations ++= PlanPolicy.violations(s"$n (serve)", full)
+      policyViolations ++= PlanPolicy.violations(s"$n (serve)", full) ++
+        PlanPolicy.sortAboveProjection(s"$n (serve)", df)
       sb.append(s"\n## $n — SERVE path (stored model, training paid in build)\n\n```\n")
       sb.append(full.take(6000))
       sb.append("\n```\n")

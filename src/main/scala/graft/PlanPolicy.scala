@@ -25,10 +25,6 @@ package graft
   *  - [[mustMatch]] — per-query pushdown/pruning/bucketing pins, and
   *    [[broadcastOnlyJoins]] — the star-lookup broadcast floor (round-14
   *    verdict #2: the last two red-flag classes, previously prose).
-  *  - A range exchange directly over a computing `Project` whose sort
-  *    keys pass through — the range partitioner's sampling job evaluates
-  *    that projection a second time; [[graft.plans.SortBelowProject]]
-  *    moves such a sort below its projection.
   *
   * Broadcast exchanges are not flagged: a broadcast is bounded by the
   * autoBroadcastJoinThreshold and the driver guards in Guards.scala.
@@ -267,6 +263,19 @@ object PlanPolicy {
     else main + "\n=== Subqueries (policy scan) ===\n" + subs.mkString("\n")
   }
 
+  /** A global sort the optimizer left above a projection that
+    * [[graft.plans.SortBelowProject]] would move: the range exchange's
+    * sampling job evaluates that projection a second time. The rule is
+    * the predicate, so determinism and aliases are judged exactly.
+    */
+  def sortAboveProjection(name: String, df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val plan = df.queryExecution.optimizedPlan
+    if (graft.plans.SortBelowProject(plan).fastEquals(plan)) Seq.empty
+    else Seq(s"$name: a global sort sits above a projection that " +
+      "graft.plans.SortBelowProject moves below it — the range sampling " +
+      "job evaluates the projection twice")
+  }
+
   private val TreeArt = "^[\\s:+\\-]*".r
   private val CodegenTag = "^\\*\\(\\d+\\)\\s*".r
 
@@ -275,24 +284,6 @@ object PlanPolicy {
     */
   private[graft] def nodeOf(line: String): String =
     CodegenTag.replaceFirstIn(TreeArt.replaceFirstIn(line, ""), "")
-
-  private val Attr = "[^\\s,()\\[\\]]+#\\d+L?"
-  private val Aliased = s"([^\\s\\[]+) AS ($Attr)".r
-
-  /** A `rangepartitioning` exchange node over a `Project` node that
-    * computes a column while every sort key is a pass-through output:
-    * listed bare, or aliased from a bare attribute.
-    */
-  private[graft] def sampledTwice(exchange: String, project: String): Boolean =
-    exchange.startsWith("Exchange rangepartitioning(") &&
-      project.startsWith("Project [") && {
-        // alias -> whether its expression is a bare attribute
-        val aliased = Aliased.findAllMatchIn(project)
-          .map(m => m.group(2) -> m.group(1).matches(Attr)).toMap
-        val keys = Attr.r.findAllIn(exchange).toSet
-        keys.nonEmpty && aliased.values.exists(!_) &&
-          keys.forall(k => project.contains(k) && aliased.getOrElse(k, true))
-      }
 
   private def isAggregate(node: String): Boolean =
     node.startsWith("HashAggregate") || node.startsWith("SortAggregate") ||
@@ -350,12 +341,6 @@ object PlanPolicy {
         else Seq.empty
       low ++ shuf
     }
-    val twiceV = lines.indices.dropRight(1).collect {
-      case i if sampledTwice(nodeOf(lines(i)), nodeOf(lines(i + 1))) =>
-        s"$name: range exchange over a computing Project whose sort keys " +
-          "pass through — the range sampling job evaluates the projection " +
-          "twice: " + nodeOf(lines(i + 1)).take(60)
-    }
-    cartV ++ spV ++ mmV ++ bV ++ twiceV
+    cartV ++ spV ++ mmV ++ bV
   }
 }

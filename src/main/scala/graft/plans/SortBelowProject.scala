@@ -6,18 +6,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.{PROJECT, SORT}
 
 /** Rewrites `Sort(order, global, Project(list, child))` into
-  * `Project(list, Sort(order', global, child))`, so a sorted result's
-  * per-row projection is evaluated once. A global sort's range exchange
-  * first runs a sampling job over its child, which evaluates a projection
-  * under the sort a second time (q_redact_pii: four regexes per row,
-  * twice); above the sort it runs once, on rows already in order, and a
-  * Project is per-row and keeps row order.
-  *
-  * Fires only when every projected expression is deterministic, the
-  * projection computes a column, and every sort key reads only columns
-  * passed through bare or as an alias of a child attribute; `order'`
-  * rewrites those aliases to the child attributes. The walk is top-down,
-  * so a sort passes stacked projections in turn.
+  * `Project(list, Sort(order', global, child))`: a global sort's range
+  * exchange samples its child in a separate job, so a projection under
+  * the sort runs twice per row (DESIGN.md "Plan rules"). Fires only when
+  * the projection is deterministic and computes a column, and every sort
+  * key reads columns passed through bare or aliased; `order'` reads the
+  * child attributes. Top-down, so a sort passes stacked projections.
   */
 object SortBelowProject extends Rule[LogicalPlan] {
 
@@ -25,15 +19,14 @@ object SortBelowProject extends Rule[LogicalPlan] {
     plan.transformDownWithPruning(_.containsAllPatterns(SORT, PROJECT)) {
       case s @ Sort(order, true, Project(list, child), _)
           if list.forall(_.deterministic) =>
-        val passed = AttributeMap(list.collect {
+        val passThrough = list.collect {
           case a: Attribute => a -> a
           case al @ Alias(a: Attribute, _) => al.toAttribute -> a
-        })
-        val computes = list.exists {
-          case _: Attribute | Alias(_: Attribute, _) => false
-          case _ => true
         }
-        if (!computes || !order.forall(_.references.forall(passed.contains))) s
+        val passed = AttributeMap(passThrough)
+        // nothing to save when the projection only passes columns through
+        if (passThrough.size == list.size ||
+            !order.forall(_.references.forall(passed.contains))) s
         else {
           val childOrder = order.map(_.transform {
             case a: Attribute if passed.contains(a) => passed(a)

@@ -85,8 +85,9 @@ class PlanPolicySpec extends SparkSpec {
       "q_zipf_profile", "q_vocab_stats", "q_kneser_ney",
       "q_kneser_ney_pruned", "q_event_tumbling_window", "q_percentile_status")
     val bad = sample.flatMap { n =>
-      PlanPolicy.violations(n,
-        PlanPolicy.planText(SparkEntry.queries(n)(spark, sf)))
+      val df = SparkEntry.queries(n)(spark, sf)
+      PlanPolicy.violations(n, PlanPolicy.planText(df)) ++
+        PlanPolicy.sortAboveProjection(n, df)
     }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
@@ -153,37 +154,21 @@ class PlanPolicySpec extends SparkSpec {
       s"planText must not duplicate an already-printed subquery:\n$full")
   }
 
-  test("range exchange over a computing pass-through-key Project fails the policy") {
-    // the q_redact_pii shape before graft.plans.SortBelowProject: the
-    // range sampling job evaluates the regex projection a second time
-    val planted =
-      """Sort [doc_id#1L ASC NULLS FIRST], true, 0
-        |+- Exchange rangepartitioning(doc_id#1L ASC NULLS FIRST, 8), ENSURE_REQUIREMENTS, [plan_id=7]
-        |   +- Project [doc_id#1L, source#2 AS src#9, regexp_replace(text#3, [0-9]{3}-[0-9]{4}, <PHONE>, 1) AS text#8]
-        |      +- FileScan parquet [doc_id#1L,source#2,text#3]""".stripMargin
-    val v = PlanPolicy.violations("q_scratch_sort", planted)
-    assert(v.exists(_.contains("evaluates the projection twice")), v)
-    // an aliased pass-through key is the same shape
-    assert(PlanPolicy.violations("q_scratch_sort",
-      planted.replace("rangepartitioning(doc_id#1L", "rangepartitioning(src#9"))
-      .exists(_.contains("twice")))
-    // a key on the computed column cannot move below the projection
-    assert(PlanPolicy.violations("q_scratch_sort",
-      planted.replace("rangepartitioning(doc_id#1L", "rangepartitioning(text#8"))
-      .isEmpty)
-    // a pass-through-only Project costs nothing to evaluate twice
-    assert(PlanPolicy.violations("q_scratch_sort",
-      planted.replace(", regexp_replace(text#3, [0-9]{3}-[0-9]{4}, <PHONE>, 1) AS text#8", ""))
-      .isEmpty)
-    // live plans: the shape without the rule, and its absence with it
+  test("a global sort left above a computing projection fails the policy") {
+    // the q_redact_pii shape without graft.plans.SortBelowProject: the
+    // range sampling job evaluates the projection a second time
     def q(s: org.apache.spark.sql.SparkSession) =
       s.read.parquet(s"$sf/documents.parquet")
         .select(col("doc_id"), upper(col("text")).as("u")).orderBy("doc_id")
-    assert(PlanPolicy.violations("q_scratch_sort",
-      PlanPolicy.planText(q(spark.newSession()))).exists(_.contains("twice")))
+    val bare = spark.newSession()
+    assert(PlanPolicy.sortAboveProjection("q_scratch_sort", q(bare))
+      .exists(_.contains("twice")))
+    // a key on the computed column cannot move below the projection
+    assert(PlanPolicy.sortAboveProjection("q_scratch_sort",
+      bare.read.parquet(s"$sf/documents.parquet")
+        .select(col("doc_id"), upper(col("text")).as("u")).orderBy("u")).isEmpty)
     graft.plans.install(spark)
-    assert(PlanPolicy.violations("q_scratch_sort",
-      PlanPolicy.planText(q(spark))).isEmpty)
+    assert(PlanPolicy.sortAboveProjection("q_scratch_sort", q(spark)).isEmpty)
   }
 
   test("codegen star tags don't hide an aggregate child") {

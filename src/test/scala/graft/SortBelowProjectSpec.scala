@@ -69,7 +69,8 @@ class SortBelowProjectSpec extends SparkSpec {
   }
 
   test("registry per-row text queries give identical ordered rows with and without the rule") {
-    val sf01 = "/root/testdata/sf0.01"
+    // the sf0.01 fixture next to the suite's own
+    val sf01 = s"${new java.io.File(sf).getParent}/sf0.01"
     val queries = Seq("q_redact_pii", "q_pseudonymize_pii", "q_mask_spans",
       "q_lang_id", "q_html_extract", "q_readability", "q_token_count_bpe",
       "q_quality_score")

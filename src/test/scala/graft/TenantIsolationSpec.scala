@@ -60,7 +60,10 @@ class TenantIsolationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("extensions inject the engine's optimizer rules") {
     // read without Tables.t, which would install the rules itself
-    val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val dir = TempDirs.create("graft-ext-rules") + "/rows"
+    spark.range(100).select(col("id").as("doc_id"), col("id").cast("string").as("text"))
+      .write.parquet(dir)
+    val df = spark.read.parquet(dir)
       .select(col("doc_id"), upper(col("text")).as("u")).orderBy("doc_id")
     val plan = df.queryExecution.optimizedPlan
     assert(plan.collectFirst {
