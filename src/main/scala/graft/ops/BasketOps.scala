@@ -306,8 +306,11 @@ object BasketOps {
   val Table = "brand_scores"
   val AnchorProp = "graft.trending.anchor_day"
   val WmKeyProp = "graft.trending.wm_orderkey"
+  private[graft] val TrendFence = graft.pipeline.FencedAppend.Fence(
+    Some(Table), Seq("o_orderkey" -> WmKeyProp),
+    graft.pipeline.FencedAppend.Hi, Some("buildTrending"))
 
-  private def fqn = s"`$Db`.`$Table`"
+  private def fqn(db: String) = s"`$db`.`$Table`"
 
   /** Per-(brand, day) lineitem counts, aged-out days compacted to the
     * weight-0 sentinel bucket `anchorDay - TrendZeroAge` (a single
@@ -345,7 +348,7 @@ object BasketOps {
     val anchorDay = a.getLong(0)
     graft.store.Warehouse.saveModel(
       dayBuckets(s, d, orders, anchorDay), db, Table)
-    s.sql(s"ALTER TABLE ${fqn} SET TBLPROPERTIES " +
+    s.sql(s"ALTER TABLE ${fqn(db)} SET TBLPROPERTIES " +
       s"('$AnchorProp'='$anchorDay', '$WmKeyProp'='$keyMax')")
   }
 
@@ -353,9 +356,7 @@ object BasketOps {
     * stored per-(brand, day) buckets re-anchor by RE-CLAMPING each
     * bucket's day to the new anchor's sentinel (exact — the weight is
     * recomputed from the bucket's own day at serve time, so no stored
-    * sum is ever shifted), then the batch's own buckets ADD. Counts are
-    * additive → watermark fence (the histogram posture): a replayed
-    * batch refuses loudly, the rebuild re-anchors.
+    * sum is ever shifted), then the batch's own buckets ADD.
     *
     * Scale shape: the batch pays its own fact join; the stored side is
     * a brand-vocabulary-sized re-clamp + sum — the raw history is never
@@ -364,12 +365,9 @@ object BasketOps {
     */
   def appendTrending(s: SparkSession, d: String, keyMax: Long,
                      db: String = Db): Unit = {
-    val wmKey = graft.store.Warehouse.readTablePropLong(s, db, Table,
-      WmKeyProp, "rebuild with buildTrending before appending")
-    require(keyMax > wmKey,
-      s"appendTrending: keyMax $keyMax is not past the stored watermark " +
-        s"$wmKey — replayed or out-of-order batches are refused (additive " +
-        "scores would double); re-anchor with buildTrending")
+    val wmKey = TrendFence.stored(s, db).get.head
+    TrendFence.check("appendTrending", s, db,
+      graft.pipeline.FencedAppend.Bounds(Seq(keyMax), Seq(keyMax)))
     val anchor0 = graft.store.Warehouse.readTablePropLong(s, db, Table,
       AnchorProp, "rebuild with buildTrending before appending")
     val batchOrders = t(s, d, "orders")
@@ -381,6 +379,12 @@ object BasketOps {
     if (b.isNullAt(0)) return // empty key range: nothing to fold
     val anchor1 = math.max(b.getLong(0), anchor0)
     val batch = dayBuckets(s, d, batchOrders, anchor1).localCheckpoint()
+    // the anchor moves with the fence: serving weighs each stored bucket
+    // by its own day, so an unfolded batch under a newer anchor still
+    // serves the old data
+    TrendFence.advance(s, db, Seq(keyMax))
+    s.sql(s"ALTER TABLE ${fqn(db)} SET TBLPROPERTIES " +
+      s"('$AnchorProp'='$anchor1')")
     graft.store.Warehouse.rewriteVia(s, db, Table)(stored =>
       stored.select(col("p_brand"),
           greatest(col("day"), lit(anchor1 - TrendZeroAge)).as("day"),
@@ -388,8 +392,6 @@ object BasketOps {
         .unionByName(batch)
         .groupBy("p_brand", "day")
         .agg(sum("n_lineitems").as("n_lineitems")))
-    s.sql(s"ALTER TABLE ${fqn} SET TBLPROPERTIES " +
-      s"('$AnchorProp'='$anchor1', '$WmKeyProp'='$keyMax')")
   }
 
   /** The stored scores — no fact scan, by construction: each bucket's
@@ -403,7 +405,7 @@ object BasketOps {
     graft.store.Warehouse.refreshDb(s, db)
     val anchor = graft.store.Warehouse.readTablePropLong(s, db, Table,
       AnchorProp, "rebuild with buildTrending before serving")
-    s.table(fqn)
+    s.table(fqn(db))
       .withColumn("w", expr(
         s"shiftright($TrendScale, CAST(least($anchor - day, " +
           s"$TrendZeroAge) AS INT))"))

@@ -223,18 +223,10 @@ object ChunkOps {
       s"('$ChunkBucketsProp' = '$ChunkBuckets', '$MaxDocProp' = '$maxDoc')")
   }
 
-  private[graft] def readIndexProp(s: SparkSession, db: String,
-                                   prop: String): Long =
-    graft.store.Warehouse.readTablePropLong(s, db, ChunkIndexTable, prop,
-      "not a chunk index built by buildChunkIndex; refusing to guess " +
-        "the layout")
-
-  private[graft] def setIndexProp(s: SparkSession, db: String, prop: String,
-                                  value: String): Unit =
-    s.sql(s"ALTER TABLE ${idxFqn(db)} SET TBLPROPERTIES ('$prop' = '$value')")
-
   private def readBuckets(s: SparkSession, db: String): Long =
-    readIndexProp(s, db, ChunkBucketsProp)
+    graft.store.Warehouse.readTablePropLong(s, db, ChunkIndexTable,
+      ChunkBucketsProp, "not a chunk index built by buildChunkIndex; " +
+        "refusing to guess the layout")
 
   /** Rewrite a batch against the PERSISTED index: a batch chunk excises
     * when the corpus already holds it (membership probe on the bucketed

@@ -60,6 +60,9 @@ object IncrementalClusters {
   val TargetParts = 256L
   val PartBlockProp = "graft.clusters.part_block"
   val MaxDocIdProp = "graft.clusters.max_doc_id"
+  private[graft] val Fence = graft.pipeline.FencedAppend.Fence(
+    Some(LabelsTable), Seq("doc_id" -> MaxDocIdProp),
+    graft.pipeline.FencedAppend.Lo, Some("buildClusterState"))
 
   private[graft] def adaptivePartBlock(maxId: Long): Long =
     math.max(PartBlockMin, maxId / TargetParts + 1)
@@ -106,9 +109,8 @@ object IncrementalClusters {
     * [[IncrementalDedup.currentIndexBuckets]] reasoning).
     */
   private[graft] def currentPartBlock(s: SparkSession, db: String): Long =
-    s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(LabelsTable, Some(db)))
-      .properties.get(PartBlockProp).map(_.toLong)
+    graft.store.Warehouse.tableProps(s, db, LabelsTable)
+      .get(PartBlockProp).map(_.toLong)
       .getOrElse(throw new IllegalStateException(
         s"labels table $db.$LabelsTable carries no $PartBlockProp " +
           "property — not a table buildClusterState laid out; rebuild " +
@@ -218,24 +220,11 @@ object IncrementalClusters {
                                       db: String): Unit = {
     val block = currentPartBlock(s, db)
     val labels = s.table(fqn(db))
-    // Append-only id guard (the CorpusPipeline contract, enforced LOUDLY
-    // here because a violation is not just out-of-order data: a batch id
-    // EQUAL to an existing label would collide with it as a contracted-CC
-    // vertex and silently fuse two unrelated clusters. Also what makes
-    // replays loud rather than silently double-appending rows.)
-    val bBounds = batch.agg(min("doc_id"), max("doc_id")).head
-    if (bBounds.isNullAt(0)) return // empty batch: nothing to fold
-    val meta = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(LabelsTable, Some(db)))
-    val storedMax = meta.properties.get(MaxDocIdProp).map(_.toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"labels table $db.$LabelsTable carries no $MaxDocIdProp — " +
-          "rebuild with buildClusterState before appending"))
-    require(bBounds.getLong(0) > storedMax,
-      s"appendBatchClusters: batch min id ${bBounds.getLong(0)} <= stored " +
-        s"max $storedMax — the append-only contract forbids out-of-order " +
-        "or replayed batches (an id collision would fuse unrelated " +
-        "clusters in the contracted graph)")
+    // the fence is loud here because a violation is not just out-of-order
+    // data: a batch id EQUAL to an existing label would collide with it as
+    // a contracted-CC vertex and silently fuse two unrelated clusters
+    val bounds = Fence.check("appendBatchClusters", s, db, batch)
+    if (bounds.isEmpty) return // empty batch: nothing to fold
     val batchBands = IncrementalDedup.pruneHot(TextOps.bandsOfDocs(batch))
       .localCheckpoint()
     // batch↔corpus candidate pairs (index probe) + batch-internal pairs
@@ -312,11 +301,7 @@ object IncrementalClusters {
       }
       s.catalog.refreshTable(fqn(db))
       }
-      // advance the guard AFTER the rewrite commits: a crash in between
-      // replays the batch, which the guard then refuses loudly (manual
-      // rebuild is the recovery) — refusing beats the silent double-append
-      s.sql(s"ALTER TABLE ${fqn(db)} SET TBLPROPERTIES " +
-        s"('$MaxDocIdProp'='${bBounds.getLong(1)}')")
+      Fence.advance(s, db, bounds.get.hi)
     }
   }
 

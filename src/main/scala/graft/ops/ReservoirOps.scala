@@ -45,6 +45,9 @@ object ReservoirOps {
   val TotalsTable = "day_totals"
   val WmTsProp = "graft.reservoir.wm_ts"
   val WmEidProp = "graft.reservoir.wm_event_id"
+  private[graft] val Fence = graft.pipeline.FencedAppend.Fence(
+    Some(SampleTable), Seq("ts" -> WmTsProp, "event_id" -> WmEidProp),
+    graft.pipeline.FencedAppend.Lo, Some("buildDaySamples"))
 
   private def hvOf(c: Column): Column =
     conv(substring(md5(c.cast("string").cast("binary")), 1,
@@ -128,41 +131,24 @@ object ReservoirOps {
 
   private def fqn(db: String, t: String) = s"`$db`.`$t`"
 
-  private def setWm(s: SparkSession, db: String, feed: DataFrame): Unit = {
-    val wm = feed.agg(max(struct(col("ts"), col("event_id")))).head
-    if (!wm.isNullAt(0))
-      s.sql(s"ALTER TABLE ${fqn(db, SampleTable)} SET TBLPROPERTIES " +
-        s"('$WmTsProp'='${wm.getStruct(0).getLong(0)}', " +
-        s"'$WmEidProp'='${wm.getStruct(0).getLong(1)}')")
-  }
-
   /** Full build — the scheduled re-anchor for the append path. */
   def buildDaySamples(events: DataFrame, db: String = Db): Unit = {
     val rows = rowsOf(events)
     graft.store.Warehouse.saveModel(bottomK(rows), db, SampleTable)
     graft.store.Warehouse.saveModel(
       rows.groupBy("day").agg(count(lit(1)).as("n_total")), db, TotalsTable)
-    setWm(events.sparkSession, db, events)
+    Fence.boundsOf(events)
+      .foreach(b => Fence.advance(events.sparkSession, db, b.hi))
   }
 
   /** Fold one batch: per-day `bottomK(stored ∪ bottomK(batch))` + added
-    * totals. Fence-first — totals are additive, so a replay must refuse.
+    * totals.
     */
   def appendDaySamples(s: SparkSession, batch: DataFrame,
                        db: String = Db): Unit = {
-    val bWm = batch.agg(min(struct(col("ts"), col("event_id")))).head
-    if (bWm.isNullAt(0)) return
-    val wmTs = graft.store.Warehouse.readTablePropLong(s, db, SampleTable,
-      WmTsProp, "rebuild with buildDaySamples before appending")
-    val wmEid = graft.store.Warehouse.readTablePropLong(s, db, SampleTable,
-      WmEidProp, "rebuild with buildDaySamples before appending")
-    val (bTs, bEid) = (bWm.getStruct(0).getLong(0), bWm.getStruct(0).getLong(1))
-    require(bTs > wmTs || (bTs == wmTs && bEid > wmEid),
-      s"appendDaySamples: batch min (ts=$bTs, event_id=$bEid) is not past " +
-        s"the stored watermark (ts=$wmTs, event_id=$wmEid) — replayed or " +
-        "out-of-order batches are refused (totals would double); " +
-        "re-anchor with buildDaySamples")
-    setWm(s, db, batch)
+    val bounds = Fence.check("appendDaySamples", s, db, batch)
+    if (bounds.isEmpty) return
+    Fence.advance(s, db, bounds.get.hi)
     val rows = rowsOf(batch)
     val deltaSamples = bottomK(rows).localCheckpoint()
     val deltaTotals = rows.groupBy("day").agg(count(lit(1)).as("n_total"))

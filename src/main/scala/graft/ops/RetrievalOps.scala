@@ -65,6 +65,9 @@ object RetrievalOps {
     * max doc_id makes it loud instead.
     */
   val MaxDocProp = "graft.bm25.max_doc_id"
+  private[graft] val Bm25Fence = graft.pipeline.FencedAppend.Fence(
+    Some(PostingsTable), Seq("doc_id" -> MaxDocProp),
+    graft.pipeline.FencedAppend.Lo, Some("buildBm25Index"))
 
   val DlScale = 1000L
   val TfScale = 1000000L
@@ -130,10 +133,6 @@ object RetrievalOps {
     s.sql(s"ALTER TABLE ${fqn(db, PostingsTable)} SET TBLPROPERTIES " +
       s"('$BucketsProp' = '$NumBuckets', '$MaxDocProp' = '$maxDoc')")
   }
-
-  private[graft] def readIndexProp(s: SparkSession, db: String,
-                                   prop: String): Long =
-    readProp(s, db, prop)
 
   /** Tokenize + count a batch and append its postings rows (layout columns
     * included). Exposed for the streaming ingest, whose caller pre-filters
@@ -281,11 +280,6 @@ object RetrievalOps {
   /** Fold a new document batch into the stored index. tf/dl rows are
     * per-doc facts → pure partitioned appends; df and totals are ADDITIVE
     * → vocab-sized / 1-row rewrites. The base corpus is never re-read.
-    * Append-only fence: the batch's min doc_id must clear the stored max
-    * (a replay would double counts); the property advances only AFTER the
-    * rewrites commit, so a crashed append refuses its own retry loudly
-    * rather than double-counting (refusal beats silent corruption — the
-    * cluster-append contract).
     */
   def appendToBm25Index(s: SparkSession, db: String, docs: DataFrame,
                         midHook: () => Unit = () => ()): Unit = {
@@ -307,21 +301,9 @@ object RetrievalOps {
     val nb = readProp(s, db, BucketsProp)
     require(nb == NumBuckets,
       s"stored index bucketed mod $nb but this build buckets mod $NumBuckets")
-    val maxDoc = readProp(s, db, MaxDocProp)
-    val batchMin = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    require(!batchMin.isNullAt(0), "empty batch — nothing to append")
-    require(batchMin.getLong(0) > maxDoc,
-      s"batch min doc_id ${batchMin.getLong(0)} does not clear the stored " +
-        s"max $maxDoc — replayed or overlapping batch refused (counts " +
-        "would double silently)")
-    // fence FIRST: a crash anywhere in the writes below leaves the fence
-    // already advanced, so the retry is REFUSED loudly (re-anchor via the
-    // cron re-index) instead of re-running the non-idempotent appends and
-    // silently double-counting — the refusal-beats-corruption contract
-    // the scaladoc promises (the streaming path instead keeps fence-last
-    // + row-idempotent writes, which absorb its retries exactly)
-    s.sql(s"ALTER TABLE ${fqn(db, PostingsTable)} SET TBLPROPERTIES " +
-      s"('$MaxDocProp' = '${batchMin.getLong(1)}')")
+    val bounds = Bm25Fence.check("appendToBm25Index", s, db, docs)
+    require(bounds.nonEmpty, "empty batch — nothing to append")
+    Bm25Fence.advance(s, db, bounds.get.hi)
     appendPostingsRows(s, db, docs)
     appendDocLenRows(s, db, docs)
     val batchDf = withTokens(docs)
@@ -360,6 +342,8 @@ object RetrievalOps {
     * postings (modulus + max-doc fence frozen as table properties).
     */
   val PositionsTable = "bm25_positions"
+  private[graft] val PhraseFence = Bm25Fence.copy(
+    table = Some(PositionsTable), rebuild = Some("buildPhraseIndex"))
 
   def buildPhraseIndex(docs: DataFrame, db: String): Unit = {
     val s = docs.sparkSession
@@ -439,26 +423,16 @@ object RetrievalOps {
     phraseSearchFromIndex(s, d, "graft_phrase_q")
   }
 
-  /** Positional rows are per-doc facts → pure partitioned append behind
-    * the same loud append-only fence as [[appendToBm25Index]].
-    */
+  /** Positional rows are per-doc facts → pure partitioned append. */
   def appendToPhraseIndex(s: SparkSession, db: String,
                           docs: DataFrame): Unit = {
     val nb = readPosProp(s, db, BucketsProp)
     require(nb == NumBuckets,
       s"stored index bucketed mod $nb but this build buckets mod $NumBuckets")
-    val maxDoc = readPosProp(s, db, MaxDocProp)
-    val bounds = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    require(!bounds.isNullAt(0), "empty batch — nothing to append")
-    require(bounds.getLong(0) > maxDoc,
-      s"batch min doc_id ${bounds.getLong(0)} does not clear the stored " +
-        s"max $maxDoc — replayed or overlapping batch refused (duplicate " +
-        "position rows would double phrase counts silently)")
+    val bounds = PhraseFence.check("appendToPhraseIndex", s, db, docs)
+    require(bounds.nonEmpty, "empty batch — nothing to append")
+    PhraseFence.advance(s, db, bounds.get.hi)
     val target = fqn(db, PositionsTable)
-    // fence FIRST (see appendToBm25Index): a crashed append's retry must
-    // refuse loudly, never re-append position rows
-    s.sql(s"ALTER TABLE $target SET TBLPROPERTIES " +
-      s"('$MaxDocProp' = '${bounds.getLong(1)}')")
     withTokens(docs)
       .select(col("doc_id"), posexplode(col("tokens")).as(Seq("p0", "w")))
       .select(col("w"), col("doc_id"), (col("p0") + 1).as("pos"), bktCol)

@@ -25,11 +25,6 @@ import org.apache.spark.sql.expressions.Window
   * rewrites. That is the 100 TB shape — per batch cost is O(batch) work
   * plus one bounded rewrite of the current partition, while the unbounded
   * closed partition is never read or rewritten by an append.
-  *
-  * Fence posture (the BM25-append lesson): the (ts, event_id) watermark
-  * advances BEFORE the non-idempotent closed-partition append, so a
-  * crashed batch's replay refuses loudly instead of double-appending;
-  * [[scd2RebuildEntry]] is the recovery re-anchor.
   */
 object ScdOps {
 
@@ -37,6 +32,9 @@ object ScdOps {
   val HistTable = "user_status_history"
   val WmTsProp = "graft.scd2.wm_ts"
   val WmEidProp = "graft.scd2.wm_event_id"
+  private[graft] val Fence = graft.pipeline.FencedAppend.Fence(
+    Some(HistTable), Seq("ts" -> WmTsProp, "event_id" -> WmEidProp),
+    graft.pipeline.FencedAppend.Lo, Some("buildScd2"))
 
   private def fqn(db: String) = s"`$db`.`$HistTable`"
 
@@ -83,18 +81,13 @@ object ScdOps {
     * scheduled re-anchor for the append path.
     */
   def buildScd2(feed: DataFrame, db: String = Db): Unit = {
-    val s = feed.sparkSession
     val hist = history(feed)
       .withColumn("closed", (lit(1) - col("is_current")).cast("int"))
       .drop("is_current")
     graft.store.Warehouse.saveModel(hist, db, HistTable,
       partitionCols = Seq("closed"))
-    val wm = feed.agg(max(struct(col("ts"), col("event_id")))).head
-    val (wmTs, wmEid) =
-      if (wm.isNullAt(0)) (Long.MinValue, Long.MinValue)
-      else (wm.getStruct(0).getLong(0), wm.getStruct(0).getLong(1))
-    s.sql(s"ALTER TABLE ${fqn(db)} SET TBLPROPERTIES " +
-      s"('$WmTsProp'='$wmTs', '$WmEidProp'='$wmEid')")
+    Fence.advance(feed.sparkSession, db, Fence.boundsOf(feed)
+      .fold(Seq(Long.MinValue, Long.MinValue))(_.hi))
   }
 
   /** Fold one change-feed batch into the stored history.
@@ -110,23 +103,9 @@ object ScdOps {
     */
   def applyScd2Batch(s: SparkSession, batch0: DataFrame, db: String = Db): Unit = {
     val batch = changeFeedShape(batch0)
-    val bWm = batch.agg(min(struct(col("ts"), col("event_id")))).head
-    if (bWm.isNullAt(0)) return // empty batch: nothing to fold
-    val wmTs = graft.store.Warehouse.readTablePropLong(s, db, HistTable,
-      WmTsProp, "rebuild with buildScd2 before appending")
-    val wmEid = graft.store.Warehouse.readTablePropLong(s, db, HistTable,
-      WmEidProp, "rebuild with buildScd2 before appending")
-    val (bTs, bEid) = (bWm.getStruct(0).getLong(0), bWm.getStruct(0).getLong(1))
-    require(bTs > wmTs || (bTs == wmTs && bEid > wmEid),
-      s"applyScd2Batch: batch min (ts=$bTs, event_id=$bEid) is not past the " +
-        s"stored watermark (ts=$wmTs, event_id=$wmEid) — out-of-order or " +
-        "replayed batches are refused (a replay would double-append closed " +
-        "rows); re-anchor with scd2RebuildEntry")
-    // fence advances FIRST: a crash between here and the writes makes the
-    // retry refuse loudly instead of double-appending (BM25 posture)
-    val nWm = batch.agg(max(struct(col("ts"), col("event_id")))).head.getStruct(0)
-    s.sql(s"ALTER TABLE ${fqn(db)} SET TBLPROPERTIES " +
-      s"('$WmTsProp'='${nWm.getLong(0)}', '$WmEidProp'='${nWm.getLong(1)}')")
+    val bounds = Fence.check("applyScd2Batch", s, db, batch)
+    if (bounds.isEmpty) return // empty batch: nothing to fold
+    Fence.advance(s, db, bounds.get.hi)
 
     val affected = batch.select("user_id").distinct()
     val current = s.table(fqn(db)).where(col("closed") === 0)

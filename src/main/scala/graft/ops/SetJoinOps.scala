@@ -234,6 +234,9 @@ object SetJoinOps {
   val NumBuckets = 32
   val BucketsProp = "graft.jaccard.buckets"
   val MaxDocProp = "graft.jaccard.max_doc"
+  private[graft] val JaccardFence = graft.pipeline.FencedAppend.Fence(
+    Some(PrefixTable), Seq("doc_id" -> MaxDocProp),
+    graft.pipeline.FencedAppend.Lo, Some("buildJaccardIndex"))
 
   private def fqn(db: String, table: String) = s"`$db`.`$table`"
 
@@ -350,22 +353,14 @@ object SetJoinOps {
     incrementalPairs(pruned, batchSh).orderBy("doc_a", "doc_b")
   }
 
-  /** Append a batch behind the append-only fence: shingle/size/prefix
-    * rows land; the FROZEN order is deliberately untouched (absent
-    * shingles stay df = 0 forever — order stability is what keeps every
-    * future probe exact). Fence advances last.
+  /** Append a batch: shingle/size/prefix rows land; the FROZEN order is
+    * deliberately untouched (absent shingles stay df = 0 forever — order
+    * stability is what keeps every future probe exact).
     */
   def appendToJaccardIndex(s: SparkSession, db: String,
                            batch: DataFrame): Unit = {
-    val fence = graft.store.Warehouse.readTablePropLong(s, db, PrefixTable,
-      MaxDocProp, "rebuild the jaccard index (buildJaccardIndex)")
-    val bounds = batch.agg(min("doc_id").as("lo"), max("doc_id").as("hi"))
-      .head()
-    if (bounds.isNullAt(0)) return
-    require(bounds.getLong(0) > fence,
-      s"appendToJaccardIndex: batch ids [${bounds.getLong(0)}..] overlap " +
-        s"the fence $fence — replay or id reuse; refuse rather than " +
-        "double-append")
+    val bounds = JaccardFence.check("appendToJaccardIndex", s, db, batch)
+    if (bounds.isEmpty) return
     val idx = storedIndex(s, db)
     val batchSh = PlanCache.swap("jac_append_sh", docShingles(batch))
     batchSh.select(s.table(fqn(db, ShinglesTable)).columns.map(col)
@@ -378,7 +373,6 @@ object SetJoinOps {
       .withColumn("bkt", pmod(xxhash64(col("sh")), lit(NumBuckets)))
       .select(s.table(fqn(db, PrefixTable)).columns.map(col).toIndexedSeq: _*)
       .write.mode("append").insertInto(fqn(db, PrefixTable))
-    s.sql(s"ALTER TABLE ${fqn(db, PrefixTable)} SET TBLPROPERTIES " +
-      s"('$MaxDocProp' = '${bounds.getLong(1)}')")
+    JaccardFence.advance(s, db, bounds.get.hi)
   }
 }

@@ -180,6 +180,9 @@ object TimeSeriesOps {
   val HistTable = "value_hist"
   val WmTsProp = "graft.tshist.wm_ts"
   val WmEidProp = "graft.tshist.wm_event_id"
+  private[graft] val HistFence = graft.pipeline.FencedAppend.Fence(
+    Some(HistTable), Seq("ts" -> WmTsProp, "event_id" -> WmEidProp),
+    graft.pipeline.FencedAppend.Lo, Some("buildValueHistogram"))
 
   private def fqn(db: String) = s"`$db`.`$HistTable`"
 
@@ -191,39 +194,19 @@ object TimeSeriesOps {
     centsOf(events).groupBy("event_type", "cents")
       .agg(count(lit(1)).as("cnt"))
 
-  private def setWm(s: SparkSession, db: String, feed: DataFrame): Unit = {
-    val wm = feed.agg(max(struct(col("ts"), col("event_id")))).head
-    if (!wm.isNullAt(0))
-      s.sql(s"ALTER TABLE ${fqn(db)} SET TBLPROPERTIES " +
-        s"('$WmTsProp'='${wm.getStruct(0).getLong(0)}', " +
-        s"'$WmEidProp'='${wm.getStruct(0).getLong(1)}')")
-  }
-
   /** Full build — the scheduled re-anchor for the append path. */
   def buildValueHistogram(events: DataFrame, db: String = Db): Unit = {
     graft.store.Warehouse.saveModel(histOf(events), db, HistTable)
-    setWm(events.sparkSession, db, events)
+    HistFence.boundsOf(events)
+      .foreach(b => HistFence.advance(events.sparkSession, db, b.hi))
   }
 
-  /** Additive fold of one batch. Fence-first (the SCD2/BM25 posture): the
-    * histogram rewrite is not idempotent, so a crashed batch's replay
-    * refuses loudly and [[buildValueHistogram]] re-anchors.
-    */
+  /** Additive fold of one batch. */
   def appendValueHistogram(s: SparkSession, batch: DataFrame,
                            db: String = Db): Unit = {
-    val bWm = batch.agg(min(struct(col("ts"), col("event_id")))).head
-    if (bWm.isNullAt(0)) return
-    val wmTs = graft.store.Warehouse.readTablePropLong(s, db, HistTable,
-      WmTsProp, "rebuild with buildValueHistogram before appending")
-    val wmEid = graft.store.Warehouse.readTablePropLong(s, db, HistTable,
-      WmEidProp, "rebuild with buildValueHistogram before appending")
-    val (bTs, bEid) = (bWm.getStruct(0).getLong(0), bWm.getStruct(0).getLong(1))
-    require(bTs > wmTs || (bTs == wmTs && bEid > wmEid),
-      s"appendValueHistogram: batch min (ts=$bTs, event_id=$bEid) is not " +
-        s"past the stored watermark (ts=$wmTs, event_id=$wmEid) — replayed " +
-        "or out-of-order batches are refused (additive counts would " +
-        "double); re-anchor with buildValueHistogram")
-    setWm(s, db, batch)
+    val bounds = HistFence.check("appendValueHistogram", s, db, batch)
+    if (bounds.isEmpty) return
+    HistFence.advance(s, db, bounds.get.hi)
     val delta = histOf(batch).localCheckpoint()
     graft.store.Warehouse.rewriteVia(s, db, HistTable)(stored =>
       stored.unionByName(delta)

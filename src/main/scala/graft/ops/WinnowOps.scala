@@ -117,6 +117,9 @@ object WinnowOps {
   val NBuckets = 32
   val BucketsProp = "graft.winnow.n_buckets"
   val MaxDocProp = "graft.winnow.max_doc_id"
+  private[graft] val Fence = graft.pipeline.FencedAppend.Fence(
+    Some(IndexTable), Seq("doc_id" -> MaxDocProp),
+    graft.pipeline.FencedAppend.Hi, Some("buildPrintIndex"))
 
   private def fqn(db: String) = s"`$db`.`$IndexTable`"
 
@@ -175,20 +178,14 @@ object WinnowOps {
 
   /** Row-idempotent append behind the stats-pruned anti-join (the BM25
     * freshDocs posture): a crashed append's redelivery lands exactly the
-    * missing rows; the id fence advances AFTER the write and refuses
-    * full replays and out-of-order batches.
+    * missing rows.
     */
   def appendToPrintIndex(s: SparkSession, batch: DataFrame,
                          db: String = IndexDb): Unit = {
     val nb = frozenBuckets(s, db)
-    val bounds = batch.agg(min("doc_id"), max("doc_id")).head
-    if (bounds.isNullAt(0)) return
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val storedMax = graft.store.Warehouse.readTablePropLong(s, db,
-      IndexTable, MaxDocProp, "rebuild with buildPrintIndex")
-    require(hi > storedMax,
-      s"appendToPrintIndex: batch max doc_id $hi <= ingested max " +
-        s"$storedMax — out-of-order ingest refused (append-only contract)")
+    val bounds = Fence.check("appendToPrintIndex", s, db, batch)
+    if (bounds.isEmpty) return
+    val (lo, hi) = (bounds.get.lo.head, bounds.get.hi.head)
     val existing = s.table(fqn(db))
       .where(col("doc_id").between(lo, hi))
       .select("doc_id").distinct()
@@ -196,7 +193,7 @@ object WinnowOps {
       .join(existing, Seq("doc_id"), "left_anti")
       .select("doc_id", "h", "bucket") // table column order
     fresh.write.mode("append").insertInto(fqn(db))
-    s.sql(s"ALTER TABLE ${fqn(db)} SET TBLPROPERTIES ('$MaxDocProp'='$hi')")
+    Fence.advance(s, db, Seq(hi))
   }
 
   /** Gate `q_copy_incremental`: index the ingested corpus split, probe

@@ -55,11 +55,8 @@ object Bm25Ingest {
   }
 
   private[graft] val IngestFamily = FencedAppend.Family(
-    name = "bm25IngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
-    fence = FencedAppend.Fence(FencedAppend.Hi,
-      (s, db) => Some(RetrievalOps.readIndexProp(s, db, RetrievalOps.MaxDocProp)),
-      (s, db, hi) => s.sql(s"ALTER TABLE ${fqn(db, RetrievalOps.PostingsTable)} " +
-        s"SET TBLPROPERTIES ('${RetrievalOps.MaxDocProp}' = '$hi')")),
+    name = "bm25IngestBatch", ledgerBase = LastEpochProp,
+    fence = RetrievalOps.Bm25Fence.copy(bound = FencedAppend.Hi),
     prepare = (s, db) =>
       require(s.catalog.tableExists(s"$db.${RetrievalOps.PostingsTable}"),
         s"bm25IngestBatch: no BM25 index in `$db` — buildBm25Index first"),

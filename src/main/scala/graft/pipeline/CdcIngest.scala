@@ -56,11 +56,10 @@ object CdcIngest {
   }
 
   private[graft] val IngestFamily = FencedAppend.Family(
-    name = "cdcIngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
-    fence = FencedAppend.Fence(FencedAppend.Hi,
-      (s, db) => Some(ChunkOps.readIndexProp(s, db, ChunkOps.MaxDocProp)),
-      (s, db, hi) => ChunkOps.setIndexProp(s, db, ChunkOps.MaxDocProp,
-        hi.toString)),
+    name = "cdcIngestBatch", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(Some(ChunkOps.ChunkIndexTable),
+      Seq("doc_id" -> ChunkOps.MaxDocProp), FencedAppend.Hi,
+      Some("buildChunkIndex")),
     prepare = (s, db) =>
       require(s.catalog.tableExists(s"$db.${ChunkOps.ChunkIndexTable}"),
         s"cdcIngestBatch: no chunk index in `$db` — buildChunkIndex first"),

@@ -143,9 +143,7 @@ object CorpusPipeline {
       : Option[(String, String, String)] =
     if (!s.catalog.tableExists(s"$db.$stage")) None
     else {
-      val props = s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(stage, Some(db)))
-        .properties
+      val props = Warehouse.tableProps(s, db, stage)
       props.get(LineageKeyProp).map(k =>
         (k, props.getOrElse(LineageProp, ""),
           props.getOrElse(LineageStampProp, "")))
@@ -443,8 +441,8 @@ object CorpusPipeline {
     // seed the streaming-ingest append-only guard from this run's corpus
     // (remix-mode runs leave the stream-advanced value untouched)
     if (refreshAux && results.exists(!_.skipped))
-      Option(docs.agg(max("doc_id")).head.get(0))
-        .foreach(m => setDbProp(s, db, MaxDocIdProp, m.toString))
+      IngestFamily.fence.boundsOf(docs)
+        .foreach(b => IngestFamily.fence.advance(s, db, b.hi))
     results
   }
 
@@ -677,7 +675,7 @@ object CorpusPipeline {
     // without this a later ingest batch with ids in (threshold, maxId]
     // would pass the guard and re-ingest already-present docs, breaking
     // the keep-lowest immutability the guard protects
-    setDbProp(s, db, MaxDocIdProp, maxId.toString)
+    IngestFamily.fence.advance(s, db, Seq(maxId))
 
     Stages.map(st => StageResult(st, skipped = false, incKeys(st)))
   }
@@ -792,8 +790,8 @@ object CorpusPipeline {
     val props = dbProps(s, db)
     props.get(epochProp(b.srcTag)).forall(_.isEmpty) && {
       val legacy = props.get(LastEpochProp).filter(_.nonEmpty).map(_.toLong)
-      val ingested = props.get(MaxDocIdProp).filter(_.nonEmpty).map(_.toLong)
-      legacy.exists(_ >= b.epochId) && ingested.exists(b.hi <= _) && {
+      legacy.exists(_ >= b.epochId) &&
+        IngestFamily.fence.holds(s, db, Seq(b.hi)) && {
         // A new stream starts at epoch 0, so `legacyEpoch >= epochId`
         // alone proves little — demand CONTENT proof too: every text
         // hash of the batch must already sit in the persisted hash
@@ -845,10 +843,9 @@ object CorpusPipeline {
     * ledger is the content proof.
     */
   private[graft] val IngestFamily = FencedAppend.Family(
-    name = "corpusIngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
-    fence = FencedAppend.Fence(FencedAppend.Lo,
-      (s, db) => FencedAppend.storedLong(s, db, MaxDocIdProp),
-      (s, db, hi) => setDbProp(s, db, MaxDocIdProp, hi.toString)),
+    name = "corpusIngestBatch", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(None, Seq("doc_id" -> MaxDocIdProp),
+      FencedAppend.Lo, None),
     prepare = Warehouse.ensureDatabase,
     stages = b => Seq(
       "s1_s2" -> (() => appendS12(b.s, b.db, b.frame, b.lease, b.pin)),

@@ -64,11 +64,9 @@ object DeltaModelIngest {
   private def ledgerPropOf(fam: Family, srcTag: String): String =
     s"graft.delta.epoch.${fam.base}.${digest(srcTag)}"
 
-  private[graft] def generation(s: SparkSession, fam: Family): Long = {
-    val rows = s.sql(s"SHOW TBLPROPERTIES `${fam.db}`.`${fam.base}`")
-      .filter(col("key") === GenProp).select("value").collect()
-    if (rows.isEmpty) 0L else rows(0).getString(0).toLong
-  }
+  private[graft] def generation(s: SparkSession, fam: Family): Long =
+    graft.store.Warehouse.tableProps(s, fam.db, fam.base).get(GenProp)
+      .fold(0L)(_.toLong)
 
   private def prefix(fam: Family, gen: Long): String =
     s"${fam.base}_dl_g${gen}_"
@@ -79,12 +77,9 @@ object DeltaModelIngest {
       .map(_.name).filter(_.startsWith(prefix(fam, gen))).toSeq
 
   private def coversOf(s: SparkSession, fam: Family,
-                       combined: String): Set[String] = {
-    val rows = s.sql(s"SHOW TBLPROPERTIES `${fam.db}`.`$combined`")
-      .filter(col("key") === CoversProp).select("value").collect()
-    if (rows.isEmpty) Set.empty
-    else rows(0).getString(0).split(",").filter(_.nonEmpty).toSet
-  }
+                       combined: String): Set[String] =
+    graft.store.Warehouse.tableProps(s, fam.db, combined).get(CoversProp)
+      .fold(Set.empty[String])(_.split(",").filter(_.nonEmpty).toSet)
 
   /** The serving state: (current done combined if any, included plain
     * deltas) for the base's current generation.

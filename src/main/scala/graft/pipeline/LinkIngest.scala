@@ -109,11 +109,9 @@ object LinkIngest {
   }
 
   private[graft] val IngestFamily = FencedAppend.Family(
-    name = "linkIngestBatch", idCol = "doc_id", ledgerBase = LastEpochProp,
-    fence = FencedAppend.Fence(FencedAppend.Hi,
-      (s, db) => Some(FencedAppend.storedLong(s, db, MaxDocProp).getOrElse(
-        sys.error(s"linkIngestBatch: `$db` carries no $MaxDocProp fence"))),
-      (s, db, hi) => CorpusPipeline.setDbProp(s, db, MaxDocProp, hi.toString)),
+    name = "linkIngestBatch", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(None, Seq("doc_id" -> MaxDocProp),
+      FencedAppend.Hi, Some("buildLinkFacts")),
     prepare = (s, db) =>
       require(s.catalog.tableExists(s"$db.$LinkFactsTable"),
         s"linkIngestBatch: no link facts in `$db` — buildLinkFacts first"),

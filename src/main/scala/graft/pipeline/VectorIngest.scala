@@ -72,10 +72,9 @@ object VectorIngest {
   }
 
   private[graft] val IngestFamily = FencedAppend.Family(
-    name = "vectorIngestBatch", idCol = "vec_id", ledgerBase = LastEpochProp,
-    fence = FencedAppend.Fence(FencedAppend.Lo,
-      (s, db) => FencedAppend.storedLong(s, db, MaxVecIdProp),
-      (s, db, hi) => CorpusPipeline.setDbProp(s, db, MaxVecIdProp, hi.toString)),
+    name = "vectorIngestBatch", ledgerBase = LastEpochProp,
+    fence = FencedAppend.Fence(None, Seq("vec_id" -> MaxVecIdProp),
+      FencedAppend.Lo, None),
     prepare = graft.store.Warehouse.ensureDatabase,
     stages = familyStages)
 

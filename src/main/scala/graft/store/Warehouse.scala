@@ -198,18 +198,23 @@ object Warehouse {
         .filter(!_.isTemporary)
         .foreach(t => spark.catalog.refreshTable(s"`$db`.`${t.name}`"))
 
-  /** Read a frozen layout property (bucket modulus, append fence, …) off
-    * a table, refusing LOUDLY when absent — the shared contract of every
+  /** A table's properties, off the session catalog: the one way a
+    * stored table's frozen layout, fence, lineage or ledger is read.
+    */
+  def tableProps(spark: SparkSession, db: String,
+                 table: String): Map[String, String] =
+    tableMeta(spark, db, table).properties
+
+  /** Read a frozen layout property (bucket modulus, …) off a table,
+    * refusing LOUDLY when absent — the shared contract of every
     * stored-index family: a layout parameter the builder froze must never
     * be guessed.
     */
   def readTablePropLong(spark: SparkSession, db: String, table: String,
                         prop: String, hint: String): Long = {
-    val rows = spark.sql(s"SHOW TBLPROPERTIES `$db`.`$table`")
-      .filter(org.apache.spark.sql.functions.col("key") === prop)
-      .select("value").collect()
-    require(rows.nonEmpty, s"$prop missing on $db.$table — $hint")
-    rows(0).getString(0).toLong
+    val v = tableProps(spark, db, table).get(prop)
+    require(v.nonEmpty, s"$prop missing on $db.$table — $hint")
+    v.get.toLong
   }
 
   /** A14 — model-output sink (dbt CTAS, materialized='table'). Partition

@@ -625,9 +625,8 @@ object StreamingOps {
   private def foldOnce(b: DataFrame, db: String, table: String, prop: String,
                        epochId: Long, what: String)(fold: => Unit): Unit = {
     val s = b.sparkSession
-    val stored = s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
-      .properties.get(prop).filter(_.nonEmpty).map(_.toLong)
+    val stored = graft.store.Warehouse.tableProps(s, db, table)
+      .get(prop).filter(_.nonEmpty).map(_.toLong)
     if (!committedReplay(stored, epochId, what)) {
       fold
       s.sql(s"ALTER TABLE `$db`.`$table` SET TBLPROPERTIES " +
@@ -737,13 +736,9 @@ object StreamingOps {
         "run IncrementalDedup.buildIndexFrom over the same corpus first")
     foldOnce(b, db, IncrementalClusters.LabelsTable, ClusterEpochProp,
         epochId, "sinkIncrementalClusters") {
-      val storedMax = s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          IncrementalClusters.LabelsTable, Some(db))).properties
-        .get(IncrementalClusters.MaxDocIdProp)
-        .map(_.toLong).getOrElse(Long.MinValue)
-      val bMin = b.agg(min("doc_id")).head.getLong(0)
-      val redelivery = bMin <= storedMax && {
+      val fence = IncrementalClusters.Fence
+      val redelivery =
+        fence.boundsOf(b).exists(bb => fence.holds(s, db, bb.lo)) && {
         // content proof, paid only when the loud guard WOULD fire: every
         // batch id already labeled ⇒ the cluster fold landed pre-crash
         b.select("doc_id").join(s.table(labelsFqn).select("doc_id"),

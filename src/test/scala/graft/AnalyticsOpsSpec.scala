@@ -729,6 +729,36 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(got === Array(("B", 2L, 1572864L)))
   }
 
+  test("trending store: a fold that crashed after its swap refuses its " +
+      "retry and serves the crash-free scores") {
+    val d0 = java.sql.Timestamp.valueOf("2020-01-01 00:00:00")
+    val d20 = java.sql.Timestamp.valueOf("2020-01-21 00:00:00")
+    val dir = java.nio.file.Files.createTempDirectory("trcrash").toString
+    Seq((1L, d0), (2L, d20), (3L, d20)).toDF("o_orderkey", "o_orderdate")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    Seq((10L, "A"), (11L, "B")).toDF("p_partkey", "p_brand")
+      .write.mode("overwrite").parquet(s"$dir/part.parquet")
+    Seq((1L, 10L), (2L, 11L), (3L, 11L)).toDF("l_orderkey", "l_partkey")
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    def served(): Seq[(String, Long, Long)] =
+      BasketOps.servedTrending(spark).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    spark.sql(s"DROP DATABASE IF EXISTS `${BasketOps.Db}` CASCADE")
+    BasketOps.buildTrending(spark, dir, 1L)
+    BasketOps.appendTrending(spark, dir, 3L)
+    val crashFree = served()
+    spark.sql(s"DROP DATABASE IF EXISTS `${BasketOps.Db}` CASCADE")
+    BasketOps.buildTrending(spark, dir, 1L)
+    StagedSwapSpec.crashAfter("appended")(
+      BasketOps.appendTrending(spark, dir, 3L))
+    assert(graft.store.Warehouse.recover(spark, BasketOps.Db, BasketOps.Table))
+    val e = intercept[IllegalArgumentException] {
+      BasketOps.appendTrending(spark, dir, 3L)
+    }
+    assert(e.getMessage.contains("watermark"))
+    assert(served() === crashFree)
+  }
+
   test("dedup cluster stats: sizes partition the corpus") {
     val stats = graft.ops.GraphOps.dedupClusterStats(spark, sf).collect()
     val docs = graft.Tables.t(spark, sf, "documents").count()

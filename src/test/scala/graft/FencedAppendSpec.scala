@@ -161,13 +161,15 @@ class FencedAppendSpec extends SparkSpec {
                      onStage: (FencedAppend.Batch, String) => Unit = (_, _) => (),
                      fenceWrite: () => Unit = () => ()) =
     FencedAppend.Family(
-      name = "loggedAppend", idCol = "id", ledgerBase = LedgerBase,
-      fence = FencedAppend.Fence(FencedAppend.Lo,
-        (s, db) => FencedAppend.storedLong(s, db, FenceProp),
-        (s, db, hi) => {
+      name = "loggedAppend", ledgerBase = LedgerBase,
+      fence = new FencedAppend.Fence(None, Seq("id" -> FenceProp),
+          FencedAppend.Lo, None) {
+        override def advance(s: org.apache.spark.sql.SparkSession,
+                             db: String, to: Seq[Long]): Unit = {
           fenceWrite()
-          CorpusPipeline.setDbProp(s, db, FenceProp, hi.toString)
-        }),
+          super.advance(s, db, to)
+        }
+      },
       prepare = graft.store.Warehouse.ensureDatabase,
       stages = b => Seq("a", "b").map(st =>
         st -> (() => { ran += st; onStage(b, st) })))
