@@ -460,14 +460,14 @@ object PerfProbe {
       val scaled = TempDirs.create(s"graft-emb-serve-k$k")
       println(s"building ${k}x embeddings at $scaled ...")
       buildScaledEmbeddings(spark, d, scaled, k)
-      import graft.ops.VectorOps
+      import graft.ops.{AnnFamily, VectorOps}
       def measure(dir: String, label: String): (Double, Double, Double) = {
         val db = s"serve_probe_$label"
         spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
         val emb = Tables.t(spark, dir, "embeddings")
         val tb0 = System.nanoTime()
-        VectorOps.buildIvfPqIndex(emb, db)
-        VectorOps.buildSqIndex(emb, db)
+        VectorOps.build(AnnFamily.IvfPq, emb, db)
+        VectorOps.build(AnnFamily.Sq, emb, db)
         val build = (System.nanoTime() - tb0) / 1e9
         def t(f: => Unit): Double = {
           // warm run: JIT + file-cache warmth only. Each invocation
@@ -480,8 +480,8 @@ object PerfProbe {
           val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
         }
         (build,
-          t(VectorOps.ivfPqCosineTopkFromIndex(spark, dir, db).count()),
-          t(VectorOps.sqCosineTopkFromIndex(spark, dir, db).count()))
+          t(VectorOps.topkFromIndex(AnnFamily.IvfPq, spark, dir, db).count()),
+          t(VectorOps.topkFromIndex(AnnFamily.Sq, spark, dir, db).count()))
       }
       val (b1, p1, s1) = measure(d, "1x")
       val (bk, pk, sk) = measure(scaled, s"${k}x")
@@ -507,24 +507,24 @@ object PerfProbe {
           r.getAs[Long]("neighbor_id"))).toSet
       println(f"${"S"}%3s ${"recall@5"}%9s ${"build_s"}%8s ${"search_s"}%9s " +
         f"${"maxCells"}%9s ${"maxCands"}%9s  (n=$nVecs)")
+      import graft.ops.{AnnFamily, VectorOps}
       for (s <- Seq(1, 2, 4, 8)) {
         val db = s"ivf_shard_probe_$s"
         val t0 = System.nanoTime()
-        graft.ops.VectorOps.buildShardedIvfIndex(emb, db, s)
+        VectorOps.build(AnnFamily.Ivf, emb, db, s)
         val buildS = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        val got = graft.ops.VectorOps
-          .ivfCosineTopkFromShardedIndex(spark, scaled, db, s).collect()
+        val got = VectorOps.topkFromIndex(AnnFamily.Ivf, spark, scaled, db)
+          .collect()
         val searchS = (System.nanoTime() - t1) / 1e9
         val mine = got.map(r => (r.getAs[Long]("probe_id"),
           r.getAs[Long]("neighbor_id"))).toSet
         val recall = (exact intersect mine).size.toDouble / exact.size
         // driver bound: largest per-shard centroid matrix (rows = cells)
-        val maxCells = (0 until s).map(sh => spark.table(
-          s"`$db`.`${graft.ops.VectorOps.IvfCentroidsTable}_$sh`").count()).max
+        val maxCells = VectorOps.layout(spark, db, AnnFamily.Ivf).map(sfx =>
+          spark.table(s"`$db`.`${VectorOps.IvfCentroidsTable}$sfx`").count()).max
         // merge skew: per-probe candidate volume across the shard union
-        val cands = graft.ops.VectorOps
-          .shardedCandidatesPerProbe(spark, scaled, db, s)
+        val cands = VectorOps.shardedCandidatesPerProbe(spark, scaled, db)
           .agg(max("n_cands"), min("n_cands")).head
         println(f"$s%3d $recall%9.2f $buildS%8.2f $searchS%9.2f " +
           f"$maxCells%9d ${cands.getLong(0)}%9d  (min ${cands.getLong(1)})")
@@ -533,15 +533,14 @@ object PerfProbe {
       // vector probes every shard (S× fan-out) — wall and pair volume vs
       // the single-index dedup baseline
       val t2 = System.nanoTime()
-      val basePairs = graft.ops.VectorOps.ivfSemanticDedupPairs(emb,
-        graft.ops.VectorOps.CosineDupThreshold).count()
+      val basePairs = VectorOps.ivfSemanticDedupPairs(emb,
+        VectorOps.CosineDupThreshold).count()
       println(f"dedup S=1 (in-session): $basePairs%6d pairs " +
         f"${(System.nanoTime() - t2) / 1e9}%8.2f s")
       for (s <- Seq(2, 4, 8)) {
         val t3 = System.nanoTime()
-        val n = graft.ops.VectorOps
-          .ivfSemanticDedupFromShardedIndex(spark, s"ivf_shard_probe_$s", s)
-          .count()
+        val n = VectorOps
+          .ivfSemanticDedupFromIndex(spark, s"ivf_shard_probe_$s").count()
         println(f"dedup S=$s:              $n%6d pairs " +
           f"${(System.nanoTime() - t3) / 1e9}%8.2f s")
       }

@@ -246,7 +246,7 @@ object IncrementalDedup {
     * (a ~200 TB-class corpus) occupancy grows again because the bucket
     * count is capped. S independent indexes over deterministic hash
     * slices of the corpus (pmod(xxhash64(doc_id), S) — the same slicing
-    * law as [[VectorOps.buildShardedIvfIndex]]) relax the ceiling to S×:
+    * law as [[VectorOps.build]]) relax the ceiling to S×:
     * each shard holds its slice's bands under its OWN adaptive bucket
     * spec, so probe parallelism scales S × per-shard buckets.
     *

@@ -317,7 +317,7 @@ object RetrievalOps {
   }
 
   /** Scheduled full re-index — re-anchors df/totals drift after many
-    * appends (mirrors [[VectorOps.sqRefreshEntry]]).
+    * appends (mirrors [[VectorOps.refreshEntry]]).
     */
   def bm25RefreshEntry(id: String, cronExpr: String, db: String,
                        docs: SparkSession => DataFrame)
@@ -479,8 +479,7 @@ object RetrievalOps {
     buildBm25Index(t(s, d, "documents"), "graft_hybrid_q")
     val lex = bm25TopKFromIndex(s, d, "graft_hybrid_q")
       .select(col("query_id"), col("doc_id"), col("rnk").as("r_lex"))
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+    val emb = VectorOps.indexable(t(s, d, "embeddings"))
     val probes = emb
       .filter(pmod(col("vec_id"), lit(QueryModulus)) === QueryResidue)
       .select(col("vec_id").as("query_id"), col("embedding").as("probe_vec"))

@@ -355,7 +355,10 @@ object SetJoinOps {
 
   /** Append a batch: shingle/size/prefix rows land; the FROZEN order is
     * deliberately untouched (absent shingles stay df = 0 forever — order
-    * stability is what keeps every future probe exact).
+    * stability is what keeps every future probe exact). The fence moves
+    * last, so a retry after a crash between the writes is admitted; each
+    * write lands only the docs its table does not hold yet
+    * ([[VectorOps.freshOnly]]), so the retry never doubles a row.
     */
   def appendToJaccardIndex(s: SparkSession, db: String,
                            batch: DataFrame): Unit = {
@@ -363,16 +366,15 @@ object SetJoinOps {
     if (bounds.isEmpty) return
     val idx = storedIndex(s, db)
     val batchSh = PlanCache.swap("jac_append_sh", docShingles(batch))
-    batchSh.select(s.table(fqn(db, ShinglesTable)).columns.map(col)
-      .toIndexedSeq: _*)
-      .write.mode("append").insertInto(fqn(db, ShinglesTable))
-    sizesOf(batchSh).select(s.table(fqn(db, SizesTable)).columns.map(col)
-      .toIndexedSeq: _*)
-      .write.mode("append").insertInto(fqn(db, SizesTable))
-    prefixesUnder(batchSh, idx.freq)
-      .withColumn("bkt", pmod(xxhash64(col("sh")), lit(NumBuckets)))
-      .select(s.table(fqn(db, PrefixTable)).columns.map(col).toIndexedSeq: _*)
-      .write.mode("append").insertInto(fqn(db, PrefixTable))
+    def land(rows: DataFrame, table: String): Unit =
+      VectorOps.freshOnly(s, fqn(db, table), rows, idCol = "doc_id")
+        .select(s.table(fqn(db, table)).columns.map(col).toIndexedSeq: _*)
+        .write.mode("append").insertInto(fqn(db, table))
+    land(batchSh, ShinglesTable)
+    land(sizesOf(batchSh), SizesTable)
+    land(prefixesUnder(batchSh, idx.freq)
+      .withColumn("bkt", pmod(xxhash64(col("sh")), lit(NumBuckets))),
+      PrefixTable)
     JaccardFence.advance(s, db, bounds.get.hi)
   }
 }

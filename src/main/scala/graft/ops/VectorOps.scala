@@ -128,8 +128,7 @@ private[graft] trait VectorCorePart {
     // explode→groupBy path, which dropped them for lack of rows). Without
     // this, an empty array would sketch to all-ones bits (zero dots pass
     // `>= 0`) and flood one bucket in every band.
-    vectors
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+    indexable(vectors)
       .select(col("vec_id"), expr("hyperplane_sketch(embedding)").as("sk"))
       .select(col("vec_id"), col("sk.bits").as("sketch"), col("sk.l2").as("l2"))
   }
@@ -203,13 +202,20 @@ private[graft] trait VectorCorePart {
       idName = "vec_id")
   }
 
+  /** The one definition of an indexable vector: a non-null, non-empty
+    * embedding. It is a policy, not a convenience: a null seed centroid
+    * would win every NULLS-FIRST argmin and collapse an IVF index to one
+    * cell, and an empty array sketches to all-ones bits.
+    */
+  private[graft] def indexable(vectors: DataFrame): DataFrame =
+    vectors.filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+
   /** The (vec_id, vec) projection every index path assigns/encodes from:
-    * unindexable null/empty embeddings dropped, elements cast to double.
+    * [[indexable]] rows, elements cast to double.
     */
   private[ops] def indexableVecs(vectors: DataFrame): DataFrame =
-    vectors.filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("vec"))
+    indexable(vectors).select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("vec"))
 
   private[ops] def probesOf(emb: DataFrame): DataFrame =
     emb.filter(col("vec_id") < 5)
@@ -240,8 +246,8 @@ private[graft] trait VectorCorePart {
       .select("probe_id", "rnk", "neighbor_id", "cosine")
   }
 
-  /** Global exact-cosine re-rank over per-shard top-k unions — the merge
-    * shared by the sharded PQ and sharded IVF-PQ serving paths.
+  /** Global exact-cosine re-rank over per-slice hits — the one merge of
+    * every stored-index serve (one slice is the single index).
     */
   private[ops] def mergeShardTopk(perShard: Seq[DataFrame]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("probe_id")
@@ -254,45 +260,48 @@ private[graft] trait VectorCorePart {
       .orderBy("probe_id", "rnk")
   }
 
-  /** The idempotence probe shared by the three appends: batch rows whose
-    * vec_id the target does NOT already hold within the batch's id range
-    * (one bounded agg on the batch + a stats-pruned range scan of the
-    * target — never a full-index anti-join).
+  /** The idempotence probe shared by the stored-index appends: batch rows
+    * whose `idCol` the target does NOT already hold within the batch's id
+    * range (one bounded agg on the batch + a stats-pruned range scan of
+    * the target — never a full-index anti-join). A retry after a crash
+    * between writes re-lands exactly the missing rows.
     */
   private[ops] def freshOnly(s: SparkSession, target: String,
-                        batch: DataFrame): DataFrame = {
-    val b = batch.agg(min("vec_id"), max("vec_id")).head
+                             batch: DataFrame,
+                             idCol: String = "vec_id"): DataFrame = {
+    val b = batch.agg(min(idCol), max(idCol)).head
     if (b.isNullAt(0)) return batch // empty batch: nothing to dedup
     val existing = s.table(target)
-      .filter(col("vec_id").between(b.getLong(0), b.getLong(1)))
-      .select("vec_id")
-    batch.join(existing, Seq("vec_id"), "left_anti")
+      .filter(col(idCol).between(b.getLong(0), b.getLong(1)))
+      .select(idCol)
+    batch.join(existing, Seq(idCol), "left_anti")
   }
 
   /** Deterministic hash-slice iteration — the ONE definition of shard
-    * membership every sharded builder and append composes, so the law can
-    * never drift between build and append. `requireNonEmpty` names the
-    * calling BUILDER: an empty hash slice (corpus smaller than the shard
-    * grid) would train an empty index and fail obscurely at serve time;
-    * appends pass None — a batch legitimately misses some shards.
+    * membership every stored-index build and append composes, so the law
+    * can never drift between build and append. One slice is the whole
+    * corpus. `requireNonEmpty` names the calling BUILD: an empty hash
+    * slice (corpus smaller than the shard grid) would train an empty index
+    * and fail obscurely at serve time; appends pass None — a batch
+    * legitimately misses some shards.
     */
   private[ops] def foreachShardSlice(nShards: Int, vectors: DataFrame,
                                 requireNonEmpty: Option[String] = None)
                                (f: (Int, DataFrame) => Unit): Unit = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     for (sh <- 0 until nShards) {
-      val slice = vectors.filter(
+      val slice = if (nShards == 1) vectors else vectors.filter(
         pmod(xxhash64(col("vec_id")), lit(nShards.toLong)) === sh)
-      requireNonEmpty.foreach(caller => require(!slice.isEmpty,
+      if (nShards > 1) requireNonEmpty.foreach(caller => require(!slice.isEmpty,
         s"$caller: shard $sh of $nShards holds no vectors — " +
           "the corpus is too small to shard this finely"))
       f(sh, slice)
     }
   }
 
-  /** Fixture embedding dimensionality the PQ split assumes (matches the
-    * oracle-side constant in SparkEntry; a different corpus passes its
-    * own subDim through the private API).
+  /** Fixture embedding dimensionality the in-session PQ queries split
+    * (matches the oracle-side constant in SparkEntry; the stored builds
+    * read the dimension off the vectors).
     */
   private[ops] val OracleDims = 64
 

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.Tables.t
 
 /** Code-compression quantizers and their compositions: product
-  * quantization (PQ), scalar quantization (SQ8), IVF-PQ and IVF-SQ
-  * stored indexes (flat + sharded) with append lifecycles, and ANN
-  * recall evaluation.
+  * quantization (PQ), scalar quantization (SQ8), IVF-PQ and IVF-SQ, ANN
+  * recall evaluation, and the one stored-index lifecycle every ANN
+  * family ([[AnnFamily]]) is built, appended, served and refreshed by.
   *
   * Mixin part of [[VectorOps]] (round-12 verdict #7 file-size pass:
   * split by family — pure moves; every call site still reads
@@ -23,9 +23,9 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
     *
     *  1. TRAIN: the 64-dim space splits into M=[[PqSubspaces]] 8-dim
     *     subspaces; each gets its own K=[[PqCodebookSize]] k-means
-    *     codebook via the SAME deterministic Lloyd's recipe as the IVF
-    *     quantizer, batched over all subspaces at once ([[pqIndex]] —
-    *     recipe equivalence law-tested against [[ivfIndex]] at nSub=1).
+    *     codebook from the ONE Lloyd's trainer the IVF quantizer uses
+    *     ([[lloyd]]), batched over all subspaces at once ([[pqIndex]] —
+    *     law-tested against [[ivfIndex]] at nSub=1).
     *     Only M×K×8 doubles (the codebooks) ever reach the driver.
     *  2. ENCODE: one pass over the corpus computes all M argmin codes per
     *     row against the BROADCAST (literal) codebooks — no joins, no
@@ -63,78 +63,33 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
   private[graft] var PqCodebookLiteralMaxDoubles: Int = 4096
 
   /** Per-subspace codebooks trained on the corpus: m → K centroids of
-    * subDim doubles. ONE Lloyd's over the EXPLODED (vec_id, m, sub-vector)
-    * frame — all M codebooks train simultaneously with centroid key
-    * (m, cell), so the whole training is ~5 jobs instead of M separate
-    * [[ivfIndex]] runs (~5M jobs; measured 8.5 → 3.0 s steady at sf0.1).
-    * Same deterministic RECIPE as [[ivfIndex]], re-batched over (m, cell):
-    * hash-ordered seeds per subspace (the same seed VECTORS for every m —
-    * the ordering key ignores m), broadcast argmin via min(struct),
-    * fixed-point exact centroid aggregation; only M×K centroid rows reach
-    * the driver. The recipe equivalence is LAW-TESTED, not assumed: an
-    * nSub=1 run over full vectors must produce ivfIndex's centroids
-    * bit-for-bit, so a quantization change to either implementation that
-    * misses the other fails the suite. Fewer usable vectors than K seeds
-    * degrade to a smaller codebook per subspace (same contract as
-    * ivfIndex's limit(nCells) seeding).
+    * subDim doubles. ONE [[lloyd]] over the EXPLODED (vec_id, m,
+    * sub-vector) frame — all M codebooks train simultaneously with
+    * centroid key (m, cell), so the whole training is ~5 jobs instead of
+    * M separate [[ivfIndex]] runs (~5M jobs; measured 8.5 → 3.0 s steady
+    * at sf0.1). Every subspace seeds from the same vectors (the hash
+    * order ignores m). An nSub=1 run over full vectors must produce
+    * ivfIndex's centroids bit-for-bit (law-tested: both are calls of the
+    * one trainer). Fewer usable vectors than K seeds degrade to a smaller
+    * codebook per subspace.
     */
   private[graft] def pqIndex(emb: DataFrame, subDim: Int,
-                             iterations: Int = 2,
                              nSub: Int = PqSubspaces)
       : (DataFrame, Map[Int, Seq[Seq[Double]]]) = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    val sub = PlanCache.swap("pq-subvecs", emb
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+    val sub = PlanCache.swap("pq-subvecs", indexable(emb)
       .select(col("vec_id"),
         explode(sequence(lit(0), lit(nSub - 1))).as("m"),
         col("embedding"))
       .select(col("vec_id"), col("m"),
         transform(slice(col("embedding"), col("m") * subDim + 1, lit(subDim)),
           x => x.cast("double")).as("vec")))
-    val ws = org.apache.spark.sql.expressions.Window.partitionBy("m")
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-    var cents: Map[(Int, Int), Seq[Double]] = sub
-      .withColumn("rk", row_number().over(ws))
-      .filter(col("rk") <= PqCodebookSize)
-      .select(col("m"), (col("rk") - 1).as("cell"), col("vec"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toSeq)
-      .toMap
-    def centroidDf = cents.toSeq
-      .map { case ((m, k), c) => (m, k, c) }.toDF("m", "cell", "centroid")
-    def assign(cDf: DataFrame) = sub.join(broadcast(cDf), Seq("m"))
-      .withColumn("dist", call_function("vec_sqdist", col("vec"), col("centroid")))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("dist"), col("cell"))).as("am"))
-      .select(col("vec_id"), col("m"), col("am.cell").as("cell"))
-    for (_ <- 1 to iterations) {
-      val updated = sub.join(assign(centroidDf), Seq("vec_id", "m"))
-        .select(col("m"), col("cell"), posexplode(col("vec")).as(Seq("dim", "x")))
-        .withColumn("xq", floor(col("x") * lit(1e9)).cast("bigint"))
-        .groupBy("m", "cell", "dim")
-        .agg(sum("xq").as("s"), count(lit(1)).as("n"))
-        .collect()
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (key, rows) =>
-          key -> rows.sortBy(_.getInt(2))
-            .map(r => r.getLong(3).toDouble / 1e9 / r.getLong(4)).toSeq
-        }
-      cents = cents ++ updated
-    }
-    // small-corpus degrade: fewer usable vectors than K seeds means a
-    // smaller codebook per subspace — take the cells that exist instead
-    // of throwing on a fixed range (ivfIndex's limit(nCells) contract)
+    val (assign, cents) = lloyd(sub, PqCodebookSize)
     val books = (0 until nSub).map(m =>
       m -> cents.keys.collect { case (`m`, k) => k }.toSeq.sorted
         .map(k => cents((m, k)))).toMap
-    // final codes from ONE more assignment pass against the FINAL
-    // centroids (required — the loop's last assign scored the
-    // pre-update centroids; pqEncode parity depends on final-centroid
-    // codes). Still no wide literal-codebook codegen on this path, and
-    // the aggregate's exchange on vec_id is map-side combined.
-    val codes = assign(centroidDf)
+    // codes are the final-centroid assignment (pqEncode parity depends on
+    // it); the aggregate's exchange on vec_id is map-side combined
+    val codes = assign
       .groupBy("vec_id")
       .agg(
         max(when(col("m") === 0, col("cell"))).cast("int").as("code_0"),
@@ -143,10 +98,6 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
             .as(s"code_$m")): _*)
     (codes, books)
   }
-
-  /** Codebooks only — the stored-index surface ([[pqEncode]] consumers). */
-  private[graft] def pqCodebooks(emb: DataFrame, subDim: Int)
-      : Map[Int, Seq[Seq[Double]]] = pqIndex(emb, subDim)._2
 
   /** One-pass PQ encode: M argmin-code columns against literal codebooks
     * (zero joins/shuffles — the production scan shape).
@@ -181,8 +132,7 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
     */
   private[graft] def pqTopkFrame(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+    val emb = indexable(t(s, d, "embeddings"))
     val subDim = OracleDims / PqSubspaces
     val (codesDf, books) = pqIndex(emb, subDim)
     searchPq(codesDf, books, emb, probesOf(emb), subDim)
@@ -246,33 +196,9 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
     exactCosineRerank(cands, corpus, probes)
   }
 
-  /** Names of the persisted PQ index tables ([[buildPqIndex]]). */
+  /** Names of the stored PQ index tables ([[AnnFamily.Pq]]). */
   val PqCodebooksTable = "pq_codebooks"
   val PqCodesTable = "pq_codes"
-
-  /** Train-once for PQ, mirroring [[buildIvfIndex]]: ONE Lloyd's pass
-    * trains all M codebooks, the one-pass literal-codebook encode signs
-    * the corpus, and both land as warehouse tables — the codes table is
-    * the 32×-compressed scan a serving session reads (vec_id + M small
-    * ints per row; the raw vectors are NOT stored in it — the exact
-    * re-rank point-reads them from the corpus, the memory-bound regime's
-    * whole point). Any later session (or the scheduled refresh) serves
-    * searches from storage without retraining ([[pqCosineTopkFromIndex]]).
-    */
-  def buildPqIndex(vectors: DataFrame, db: String,
-                   subDim: Int = OracleDims / PqSubspaces,
-                   suffix: String = ""): Unit = {
-    val emb = vectors
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val (codes, books) = pqIndex(emb, subDim)
-    import vectors.sparkSession.implicits._
-    graft.store.Warehouse.saveModel(codes, db, PqCodesTable + suffix)
-    graft.store.Warehouse.saveModel(
-      books.toSeq.flatMap { case (m, cents) =>
-        cents.zipWithIndex.map { case (c, k) => (m, k, c) }
-      }.toDF("m", "cell", "centroid"),
-      db, PqCodebooksTable + suffix)
-  }
 
   /** Stored codebooks → the in-memory M→centroids map the ADC scan
     * inlines as literals. M×K rows — index metadata, not data.
@@ -286,65 +212,6 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
         m -> rows.sortBy(_.getInt(1)).map(_.getSeq[Double](2)).toSeq
       }
 
-  /** Serve PQ top-k from a stored index ([[buildPqIndex]]) — no Lloyd's
-    * jobs anywhere in the query path: codebooks come off the (M×K-row)
-    * codebook table as literals, the ADC scan reads the stored codes, and
-    * only the ≤ probes×[[PqRerank]] re-rank candidates touch raw vectors.
-    */
-  def pqCosineTopkFromIndex(s: SparkSession, d: String, db: String): DataFrame = {
-    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    searchPq(s.table(s"`$db`.`$PqCodesTable`"), loadPqBooks(s, db),
-      emb, probesOf(emb), OracleDims / PqSubspaces)
-      .orderBy("probe_id", "rnk")
-  }
-
-  /** Sharded PQ serving index — [[buildShardedIvfIndex]]'s hash-slice law
-    * applied to the PQ family: the single-index ceiling is the Lloyd's
-    * training corpus (and the per-query ADC scan, linear in codes), so S
-    * independent codebook+codes table pairs over deterministic slices
-    * relax it S-fold. Each shard trains only on its slice; a search runs
-    * every shard's ADC scan + exact re-rank and merges by exact cosine —
-    * calibration-free, so the S=1 case reproduces the single index
-    * bit-for-bit (spec-tested, the sharded-band equality standard).
-    */
-  def buildShardedPqIndex(vectors: DataFrame, db: String, nShards: Int,
-                          subDim: Int = OracleDims / PqSubspaces): Unit =
-    foreachShardSlice(nShards, vectors, Some("buildShardedPqIndex"))(
-      (sh, slice) => buildPqIndex(slice, db, subDim, suffix = s"_$sh"))
-
-  /** Serve PQ top-k across a sharded index: per-shard exact-re-ranked
-    * top-5s union into one global rank (exact cosine → trivially correct
-    * merge, like [[ivfCosineTopkFromShardedIndex]]). Per-shard subDim is
-    * read off the stored codebooks, so a corpus with its own dims serves
-    * unchanged. Zero Lloyd's jobs anywhere in the path.
-    */
-  def pqCosineTopkFromShardedIndex(s: SparkSession, d: String, db: String,
-                                   nShards: Int): DataFrame = {
-    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val probes = probesOf(emb)
-    mergeShardTopk((0 until nShards).map { sh =>
-      val books = loadPqBooks(s, db, s"${PqCodebooksTable}_$sh")
-      searchPq(s.table(s"`$db`.`${PqCodesTable}_$sh`"), books, emb, probes,
-        books(0).head.size)
-    })
-  }
-
-  /** Scheduled PQ index refresh — the serving posture for a growing
-    * corpus: training cost is paid on the cron cadence, searches read the
-    * stored codes/codebooks (mirrors [[ivfRefreshEntry]]).
-    */
-  def pqRefreshEntry(id: String, cronExpr: String, db: String,
-                     vectors: SparkSession => DataFrame): graft.pipeline.ScheduleRunner.Entry =
-    graft.pipeline.ScheduleRunner.Entry(id,
-      graft.pipeline.CronSchedule.parse(cronExpr),
-      (s, _) => buildPqIndex(vectors(s), db),
-      name = "pq_index_refresh", target = s"$db.$PqCodesTable",
-      tags = Map("pipeline" -> "ann-index"))
-
   // ─────────────────────── SQ8 scalar quantization ───────────────────────
   // Completes the quantization spectrum between flat (exact, 4 B/dim) and
   // PQ (32×, coarse): per-dimension 8-bit affine codes — 4× less scan I/O
@@ -355,7 +222,7 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
   // FULL-pipeline DuckDB hash gate (train + encode + ADC cut + exact
   // re-rank), not a materialized-candidate split gate.
 
-  /** Names of the persisted SQ index tables ([[buildSqIndex]]). */
+  /** Names of the stored SQ index tables ([[AnnFamily.Sq]]). */
   val SqParamsTable = "sq_params"
   val SqCodesTable = "sq_codes"
 
@@ -388,7 +255,7 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
     * append value saturates instead of wrapping. Corpus min/max map the
     * corpus exactly onto [0, 255]; appended vectors outside the frozen
     * range saturate at the edges — drift vs a retrain is bounded by the
-    * scheduled rebuild ([[sqRefreshEntry]]), the band-index caveat.
+    * scheduled rebuild ([[refreshEntry]]), the band-index caveat.
     */
   private[graft] def sqEncode(emb: DataFrame, mins: Seq[Double],
                               widths: Seq[Double]): DataFrame = {
@@ -495,29 +362,9 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
 
   private[graft] def sqTopkFrame(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+    val emb = indexable(t(s, d, "embeddings"))
     val (mins, widths) = sqParams(emb)
     searchSq(sqEncode(emb, mins, widths), mins, widths, emb, probesOf(emb))
-  }
-
-  /** Train-once for SQ, mirroring [[buildPqIndex]]: the min/max pass signs
-    * the corpus into the 4×-compressed codes table plus a dims-row params
-    * table; any later session serves searches from storage without
-    * touching the raw corpus except to point-read re-rank candidates
-    * ([[sqCosineTopkFromIndex]]).
-    */
-  def buildSqIndex(vectors: DataFrame, db: String, suffix: String = ""): Unit = {
-    val emb = vectors
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val (mins, widths) = sqParams(emb)
-    import vectors.sparkSession.implicits._
-    graft.store.Warehouse.saveModel(
-      sqEncode(emb, mins, widths), db, SqCodesTable + suffix)
-    graft.store.Warehouse.saveModel(
-      mins.indices.map(i => (i, mins(i), widths(i)))
-        .toDF("dim", "mn", "width"),
-      db, SqParamsTable + suffix)
   }
 
   /** Stored params → the (mins, widths) the encode/decode inline as
@@ -530,46 +377,6 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
     (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
   }
 
-  /** Serve SQ top-k from a stored index ([[buildSqIndex]]) — no training
-    * aggregation anywhere in the query path: params come off the dims-row
-    * table as literals, the ADC scan reads the stored codes, and only the
-    * ≤ probes × [[SqRerank]] re-rank candidates touch raw vectors.
-    */
-  def sqCosineTopkFromIndex(s: SparkSession, d: String, db: String): DataFrame = {
-    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val (mins, widths) = loadSqParams(s, db)
-    searchSq(s.table(s"`$db`.`$SqCodesTable`"), mins, widths, emb, probesOf(emb))
-      .orderBy("probe_id", "rnk")
-  }
-
-  /** SQ side of the incremental append: encode with the STORED params
-    * (out-of-range values saturate — see [[sqEncode]]) and append to the
-    * codes table; row-level idempotent via the shared [[freshOnly]]
-    * range-pruned probe.
-    */
-  def appendToSqIndex(s: SparkSession, db: String, vectors: DataFrame): Unit = {
-    val (mins, widths) = loadSqParams(s, db)
-    val target = s"`$db`.`$SqCodesTable`"
-    sqEncode(freshOnly(s, target, vectors.filter(
-        col("embedding").isNotNull && size(col("embedding")) > 0)),
-        mins, widths)
-      .select(s.table(target).columns.map(col).toIndexedSeq: _*)
-      .write.mode("append").insertInto(target)
-  }
-
-  /** Scheduled SQ index refresh — re-fits the min/max range to the grown
-    * corpus on the cron cadence (mirrors [[pqRefreshEntry]]).
-    */
-  def sqRefreshEntry(id: String, cronExpr: String, db: String,
-                     vectors: SparkSession => DataFrame): graft.pipeline.ScheduleRunner.Entry =
-    graft.pipeline.ScheduleRunner.Entry(id,
-      graft.pipeline.CronSchedule.parse(cronExpr),
-      (s, _) => buildSqIndex(vectors(s), db),
-      name = "sq_index_refresh", target = s"$db.$SqCodesTable",
-      tags = Map("pipeline" -> "ann-index"))
-
   // IVF-SQ — the coarse quantizer prunes WHICH code rows the scan reads,
   // SQ8 compresses WHAT it reads: the high-recall serving point between
   // IVF-flat (exact scores, full-width vectors in the index) and IVF-PQ
@@ -578,7 +385,7 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
   // no [[IvfPqProbeSlack]] needed; recall matches exact-scoring IVF at
   // the same budget (spec-asserted).
 
-  /** Names of the persisted IVF-SQ index tables ([[buildIvfSqIndex]]). */
+  /** Names of the stored IVF-SQ index tables ([[AnnFamily.IvfSq]]). */
   val IvfSqCodesTable = "ivfsq_codes"
   val IvfSqCentroidsTable = "ivfsq_centroids"
   val IvfSqParamsTable = "ivfsq_params"
@@ -593,8 +400,7 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
 
   private[graft] def ivfSqTopkFrame(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+    val emb = indexable(t(s, d, "embeddings"))
     val (assignments, centroids) = ivfIndex(emb)
     val (mins, widths) = sqParams(emb)
     val celled = sqEncode(emb, mins, widths)
@@ -605,133 +411,6 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
       .select("probe_id", "cell")
     searchSq(celled, mins, widths, emb, probes, cellFilter = Some(probedCells))
   }
-
-  /** Train-once for the composed index: coarse centroids, per-dim ranges,
-    * and the code table WITH its coarse cell — stored PARTITIONED BY cell
-    * so a serving scan reads only the probed cells' partitions (the
-    * [[buildIvfPqIndex]] layout with SQ codes).
-    */
-  def buildIvfSqIndex(vectors: DataFrame, db: String,
-                      suffix: String = ""): Unit = {
-    val emb = vectors
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val (assignments, centroids) = ivfIndex(emb)
-    val (mins, widths) = sqParams(emb)
-    import vectors.sparkSession.implicits._
-    graft.store.Warehouse.saveModel(
-      sqEncode(emb, mins, widths)
-        .join(assignments.select(col("vec_id"), col("cell")), Seq("vec_id")),
-      db, IvfSqCodesTable + suffix, partitionCols = Seq("cell"))
-    graft.store.Warehouse.saveModel(centroids, db, IvfSqCentroidsTable + suffix)
-    graft.store.Warehouse.saveModel(
-      mins.indices.map(i => (i, mins(i), widths(i)))
-        .toDF("dim", "mn", "width"),
-      db, IvfSqParamsTable + suffix)
-  }
-
-  /** Serve composed IVF-SQ top-k from the stored index: centroid scoring
-    * against the stored centroid table, the SQ scan statically pruned to
-    * the probed cells' partitions ([[prunedCodes]] — the IN-list lands in
-    * `PartitionFilters` at plan time), exact re-rank from the corpus. No
-    * Lloyd's or min/max pass anywhere in the query path.
-    */
-  def ivfSqCosineTopkFromIndex(s: SparkSession, d: String, db: String): DataFrame = {
-    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val probes = probesOf(emb)
-    val centroids = s.table(s"`$db`.`$IvfSqCentroidsTable`")
-    val (probedCells, cells) = collectProbeCells(s, centroids, probes,
-      adaptiveProbe(centroids.count()))
-    val (mins, widths) = loadSqParams(s, db, IvfSqParamsTable)
-    searchSq(prunedCodes(s, s"`$db`.`$IvfSqCodesTable`", cells),
-      mins, widths, emb, probes, cellFilter = Some(probedCells))
-      .orderBy("probe_id", "rnk")
-  }
-
-  /** Composed IVF-SQ append: stored-range encode + stored-centroid cell
-    * assignment, appended into the cell partitions — only the touched
-    * cells' partitions gain files ([[appendToIvfPqIndex]]'s shape).
-    */
-  def appendToIvfSqIndex(s: SparkSession, db: String, vectors: DataFrame,
-                         suffix: String = ""): Unit = {
-    val target = s"`$db`.`$IvfSqCodesTable$suffix`"
-    val fresh = freshOnly(s, target, vectors.filter(
-      col("embedding").isNotNull && size(col("embedding")) > 0))
-    val emb = indexableVecs(fresh)
-    val (mins, widths) = loadSqParams(s, db, IvfSqParamsTable + suffix)
-    val celled = sqEncode(fresh, mins, widths).join(
-      assignToCells(emb,
-        s.table(s"`$db`.`$IvfSqCentroidsTable$suffix`")), "vec_id")
-    celled.select(s.table(target).columns.map(col).toIndexedSeq: _*)
-      .write.mode("append").insertInto(target)
-  }
-
-  /** Scheduled IVF-SQ index refresh (mirrors [[pqRefreshEntry]]). */
-  def ivfSqRefreshEntry(id: String, cronExpr: String, db: String,
-                        vectors: SparkSession => DataFrame): graft.pipeline.ScheduleRunner.Entry =
-    graft.pipeline.ScheduleRunner.Entry(id,
-      graft.pipeline.CronSchedule.parse(cronExpr),
-      (s, _) => buildIvfSqIndex(vectors(s), db),
-      name = "ivfsq_index_refresh", target = s"$db.$IvfSqCodesTable",
-      tags = Map("pipeline" -> "ann-index"))
-
-  /** Sharded IVF-SQ — the COARSE quantizer carries the same ~1M-vector
-    * Lloyd's ceiling that motivates every other sharded composition
-    * (SQ's own min/max training has none), so the hash-slice law applies
-    * unchanged: per-shard centroids + ranges + cell-partitioned codes,
-    * probe-all with the √S budget, exact-cosine merge; S=1 reproduces
-    * the single composed index bit-for-bit.
-    */
-  def buildShardedIvfSqIndex(vectors: DataFrame, db: String,
-                             nShards: Int): Unit =
-    foreachShardSlice(nShards, vectors, Some("buildShardedIvfSqIndex"))(
-      (sh, slice) => buildIvfSqIndex(slice, db, suffix = s"_$sh"))
-
-  /** Serve composed IVF-SQ top-k across a sharded index: per shard, the
-    * stored centroids pick probed cells under the √S shard-noise budget
-    * (no PQ slack — the 8-bit score is near-exact, the single-index
-    * law), the SQ scan reads only those cells' partitions, and the
-    * exact-re-ranked per-shard top-5s merge globally.
-    */
-  def ivfSqCosineTopkFromShardedIndex(s: SparkSession, d: String, db: String,
-                                      nShards: Int): DataFrame = {
-    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val probes = probesOf(emb)
-    mergeShardTopk((0 until nShards).map { sh =>
-      val cents = s.table(s"`$db`.`${IvfSqCentroidsTable}_$sh`")
-      val (probedCells, cells) = collectProbeCells(s, cents, probes,
-        shardTopkBudget(nShards, cents.count()))
-      val (mins, widths) = loadSqParams(s, db, s"${IvfSqParamsTable}_$sh")
-      searchSq(prunedCodes(s, s"`$db`.`${IvfSqCodesTable}_$sh`", cells),
-        mins, widths, emb, probes, cellFilter = Some(probedCells))
-    })
-  }
-
-  /** Scheduled refresh for the sharded IVF-SQ index (the
-    * [[pqShardedRefreshEntry]] law).
-    */
-  def ivfSqShardedRefreshEntry(id: String, cronExpr: String, db: String,
-                               nShards: Int,
-                               vectors: SparkSession => DataFrame): graft.pipeline.ScheduleRunner.Entry =
-    graft.pipeline.ScheduleRunner.Entry(id,
-      graft.pipeline.CronSchedule.parse(cronExpr),
-      (s, _) => buildShardedIvfSqIndex(vectors(s), db, nShards),
-      name = "ivfsq_sharded_index_refresh",
-      target = s"$db.${IvfSqCodesTable}_0",
-      tags = Map("pipeline" -> "ann-index"))
-
-  /** Sharded IVF-SQ append — route by the builders' hash-slice law,
-    * per-shard frozen-parameter appends ([[appendToShardedIvfPqIndex]]'s
-    * contract). Requires [[appendToIvfSqIndex]] with the shard's
-    * suffixed tables.
-    */
-  def appendToShardedIvfSqIndex(s: SparkSession, db: String, nShards: Int,
-                                vectors: DataFrame): Unit =
-    foreachShardSlice(nShards, vectors)((sh, slice) =>
-      appendToIvfSqIndex(s, db, slice, suffix = s"_$sh"))
 
   /** IVF-PQ — the canonical 100 TB ANN composition: the IVF coarse
     * quantizer prunes WHICH code rows the ADC scan reads (nProbe of
@@ -757,159 +436,10 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
     graft.OracleInputs.checkpoint(ivfPqTopkFrame(s, d), d, "ivfpq_topk")
       .orderBy("probe_id", "rnk")
 
-  /** Names of the persisted IVF-PQ index tables ([[buildIvfPqIndex]]). */
+  /** Names of the stored IVF-PQ index tables ([[AnnFamily.IvfPq]]). */
   val IvfPqCodesTable = "ivfpq_codes"
   val IvfPqCentroidsTable = "ivfpq_centroids"
   val IvfPqCodebooksTable = "ivfpq_codebooks"
-
-  /** Train-once for the composed index: coarse centroids, per-subspace
-    * codebooks, and the code table WITH its coarse cell — stored
-    * PARTITIONED BY cell, so a serving scan reads ONLY the probed cells'
-    * partitions (dynamic partition pruning through the broadcast cell
-    * join — the file-skipping form of the cell pruning the in-session
-    * path does with a hash join).
-    */
-  def buildIvfPqIndex(vectors: DataFrame, db: String,
-                      subDim: Int = OracleDims / PqSubspaces,
-                      suffix: String = ""): Unit = {
-    val emb = vectors
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val (assignments, centroids) = ivfIndex(emb)
-    val (codes, books) = pqIndex(emb, subDim)
-    import vectors.sparkSession.implicits._
-    graft.store.Warehouse.saveModel(
-      codes.join(assignments.select(col("vec_id"), col("cell")), Seq("vec_id")),
-      db, IvfPqCodesTable + suffix, partitionCols = Seq("cell"))
-    graft.store.Warehouse.saveModel(centroids, db, IvfPqCentroidsTable + suffix)
-    graft.store.Warehouse.saveModel(
-      books.toSeq.flatMap { case (m, cents) =>
-        cents.zipWithIndex.map { case (c, k) => (m, k, c) }
-      }.toDF("m", "cell", "centroid"),
-      db, IvfPqCodebooksTable + suffix)
-  }
-
-  /** Sharded IVF-PQ — all three layers compose: hash-slice shards relax
-    * the training ceiling ([[buildShardedIvfIndex]]'s law), the per-shard
-    * coarse quantizer prunes which code partitions each probe reads, PQ
-    * compresses what it reads. Serving probes EVERY shard with the
-    * √S-scaled budget and merges by exact cosine; S=1 reproduces the
-    * single composed index bit-for-bit.
-    */
-  def buildShardedIvfPqIndex(vectors: DataFrame, db: String, nShards: Int,
-                             subDim: Int = OracleDims / PqSubspaces): Unit =
-    foreachShardSlice(nShards, vectors, Some("buildShardedIvfPqIndex"))(
-      (sh, slice) => buildIvfPqIndex(slice, db, subDim, suffix = s"_$sh"))
-
-  /** Serve composed IVF-PQ top-k across a sharded index: per shard, the
-    * stored centroids pick probed cells under the IVF-PQ slack × the √S
-    * shard-noise budget ([[shardTopkBudget]] — at S=1 this is exactly the
-    * single-index budget), the ADC scan reads only those cells'
-    * partitions of the shard's code table, and the exact-re-ranked
-    * per-shard top-5s merge into one global rank.
-    */
-  def ivfPqCosineTopkFromShardedIndex(s: SparkSession, d: String, db: String,
-                                      nShards: Int): DataFrame = {
-    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val probes = probesOf(emb)
-    mergeShardTopk((0 until nShards).map { sh =>
-      val cents = s.table(s"`$db`.`${IvfPqCentroidsTable}_$sh`")
-      val (probedCells, cells) = collectProbeCells(s, cents, probes,
-        IvfPqProbeSlack * shardTopkBudget(nShards, cents.count()))
-      val books = loadPqBooks(s, db, s"${IvfPqCodebooksTable}_$sh")
-      searchPq(prunedCodes(s, s"`$db`.`${IvfPqCodesTable}_$sh`", cells),
-        books, emb, probes, books(0).head.size,
-        cellFilter = Some(probedCells))
-    })
-  }
-
-  /** Scheduled refresh entries for the SHARDED serving indexes — the
-    * single-index entries' law extended: one cron fire rebuilds every
-    * shard's tables (shard builds are independent jobs; a deployment
-    * that wants them as separate submissions schedules S entries over
-    * slice-filtered `vectors` instead).
-    */
-  def pqShardedRefreshEntry(id: String, cronExpr: String, db: String,
-                            nShards: Int,
-                            vectors: SparkSession => DataFrame): graft.pipeline.ScheduleRunner.Entry =
-    graft.pipeline.ScheduleRunner.Entry(id,
-      graft.pipeline.CronSchedule.parse(cronExpr),
-      (s, _) => buildShardedPqIndex(vectors(s), db, nShards),
-      name = "pq_sharded_index_refresh", target = s"$db.$PqCodesTable*",
-      tags = Map("pipeline" -> "ann-index"))
-
-  def ivfPqShardedRefreshEntry(id: String, cronExpr: String, db: String,
-                               nShards: Int,
-                               vectors: SparkSession => DataFrame): graft.pipeline.ScheduleRunner.Entry =
-    graft.pipeline.ScheduleRunner.Entry(id,
-      graft.pipeline.CronSchedule.parse(cronExpr),
-      (s, _) => buildShardedIvfPqIndex(vectors(s), db, nShards),
-      name = "ivfpq_sharded_index_refresh", target = s"$db.$IvfPqCodesTable*",
-      tags = Map("pipeline" -> "ann-index"))
-
-  /** PQ side of the append: encode with the stored codebooks (the
-    * [[pqEncode]] one-pass argmin — parity with the build's final-centroid
-    * codes is property-tested) and append to the codes table.
-    */
-  def appendToPqIndex(s: SparkSession, db: String, vectors: DataFrame,
-                      suffix: String = ""): Unit = {
-    val books = loadPqBooks(s, db, PqCodebooksTable + suffix)
-    val target = s"`$db`.`$PqCodesTable$suffix`"
-    pqEncode(freshOnly(s, target, vectors.filter(
-        col("embedding").isNotNull && size(col("embedding")) > 0)),
-        books, books(0).head.size)
-      .select(s.table(target).columns.map(col).toIndexedSeq: _*)
-      .write.mode("append").insertInto(target)
-  }
-
-  /** Composed IVF-PQ append: stored-codebook encode + stored-centroid
-    * cell assignment, appended into the cell-partitioned code table —
-    * only the touched cells' partitions gain files.
-    */
-  def appendToIvfPqIndex(s: SparkSession, db: String, vectors: DataFrame,
-                         suffix: String = ""): Unit = {
-    val target = s"`$db`.`$IvfPqCodesTable$suffix`"
-    val fresh = freshOnly(s, target, vectors.filter(
-      col("embedding").isNotNull && size(col("embedding")) > 0))
-    val emb = indexableVecs(fresh)
-    val books = loadPqBooks(s, db, IvfPqCodebooksTable + suffix)
-    val codes = pqEncode(fresh, books, books(0).head.size)
-    val celled = codes.join(
-      assignToCells(emb,
-        s.table(s"`$db`.`$IvfPqCentroidsTable$suffix`")), "vec_id")
-    celled.select(s.table(target).columns.map(col).toIndexedSeq: _*)
-      .write.mode("append").insertInto(target)
-  }
-
-  def appendToShardedPqIndex(s: SparkSession, db: String, nShards: Int,
-                             vectors: DataFrame): Unit =
-    foreachShardSlice(nShards, vectors)((sh, slice) =>
-      appendToPqIndex(s, db, slice, suffix = s"_$sh"))
-
-  def appendToShardedIvfPqIndex(s: SparkSession, db: String, nShards: Int,
-                                vectors: DataFrame): Unit =
-    foreachShardSlice(nShards, vectors)((sh, slice) =>
-      appendToIvfPqIndex(s, db, slice, suffix = s"_$sh"))
-
-  /** Serve composed IVF-PQ top-k from the stored index: centroid scoring
-    * against the (nCells-row) stored centroid table, ADC only within the
-    * probed cells' PARTITIONS of the code table, exact re-rank from the
-    * corpus — no Lloyd's pass anywhere.
-    */
-  def ivfPqCosineTopkFromIndex(s: SparkSession, d: String, db: String): DataFrame = {
-    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-    val probes = probesOf(emb)
-    val centroids = s.table(s"`$db`.`$IvfPqCentroidsTable`")
-    val (probedCells, cells) = collectProbeCells(s, centroids, probes,
-      IvfPqProbeSlack * adaptiveProbe(centroids.count()))
-    searchPq(prunedCodes(s, s"`$db`.`$IvfPqCodesTable`", cells),
-      loadPqBooks(s, db, IvfPqCodebooksTable), emb, probes,
-      OracleDims / PqSubspaces, cellFilter = Some(probedCells))
-      .orderBy("probe_id", "rnk")
-  }
 
   /** The serving scan of a cell-partitioned code table, statically pruned
     * to the probed cells: the IN-list on the partition column shows up in
@@ -941,8 +471,7 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
 
   private[graft] def ivfPqTopkFrame(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val emb = t(s, d, "embeddings")
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
+    val emb = indexable(t(s, d, "embeddings"))
     val subDim = OracleDims / PqSubspaces
     val (assignments, centroids) = ivfIndex(emb)
     val (codesDf, books) = pqIndex(emb, subDim)
@@ -956,4 +485,308 @@ private[graft] trait VectorQuantPart extends VectorIvfPart {
       .select("probe_id", "cell")
     searchPq(celled, books, emb, probes, subDim, cellFilter = Some(probedCells))
   }
+
+  // ───────────────────── stored ANN index lifecycle ─────────────────────
+  // Every stored family (AnnFamily.All) is built, appended, served and
+  // refreshed by the functions below: the paper's stored model, built on
+  // a cron, appended between builds and served from storage.
+
+  private def stored(s: SparkSession, db: String, table: String): DataFrame =
+    s.table(s"`$db`.`$table`")
+
+  /** Table-name suffixes of the slices family `f` stores in `db`, read
+    * off the catalog: `Seq("")` for the single index (unsuffixed names),
+    * else `_0.._S-1` — the contiguous run of shard tables, so a partially
+    * built grid is read up to its first gap. Empty when the family is
+    * absent.
+    */
+  private[graft] def layout(s: SparkSession, db: String, f: AnnFamily): Seq[String] = {
+    val sfx = storedSlices(s, db, f)
+    if (sfx.contains("")) Seq("") else sfx
+  }
+
+  /** Every slice suffix of `f` in `db`: the single index and the shard run
+    * (a build drops whichever one it did not write).
+    */
+  private def storedSlices(s: SparkSession, db: String, f: AnnFamily): Seq[String] = {
+    val names = if (!s.catalog.databaseExists(db)) Set.empty[String]
+      else s.catalog.listTables(db).collect().map(_.name).toSet
+    Seq("").filter(x => names(f.codesTable + x)) ++ Iterator.from(0)
+      .map(i => s"_$i").takeWhile(x => names(f.codesTable + x))
+  }
+
+  private def storedLayout(s: SparkSession, db: String, f: AnnFamily,
+                           caller: String): Seq[String] = {
+    val sfx = layout(s, db, f)
+    require(sfx.nonEmpty, s"$caller: no stored ${f.name} index in `$db` — " +
+      "build one (VectorOps.build) first")
+    sfx
+  }
+
+  /** Train-once: train family `f` over `vectors` and land its tables, so
+    * any later session (or a scheduled refresh, [[refreshEntry]]) serves
+    * from storage without retraining. `nShards` = 1 is the single index
+    * under the unsuffixed names. S > 1 builds S independent indexes over
+    * the deterministic hash slices of [[foreachShardSlice]], suffixed
+    * `_0.._S-1`: the single-index ceiling is the Lloyd's training corpus
+    * and its driver-resident centroid matrix, and S slices relax it
+    * S-fold without widening the driver; serving probes every slice and
+    * merges by exact cosine, so the self-hit guarantee and recall compose.
+    *
+    * Coarse quantizers size their grid by [[adaptiveIvfCells]]; the PQ
+    * sub-vector width is the vectors' dimension / [[PqSubspaces]]. Codes
+    * of a cell-partitioned family are stored PARTITIONED BY cell, so a
+    * serving scan reads only the probed cells' partitions. A rebuild in
+    * another shape drops the earlier layout's tables.
+    */
+  def build(f: AnnFamily, vectors: DataFrame, db: String, nShards: Int = 1): Unit = {
+    val built = if (nShards == 1) Seq("") else (0 until nShards).map(sh => s"_$sh")
+    foreachShardSlice(nShards, vectors, Some(s"build(${f.name})")) {
+      (sh, slice) => buildSlice(f, slice, db, built(sh))
+    }
+    // the catalog is the layout: drop the slices an earlier build of
+    // another shape left, so serve and append never read them
+    val s = vectors.sparkSession
+    for (x <- storedSlices(s, db, f).diff(built); t <- f.tables)
+      s.sql(s"DROP TABLE IF EXISTS `$db`.`$t$x`")
+  }
+
+  private def buildSlice(f: AnnFamily, vectors: DataFrame, db: String,
+                         sfx: String): Unit = {
+    import vectors.sparkSession.implicits._
+    val emb = indexable(vectors)
+    val coarse = f.centroidsTable.map(_ =>
+      ivfIndex(emb, adaptiveIvfCells(emb.count())))
+    def withCells(codes: DataFrame): DataFrame = coarse.fold(codes)(c =>
+      codes.join(c._1.select(col("vec_id"), col("cell")), Seq("vec_id")))
+    val (codes, params) = f.code match {
+      // the inverted lists are the codes: (vec_id, cell, raw vector)
+      case AnnCode.Flat => (coarse.get._1, None)
+      case AnnCode.Sq8(_) =>
+        val (mins, widths) = sqParams(emb)
+        (withCells(sqEncode(emb, mins, widths)), Some(
+          mins.indices.map(i => (i, mins(i), widths(i))).toDF("dim", "mn", "width")))
+      case AnnCode.Pq(_) =>
+        val dims = emb.select(size(col("embedding"))).head.getInt(0)
+        val (pq, books) = pqIndex(emb, dims / PqSubspaces)
+        (withCells(pq), Some(books.toSeq.flatMap { case (m, cents) =>
+          cents.zipWithIndex.map { case (c, k) => (m, k, c) }
+        }.toDF("m", "cell", "centroid")))
+    }
+    graft.store.Warehouse.saveModel(codes, db, f.codesTable + sfx,
+      partitionCols = if (f.cellPartitioned) Seq("cell") else Nil)
+    for ((_, cents) <- coarse; table <- f.centroidsTable)
+      graft.store.Warehouse.saveModel(cents, db, table + sfx)
+    for (p <- params; table <- f.code.paramsTable)
+      graft.store.Warehouse.saveModel(p, db, table + sfx)
+  }
+
+  /** Scheduled rebuild of a stored family on its cron cadence — search
+    * always reads the stored tables; training cost is paid on the
+    * schedule, not per query, and the rebuild bounds the parameter drift
+    * the frozen-parameter appends accumulate. One fire rebuilds every
+    * slice.
+    */
+  def refreshEntry(f: AnnFamily, id: String, cronExpr: String, db: String,
+                   vectors: SparkSession => DataFrame,
+                   nShards: Int = 1): graft.pipeline.ScheduleRunner.Entry = {
+    val sharded = nShards > 1
+    graft.pipeline.ScheduleRunner.Entry(id,
+      graft.pipeline.CronSchedule.parse(cronExpr),
+      (s, _) => build(f, vectors(s), db, nShards),
+      name = s"${f.name}${if (sharded) "_sharded" else ""}_index_refresh",
+      target = s"$db.${f.codesTable}${if (sharded) "*" else ""}",
+      tags = Map("pipeline" -> "ann-index"))
+  }
+
+  /** Serve top-k for the probe set (vec_id < 5 — recall directly
+    * comparable to [[knnCosineTopk]]) from the stored family: no training
+    * anywhere in the query path. Each slice answers from its own tables
+    * (coarse families score the stored centroids and read only the probed
+    * cells' code partitions — the IN-list lands in `PartitionFilters` at
+    * plan time), code families re-rank their candidates by exact cosine
+    * from the raw corpus, and the slices merge into one global rank by
+    * exact cosine ([[mergeShardTopk]] — no per-slice calibration; one
+    * slice's merge is that slice's top-5).
+    */
+  def topkFromIndex(f: AnnFamily, s: SparkSession, d: String,
+                    db: String): DataFrame = {
+    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
+    val sfx = storedLayout(s, db, f, "topkFromIndex")
+    val emb = indexable(t(s, d, "embeddings"))
+    val probes = probesOf(emb)
+    mergeShardTopk(sfx.map(x => sliceHits(f, s, db, x, sfx.size, emb, probes)))
+  }
+
+  /** One slice's serving hits: IVF-flat's exact-cosine candidates within
+    * the probed cells, or a code family's exact-re-ranked top-5. The cell
+    * budget is the √nCells query law × the √S slice-noise factor
+    * ([[shardTopkBudget]]) × the family's probe slack.
+    */
+  private def sliceHits(f: AnnFamily, s: SparkSession, db: String, sfx: String,
+                        nSlices: Int, emb: DataFrame,
+                        probes: DataFrame): DataFrame = {
+    val codes = f.codesTable + sfx
+    val cells = f.centroidsTable.map { table =>
+      val cents = stored(s, db, table + sfx)
+      (cents, f.probeSlack * shardTopkBudget(nSlices, cents.count()))
+    }
+    // a code family scans the probed cells' partitions, or every code
+    lazy val (scan, cellFilter) = cells match {
+      case Some((cents, budget)) =>
+        val (probed, hit) = collectProbeCells(s, cents, probes, budget)
+        (prunedCodes(s, s"`$db`.`$codes`", hit), Some(probed))
+      case None => (stored(s, db, codes), None)
+    }
+    f.code match {
+      case AnnCode.Flat =>
+        val (cents, budget) = cells.get
+        searchIvfCandidates(stored(s, db, codes),
+          probeNearestCells(cents, probes, budget), largeProbeSide = false)
+      case AnnCode.Sq8(params) =>
+        val (mins, widths) = loadSqParams(s, db, params + sfx)
+        searchSq(scan, mins, widths, emb, probes, cellFilter)
+      case AnnCode.Pq(codebooks) =>
+        val books = loadPqBooks(s, db, codebooks + sfx)
+        searchPq(scan, books, emb, probes, books(0).head.size, cellFilter)
+    }
+  }
+
+  /** Per-probe candidate volume across the IVF slice merge — the skew
+    * evidence for the sharded search: the volume per probe must stay
+    * ~Σ slices' probed-cell occupancies, never concentrate on one key.
+    */
+  private[graft] def shardedCandidatesPerProbe(s: SparkSession, d: String,
+                                               db: String): DataFrame = {
+    val f = AnnFamily.Ivf
+    val sfx = storedLayout(s, db, f, "shardedCandidatesPerProbe")
+    val emb = indexable(t(s, d, "embeddings"))
+    sfx.map(x => sliceHits(f, s, db, x, sfx.size, emb, probesOf(emb)))
+      .reduce(_ unionByName _)
+      .groupBy("probe_id").agg(count(lit(1)).as("n_cands"))
+  }
+
+  /** Append-only growth between builds — the band index's
+    * [[IncrementalDedup.appendBatch]] contract: new vectors route to
+    * their hash slice (the build's own [[foreachShardSlice]] law, so
+    * membership never drifts), are assigned against that slice's STORED
+    * centroids and encoded with its STORED codebooks/ranges (zero training
+    * jobs), and append to its code table, so the index serves the grown
+    * corpus immediately. Exact under frozen parameters: the appended
+    * index is bit-equal to encoding the union at the same parameters;
+    * drift of the parameters themselves is bounded by the scheduled
+    * rebuild ([[refreshEntry]]). SQ values outside the frozen range
+    * saturate ([[sqEncode]]).
+    *
+    * Row-level IDEMPOTENT ([[freshOnly]]): a streaming retry after a
+    * mid-batch crash re-appends exactly the missing rows
+    * ([[graft.pipeline.VectorIngest]]'s recovery path). A duplicated code
+    * row would be a duplicated CANDIDATE the exact re-rank does not
+    * collapse, so this is a correctness guard, not an optimization.
+    */
+  def append(f: AnnFamily, s: SparkSession, db: String, vectors: DataFrame): Unit = {
+    val sfx = storedLayout(s, db, f, "append")
+    foreachShardSlice(sfx.size, vectors)((sh, slice) =>
+      appendSlice(f, s, db, sfx(sh), slice))
+  }
+
+  private def appendSlice(f: AnnFamily, s: SparkSession, db: String,
+                          sfx: String, vectors: DataFrame): Unit = {
+    val target = s"`$db`.`${f.codesTable}$sfx`"
+    val fresh = freshOnly(s, target, indexable(vectors))
+    val codes = f.code match {
+      case AnnCode.Flat => fresh.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      case AnnCode.Sq8(params) =>
+        val (mins, widths) = loadSqParams(s, db, params + sfx)
+        sqEncode(fresh, mins, widths)
+      case AnnCode.Pq(codebooks) =>
+        val books = loadPqBooks(s, db, codebooks + sfx)
+        pqEncode(fresh, books, books(0).head.size)
+    }
+    val rows = f.centroidsTable.fold(codes)(table => codes.join(
+      assignToCells(indexableVecs(fresh), stored(s, db, table + sfx)), "vec_id"))
+    rows.select(s.table(target).columns.map(col).toIndexedSeq: _*)
+      .write.mode("append").insertInto(target)
+  }
+
+  /** Corpus×corpus semantic dedup over the stored IVF index: the
+    * scheduled-maintenance posture — the quantizer trains on the refresh
+    * cadence, and the (possibly far more frequent) dedup sweep reads the
+    * stored inverted lists. Every stored vector probes EVERY slice with
+    * the large-probe SALTED search (cross-slice duplicate pairs would
+    * otherwise be invisible — hash slicing deliberately separates equal
+    * content carrying different ids), and the per-slice candidates union
+    * before the exact-cosine threshold, canonicalization and distinct.
+    *
+    * Budget: the FIXED base [[IvfProbe]] × √S ([[shardProbeBudget]]) —
+    * linear candidate volume with an S× probe fan-out (see
+    * [[adaptiveProbe]]). An exact duplicate pair always surfaces,
+    * whatever its slices. The single index matches
+    * [[ivfSemanticDedupPairs]] over the same rows at the same cell count.
+    */
+  def ivfSemanticDedupFromIndex(s: SparkSession, db: String,
+                                threshold: Double = CosineDupThreshold): DataFrame = {
+    graft.store.Warehouse.refreshDb(s, db) // cross-session append visibility
+    val f = AnnFamily.Ivf
+    val sfx = storedLayout(s, db, f, "ivfSemanticDedupFromIndex")
+    val lists = sfx.map(x => stored(s, db, f.codesTable + x))
+    val probes = lists.map(_.select(col("vec_id").as("probe_id"),
+      col("embedding").as("probe_vec"))).reduce(_ unionByName _)
+    dedupPairs(sfx.zip(lists).map { case (x, l) =>
+      searchIvfCandidates(l,
+        probeNearestCells(stored(s, db, f.centroidsTable.get + x), probes,
+          shardProbeBudget(sfx.size)),
+        largeProbeSide = true)
+    }.reduce(_ unionByName _), threshold)
+  }
+}
+
+/** How a stored ANN family encodes a vector, and the table its encoding
+  * parameters live in: the raw vector (flat — no parameters), SQ8
+  * per-dimension 8-bit codes over a (dim, mn, width) table, or PQ
+  * sub-vector codes over an (m, cell, centroid) codebook table.
+  */
+sealed abstract class AnnCode(val paramsTable: Option[String])
+
+object AnnCode {
+  case object Flat extends AnnCode(None)
+  final case class Sq8(params: String) extends AnnCode(Some(params))
+  final case class Pq(codebooks: String) extends AnnCode(Some(codebooks))
+}
+
+/** One stored ANN index family, as data: the code table appends grow
+  * (its name keys the family everywhere — [[graft.pipeline.VectorIngest]]
+  * stages, failpoints), the coarse quantizer's centroid table if it has
+  * one, its code, whether the codes are partitioned by cell, and the
+  * probe slack on top of the √nCells budget. Every family answers the
+  * same probe-set top-5 by exact-cosine re-rank.
+  */
+final case class AnnFamily(name: String, codesTable: String,
+                           centroidsTable: Option[String], code: AnnCode,
+                           cellPartitioned: Boolean, probeSlack: Int) {
+  /** Every table one slice of the family stores, codes first. */
+  def tables: Seq[String] =
+    codesTable +: (centroidsTable.toSeq ++ code.paramsTable)
+}
+
+object AnnFamily {
+  import VectorOps._
+  val Ivf = AnnFamily("ivf", IvfAssignmentsTable, Some(IvfCentroidsTable),
+    AnnCode.Flat, cellPartitioned = false, probeSlack = 1)
+  val Pq = AnnFamily("pq", PqCodesTable, None,
+    AnnCode.Pq(PqCodebooksTable), cellPartitioned = false, probeSlack = 1)
+  val Sq = AnnFamily("sq", SqCodesTable, None,
+    AnnCode.Sq8(SqParamsTable), cellPartitioned = false, probeSlack = 1)
+  val IvfSq = AnnFamily("ivfsq", IvfSqCodesTable, Some(IvfSqCentroidsTable),
+    AnnCode.Sq8(IvfSqParamsTable), cellPartitioned = true, probeSlack = 1)
+  val IvfPq = AnnFamily("ivfpq", IvfPqCodesTable, Some(IvfPqCentroidsTable),
+    AnnCode.Pq(IvfPqCodebooksTable), cellPartitioned = true,
+    probeSlack = IvfPqProbeSlack)
+
+  /** The family list — the one place build, append, serve, refresh and
+    * [[graft.pipeline.VectorIngest]] read it from. Ingest appends in this
+    * order.
+    */
+  val All: Seq[AnnFamily] = Seq(Ivf, Pq, IvfPq, Sq, IvfSq)
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{BasketOps, ChunkOps, IncrementalClusters, ReservoirOps,
+import graft.ops.{AnnFamily, BasketOps, ChunkOps, IncrementalClusters, ReservoirOps,
   RetrievalOps, ScdOps, SetJoinOps, TextOps, TimeSeriesOps, VectorOps,
   WinnowOps}
 import graft.pipeline.{Bm25Ingest, CdcIngest, CorpusPipeline, FencedAppend,
@@ -141,7 +141,7 @@ class AppendFenceSpec extends SparkSpec {
       k => ids(k).map(id => (id, s"src${id % 5}")).toDF("doc_id", "source")),
     sink("vector sink", VectorIngest.IngestFamily,
       Seq(VectorOps.SqCodesTable),
-      db => VectorOps.buildSqIndex(vectors(0L to 7L), db),
+      db => VectorOps.build(AnnFamily.Sq, vectors(0L to 7L), db),
       k => vectors(ids(k))),
     sink("corpus sink", CorpusPipeline.IngestFamily, Seq("s1_clean"),
       db => CorpusPipeline.runFresh(spark, corpusDocs(1L to 8L), "fence", db),
@@ -206,4 +206,33 @@ class AppendFenceSpec extends SparkSpec {
         }
       } finally spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
     }
+
+  test("jaccard: a retry after a crash between the index writes lands " +
+      "each row once") {
+    val jaccard = families.find(_.label == "jaccard").get
+    val batch = jaccard.batch(0)
+    val batchIds = batch.select("doc_id").as[Long].collect().toSeq
+    val clean = "fence_jaccard_clean"
+    val dbs = clean +: (1 until jaccard.tables.size).map(n => s"fence_jaccard_crash$n")
+    dbs.foreach(db => spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE"))
+    try {
+      jaccard.build(clean)
+      jaccard.append(clean, batch)
+      val expected = (contents(clean, jaccard.tables),
+        jaccard.fence.stored(spark, clean))
+      // a crash after the first `landed` writes leaves exactly the batch's
+      // rows of those tables behind, and the fence where the build put it
+      for ((db, landed) <- dbs.tail.zip(1 until jaccard.tables.size)) {
+        jaccard.build(db)
+        for (t <- jaccard.tables.take(landed))
+          spark.table(s"`$clean`.`$t`").filter(col("doc_id").isin(batchIds: _*))
+            .select(spark.table(s"`$db`.`$t`").columns.map(col).toIndexedSeq: _*)
+            .write.mode("append").insertInto(s"`$db`.`$t`")
+        jaccard.append(db, batch)
+        assert((contents(db, jaccard.tables), jaccard.fence.stored(spark, db)) ==
+          expected, s"the retry after $landed landed write(s) diverged " +
+          "from a crash-free append")
+      }
+    } finally dbs.foreach(db => spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE"))
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{RetrievalOps, TextOps, VectorOps}
+import graft.ops.{AnnFamily, RetrievalOps, TextOps, VectorOps}
 
 /** Cross-session serving freshness — the stale-listing hazard the BM25
   * streaming spec surfaced, asserted for the other stored-model families:
@@ -22,17 +22,17 @@ class CrossSessionFreshnessSpec extends SparkSpec {
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
     val maxId = emb.agg(max("vec_id")).head.getLong(0)
     val t0 = maxId * 2 / 3
-    VectorOps.buildPqIndex(emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.Pq, emb.filter(col("vec_id") <= t0), db)
     // freeze this session's listing of the codes table
     val before = spark.table(s"$db.${VectorOps.PqCodesTable}").count()
     // another session appends (the streaming-ingest situation)
     val s2 = spark.newSession()
-    VectorOps.appendToPqIndex(s2, db,
+    VectorOps.append(AnnFamily.Pq, s2, db,
       Tables.t(s2, sf, "embeddings")
         .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
         .filter(col("vec_id") > t0))
     // the serve entry must re-list and score the grown corpus
-    VectorOps.pqCosineTopkFromIndex(spark, sf, db)
+    VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, db)
     assert(spark.table(s"$db.${VectorOps.PqCodesTable}").count() ==
       emb.count(), s"serve left the codes listing at the stale $before")
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{ChunkOps, LinkOps, RetrievalOps, VectorOps}
+import graft.ops.{AnnFamily, ChunkOps, LinkOps, RetrievalOps, VectorOps}
 import graft.pipeline.{Bm25Ingest, CdcIngest, CorpusPipeline, FencedAppend,
   LinkIngest, VectorIngest}
 
@@ -79,8 +79,8 @@ class FencedAppendSpec extends SparkSpec {
     Seq(VectorOps.IvfAssignmentsTable, VectorOps.SqCodesTable),
     Seq(VectorOps.IvfAssignmentsTable, VectorOps.SqCodesTable),
     db => {
-      VectorOps.buildIvfIndex(vectors(0L to 7L), db, nCells = 2)
-      VectorOps.buildSqIndex(vectors(0L to 7L), db)
+      VectorOps.build(AnnFamily.Ivf, vectors(0L to 7L), db)
+      VectorOps.build(AnnFamily.Sq, vectors(0L to 7L), db)
     },
     k => vectors(Seq(10L + 2 * k, 11L + 2 * k)),
     vectors(Seq(2L, 3L)),

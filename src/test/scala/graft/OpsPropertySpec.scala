@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{MultimodalOps, TextOps, VectorOps}
+import graft.ops.{AnnFamily, MultimodalOps, TextOps, VectorOps}
 
 /** Property-style self-checks for the no-oracle operators (SURVEY §5.2):
   * minhash must catch exact duplicates, knn top-1 is self, simhash is
@@ -533,9 +533,16 @@ class OpsPropertySpec extends SparkSpec {
     assert(recall >= 0.6, s"ivf recall@5 = $recall")
   }
 
+  /** The one-slice layout `_0` a sharded build at S=1 stored before the
+    * single index became the one-slice case: serving and appending it
+    * must match the single index.
+    */
+  private def asOneSlice(db: String, f: AnnFamily): Unit =
+    AnnIndexSpec.moveSlice(spark, db, f, "", "_0")
+
   test("ivf index persists as warehouse tables and serves a fresh session") {
     val db = "ivf_index_db"
-    VectorOps.buildIvfIndex(Tables.t(spark, sf, "embeddings"), db)
+    VectorOps.build(AnnFamily.Ivf, Tables.t(spark, sf, "embeddings"), db)
     assert(spark.catalog.tableExists(s"$db.${VectorOps.IvfAssignmentsTable}"))
     assert(spark.catalog.tableExists(s"$db.${VectorOps.IvfCentroidsTable}"))
 
@@ -545,7 +552,7 @@ class OpsPropertySpec extends SparkSpec {
     def key(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rnk"),
         r.getAs[Long]("neighbor_id"))).toSeq
-    val served = key(VectorOps.ivfCosineTopkFromIndex(s2, sf, db).collect())
+    val served = key(VectorOps.topkFromIndex(AnnFamily.Ivf, s2, sf, db).collect())
     // deterministic training → the stored index answers exactly like an
     // in-session retrain
     val retrained = key(VectorOps.ivfCosineTopk(spark, sf).collect())
@@ -555,7 +562,7 @@ class OpsPropertySpec extends SparkSpec {
     import java.time.LocalDateTime
     import graft.pipeline.ScheduleRunner
     spark.sql(s"DROP TABLE $db.${VectorOps.IvfAssignmentsTable}")
-    val entry = VectorOps.ivfRefreshEntry("ivf-refresh", "0 3 * * *", db,
+    val entry = VectorOps.refreshEntry(AnnFamily.Ivf, "ivf-refresh", "0 3 * * *", db,
       s => Tables.t(s, sf, "embeddings"))
     val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
     val runner = new ScheduleRunner(Seq(entry), startAt = t0)
@@ -564,7 +571,7 @@ class OpsPropertySpec extends SparkSpec {
     // index rebuild replaced the table files underneath it
     s2.catalog.refreshTable(s"$db.${VectorOps.IvfAssignmentsTable}")
     s2.catalog.refreshTable(s"$db.${VectorOps.IvfCentroidsTable}")
-    assert(key(VectorOps.ivfCosineTopkFromIndex(s2, sf, db).collect()) == served)
+    assert(key(VectorOps.topkFromIndex(AnnFamily.Ivf, s2, sf, db).collect()) == served)
 
     // semantic dedup served from the SAME stored index equals an
     // in-session retrain at the stored cell count (deterministic quantizer)
@@ -579,7 +586,7 @@ class OpsPropertySpec extends SparkSpec {
   test("pq index persists as warehouse tables and serves a fresh session " +
       "with no training jobs") {
     val db = "pq_index_db"
-    VectorOps.buildPqIndex(Tables.t(spark, sf, "embeddings"), db)
+    VectorOps.build(AnnFamily.Pq, Tables.t(spark, sf, "embeddings"), db)
     assert(spark.catalog.tableExists(s"$db.${VectorOps.PqCodesTable}"))
     assert(spark.catalog.tableExists(s"$db.${VectorOps.PqCodebooksTable}"))
     // codes table is the compressed scan: vec_id + M small ints, NO raw
@@ -594,7 +601,7 @@ class OpsPropertySpec extends SparkSpec {
         r.getAs[Long]("neighbor_id"))).toSeq
     // a NEW session serves purely from the stored tables...
     val s2 = spark.newSession()
-    val servedDf = VectorOps.pqCosineTopkFromIndex(s2, sf, db)
+    val servedDf = VectorOps.topkFromIndex(AnnFamily.Pq, s2, sf, db)
     // ...with NO quantizer training anywhere in the query path: Lloyd's
     // is the only vec_sqdist consumer, the serving scan is ADC (vec_dot)
     val plan = servedDf.queryExecution.executedPlan.toString
@@ -611,14 +618,14 @@ class OpsPropertySpec extends SparkSpec {
     import java.time.LocalDateTime
     import graft.pipeline.ScheduleRunner
     spark.sql(s"DROP TABLE $db.${VectorOps.PqCodesTable}")
-    val entry = VectorOps.pqRefreshEntry("pq-refresh", "0 4 * * *", db,
+    val entry = VectorOps.refreshEntry(AnnFamily.Pq, "pq-refresh", "0 4 * * *", db,
       s => Tables.t(s, sf, "embeddings"))
     val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
     val runner = new ScheduleRunner(Seq(entry), startAt = t0)
     assert(runner.tick(spark, t0.plusHours(4)) == Seq("pq-refresh"))
     s2.catalog.refreshTable(s"$db.${VectorOps.PqCodesTable}")
     s2.catalog.refreshTable(s"$db.${VectorOps.PqCodebooksTable}")
-    assert(key(VectorOps.pqCosineTopkFromIndex(s2, sf, db).collect()) == served)
+    assert(key(VectorOps.topkFromIndex(AnnFamily.Pq, s2, sf, db).collect()) == served)
   }
 
   test("codebooks past the literal threshold ride broadcast joins: " +
@@ -769,7 +776,7 @@ class OpsPropertySpec extends SparkSpec {
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
     val maxId = emb.agg(max("vec_id")).head.getLong(0)
     val t0 = maxId * 2 / 3
-    VectorOps.buildSqIndex(emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.Sq, emb.filter(col("vec_id") <= t0), db)
     assert(spark.catalog.tableExists(s"$db.${VectorOps.SqCodesTable}"))
     assert(spark.catalog.tableExists(s"$db.${VectorOps.SqParamsTable}"))
     // codes table is the compressed scan: (vec_id, codes), no raw vectors
@@ -778,7 +785,7 @@ class OpsPropertySpec extends SparkSpec {
 
     // frozen-parameter append: grown table bit-equal to encoding the
     // union with the STORED params (never the union-trained ones)
-    VectorOps.appendToSqIndex(spark, db, emb.filter(col("vec_id") > t0))
+    VectorOps.append(AnnFamily.Sq, spark, db, emb.filter(col("vec_id") > t0))
     val (mins, widths) = VectorOps.loadSqParams(spark, db)
     def codeKey(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("codes"))
@@ -788,7 +795,7 @@ class OpsPropertySpec extends SparkSpec {
       "appended codes diverged from a frozen-parameter encode of the union")
     // the append is row-level idempotent (range-pruned anti-join)
     val before = spark.table(s"$db.${VectorOps.SqCodesTable}").count()
-    VectorOps.appendToSqIndex(spark, db, emb.filter(col("vec_id") > t0))
+    VectorOps.append(AnnFamily.Sq, spark, db, emb.filter(col("vec_id") > t0))
     assert(spark.table(s"$db.${VectorOps.SqCodesTable}").count() == before)
 
     // a NEW session serves purely from the stored tables, with no
@@ -798,7 +805,7 @@ class OpsPropertySpec extends SparkSpec {
       rows.map(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rnk"),
         r.getAs[Long]("neighbor_id"))).toSeq
     val s2 = spark.newSession()
-    val servedDf = VectorOps.sqCosineTopkFromIndex(s2, sf, db)
+    val servedDf = VectorOps.topkFromIndex(AnnFamily.Sq, s2, sf, db)
     val plan = servedDf.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("posexplode"),
       s"serving path must not train (posexplode = min/max pass):\n${plan.take(800)}")
@@ -807,10 +814,10 @@ class OpsPropertySpec extends SparkSpec {
     // the full-corpus index was appended under the SLICE-trained params —
     // out-of-range values saturate, ranking may differ from a full
     // retrain; a full REBUILD must serve exactly like the in-session path
-    VectorOps.buildSqIndex(emb, db)
+    VectorOps.build(AnnFamily.Sq, emb, db)
     s2.catalog.refreshTable(s"$db.${VectorOps.SqCodesTable}")
     s2.catalog.refreshTable(s"$db.${VectorOps.SqParamsTable}")
-    val rebuilt = key(VectorOps.sqCosineTopkFromIndex(s2, sf, db).collect())
+    val rebuilt = key(VectorOps.topkFromIndex(AnnFamily.Sq, s2, sf, db).collect())
     assert(rebuilt == key(VectorOps.sqTopkFrame(spark, sf)
       .orderBy("probe_id", "rnk").collect()))
 
@@ -818,14 +825,14 @@ class OpsPropertySpec extends SparkSpec {
     import java.time.LocalDateTime
     import graft.pipeline.ScheduleRunner
     spark.sql(s"DROP TABLE $db.${VectorOps.SqCodesTable}")
-    val entry = VectorOps.sqRefreshEntry("sq-refresh", "0 4 * * *", db,
+    val entry = VectorOps.refreshEntry(AnnFamily.Sq, "sq-refresh", "0 4 * * *", db,
       s => Tables.t(s, sf, "embeddings"))
     val tt = LocalDateTime.parse("2026-01-01T00:00:00")
     val runner = new ScheduleRunner(Seq(entry), startAt = tt)
     assert(runner.tick(spark, tt.plusHours(4)) == Seq("sq-refresh"))
     s2.catalog.refreshTable(s"$db.${VectorOps.SqCodesTable}")
     s2.catalog.refreshTable(s"$db.${VectorOps.SqParamsTable}")
-    assert(key(VectorOps.sqCosineTopkFromIndex(s2, sf, db).collect()) == rebuilt)
+    assert(key(VectorOps.topkFromIndex(AnnFamily.Sq, s2, sf, db).collect()) == rebuilt)
   }
 
   test("ivf-sq: cell-pruned SQ scan at the bare IVF probe budget holds " +
@@ -860,10 +867,10 @@ class OpsPropertySpec extends SparkSpec {
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
     val maxId = emb.agg(max("vec_id")).head.getLong(0)
     val t0 = maxId * 2 / 3
-    VectorOps.buildIvfSqIndex(emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.IvfSq, emb.filter(col("vec_id") <= t0), db)
     // composed frozen-parameter append: stored-range encode +
     // stored-centroid assignment over the remainder
-    VectorOps.appendToIvfSqIndex(spark, db, emb.filter(col("vec_id") > t0))
+    VectorOps.append(AnnFamily.IvfSq, spark, db, emb.filter(col("vec_id") > t0))
     val (mins, widths) = VectorOps.loadSqParams(spark, db,
       VectorOps.IvfSqParamsTable)
     val expect = VectorOps.sqEncode(emb, mins, widths)
@@ -879,7 +886,7 @@ class OpsPropertySpec extends SparkSpec {
       "appended composed index diverged from frozen-parameter encode+assign")
 
     val s2 = spark.newSession()
-    val served = VectorOps.ivfSqCosineTopkFromIndex(s2, sf, db)
+    val served = VectorOps.topkFromIndex(AnnFamily.IvfSq, s2, sf, db)
     val codeScans = served.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.tableIdentifier.exists(_.table.startsWith(
@@ -907,10 +914,10 @@ class OpsPropertySpec extends SparkSpec {
     val rest = emb.filter(col("vec_id") > t0)
 
     val db = "shard_append_db"
-    VectorOps.buildShardedPqIndex(base, db, 3)
-    VectorOps.buildShardedIvfIndex(base, db, 3)
-    VectorOps.appendToShardedPqIndex(spark, db, 3, rest)
-    VectorOps.appendToShardedIvfIndex(spark, db, 3, rest)
+    VectorOps.build(AnnFamily.Pq, base, db, 3)
+    VectorOps.build(AnnFamily.Ivf, base, db, 3)
+    VectorOps.append(AnnFamily.Pq, spark, db, rest)
+    VectorOps.append(AnnFamily.Ivf, spark, db, rest)
     def codesKey(df: org.apache.spark.sql.DataFrame) = {
       val cols = df.columns.sorted.toIndexedSeq
       df.select(cols.map(col): _*).collect()
@@ -936,17 +943,18 @@ class OpsPropertySpec extends SparkSpec {
         s"ivf shard $sh diverged from stored-centroid assignment")
     }
     // the grown sharded index serves with zero training jobs
-    val served = VectorOps.pqCosineTopkFromShardedIndex(spark, sf, db, 3)
+    val served = VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, db)
     assert(!served.queryExecution.executedPlan.toString.contains("vec_sqdist"))
     assert(served.collect().length == 25)
 
     // S=1 sharded append lands the exact single-index append state
     val db1 = "shard_append_s1_db"
     val dbS = "shard_append_single_db"
-    VectorOps.buildShardedPqIndex(base, db1, 1)
-    VectorOps.appendToShardedPqIndex(spark, db1, 1, rest)
-    VectorOps.buildPqIndex(base, dbS)
-    VectorOps.appendToPqIndex(spark, dbS, rest)
+    VectorOps.build(AnnFamily.Pq, base, db1)
+    asOneSlice(db1, AnnFamily.Pq)
+    VectorOps.append(AnnFamily.Pq, spark, db1, rest)
+    VectorOps.build(AnnFamily.Pq, base, dbS)
+    VectorOps.append(AnnFamily.Pq, spark, dbS, rest)
     assert(codesKey(spark.table(s"$db1.${VectorOps.PqCodesTable}_0")) ==
       codesKey(spark.table(s"$dbS.${VectorOps.PqCodesTable}")))
   }
@@ -962,11 +970,12 @@ class OpsPropertySpec extends SparkSpec {
     // sharded-band equality standard; shardTopkBudget(1, ·) is exactly
     // the single-index adaptiveProbe budget)
     val db0 = "ivfsq_shard_single_db"
-    VectorOps.buildIvfSqIndex(emb, db0)
-    val single = full(VectorOps.ivfSqCosineTopkFromIndex(spark, sf, db0).collect())
+    VectorOps.build(AnnFamily.IvfSq, emb, db0)
+    val single = full(VectorOps.topkFromIndex(AnnFamily.IvfSq, spark, sf, db0).collect())
     val db1 = "ivfsq_shard_s1_db"
-    VectorOps.buildShardedIvfSqIndex(emb, db1, 1)
-    assert(full(VectorOps.ivfSqCosineTopkFromShardedIndex(spark, sf, db1, 1)
+    VectorOps.build(AnnFamily.IvfSq, emb, db1)
+    asOneSlice(db1, AnnFamily.IvfSq)
+    assert(full(VectorOps.topkFromIndex(AnnFamily.IvfSq, spark, sf, db1)
       .collect()) == single,
       "S=1 sharded IVF-SQ diverged from the single composed index")
 
@@ -975,9 +984,8 @@ class OpsPropertySpec extends SparkSpec {
     val maxId = emb.agg(max("vec_id")).head.getLong(0)
     val t0 = maxId * 2 / 3
     val dbS = "ivfsq_shard_s3_db"
-    VectorOps.buildShardedIvfSqIndex(emb.filter(col("vec_id") <= t0), dbS, 3)
-    VectorOps.appendToShardedIvfSqIndex(spark, dbS, 3,
-      emb.filter(col("vec_id") > t0))
+    VectorOps.build(AnnFamily.IvfSq, emb.filter(col("vec_id") <= t0), dbS, 3)
+    VectorOps.append(AnnFamily.IvfSq, spark, dbS, emb.filter(col("vec_id") > t0))
     def key(df: org.apache.spark.sql.DataFrame) = {
       val cols = df.columns.sorted.toIndexedSeq
       df.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -995,7 +1003,7 @@ class OpsPropertySpec extends SparkSpec {
         key(expect), s"ivf-sq shard $sh diverged after the sharded append")
     }
     // every shard's serving scan is statically pruned to its probed cells
-    val served = VectorOps.ivfSqCosineTopkFromShardedIndex(spark, sf, dbS, 3)
+    val served = VectorOps.topkFromIndex(AnnFamily.IvfSq, spark, sf, dbS)
     val codeScans = served.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.tableIdentifier.exists(_.table.startsWith(
@@ -1018,12 +1026,12 @@ class OpsPropertySpec extends SparkSpec {
     import java.time.LocalDateTime
     import graft.pipeline.ScheduleRunner
     spark.sql(s"DROP TABLE $dbS.${VectorOps.IvfSqCodesTable}_1")
-    val entry = VectorOps.ivfSqShardedRefreshEntry("ivfsq-sh", "0 4 * * *",
-      dbS, 3, s => Tables.t(s, sf, "embeddings"))
+    val entry = VectorOps.refreshEntry(AnnFamily.IvfSq, "ivfsq-sh",
+      "0 4 * * *", dbS, s => Tables.t(s, sf, "embeddings"), nShards = 3)
     val tt = LocalDateTime.parse("2026-01-01T00:00:00")
     assert(new ScheduleRunner(Seq(entry), startAt = tt)
       .tick(spark, tt.plusHours(4)) == Seq("ivfsq-sh"))
-    assert(VectorOps.ivfSqCosineTopkFromShardedIndex(spark, sf, dbS, 3)
+    assert(VectorOps.topkFromIndex(AnnFamily.IvfSq, spark, sf, dbS)
       .collect().length == 25)
   }
 
@@ -1055,7 +1063,7 @@ class OpsPropertySpec extends SparkSpec {
   test("ivf-pq index persists (codes partitioned by cell) and serves a " +
       "fresh session identically to the in-session composition") {
     val db = "ivfpq_index_db"
-    VectorOps.buildIvfPqIndex(Tables.t(spark, sf, "embeddings"), db)
+    VectorOps.build(AnnFamily.IvfPq, Tables.t(spark, sf, "embeddings"), db)
     for (t <- Seq(VectorOps.IvfPqCodesTable, VectorOps.IvfPqCentroidsTable,
         VectorOps.IvfPqCodebooksTable))
       assert(spark.catalog.tableExists(s"$db.$t"))
@@ -1070,7 +1078,7 @@ class OpsPropertySpec extends SparkSpec {
       rows.map(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rnk"),
         r.getAs[Long]("neighbor_id"))).toSeq
     val s2 = spark.newSession()
-    val served = key(VectorOps.ivfPqCosineTopkFromIndex(s2, sf, db).collect())
+    val served = key(VectorOps.topkFromIndex(AnnFamily.IvfPq, s2, sf, db).collect())
     val inSession = key(VectorOps.ivfPqTopkFrame(spark, sf)
       .orderBy("probe_id", "rnk").collect())
     assert(served == inSession && served.length == 25,
@@ -1084,24 +1092,25 @@ class OpsPropertySpec extends SparkSpec {
       rows.map(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rnk"),
         r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine"))).toSeq
     val db1 = "pq_shard_single_db"
-    VectorOps.buildPqIndex(emb, db1)
-    val single = full(VectorOps.pqCosineTopkFromIndex(spark, sf, db1).collect())
+    VectorOps.build(AnnFamily.Pq, emb, db1)
+    val single = full(VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, db1).collect())
     // S=1: the hash slice keeps every row, training is identical, and the
     // exact-cosine merge of one shard's top-5 IS that top-5 — bit-equal
     // (the sharded-band-index equality standard)
     val dbS1 = "pq_shard_s1_db"
-    VectorOps.buildShardedPqIndex(emb, dbS1, 1)
-    assert(full(VectorOps.pqCosineTopkFromShardedIndex(spark, sf, dbS1, 1)
+    VectorOps.build(AnnFamily.Pq, emb, dbS1)
+    asOneSlice(dbS1, AnnFamily.Pq)
+    assert(full(VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, dbS1)
       .collect()) == single,
       "S=1 sharded PQ diverged from the single index")
     // S=4: disjoint covering slices; self-hit survives the merge (the
     // probe's own shard re-ranks it exactly); recall holds the PQ floor
     val dbS4 = "pq_shard_s4_db"
-    VectorOps.buildShardedPqIndex(emb, dbS4, 4)
+    VectorOps.build(AnnFamily.Pq, emb, dbS4, 4)
     val counts = (0 until 4).map(sh =>
       spark.table(s"$dbS4.${VectorOps.PqCodesTable}_$sh").count())
     assert(counts.forall(_ > 0) && counts.sum == emb.count())
-    val s4 = VectorOps.pqCosineTopkFromShardedIndex(spark, sf, dbS4, 4).collect()
+    val s4 = VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, dbS4).collect()
     assert(s4.length == 25)
     s4.filter(_.getAs[Int]("rnk") == 1).foreach { r =>
       assert(r.getAs[Long]("probe_id") == r.getAs[Long]("neighbor_id"))
@@ -1119,16 +1128,16 @@ class OpsPropertySpec extends SparkSpec {
     import java.time.LocalDateTime
     import graft.pipeline.ScheduleRunner
     val db = "pq_shard_refresh_db"
-    VectorOps.buildShardedPqIndex(Tables.t(spark, sf, "embeddings"), db, 2)
+    VectorOps.build(AnnFamily.Pq, Tables.t(spark, sf, "embeddings"), db, 2)
     spark.sql(s"DROP TABLE `$db`.`${VectorOps.PqCodesTable}_1`")
-    val entry = VectorOps.pqShardedRefreshEntry("pqs", "0 4 * * *", db, 2,
-      s => Tables.t(s, sf, "embeddings"))
+    val entry = VectorOps.refreshEntry(AnnFamily.Pq, "pqs", "0 4 * * *", db,
+      s => Tables.t(s, sf, "embeddings"), nShards = 2)
     val t0 = LocalDateTime.parse("2026-01-01T00:00:00")
     val runner = new ScheduleRunner(Seq(entry), startAt = t0)
     assert(runner.tick(spark, t0.plusHours(4)) == Seq("pqs"))
     assert(spark.catalog.tableExists(s"$db.${VectorOps.PqCodesTable}_1"),
       "refresh must rebuild the dropped shard")
-    assert(VectorOps.pqCosineTopkFromShardedIndex(spark, sf, db, 2)
+    assert(VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, db)
       .collect().length == 25)
   }
 
@@ -1139,16 +1148,17 @@ class OpsPropertySpec extends SparkSpec {
       rows.map(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rnk"),
         r.getAs[Long]("neighbor_id"), r.getAs[Double]("cosine"))).toSeq
     val db1 = "ivfpq_shard_single_db"
-    VectorOps.buildIvfPqIndex(emb, db1)
-    val single = full(VectorOps.ivfPqCosineTopkFromIndex(spark, sf, db1).collect())
+    VectorOps.build(AnnFamily.IvfPq, emb, db1)
+    val single = full(VectorOps.topkFromIndex(AnnFamily.IvfPq, spark, sf, db1).collect())
     val dbS1 = "ivfpq_shard_s1_db"
-    VectorOps.buildShardedIvfPqIndex(emb, dbS1, 1)
-    assert(full(VectorOps.ivfPqCosineTopkFromShardedIndex(spark, sf, dbS1, 1)
+    VectorOps.build(AnnFamily.IvfPq, emb, dbS1)
+    asOneSlice(dbS1, AnnFamily.IvfPq)
+    assert(full(VectorOps.topkFromIndex(AnnFamily.IvfPq, spark, sf, dbS1)
       .collect()) == single,
       "S=1 sharded IVF-PQ diverged from the single composed index")
     val dbS4 = "ivfpq_shard_s4_db"
-    VectorOps.buildShardedIvfPqIndex(emb, dbS4, 4)
-    val served = VectorOps.ivfPqCosineTopkFromShardedIndex(spark, sf, dbS4, 4)
+    VectorOps.build(AnnFamily.IvfPq, emb, dbS4, 4)
+    val served = VectorOps.topkFromIndex(AnnFamily.IvfPq, spark, sf, dbS4)
     // every shard's code scan is statically pruned to the probed cells:
     // the partition-column IN-list lands in the scan's PartitionFilters
     // (file-level pruning at plan time, not runtime DPP)
@@ -1189,12 +1199,12 @@ class OpsPropertySpec extends SparkSpec {
     val batch = emb.filter(col("vec_id") > maxId * 2 / 3)
     assert(base.count() > 0 && batch.count() > 0)
     val db = "ann_append_db"
-    VectorOps.buildIvfIndex(base, db)
-    VectorOps.buildPqIndex(base, db)
-    VectorOps.buildIvfPqIndex(base, db)
-    VectorOps.appendToIvfIndex(spark, db, batch)
-    VectorOps.appendToPqIndex(spark, db, batch)
-    VectorOps.appendToIvfPqIndex(spark, db, batch)
+    VectorOps.build(AnnFamily.Ivf, base, db)
+    VectorOps.build(AnnFamily.Pq, base, db)
+    VectorOps.build(AnnFamily.IvfPq, base, db)
+    VectorOps.append(AnnFamily.Ivf, spark, db, batch)
+    VectorOps.append(AnnFamily.Pq, spark, db, batch)
+    VectorOps.append(AnnFamily.IvfPq, spark, db, batch)
     val vecs = emb.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("vec"))
 
@@ -1232,12 +1242,12 @@ class OpsPropertySpec extends SparkSpec {
     // plan stays Lloyd's-free
     assert(spark.table(s"$db.${VectorOps.IvfAssignmentsTable}").count() == emb.count())
     assert(spark.table(s"$db.${VectorOps.PqCodesTable}").count() == emb.count())
-    val servedDf = VectorOps.pqCosineTopkFromIndex(spark, sf, db)
+    val servedDf = VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, db)
     assert(!servedDf.queryExecution.executedPlan.toString.contains("vec_sqdist"),
       "serving an appended index must not retrain")
     assert(servedDf.collect().length == 25)
-    assert(VectorOps.ivfCosineTopkFromIndex(spark, sf, db).collect().length == 25)
-    assert(VectorOps.ivfPqCosineTopkFromIndex(spark, sf, db).collect().length == 25)
+    assert(VectorOps.topkFromIndex(AnnFamily.Ivf, spark, sf, db).collect().length == 25)
+    assert(VectorOps.topkFromIndex(AnnFamily.IvfPq, spark, sf, db).collect().length == 25)
   }
 
   test("sharded ivf index: self-hit survives the shard merge, recall composes (S=2, S=4)") {
@@ -1245,7 +1255,7 @@ class OpsPropertySpec extends SparkSpec {
       .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("neighbor_id"))).toSet
     for (nShards <- Seq(2, 4)) {
       val db = s"ivf_shard_db_$nShards"
-      VectorOps.buildShardedIvfIndex(Tables.t(spark, sf, "embeddings"), db, nShards)
+      VectorOps.build(AnnFamily.Ivf, Tables.t(spark, sf, "embeddings"), db, nShards)
       // shards hold non-empty disjoint slices covering the corpus
       val counts = (0 until nShards).map { sh =>
         assert(spark.catalog.tableExists(s"$db.${VectorOps.IvfAssignmentsTable}_$sh"))
@@ -1253,7 +1263,7 @@ class OpsPropertySpec extends SparkSpec {
       }
       assert(counts.forall(_ > 0), s"S=$nShards: empty shard in $counts")
       assert(counts.sum == Tables.t(spark, sf, "embeddings").count())
-      val got = VectorOps.ivfCosineTopkFromShardedIndex(spark, sf, db, nShards)
+      val got = VectorOps.topkFromIndex(AnnFamily.Ivf, spark, sf, db)
         .collect()
       assert(got.length == 25)
       // a probe lives in exactly one shard, whose index must surface it at
@@ -1268,7 +1278,7 @@ class OpsPropertySpec extends SparkSpec {
       assert(recall >= 0.6, s"S=$nShards sharded recall@5 = $recall")
       // the merge never concentrates candidates on one probe: per-probe
       // candidate volume stays within the probed-cell occupancy sum
-      val cands = VectorOps.shardedCandidatesPerProbe(spark, sf, db, nShards)
+      val cands = VectorOps.shardedCandidatesPerProbe(spark, sf, db)
         .collect().map(r => r.getAs[Long]("n_cands"))
       assert(cands.length == 5 && cands.max <= counts.sum,
         s"S=$nShards candidate concentration: ${cands.toSeq}")
@@ -1295,9 +1305,9 @@ class OpsPropertySpec extends SparkSpec {
     val singleRecall = recallOf(
       SparkEntry.queries("q_ivf_cosine_topk")(spark, scaled).collect())
     val db = "ivf_shard_floor_db"
-    VectorOps.buildShardedIvfIndex(Tables.t(spark, scaled, "embeddings"), db, 4)
+    VectorOps.build(AnnFamily.Ivf, Tables.t(spark, scaled, "embeddings"), db, 4)
     val shardRecall = recallOf(
-      VectorOps.ivfCosineTopkFromShardedIndex(spark, scaled, db, 4).collect())
+      VectorOps.topkFromIndex(AnnFamily.Ivf, spark, scaled, db).collect())
     // sharding exists for driver relief — it must not silently pay for it
     // in recall (deterministic quantizer: this is reproducible, not flaky)
     assert(shardRecall >= singleRecall,
@@ -1317,8 +1327,8 @@ class OpsPropertySpec extends SparkSpec {
     val dup = base.filter($"vec_id" === 0L)
       .select(lit(dupId).as("vec_id"), $"embedding")
     val db = "ivf_shard_dedup"
-    VectorOps.buildShardedIvfIndex(base.unionByName(dup), db, nShards = 2)
-    val pairs = VectorOps.ivfSemanticDedupFromShardedIndex(spark, db, 2)
+    VectorOps.build(AnnFamily.Ivf, base.unionByName(dup), db, nShards = 2)
+    val pairs = VectorOps.ivfSemanticDedupFromIndex(spark, db)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val planted = pairs.find(p => p._1 == 0L && p._2 == dupId)
     assert(planted.isDefined,
@@ -1327,8 +1337,9 @@ class OpsPropertySpec extends SparkSpec {
     // S=1 reproduces the single-index dedup bit-for-bit (same quantizer,
     // same adaptive cell count, exact in-order cosine folds)
     val db1 = "ivf_shard_dedup_s1"
-    VectorOps.buildShardedIvfIndex(base, db1, nShards = 1)
-    val sharded1 = VectorOps.ivfSemanticDedupFromShardedIndex(spark, db1, 1)
+    VectorOps.build(AnnFamily.Ivf, base, db1)
+    asOneSlice(db1, AnnFamily.Ivf)
+    val sharded1 = VectorOps.ivfSemanticDedupFromIndex(spark, db1)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = VectorOps.ivfSemanticDedupPairs(base, threshold = 0.45)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

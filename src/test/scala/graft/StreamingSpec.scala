@@ -558,7 +558,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ANN ingest: micro-batches grow every stored index family " +
       "through frozen-parameter appends; replays skip; out-of-order refused") {
-    import graft.ops.VectorOps
+    import graft.ops.{AnnFamily, VectorOps}
     import graft.pipeline.VectorIngest
     implicit val sq = spark.sqlContext
     val db = "ann_stream_db"
@@ -568,10 +568,10 @@ class StreamingSpec extends SparkSpec {
     val maxId = emb.agg(max("vec_id")).head.getLong(0)
     val t0 = maxId * 2 / 3
     // yesterday's scheduled build: all four families over the base slice
-    VectorOps.buildIvfIndex(emb.filter(col("vec_id") <= t0), db)
-    VectorOps.buildPqIndex(emb.filter(col("vec_id") <= t0), db)
-    VectorOps.buildIvfPqIndex(emb.filter(col("vec_id") <= t0), db)
-    VectorOps.buildSqIndex(emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.Ivf, emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.Pq, emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.IvfPq, emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.Sq, emb.filter(col("vec_id") <= t0), db)
 
     // the rest arrives as TWO stream micro-batches (ascending vec_ids)
     val rest = emb.filter(col("vec_id") > t0)
@@ -623,7 +623,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("append-only"))
     // and the grown index serves with zero training jobs
-    val served = VectorOps.pqCosineTopkFromIndex(spark, sf, db)
+    val served = VectorOps.topkFromIndex(AnnFamily.Pq, spark, sf, db)
     assert(!served.queryExecution.executedPlan.toString.contains("vec_sqdist"))
     assert(served.collect().length == 25)
     spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
@@ -631,7 +631,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ANN ingest grows SHARDED families through hash-slice " +
       "routed appends; committed-epoch replays stay no-ops") {
-    import graft.ops.VectorOps
+    import graft.ops.{AnnFamily, VectorOps}
     import graft.pipeline.VectorIngest
     val db = "ann_shard_stream_db"
     spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
@@ -639,7 +639,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
     val maxId = emb.agg(max("vec_id")).head.getLong(0)
     val t0 = maxId * 2 / 3
-    VectorOps.buildShardedPqIndex(emb.filter(col("vec_id") <= t0), db, 2)
+    VectorOps.build(AnnFamily.Pq, emb.filter(col("vec_id") <= t0), db, 2)
     val batch = emb.filter(col("vec_id") > t0).select("vec_id", "embedding")
     VectorIngest.vectorIngestBatch(spark, "shardStream", batch, db, epochId = 0L)
     def key(df: org.apache.spark.sql.DataFrame) = {
@@ -665,7 +665,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ANN ingest: a mid-batch crash replays to exactly the " +
       "missing rows — no family ever carries a batch twice") {
-    import graft.ops.VectorOps
+    import graft.ops.{AnnFamily, VectorOps}
     import graft.pipeline.VectorIngest
     val db = "ann_crash_db"
     spark.sql(s"DROP DATABASE IF EXISTS `$db` CASCADE")
@@ -673,8 +673,8 @@ class StreamingSpec extends SparkSpec {
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
     val maxId = emb.agg(max("vec_id")).head.getLong(0)
     val t0 = maxId * 2 / 3
-    VectorOps.buildIvfIndex(emb.filter(col("vec_id") <= t0), db)
-    VectorOps.buildPqIndex(emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.Ivf, emb.filter(col("vec_id") <= t0), db)
+    VectorOps.build(AnnFamily.Pq, emb.filter(col("vec_id") <= t0), db)
     val batch = emb.filter(col("vec_id") > t0)
       .select("vec_id", "embedding")
     // crash right after the FIRST family (IVF) lands, epoch uncommitted
